@@ -263,7 +263,7 @@ object StreamBenchSection {
 
     // snapshot-store contrast: same seed, same churn, two timed halves
     // (per-half timing is enough to expose a per-batch cost growing
-    // with the target: the rewrite term dominates wall-clock)
+    // with the target; each batch commits one merge-on-read delta)
     val ssDir  = s"$work/ss_growth"
     val ssSeed = graft.operators.MergeKey.withMergeKey(seed, Seq("event_id"))
     new graft.sources.SnapshotStore(spark, ssDir).commit(ssSeed)

@@ -63,9 +63,11 @@ object TargetMaintenance {
     else Some(run(spark, store, settings, batchNumber))
 
   /** OPTIMIZE (rewrite the current snapshot into target-sized files as a
-    * new commit), expire old snapshots, remove orphan files, ANALYZE.
-    * Order matters: compaction first so expiration can retire the
-    * fragmented snapshot it superseded.
+    * new base commit, folding its merge-on-read delta chain), expire old
+    * snapshots, remove orphan files, ANALYZE. Order matters: compaction
+    * first so expiration can retire the fragmented snapshot and the
+    * chain it superseded. `batchThreshold` thus bounds the chain, and
+    * with it the cost of every read between folds.
     */
   def run(
       spark: SparkSession, store: graft.sources.SnapshotStore,

@@ -16,31 +16,36 @@ import org.apache.spark.sql.types._
   */
 object SchemaMigration {
 
-  /** Align both frames to the union schema (new side's types win, missing
-    * columns null-filled) WITHOUT combining rows — the building block the
-    * streaming MERGE uses so an evolved batch can merge into an
-    * old-schema target.
+  /** The union schema: old columns first (original order) with the new
+    * side's type wherever both define a column, then new-only columns.
     */
-  def alignPair(oldDf: DataFrame, newDf: DataFrame): (DataFrame, DataFrame) = {
-    val newTypes = newDf.schema.map(f => f.name -> f.dataType).toMap
-    val oldTypes = oldDf.schema.map(f => f.name -> f.dataType).toMap
-    // union schema: old columns first (original order), then new-only columns
-    val unionCols: Seq[(String, DataType)] =
-      oldDf.schema.map(f => f.name -> newTypes.getOrElse(f.name, f.dataType)) ++
-        newDf.schema.collect { case f if !oldTypes.contains(f.name) => f.name -> f.dataType }
+  def unionSchema(oldSchema: StructType, newSchema: StructType): StructType = {
+    val newTypes = newSchema.map(f => f.name -> f.dataType).toMap
+    val oldNames = oldSchema.fieldNames.toSet
+    StructType(
+      oldSchema.map(f => StructField(f.name, newTypes.getOrElse(f.name, f.dataType))) ++
+        newSchema.collect { case f if !oldNames.contains(f.name) => StructField(f.name, f.dataType) })
+  }
 
-    def align(df: DataFrame): DataFrame = {
-      val have = df.schema.map(f => f.name -> f.dataType).toMap
-      val cols: Seq[Column] = unionCols.map { case (name, dt) =>
-        have.get(name) match {
-          case Some(cur) if cur == dt => df.col(name)
-          case Some(_)                => df.col(name).cast(dt).as(name)
-          case None                   => lit(null).cast(dt).as(name)
-        }
+  /** Project `df` onto `schema`: same-typed columns pass through, others
+    * are cast, missing ones null-filled; columns outside `schema` drop.
+    */
+  def alignTo(df: DataFrame, schema: StructType): DataFrame = {
+    val have = df.schema.map(f => f.name -> f.dataType).toMap
+    val cols: Seq[Column] = schema.map { f =>
+      have.get(f.name) match {
+        case Some(cur) if cur == f.dataType => df.col(f.name)
+        case Some(_)                        => df.col(f.name).cast(f.dataType).as(f.name)
+        case None                           => lit(null).cast(f.dataType).as(f.name)
       }
-      df.select(cols: _*)
     }
-    (align(oldDf), align(newDf))
+    df.select(cols: _*)
+  }
+
+  /** Align both frames to the union schema WITHOUT combining rows. */
+  def alignPair(oldDf: DataFrame, newDf: DataFrame): (DataFrame, DataFrame) = {
+    val union = unionSchema(oldDf.schema, newDf.schema)
+    (alignTo(oldDf, union), alignTo(newDf, union))
   }
 
   def migrate(oldDf: DataFrame, newDf: DataFrame): DataFrame = {

@@ -32,8 +32,18 @@ object Upsert {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(keys.map(col): _*)
       .orderBy(orderCols.map(c => col(c).desc): _*)
-    df.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1)
-      .drop("__rn")
+    val rn = freshColumn(df.columns.toSeq, "__rn")
+    df.withColumn(rn, row_number().over(w))
+      .where(col(rn) === 1)
+      .drop(rn)
+  }
+
+  /** `base`, or `base` with underscores appended until it names no column
+    * in `taken` (case-insensitively, as the analyzer resolves them), so a
+    * helper column never shadows or drops an input column.
+    */
+  def freshColumn(taken: Seq[String], base: String): String = {
+    val lower = taken.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
+    Iterator.iterate(base)(_ + "_").find(n => !lower(n.toLowerCase(java.util.Locale.ROOT))).get
   }
 }

@@ -1,31 +1,49 @@
 package graft.sources
 
+import graft.operators.{SchemaMigration, Upsert}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, max, regexp_extract}
+import org.apache.spark.sql.types.{DataType, LongType, StructType}
 
 /** A minimal snapshotted table layout over plain parquet — the engine's
   * stand-in for the reference's Iceberg target (no Iceberg jars in this
   * container). Semantics modeled on the Iceberg operations the reference
-  * invokes: snapshot commit, time travel, snapshot expiration
-  * (`targetSnapshotExpirationSettings`) and orphan file removal
-  * (`targetOrphanFilesExpirationSettings`),
+  * invokes: snapshot commit, merge-on-read row-level deltas, time travel,
+  * snapshot expiration (`targetSnapshotExpirationSettings`) and orphan
+  * file removal (`targetOrphanFilesExpirationSettings`),
   * /root/reference/stream-spec-yaml-example.yaml:49-61.
   *
   * Layout:
   * {{{
   *   tableDir/
-  *     data/v<N>/part-*.parquet     one immutable dir per snapshot
-  *     manifests/v<N>.manifest      newline list of relative data paths
+  *     data/v<N>/part-*.parquet     one immutable dir per commit
+  *     manifests/v<N>.manifest      table schema + the base and the
+  *                                  delta chain, in commit order
   *     VERSION                      current version number (atomic rename)
   * }}}
   *
-  * Writers never mutate old snapshots, so concurrent readers of version
+  * A version is a base plus a chain of deltas. [[commit]] writes a new
+  * base (the chain is empty again); [[commitDelta]] writes only its own
+  * rows and lists them after the base with their key columns. A delta
+  * row supersedes every earlier row with the same key — Iceberg's
+  * equality-delete semantics where the delta file is its own key set —
+  * so a micro-batch commit costs O(churn), never a target rewrite.
+  * [[readVersion]] resolves the chain in one plan whose shape does not
+  * grow with it: base ⟕anti keys(deltas) ∪ latest-per-key over the
+  * deltas by commit order. Maintenance folds the chain back into a base.
+  *
+  * Writers never mutate old commits, so concurrent readers of version
   * N are unaffected by a commit of N+1 — the same isolation property the
-  * Iceberg target gives the reference. All metadata ops are driver-side
-  * and O(#files); the data itself moves only through executor-side
-  * distributed writes.
+  * Iceberg target gives the reference. Every manifest carries the table
+  * schema and each part's own schema, so no read infers a schema from
+  * parquet footers. All metadata ops are driver-side and O(#files); the
+  * data itself moves only through executor-side distributed writes.
   */
 final class SnapshotStore(spark: SparkSession, tableDir: String) {
+  import SnapshotStore._
+
   private val root = new Path(tableDir)
   private def fs   = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -41,7 +59,7 @@ final class SnapshotStore(spark: SparkSession, tableDir: String) {
       finally in.close()
     }
 
-  /** Commit `df` as the next snapshot; returns the new version.
+  /** Commit `df` as the next snapshot's base; returns the new version.
     * `retry` bounds transient commit failures (the reference's merge
     * client `queryRetryMaxAttempts`/`queryRetryBaseDuration`): a failed
     * attempt never advanced VERSION, so the re-attempt recomputes the
@@ -51,40 +69,70 @@ final class SnapshotStore(spark: SparkSession, tableDir: String) {
   def commit(
       df: DataFrame, maxRowsPerFile: Option[Int] = None,
       retry: graft.streaming.RetryPolicy = graft.streaming.RetryPolicy.Never
-  ): Long = commitChecked(df, maxRowsPerFile, retry, expected = None)
+  ): Long = commitChecked(df, Nil, maxRowsPerFile, retry, expected = None).version
 
-  /** Shared commit body. `expected = Some(exp)` enables OCC: the
-    * expectation is re-validated both at attempt start (cheap fail
-    * before staging) and again IMMEDIATELY before the manifest/pointer
-    * flip — shrinking the unguarded race window from the full
-    * (possibly long) distributed data write down to the two atomic
-    * renames. A conflict under a retrying policy re-fails the attempt
-    * at the pre-stage check, so retries never re-stage data.
+  /** Commit `df` as a merge-on-read delta keyed on `keys`: its rows
+    * supersede every earlier row of the table with the same key (all of
+    * a delta's rows for a key land, as MERGE's `WHEN NOT MATCHED INSERT`
+    * lands the whole source). Writes only `df`; the target is neither
+    * read nor rewritten. On an empty table the delta is the base.
+    * `expectedVersion = Some(exp)` adds [[commitIf]]'s optimistic
+    * concurrency check. A schema-widening delta evolves the table schema
+    * ([[SchemaMigration.unionSchema]]); reads align every part to it.
+    */
+  def commitDelta(
+      df: DataFrame, keys: Seq[String], maxRowsPerFile: Option[Int] = None,
+      retry: graft.streaming.RetryPolicy = graft.streaming.RetryPolicy.Never,
+      expectedVersion: Option[Option[Long]] = None
+  ): Commit = {
+    require(keys.nonEmpty, "a delta needs at least one key column")
+    commitChecked(df, keys, maxRowsPerFile, retry, expectedVersion)
+  }
+
+  /** Shared commit body; `keys` empty = base commit. `expected =
+    * Some(exp)` enables OCC: the expectation is re-validated both at
+    * attempt start (cheap fail before staging) and again IMMEDIATELY
+    * before the manifest/pointer flip — shrinking the unguarded race
+    * window from the full (possibly long) distributed data write down to
+    * the two atomic renames. A conflict under a retrying policy re-fails
+    * the attempt at the pre-stage check, so retries never re-stage data.
     */
   private def commitChecked(
-      df: DataFrame, maxRowsPerFile: Option[Int],
+      df: DataFrame, keys: Seq[String], maxRowsPerFile: Option[Int],
       retry: graft.streaming.RetryPolicy, expected: Option[Option[Long]]
-  ): Long = {
+  ): Commit = {
     def occCheck(): Unit = expected.foreach { exp =>
       val cur = currentVersion()
       if (cur != exp) throw new SnapshotStore.CommitConflictException(exp, cur)
     }
     graft.streaming.Retry.withRetry(retry) {
       occCheck()
-      val v = currentVersion().getOrElse(0L) + 1
+      val cur = currentVersion()
+      val v = cur.getOrElse(0L) + 1
+      val prev = if (keys.isEmpty) None else cur.map(manifest)
+      prev.foreach { p =>
+        val missing = keys.filterNot(k => p.schema.fieldNames.contains(k) && df.columns.contains(k))
+        require(missing.isEmpty,
+          s"delta key column(s) ${missing.mkString(", ")} missing from the delta or from table $tableDir")
+        p.deltas.headOption.foreach(d => require(d.keys == keys,
+          s"delta keys ${keys.mkString(",")} differ from the chain's ${d.keys.mkString(",")} in $tableDir"))
+      }
       val writer = maxRowsPerFile.foldLeft(df.write.mode("overwrite"))(
         (w, n) => w.option("maxRecordsPerFile", n.toLong))
       writer.parquet(dataDir(v).toString)
 
-      val files = fs.listStatus(dataDir(v))
+      val written = fs.listStatus(dataDir(v))
         .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .map(s => s"data/v$v/${s.getPath.getName}")
-        .sorted
+        .sortBy(_.getPath.getName)
+      val part = Part(StructType(df.schema.map(_.copy(nullable = true))),
+        if (prev.isEmpty) Nil else keys, written.map(s => s"data/v$v/${s.getPath.getName}").toSeq)
+      val m = prev.fold(Manifest(part.schema, part, Nil))(p =>
+        Manifest(SchemaMigration.unionSchema(p.schema, part.schema), p.base, p.deltas :+ part))
       fs.mkdirs(new Path(root, "manifests"))
       occCheck() // re-validate at the flip, not just before staging
-      writeAtomic(manifestFile(v), files.mkString("\n"))
+      writeAtomic(manifestFile(v), m.render)
       writeAtomic(versionFile, v.toString)
-      v
+      Commit(v, written.map(_.getLen).sum, m.deltas.size)
     }
   }
 
@@ -109,32 +157,49 @@ final class SnapshotStore(spark: SparkSession, tableDir: String) {
   def commitIf(df: DataFrame, expectedVersion: Option[Long],
       maxRowsPerFile: Option[Int] = None,
       retry: graft.streaming.RetryPolicy = graft.streaming.RetryPolicy.Never): Long =
-    commitChecked(df, maxRowsPerFile, retry, Some(expectedVersion))
+    commitChecked(df, Nil, maxRowsPerFile, retry, Some(expectedVersion)).version
 
   /** Read the current snapshot (None if the table has no commits). */
   def read(): Option[DataFrame] = currentVersion().map(readVersion)
 
-  /** Time travel: read snapshot `v` as of its commit. A snapshot's data
-    * dir is immutable once VERSION advances past it, so its parquet
-    * schema is cached per (tableDir, v) — read.parquet without a schema
-    * launches a footer-inference Spark job, one dead job per micro-batch
-    * for the streaming readers that re-open the base snapshot each cycle.
+  /** Time travel: read snapshot `v` as of its commit, with the schema its
+    * manifest records. A version without deltas reads as one plain scan
+    * of its base; otherwise the chain resolves as
+    * `latest-per-key(deltas) ∪ base ⟕anti keys(deltas)`: one scan per
+    * distinct delta schema (each aligned to the table schema), each
+    * row's commit order taken from its file's `data/v<N>` dir, so the
+    * plan does not grow with the chain.
     */
   def readVersion(v: Long): DataFrame = {
-    val paths = manifestPaths(v)
-    // the manifest's mtime keys out a wiped-and-recreated table that
-    // reuses version numbers at the same path (one driver getFileStatus,
-    // never a job)
-    val key = (tableDir, v, fs.getFileStatus(manifestFile(v)).getModificationTime)
-    val cached = SnapshotStore.schemaCache.get(key)
-    val schema = if (cached != null) cached else {
-      val s = spark.read.parquet(paths: _*).schema
-      if (SnapshotStore.schemaCache.size >= SnapshotStore.SchemaCacheMax)
-        SnapshotStore.schemaCache.clear()
-      SnapshotStore.schemaCache.put(key, s)
-      s
+    val m = manifest(v)
+    def scan(parts: Seq[Part]): DataFrame =
+      spark.read.schema(parts.head.schema).parquet(parts.flatMap(_.files).map(absolute): _*)
+    val base = scan(Seq(m.base))
+    if (m.deltas.isEmpty) base
+    else {
+      val keys = m.deltas.head.keys
+      val commitCol = Upsert.freshColumn(m.schema.fieldNames.toSeq, "__commit")
+      val latestCol = Upsert.freshColumn(m.schema.fieldNames.toSeq :+ commitCol, "__latest")
+      val stamped = m.schema.add(commitCol, LongType)
+      val deltas = m.deltas.map(_.schema).distinct.map { s =>
+        val d = scan(m.deltas.filter(_.schema == s))
+        SchemaMigration.alignTo(d.withColumn(commitCol,
+          regexp_extract(col("_metadata.file_path"), CommitDirPattern, 1).cast(LongType)), stamped)
+      }.reduce(_ unionByName _)
+      // null keys never match (MERGE's equi-join), so every such row stays
+      val latest = deltas
+        .withColumn(latestCol, max(col(commitCol)).over(Window.partitionBy(keys.map(col): _*)))
+        .where(col(commitCol) === col(latestCol) || keys.map(k => col(k).isNull).reduce(_ || _))
+      SchemaMigration.alignTo(latest, m.schema).unionByName(
+        SchemaMigration.alignTo(base, m.schema).join(deltas.select(keys.map(col): _*), keys, "left_anti"))
     }
-    spark.read.schema(schema).parquet(paths: _*)
+  }
+
+  /** Version `v`'s manifest: table schema, base and delta chain. */
+  def manifest(v: Long): Manifest = {
+    val in = fs.open(manifestFile(v))
+    val body = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    Manifest.parse(v, body, files => spark.read.parquet(files.map(absolute): _*).schema)
   }
 
   def versions(): Seq[Long] =
@@ -146,16 +211,21 @@ final class SnapshotStore(spark: SparkSession, tableDir: String) {
         .sorted.toSeq
 
   /** Expire old snapshots, keeping the most recent `keepLast` — the
-    * reference's snapshot expiration. Data dirs of expired versions are
-    * deleted with their manifests.
+    * reference's snapshot expiration. Expired manifests go first, then
+    * every older commit dir that no retained manifest lists: a retained
+    * version's base and earlier deltas live in older dirs and stay.
     */
   def expireSnapshots(keepLast: Int): Seq[Long] = {
-    val vs      = versions()
-    val expired = vs.dropRight(math.max(keepLast, 1))
-    expired.foreach { v =>
-      fs.delete(dataDir(v), true)
-      fs.delete(manifestFile(v), false)
-    }
+    val vs = versions()
+    val (expired, kept) = vs.splitAt(math.max(0, vs.size - math.max(keepLast, 1)))
+    if (expired.isEmpty) return Seq.empty
+    val liveDirs = kept.flatMap(v => manifest(v).files).map(f => f.substring(0, f.lastIndexOf('/'))).toSet
+    expired.foreach(v => fs.delete(manifestFile(v), false))
+    val dataRoot = new Path(root, "data")
+    if (fs.exists(dataRoot))
+      fs.listStatus(dataRoot).map(_.getPath.getName).collect {
+        case n @ DataDirName(d) if d.toLong < kept.head && !liveDirs(s"data/$n") => d.toLong
+      }.foreach(d => fs.delete(dataDir(d), true))
     expired
   }
 
@@ -165,8 +235,8 @@ final class SnapshotStore(spark: SparkSession, tableDir: String) {
   def removeOrphanFiles(): Seq[String] = {
     // qualify both sides: listStatus returns scheme-qualified paths while
     // manifests store table-relative ones
-    val live = versions().flatMap(v => manifestPaths(v))
-      .map(p => fs.makeQualified(new Path(p)).toString).toSet
+    val live = versions().flatMap(v => manifest(v).files)
+      .map(p => fs.makeQualified(new Path(root, p)).toString).toSet
     val dataRoot = new Path(root, "data")
     if (!fs.exists(dataRoot)) return Seq.empty
     val all = fs.listStatus(dataRoot).filter(_.isDirectory).flatMap { d =>
@@ -181,11 +251,7 @@ final class SnapshotStore(spark: SparkSession, tableDir: String) {
     orphans.map(_.toString).toSeq
   }
 
-  private def manifestPaths(v: Long): Seq[String] = {
-    val in = fs.open(manifestFile(v))
-    val body = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    body.linesIterator.filter(_.nonEmpty).map(rel => new Path(root, rel).toString).toSeq
-  }
+  private def absolute(rel: String): String = new Path(root, rel).toString
 
   private def writeAtomic(path: Path, content: String): Unit = {
     val tmp = new Path(path.getParent, path.getName + ".tmp")
@@ -197,12 +263,68 @@ final class SnapshotStore(spark: SparkSession, tableDir: String) {
 }
 
 object SnapshotStore {
-  /** Per-process schema cache for immutable snapshot versions, keyed
-    * (tableDir, version, manifest mtime); clear-on-overflow bounded.
+  private val DataDirName = "v([0-9]+)".r
+  /** A data file's commit version, from its `data/v<N>/` dir. */
+  private val CommitDirPattern = "/data/v([0-9]+)/[^/]+$"
+
+  /** One commit's data files, as written with `schema`: the base
+    * (`keys` empty) or a delta keyed on `keys`. Paths are table-relative
+    * and name the commit's `data/v<N>` dir.
     */
-  private val SchemaCacheMax = 256
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long), org.apache.spark.sql.types.StructType]()
+  final case class Part(schema: StructType, keys: Seq[String], files: Seq[String])
+
+  /** A version: the table schema, its base and its delta chain in
+    * commit order. Rendered one entry per line: `schema <id> <json>` for
+    * each distinct schema, `table <id>`, then per part `part <schema id>
+    * <key>...` followed by its file paths (tab-separated).
+    */
+  final case class Manifest(schema: StructType, base: Part, deltas: Seq[Part]) {
+    def files: Seq[String] = (base +: deltas).flatMap(_.files)
+
+    def render: String = {
+      val parts = base +: deltas
+      val ids = (schema +: parts.map(_.schema)).distinct.zipWithIndex
+      val id = ids.toMap
+      (ids.map { case (s, i) => s"schema\t$i\t${s.json}" } ++ Seq(s"table\t${id(schema)}") ++
+        parts.flatMap(p => (Seq("part", id(p.schema)) ++ p.keys).mkString("\t") +: p.files))
+        .mkString("\n")
+    }
+  }
+
+  object Manifest {
+    /** Parse a rendered manifest. A manifest of bare paths (the layout
+      * before schemas were recorded) is a base of those files, its
+      * schema taken from `inferSchema`.
+      */
+    def parse(v: Long, body: String, inferSchema: Seq[String] => StructType): Manifest = {
+      val schemas = scala.collection.mutable.Map.empty[Int, StructType]
+      var table = Option.empty[StructType]
+      val parts = scala.collection.mutable.ArrayBuffer.empty[Part]
+      val bare = scala.collection.mutable.ArrayBuffer.empty[String]
+      body.linesIterator.filter(_.nonEmpty).foreach { line =>
+        line.split("\t", -1).toList match {
+          case "schema" :: i :: json :: Nil =>
+            schemas(i.toInt) = DataType.fromJson(json).asInstanceOf[StructType]
+          case "table" :: i :: Nil => table = Some(schemas(i.toInt))
+          case "part" :: i :: keys => parts += Part(schemas(i.toInt), keys, Vector.empty)
+          case path :: Nil if parts.nonEmpty => parts(parts.size - 1) = parts.last.copy(files = parts.last.files :+ path)
+          case path :: Nil => bare += path
+          case _ => throw new IllegalStateException(s"malformed manifest v$v line: $line")
+        }
+      }
+      if (parts.isEmpty) {
+        val s = inferSchema(bare.toSeq)
+        Manifest(s, Part(s, Nil, bare.toSeq), Nil)
+      } else
+        Manifest(table.getOrElse(throw new IllegalStateException(s"manifest v$v has no table schema")),
+          parts.head, parts.tail.toSeq)
+    }
+  }
+
+  /** A landed commit: its version, the bytes of the data files it wrote
+    * and the delta chain length of the version it created.
+    */
+  final case class Commit(version: Long, bytes: Long, deltas: Int)
 
   /** The table advanced since the caller's base version — re-read,
     * re-derive, retry (the optimistic-concurrency contract).

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{FieldSelection, MergeInto, MergeKey, SchemaMigration, TargetMaintenance, Upsert}
+import graft.operators.{FieldSelection, MergeKey, TargetMaintenance, Upsert}
 import graft.sources.SnapshotStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -10,16 +10,18 @@ import org.apache.spark.sql.types.StructType
 /** The reference pipeline as Structured Streaming: parquet blobs landing
   * in a source directory are discovered incrementally (the engine's file
   * source performs the versioned listing), field-filtered, merge-keyed,
-  * deduplicated to latest-per-key within each micro-batch, and MERGE'd
-  * into a parquet target via `foreachBatch` — mirroring the reference's
-  * staging → merge → watermark loop
+  * deduplicated to latest-per-key within each micro-batch, and committed
+  * to a [[SnapshotStore]] target via `foreachBatch` as one merge-on-read
+  * delta keyed on the merge key — mirroring the reference's staging →
+  * merge → watermark loop
   * (/root/reference/src/main/scala/main.scala:85-133).
   *
   * Scale notes: `maxFilesPerTrigger` is the reference's throughput
-  * shaping; the per-batch upsert is one hash aggregation; the MERGE anti
-  * join broadcasts the (small) staged batch against the large target via
-  * AQE. Checkpointing gives exactly-once file tracking — the reference's
-  * watermark store.
+  * shaping; the per-batch upsert is one windowed top-1 per key; the
+  * commit writes only the staged rows (O(churn)) and never reads the
+  * target, whose MERGE semantics resolve on read until the maintenance
+  * optimize folds the chain. Checkpointing gives exactly-once file
+  * tracking — the reference's watermark store.
   */
 object StreamPipeline {
 
@@ -65,8 +67,8 @@ object StreamPipeline {
         */
       stagingDir: Option[String] = None,
       /** commit each batch with optimistic-concurrency detection
-        * ([[graft.sources.SnapshotStore.commitIf]]): the merge's base
-        * version is pinned when the batch reads the target, and an
+        * ([[graft.sources.SnapshotStore.commitIf]]): the batch's base
+        * version is pinned when the batch starts its commit, and an
         * out-of-band writer advancing the table mid-batch (a manual
         * backfill, a second stream on the same target) fails the batch
         * with a typed conflict instead of silently reverting their
@@ -77,8 +79,10 @@ object StreamPipeline {
   )
 
   /** Per-cycle pipeline metrics — the Spark-native form of the
-    * reference's DeclaredMetrics/DataDog counters: collected with the
-    * Observation API on the running plan (no extra pass over the data).
+    * reference's DeclaredMetrics/DataDog counters. `rowsStaged` is
+    * collected with the Observation API on the running plan (no extra
+    * pass over the data); `rowsWritten` is the target's row count after
+    * the cycle's last commit, counted once per cycle.
     */
   final case class CycleMetrics(batches: Long, rowsStaged: Long, rowsWritten: Long, maintenanceRuns: Long = 0)
 
@@ -107,7 +111,6 @@ object StreamPipeline {
   ): CycleMetrics = {
     var batches = 0L
     var rowsStaged = 0L
-    var rowsWritten = 0L
     var maintenanceRuns = 0L
     val reader  = spark.readStream.schema(schema)
     val rateLimit = if (cfg.sourceBuffering) None else cfg.maxFilesPerTrigger
@@ -129,7 +132,6 @@ object StreamPipeline {
       .option("checkpointLocation", cfg.checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val stagedObs = new org.apache.spark.sql.Observation()
-        val writeObs  = new org.apache.spark.sql.Observation()
         val stagedPlan = Upsert.latestByKey(batch, Seq(MergeKey.ColumnName), cfg.versionCols)
           .observe(stagedObs, count(lit(1)).as("rows"))
         // optional on-disk staging: write the staged batch, merge FROM the
@@ -141,42 +143,43 @@ object StreamPipeline {
           // zero part files, which schema inference cannot read back
           spark.read.schema(stagedPlan.schema).parquet(dir)
         }
-        val store  = new SnapshotStore(spark, cfg.targetDir)
-        // pin the merge's base version HERE so conflict detection
-        // compares against exactly the snapshot this merge read
-        val baseVersion = store.currentVersion()
-        // in-stream schema evolution (the reference's
-        // SchemaMigrationProcessor): align target and batch to the union
-        // schema before the MERGE — a no-op projection when schemas
-        // already agree, null-fill + type-widening when the source
-        // evolved, so the target follows the source across cycles
-        val merged = baseVersion.map(store.readVersion).fold(staged) { t =>
-          val (tAligned, sAligned) = SchemaMigration.alignPair(t, staged)
-          MergeInto.merge(tAligned, sAligned, Seq(MergeKey.ColumnName))
-        }.observe(writeObs, count(lit(1)).as("rows"))
-        // snapshot commit: writes a fresh immutable data dir + manifest,
-        // so the merge plan's scan of the previous snapshot never races
-        // its own rewrite, and readers keep snapshot isolation
-        if (cfg.detectConflicts)
-          store.commitIf(merged, baseVersion,
-            maxRowsPerFile = Some(cfg.maxRowsPerFile), retry = cfg.commitRetry)
-        else
-          store.commit(merged, maxRowsPerFile = Some(cfg.maxRowsPerFile), retry = cfg.commitRetry)
-        // the staged batch is merged and committed: dispose it (the
-        // reference's DisposeBatchProcessor runs after each merge cycle)
+        val store = new SnapshotStore(spark, cfg.targetDir)
+        // merge-on-read: the staged latest-per-key rows land as one delta
+        // keyed on the merge key, superseding every earlier row with that
+        // key — the batch neither reads nor rewrites the target. Under
+        // detectConflicts the base version is pinned HERE, so an
+        // out-of-band commit since fails the batch with a typed conflict.
+        // A replayed batch re-commits the same rows, which supersede
+        // themselves: the commit is idempotent. An evolved source schema
+        // widens the table schema and reads align every part to it (the
+        // reference's SchemaMigrationProcessor).
+        val expected = if (cfg.detectConflicts) Some(store.currentVersion()) else None
+        val landed = store.commitDelta(staged, Seq(MergeKey.ColumnName),
+          maxRowsPerFile = Some(cfg.maxRowsPerFile), retry = cfg.commitRetry, expectedVersion = expected)
+        // the staged batch is committed: dispose it (the reference's
+        // DisposeBatchProcessor runs after each merge cycle)
         stagedBatchDir.foreach(graft.operators.Staging.dispose(spark, _))
         batches += 1
         rowsStaged += stagedObs.get("rows").asInstanceOf[Long]
-        rowsWritten += writeObs.get("rows").asInstanceOf[Long]
-        // threshold-driven maintenance on the stream-lifetime batch number
+        publisher.counter("graft.stream.bytes_committed", landed.bytes,
+          Map("kind" -> (if (landed.deltas == 0) "base" else "delta")))
+        // threshold-driven maintenance on the stream-lifetime batch number;
+        // its optimize folds the delta chain into a new base
         val n = batchCounter.incrementAndGet()
-        cfg.maintenance.flatMap(s => TargetMaintenance.maybeRun(spark, store, s, n)).foreach { r =>
+        val maintained = cfg.maintenance.flatMap(s => TargetMaintenance.maybeRun(spark, store, s, n))
+        maintained.foreach { r =>
           maintenanceRuns += 1
           publisher.counter("graft.maintenance.runs", 1, Map("at_batch" -> r.atBatch.toString))
         }
+        val chain = if (maintained.isEmpty) landed.deltas
+          else store.currentVersion().fold(0)(v => store.manifest(v).deltas.size)
+        publisher.gauge("graft.snapshot.deltas", chain.toDouble)
       }
       .start()
     q.awaitTermination()
+    // target rows after the cycle's last commit: one count per cycle
+    val rowsWritten =
+      if (batches == 0) 0L else new SnapshotStore(spark, cfg.targetDir).read().fold(0L)(_.count())
     val m = CycleMetrics(batches, rowsStaged, rowsWritten, maintenanceRuns)
     publisher.counter("graft.stream.batches", m.batches)
     publisher.counter("graft.stream.rows_staged", m.rowsStaged)

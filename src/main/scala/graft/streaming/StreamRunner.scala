@@ -77,7 +77,9 @@ object StreamRunner {
     *  - Overwrite — sharded recompute + atomic completion swap
     *    ([[graft.operators.Backfill.runSharded]]; resumable via the
     *    persisted shard state keyed by `STREAMCONTEXT__BACKFILL_ID`)
-    *  - Merge — MERGE the backfill slice into the existing target
+    *  - Merge — commit the slice's latest-per-key rows as one
+    *    merge-on-read delta on the existing target (MERGE semantics,
+    *    without reading or rewriting the target)
     *
     * Returned metrics: `batches` = shards staged this run (Overwrite) or
     * 1 (Merge); row counters stay 0 — a backfill is one commit, not a
@@ -90,7 +92,7 @@ object StreamRunner {
       env: Map[String, String],
       cfg: StreamPipeline.Config
   ): StreamPipeline.CycleMetrics = {
-    import graft.operators.{Backfill, FieldSelection, MergeInto, MergeKey, SchemaMigration}
+    import graft.operators.{Backfill, FieldSelection, MergeKey, Upsert}
     import graft.sources.{BlobListingSource, SnapshotStore}
     import org.apache.spark.sql.functions.col
 
@@ -119,13 +121,8 @@ object StreamRunner {
           nShards = 8, s"$staging/shards", store, state)
         StreamPipeline.CycleMetrics(result.stagedThisRun.size.toLong, 0, 0)
       case "Merge" =>
-        val merged = store.read().fold(graft.operators.Upsert.latestByKey(
-            keyed, Seq(MergeKey.ColumnName), cfg.versionCols)) { t =>
-          val slice = graft.operators.Upsert.latestByKey(keyed, Seq(MergeKey.ColumnName), cfg.versionCols)
-          val (tAligned, sAligned) = SchemaMigration.alignPair(t, slice)
-          MergeInto.merge(tAligned, sAligned, Seq(MergeKey.ColumnName))
-        }
-        store.commit(merged, maxRowsPerFile = Some(cfg.maxRowsPerFile), retry = cfg.commitRetry)
+        store.commitDelta(Upsert.latestByKey(keyed, Seq(MergeKey.ColumnName), cfg.versionCols),
+          Seq(MergeKey.ColumnName), maxRowsPerFile = Some(cfg.maxRowsPerFile), retry = cfg.commitRetry)
         StreamPipeline.CycleMetrics(1, 0, 0)
     }
   }

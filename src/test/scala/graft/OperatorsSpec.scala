@@ -37,6 +37,15 @@ class OperatorsSpec extends SparkSpec {
     assert(out == Seq((1, "new"), (2, "tie-hi")))
   }
 
+  test("Upsert keeps an input column named like its rank helper") {
+    val df = Seq((1, 10L, 7, "old"), (1, 20L, 8, "new"), (2, 5L, 9, "only"))
+      .toDF("k", "version", "__rn", "payload")
+    val out = Upsert.latestByKey(df, Seq("k"), Seq("version"))
+    assert(out.columns.toSeq == df.columns.toSeq, s"input column dropped: ${out.columns.toSeq}")
+    assert(out.orderBy("k").select("k", "__rn", "payload").as[(Int, Int, String)].collect().toSeq
+      == Seq((1, 8, "new"), (2, 9, "only")))
+  }
+
   test("MergeInto: source wins on match, target survives otherwise, inserts appear") {
     val target = Seq((1, "t1"), (2, "t2")).toDF("k", "v")
     val source = Seq((2, "s2"), (3, "s3")).toDF("k", "v")

@@ -112,6 +112,40 @@ class PipelineServicesSpec extends SparkSpec {
     assert(rec.lines.contains("graft.stream.rows_written:2.0|g"), rec.lines.mkString(","))
   }
 
+  test("pipeline publishes bytes committed per batch and the live delta chain length") {
+    val src    = Files.createTempDirectory("graft_met_delta_src").toString
+    val target = Files.createTempDirectory("graft_met_delta_tgt").toString + "/t"
+    val ckpt   = Files.createTempDirectory("graft_met_delta_ckpt").toString
+    def land(rows: Seq[(Int, Long, String)]): Unit =
+      rows.toDF("k", "version", "payload").coalesce(1).write.mode("append").parquet(src)
+    land(Seq((1, 1L, "a"), (2, 1L, "b")))
+    val schema = spark.read.parquet(src).schema
+    val cfg = StreamPipeline.Config(sourceDir = src, targetDir = target, checkpointDir = ckpt,
+      primaryKeys = Seq("k"), versionCols = Seq("version"),
+      maintenance = Some(TargetMaintenance.Settings(batchThreshold = 3)))
+    val rec = new StatsdRecorder
+    val counter = new StreamPipeline.BatchCounter
+    StreamPipeline.runAvailableNowWithMetrics(spark, schema, cfg, rec, counter)
+    land(Seq((2, 2L, "b2")))
+    StreamPipeline.runAvailableNowWithMetrics(spark, schema, cfg, rec, counter)
+    land(Seq((3, 1L, "c")))
+    StreamPipeline.runAvailableNowWithMetrics(spark, schema, cfg, rec, counter)
+
+    val committed = rec.lines.toSeq.filter(_.startsWith("graft.stream.bytes_committed:"))
+    assert(committed.size == 3, rec.lines.mkString(","))
+    assert(committed.head.matches("""graft\.stream\.bytes_committed:[1-9][0-9]*\|c\|#kind:base"""), committed)
+    assert(committed.tail.forall(_.matches("""graft\.stream\.bytes_committed:[1-9][0-9]*\|c\|#kind:delta""")),
+      committed)
+    // the counter is the data bytes the commit wrote (batch 2 = version 2)
+    val v2Bytes = new java.io.File(s"$target/data/v2").listFiles().filter(_.getName.endsWith(".parquet"))
+      .map(_.length()).sum
+    assert(committed(1) == s"graft.stream.bytes_committed:$v2Bytes|c|#kind:delta")
+    // the chain grows by one delta per batch; the maintenance fold at
+    // batch 3 resets it
+    assert(rec.lines.toSeq.filter(_.startsWith("graft.snapshot.deltas:")) ==
+      Seq("graft.snapshot.deltas:0.0|g", "graft.snapshot.deltas:1.0|g", "graft.snapshot.deltas:0.0|g"))
+  }
+
   test("statsd UDP emitter delivers wire-format datagrams to a live socket") {
     val server = new java.net.DatagramSocket(0, java.net.InetAddress.getLoopbackAddress)
     server.setSoTimeout(5000)

@@ -1062,16 +1062,21 @@ final class CountingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
 }
 
 object CountingFileSystem {
-  private val opens = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  def record(path: String): Unit = { opens.add(path); () }
+  private val BatchIdKey = "streaming.sql.batchId"
+  /** (path, opened inside a streaming micro-batch) */
+  private val opens = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]()
+  def record(path: String): Unit = {
+    // the micro-batch's local property, on the task or on the driver thread
+    val inBatch = Option(org.apache.spark.TaskContext.get()).map(_.getLocalProperty(BatchIdKey))
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession.map(_.sparkContext.getLocalProperty(BatchIdKey)))
+      .exists(_ != null)
+    opens.add((path, inBatch)); ()
+  }
   def reset(): Unit = opens.clear()
-  def parquetOpensUnder(prefix: String): Int = {
-    val it = opens.iterator()
-    var n = 0
-    while (it.hasNext) {
-      val p = it.next()
-      if (p.startsWith(prefix) && p.endsWith(".parquet")) n += 1
-    }
-    n
+  def parquetOpensUnder(prefix: String): Int = parquetOpens(prefix, _ => true)
+  def parquetOpensUnder(prefix: String, inBatch: Boolean): Int = parquetOpens(prefix, _ == inBatch)
+  private def parquetOpens(prefix: String, tag: Boolean => Boolean): Int = {
+    import scala.jdk.CollectionConverters._
+    opens.asScala.count { case (p, b) => tag(b) && p.startsWith(prefix) && p.endsWith(".parquet") }
   }
 }

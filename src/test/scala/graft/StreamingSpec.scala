@@ -356,6 +356,67 @@ class StreamingSpec extends SparkSpec {
       s"external commit must survive the next stream cycle: $payloads")
   }
 
+  test("a crash after the delta's data write and before the manifest flip keeps v; the replay converges") {
+    spark.sparkContext.hadoopConfiguration.set("fs.crashfs.impl", classOf[ManifestCrashFileSystem].getName)
+    val src    = Files.createTempDirectory("graft_crash_src").toString
+    val local  = Files.createTempDirectory("graft_crash_tgt").toString + "/t"
+    val ckpt   = Files.createTempDirectory("graft_crash_ckpt").toString
+    def land(rows: Seq[(Int, Long, String)]): Unit =
+      rows.toDF("k", "version", "payload").coalesce(1).write.mode("append").parquet(src)
+    def hash(df: org.apache.spark.sql.DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    land(Seq((1, 1L, "a"), (2, 1L, "b")))
+    val schema = spark.read.parquet(src).schema
+    val cfg = StreamPipeline.Config(sourceDir = src, targetDir = s"crashfs:$local",
+      checkpointDir = ckpt, primaryKeys = Seq("k"), versionCols = Seq("version"))
+    StreamPipeline.runAvailableNow(spark, schema, cfg)
+    val store  = new SnapshotStore(spark, cfg.targetDir)
+    val before = hash(store.read().get)
+
+    land(Seq((2, 2L, "b2"), (3, 1L, "c")))
+    ManifestCrashFileSystem.armed = true
+    try intercept[Exception](StreamPipeline.runAvailableNow(spark, schema, cfg))
+    finally ManifestCrashFileSystem.armed = false
+    assert(Option(new java.io.File(s"$local/data/v2").list()).exists(_.exists(_.endsWith(".parquet"))),
+      "the injected crash must follow the delta's data write")
+    assert(!new java.io.File(s"$local/manifests/v2.manifest").exists())
+    assert(store.currentVersion().contains(1L) && hash(store.read().get) == before,
+      "a crashed commit must leave version 1 visible")
+
+    // restart on the same checkpoint: the failed batch replays and lands
+    StreamPipeline.runAvailableNow(spark, schema, cfg)
+    assert(store.currentVersion().contains(2L) && store.manifest(2L).deltas.size == 1)
+    val clean = cfg.copy(targetDir = Files.createTempDirectory("graft_crash_ref").toString + "/t",
+      checkpointDir = Files.createTempDirectory("graft_crash_ref_ckpt").toString)
+    StreamPipeline.runAvailableNow(spark, schema, clean)
+    assert(hash(store.read().get) == hash(new SnapshotStore(spark, clean.targetDir).read().get))
+  }
+
+  test("a StreamPipeline merge batch opens no parquet file under the target's data/") {
+    spark.sparkContext.hadoopConfiguration.set("fs.cnt.impl", classOf[CountingFileSystem].getName)
+    val src   = Files.createTempDirectory("graft_opens_src").toString
+    val local = Files.createTempDirectory("graft_opens_tgt").toString + "/t"
+    val ckpt  = Files.createTempDirectory("graft_opens_ckpt").toString
+    def land(rows: Seq[(Int, Long, String)]): Unit =
+      rows.toDF("k", "version", "payload").coalesce(1).write.mode("append").parquet(src)
+    land((1 to 50).map(i => (i, 1L, s"p$i")))
+    val schema = spark.read.parquet(src).schema
+    val cfg = StreamPipeline.Config(sourceDir = src, targetDir = s"cnt:$local",
+      checkpointDir = ckpt, primaryKeys = Seq("k"), versionCols = Seq("version"))
+    StreamPipeline.runAvailableNow(spark, schema, cfg)
+
+    land(Seq((7, 2L, "new7"), (51, 1L, "p51")))
+    CountingFileSystem.reset()
+    val m = StreamPipeline.runAvailableNowWithMetrics(spark, schema, cfg)
+    assert(m.batches == 1 && m.rowsWritten == 51)
+    assert(CountingFileSystem.parquetOpensUnder(s"$local/data/", inBatch = true) == 0,
+      "a merge batch must not read the target")
+    // the shim does see target reads: the cycle's row count, outside the batch
+    assert(CountingFileSystem.parquetOpensUnder(s"$local/data/", inBatch = false) > 0)
+    val store = new SnapshotStore(spark, cfg.targetDir)
+    assert(store.manifest(store.currentVersion().get).deltas.size == 1)
+    assert(store.read().get.where(col("k") === 7).select("payload").as[String].collect().toSeq == Seq("new7"))
+  }
+
   test("stream bench section: both ingest paths sustain a pinned throughput floor") {
     // the BENCH artifact records the real rows/sec at sf0.1; this spec
     // pins a VERY conservative floor at the tiny SF (commit overhead
@@ -369,3 +430,28 @@ class StreamingSpec extends SparkSpec {
     assert(r.appendRowsPerSec > 25, s"append-sink throughput floor: ${r.appendRowsPerSec} rows/s")
   }
 }
+
+/** Local FileSystem (`crashfs://`) that fails the creation of a snapshot
+  * manifest while armed: a crash between a commit's data write and its
+  * manifest/`VERSION` flip.
+  */
+final class ManifestCrashFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FSDataOutputStream, Path}
+  import org.apache.hadoop.fs.permission.FsPermission
+  import org.apache.hadoop.util.Progressable
+  override def getScheme: String = "crashfs"
+  override def getUri: java.net.URI = java.net.URI.create("crashfs:///")
+  private def check(f: Path): Unit =
+    if (ManifestCrashFileSystem.armed && f.getName.endsWith(".manifest.tmp"))
+      throw new java.io.IOException(s"injected crash before the manifest flip: $f")
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    check(f); super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    check(f); super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+
+object ManifestCrashFileSystem { @volatile var armed = false }
