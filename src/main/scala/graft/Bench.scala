@@ -426,6 +426,38 @@ object StreamBenchSection {
   * operators, not JVM startup.
   */
 object Bench {
+  /** Env var naming the prior round's results: a `BENCH_r*.json` file, or
+    * a directory whose newest `BENCH_r<N>.json` is used. */
+  val PriorBenchEnv = "SPARK_GRAFT_PRIOR_BENCH"
+
+  /** Query names the prior round's compact line reported, parsed from
+    * `prior` (a file, or a directory scanned for its newest
+    * `BENCH_r<N>.json`); without `prior` the working directory is
+    * scanned. A miss (nothing found, unreadable or unparseable) is logged
+    * to stderr and carries no names.
+    */
+  def priorRoundNames(prior: Option[String], log: String => Unit = System.err.println): Set[String] = {
+    val where = new java.io.File(prior.getOrElse("."))
+    val file =
+      if (where.isFile) Some(where)
+      else Option(where.listFiles()).getOrElse(Array.empty[java.io.File])
+        .filter(_.getName.matches("BENCH_r\\d+\\.json"))
+        .maxByOption(_.getName.stripPrefix("BENCH_r").stripSuffix(".json").toInt)
+    val names = file.flatMap { f =>
+      try {
+        val body = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        org.json4s.jackson.JsonMethods.parse(body) \ "parsed" \ "queries" match {
+          case org.json4s.JObject(fields) => Some(fields.map(_._1).toSet)
+          case _ => None
+        }
+      } catch { case scala.util.control.NonFatal(_) => None }
+    }
+    if (names.isEmpty)
+      log(s"[bench] no prior-round query names in ${file.getOrElse(where).getAbsolutePath} " +
+        s"(set $PriorBenchEnv to a BENCH_r*.json or its dir); carrying none")
+    names.getOrElse(Set.empty)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS",
@@ -500,23 +532,10 @@ object Bench {
     // round-over-round diff: a query that fell from the prior round's
     // top-40 (because it got FASTER, or the day drifted) read as
     // "dropped_from_bench" (r15: three such phantoms). Fix: union in the
-    // prior round's reported names (parsed from the newest committed
-    // BENCH_r*.json, if any — the bench runs from the repo root), capped
-    // so the line stays under the collector's tail. Entries are only
-    // ever ADDED relative to the plain top-40.
-    val priorNames: Set[String] = try {
-      val cand = Option(new java.io.File(".").listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.matches("BENCH_r\\d+\\.json"))
-      if (cand.isEmpty) Set.empty
-      else {
-        val latest = cand.maxBy(_.getName.stripPrefix("BENCH_r").stripSuffix(".json").toInt)
-        val body = new String(java.nio.file.Files.readAllBytes(latest.toPath), "UTF-8")
-        org.json4s.jackson.JsonMethods.parse(body) \ "parsed" \ "queries" match {
-          case org.json4s.JObject(fields) => fields.map(_._1).toSet
-          case _ => Set.empty
-        }
-      }
-    } catch { case scala.util.control.NonFatal(_) => Set.empty }
+    // prior round's reported names ([[priorRoundNames]]), capped so the
+    // line stays under the collector's tail. Entries are only ever ADDED
+    // relative to the plain top-40.
+    val priorNames = priorRoundNames(sys.env.get(PriorBenchEnv))
     val slowest = {
       val top = results.sortBy(-_._2).take(40)
       val topNames = top.map(_._1).toSet

@@ -6,26 +6,24 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Staging: group rows into batches capped at `maxRowsPerFile`, the
-  * reference's `StagingProcessor` + `staging.table.maxRowsPerFile`
-  * (/root/reference/stream-spec-yaml-example.yaml:13).
+  * reference's `StagingProcessor` + `staging.table.maxRowsPerFile`.
   *
-  * Production write path: Spark's `option("maxRecordsPerFile", n)` caps
-  * rows per output file natively with zero extra shuffle — that is what
-  * `writeStaged` uses and what the streaming sink uses. The
+  * Production write path: the streaming pipeline's merge-on-read delta
+  * IS the staged batch — [[graft.sources.SnapshotStore.commitDelta]] caps
+  * rows per delta file with Spark's native `maxRecordsPerFile` (zero
+  * extra shuffle), so no separate staged copy is written. The
   * `batchAccounting` query exists for the correctness gate: it assigns
   * deterministic batch ids equal to a global row_number's, through the
   * partition-parallel two-phase numbering ([[withGlobalRank]]).
   */
 object Staging {
-  def writeStaged(df: DataFrame, dir: String, maxRowsPerFile: Int): Unit =
-    df.write.mode("overwrite").option("maxRecordsPerFile", maxRowsPerFile.toLong).parquet(dir)
-
-  /** Drop a staged batch once it has been merged — the reference's
-    * `DisposeBatchProcessor` (/root/reference/src/main/scala/main.scala:88)
-    * drops staging tables after each merge cycle so staged data never
-    * accumulates. Returns whether anything was deleted. Callers dispose
-    * only AFTER the target commit materialized, so a crash between merge
-    * and dispose leaves a re-disposable leftover, never data loss.
+  /** Drop a staged directory once it has been merged — the reference's
+    * `DisposeBatchProcessor` drops staging tables after each merge cycle
+    * so staged data never accumulates (the backfill shards and Bench's
+    * scratch dirs use it). Returns whether anything was deleted. Callers
+    * dispose only AFTER the target commit materialized, so a crash
+    * between merge and dispose leaves a re-disposable leftover, never
+    * data loss.
     */
   def dispose(spark: SparkSession, dir: String): Boolean = {
     val p  = new Path(dir)

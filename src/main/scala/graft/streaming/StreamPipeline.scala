@@ -12,9 +12,10 @@ import org.apache.spark.sql.types.StructType
   * source performs the versioned listing), field-filtered, merge-keyed,
   * deduplicated to latest-per-key within each micro-batch, and committed
   * to a [[SnapshotStore]] target via `foreachBatch` as one merge-on-read
-  * delta keyed on the merge key — mirroring the reference's staging →
-  * merge → watermark loop
-  * (/root/reference/src/main/scala/main.scala:85-133).
+  * delta keyed on the merge key — the reference's staging → merge →
+  * dispose → watermark loop in one write: the delta is the staged batch
+  * (capped at `maxRowsPerFile` rows per file, listed by the manifest), so
+  * no staged copy is written, re-read or disposed.
   *
   * Scale notes: `maxFilesPerTrigger` is the reference's throughput
   * shaping; the per-batch upsert is one windowed top-1 per key; the
@@ -60,10 +61,9 @@ object StreamPipeline {
       maintenance: Option[TargetMaintenance.Settings] = None,
       /** bound transient snapshot-commit failures (merge-client retry). */
       commitRetry: RetryPolicy = RetryPolicy.Never,
-      /** persist each micro-batch's staged upsert here before the MERGE
-        * (the reference's staging tables, `StagingProcessor`) and dispose
-        * it after the commit (`DisposeBatchProcessor`). None = merge the
-        * in-memory staged plan directly (no extra I/O).
+      /** scratch root for [[StreamRunner]]'s `Overwrite` backfill shards
+        * (`<stagingDir>/backfill-staging`). Streaming never writes here:
+        * each micro-batch's delta is its staged batch.
         */
       stagingDir: Option[String] = None,
       /** commit each batch with optimistic-concurrency detection
@@ -130,23 +130,13 @@ object StreamPipeline {
     val q = keyed.writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val stagedObs = new org.apache.spark.sql.Observation()
-        val stagedPlan = Upsert.latestByKey(batch, Seq(MergeKey.ColumnName), cfg.versionCols)
-          .observe(stagedObs, count(lit(1)).as("rows"))
-        // optional on-disk staging: write the staged batch, merge FROM the
-        // staged table (reference StagingProcessor → MergeBatchProcessor)
-        val stagedBatchDir = cfg.stagingDir.map(sd => s"$sd/batch-$batchId")
-        val staged = stagedBatchDir.fold(stagedPlan) { dir =>
-          graft.operators.Staging.writeStaged(stagedPlan, dir, cfg.maxRowsPerFile)
-          // explicit schema: an empty micro-batch stages a directory with
-          // zero part files, which schema inference cannot read back
-          spark.read.schema(stagedPlan.schema).parquet(dir)
-        }
+      .foreachBatch { (batch: DataFrame, _: Long) =>
         val store = new SnapshotStore(spark, cfg.targetDir)
         // merge-on-read: the staged latest-per-key rows land as one delta
         // keyed on the merge key, superseding every earlier row with that
-        // key — the batch neither reads nor rewrites the target. Under
+        // key — the batch neither reads nor rewrites the target. The delta
+        // IS the staged batch (the reference's staging table, capped at
+        // maxRowsPerFile rows per file), written once. Under
         // detectConflicts the base version is pinned HERE, so an
         // out-of-band commit since fails the batch with a typed conflict.
         // A replayed batch re-commits the same rows, which supersede
@@ -154,13 +144,19 @@ object StreamPipeline {
         // widens the table schema and reads align every part to it (the
         // reference's SchemaMigrationProcessor).
         val expected = if (cfg.detectConflicts) Some(store.currentVersion()) else None
-        val landed = store.commitDelta(staged, Seq(MergeKey.ColumnName),
-          maxRowsPerFile = Some(cfg.maxRowsPerFile), retry = cfg.commitRetry, expectedVersion = expected)
-        // the staged batch is committed: dispose it (the reference's
-        // DisposeBatchProcessor runs after each merge cycle)
-        stagedBatchDir.foreach(graft.operators.Staging.dispose(spark, _))
+        // each commitRetry attempt re-executes the staged plan under a
+        // fresh Observation: a failed attempt completes its own with a
+        // partial count, so a shared one would under-count the batch
+        val (landed, staged) = Retry.withRetry(cfg.commitRetry) {
+          val obs = new org.apache.spark.sql.Observation()
+          val plan = Upsert.latestByKey(batch, Seq(MergeKey.ColumnName), cfg.versionCols)
+            .observe(obs, count(lit(1)).as("rows"))
+          val c = store.commitDelta(plan, Seq(MergeKey.ColumnName),
+            maxRowsPerFile = Some(cfg.maxRowsPerFile), expectedVersion = expected)
+          (c, obs.get("rows").asInstanceOf[Long])
+        }
         batches += 1
-        rowsStaged += stagedObs.get("rows").asInstanceOf[Long]
+        rowsStaged += staged
         publisher.counter("graft.stream.bytes_committed", landed.bytes,
           Map("kind" -> (if (landed.deltas == 0) "base" else "delta")))
         // threshold-driven maintenance on the stream-lifetime batch number;

@@ -371,8 +371,9 @@ object StreamSpec {
       // sink.optimisticConcurrency: true → per-batch commits detect
       // out-of-band writers (fail-fast instead of last-writer-wins)
       detectConflicts = bool(spec, "sink", "optimisticConcurrency").getOrElse(false),
-      // the reference always stages batches before the merge; mirror that
-      // whenever the spec carries a staging section
+      // the reference stages batches in staging tables; here each
+      // micro-batch's delta is its staged batch (capped at maxRowsPerFile),
+      // so this dir is only scratch for Overwrite backfill shards
       stagingDir = stagingDir.orElse(
         at(spec, "staging", "table").map(_ => s"$tempStorage/graft-staging"))
     )

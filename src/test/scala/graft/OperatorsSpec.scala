@@ -65,13 +65,16 @@ class OperatorsSpec extends SparkSpec {
     assert(rows(1).getAs[String]("y") == "extra")
   }
 
-  test("Staging.writeStaged respects maxRowsPerFile") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_staging").toString
-    val df  = spark.range(100).toDF("id")
-    Staging.writeStaged(df.coalesce(1), dir, maxRowsPerFile = 30)
-    val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+  test("a SnapshotStore delta (the staged batch) respects maxRowsPerFile") {
+    val dir   = java.nio.file.Files.createTempDirectory("graft_staging").toString + "/t"
+    val store = new graft.sources.SnapshotStore(spark, dir)
+    store.commit(spark.range(1).toDF("id"))
+    val df = spark.range(100).toDF("id")
+    val c  = store.commitDelta(df.coalesce(1), Seq("id"), maxRowsPerFile = Some(30))
+    val files = store.manifest(c.version).deltas.last.files
     assert(files.length == 4) // 30+30+30+10
-    assert(spark.read.parquet(dir).count() == 100)
+    assert(files.map(f => spark.read.parquet(s"$dir/$f").count()).sorted == Seq(10L, 30L, 30L, 30L))
+    assert(store.read().get.count() == 100)
   }
 
   test("memory-bound shaper advises fewer rows per chunk for wider schemas") {

@@ -310,11 +310,11 @@ class PipelineServicesSpec extends SparkSpec {
       3 -> (("c", Some("x3")))))   // inserted with the new column
   }
 
-  test("staged batches are written during the merge cycle and disposed after each commit") {
+  test("each micro-batch commits its staged rows as the delta; stagingDir is never created") {
     val src     = Files.createTempDirectory("graft_stg_src").toString
     val target  = Files.createTempDirectory("graft_stg_tgt").toString + "/t"
     val ckpt    = Files.createTempDirectory("graft_stg_ckpt").toString
-    val staging = Files.createTempDirectory("graft_stg_stage").toString
+    val staging = Files.createTempDirectory("graft_stg_stage").toString + "/scratch"
     for (i <- 1 to 3)
       Seq((i, 1L, s"v$i")).toDF("k", "version", "payload").coalesce(1).write.mode("append").parquet(src)
     val schema = spark.read.parquet(src).schema
@@ -323,11 +323,14 @@ class PipelineServicesSpec extends SparkSpec {
       maxFilesPerTrigger = Some(1), stagingDir = Some(staging))
     val m = StreamPipeline.runAvailableNowWithMetrics(spark, schema, cfg)
     assert(m.batches == 3 && m.rowsStaged == 3, s"unexpected metrics: $m")
-    // target is complete, staging is empty: each batch-<id> dir was
-    // merged from disk and then disposed (DisposeBatchProcessor)
-    assert(new SnapshotStore(spark, target).read().get.count() == 3)
-    val leftovers = Option(new java.io.File(staging).listFiles()).map(_.toSeq).getOrElse(Seq.empty)
-    assert(leftovers.isEmpty, s"staging dir must be empty post-commit: $leftovers")
+    // the target holds every batch's rows, one delta per batch after the
+    // base; stagingDir is backfill scratch only, so streaming never
+    // writes (or disposes) anything under it
+    val store = new SnapshotStore(spark, target)
+    val rows = store.read().get.select("k", "payload").as[(Int, String)].collect().toMap
+    assert(rows == Map(1 -> "v1", 2 -> "v2", 3 -> "v3"), s"target rows: $rows")
+    assert(store.manifest(store.currentVersion().get).deltas.size == 2)
+    assert(!new java.io.File(staging).exists(), s"streaming must not create $staging")
   }
 
   // ---- sharded backfill + persisted state ----

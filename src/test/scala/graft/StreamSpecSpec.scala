@@ -4,6 +4,7 @@ import graft.operators.FieldSelection
 import graft.sources.SnapshotStore
 import graft.streaming.{RetryMode, StreamPipeline, StreamSpec}
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** Spec-driven configuration: the reference deployment is a YAML stream
   * spec (stream-spec-yaml-example.yaml); these tests prove the same spec
@@ -166,7 +167,7 @@ class StreamSpecSpec extends SparkSpec {
     val cfg  = StreamSpec.pipelineConfig(spec,
       sourceDir = Some(src), targetDir = Some(target), checkpointDir = Some(ckpt),
       stagingDir = Some(staging))
-    assert(cfg.stagingDir.contains(staging), "spec with a staging section must stage batches")
+    assert(cfg.stagingDir.contains(staging), "the stagingDir override must reach the config")
     val schema = spark.read.parquet(src).schema
 
     val batches = StreamPipeline.runAvailableNow(spark, schema, cfg)
@@ -175,9 +176,64 @@ class StreamSpecSpec extends SparkSpec {
       .select("k", "payload").as[(Int, String)].collect().toMap
     assert(rows == Map(1 -> "new", 2 -> "keep2"),
       s"spec-driven pipeline must keep the latest blob version per key: $rows")
-    // staged batches were merged from disk and disposed post-commit
+    // each batch's delta is its staged batch: nothing lands under staging
     val leftovers = Option(new java.io.File(staging).listFiles()).map(_.toSeq).getOrElse(Seq.empty)
-    assert(leftovers.isEmpty, s"staging must be disposed after the merge: $leftovers")
+    assert(leftovers.isEmpty, s"streaming must write nothing under staging: $leftovers")
+  }
+
+  test("a spec-booted micro-batch with a staging section runs 2 jobs and writes only the delta") {
+    import graft.streaming.StreamRunner
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val tmp    = Files.createTempDirectory("graft_spec_jobs").toString
+    val src    = s"$tmp/src"
+    val target = s"$tmp/t"
+    val ckpt   = s"$tmp/ckpt"
+    val m = 30
+    Seq((1, "seed")).toDF("k", "payload").coalesce(1).write.mode("append").parquet(src)
+    // tempStoragePath roots the spec-derived stagingDir ($tmp/graft-staging)
+    val env = Map(StreamSpec.SpecEnvVar -> specText
+      .replace("tempStoragePath: /tmp", s"tempStoragePath: $tmp")
+      .replace("maxRowsPerFile: 10000", s"maxRowsPerFile: $m"))
+    assert(StreamSpec.pipelineConfig(StreamSpec.fromEnv(env), sourceDir = Some(src))
+      .stagingDir.contains(s"$tmp/graft-staging"))
+    val schema = spark.read.parquet(src).schema
+    StreamRunner.boot(spark, schema, env, maxCycles = 1,
+      sourceDir = Some(src), targetDir = Some(target), checkpointDir = Some(ckpt))
+
+    // the measured cycle: one blob of n rows -> one merge micro-batch
+    val n = 100
+    Thread.sleep(1100) // a later blob version than the seed's
+    (1 to n).map(i => (i, s"p$i")).toDF("k", "payload").coalesce(1).write.mode("append").parquet(src)
+    val jobsByBatch = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = Option(e.properties).foreach { p =>
+        Option(p.getProperty("streaming.sql.batchId"))
+          .foreach(b => jobsByBatch.merge(b, 1, (a: Integer, c: Integer) => a + c))
+        if (p.getProperty("graft.spec.marker") != null) drained.countDown()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val cycle = try {
+      val r = StreamRunner.boot(spark, schema, env, maxCycles = 1,
+        sourceDir = Some(src), targetDir = Some(target), checkpointDir = Some(ckpt))
+      // listener events arrive asynchronously but in order: once a marked
+      // job's start is seen, every batch job's start has been counted
+      spark.sparkContext.setLocalProperty("graft.spec.marker", "1")
+      try spark.range(1).collect() finally spark.sparkContext.setLocalProperty("graft.spec.marker", null)
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+      r
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(cycle.batches == 1 && cycle.rowsStaged == n, s"unexpected metrics: $cycle")
+    assert(jobsByBatch.asScala.toMap == Map("1" -> 2),
+      s"a merge batch runs the latestByKey exchange and the delta write only: $jobsByBatch")
+    assert(!new java.io.File(s"$tmp/graft-staging").exists(), "no staged copy may be written")
+
+    val store = new SnapshotStore(spark, target)
+    val delta = store.manifest(store.currentVersion().get).deltas.last
+    val counts = delta.files.map(f => spark.read.parquet(s"$target/$f").count())
+    assert(counts.size == (n + m - 1) / m && counts.forall(_ <= m) && counts.sum == n,
+      s"the delta must hold ceil($n/$m) files of at most $m rows: $counts")
   }
 
   test("STREAMCONTEXT__SPEC env var boots the pipeline end-to-end") {

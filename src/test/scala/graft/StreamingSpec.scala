@@ -391,6 +391,39 @@ class StreamingSpec extends SparkSpec {
     assert(hash(store.read().get) == hash(new SnapshotStore(spark, clean.targetDir).read().get))
   }
 
+  test("a transient failure of the first delta write under commitRetry lands the batch once") {
+    import graft.streaming.{RetryMode, RetryPolicy}
+    spark.sparkContext.hadoopConfiguration.set("fs.crashfs.impl", classOf[ManifestCrashFileSystem].getName)
+    val src   = Files.createTempDirectory("graft_retry_src").toString
+    val local = Files.createTempDirectory("graft_retry_tgt").toString + "/t"
+    val ckpt  = Files.createTempDirectory("graft_retry_ckpt").toString
+    def land(rows: Seq[(Int, Long, String)]): Unit =
+      rows.toDF("k", "version", "payload").coalesce(1).write.mode("append").parquet(src)
+    def hash(df: org.apache.spark.sql.DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    land(Seq((1, 1L, "a"), (2, 1L, "b")))
+    val schema = spark.read.parquet(src).schema
+    val cfg = StreamPipeline.Config(sourceDir = src, targetDir = s"crashfs:$local",
+      checkpointDir = ckpt, primaryKeys = Seq("k"), versionCols = Seq("version"),
+      commitRetry = RetryPolicy(maxAttempts = 3, baseDelayMs = 1, mode = Some(RetryMode.Always)))
+    StreamPipeline.runAvailableNow(spark, schema, cfg)
+
+    land(Seq((2, 2L, "b2"), (3, 1L, "c"), (4, 1L, "d")))
+    ManifestCrashFileSystem.failDataWrites.set(1)
+    val m = try StreamPipeline.runAvailableNowWithMetrics(spark, schema, cfg)
+      finally ManifestCrashFileSystem.failDataWrites.set(0)
+    assert(ManifestCrashFileSystem.dataWritesFailed.getAndSet(0) == 1,
+      "the first delta write must have failed once")
+    assert(m.batches == 1 && m.rowsStaged == 3, s"the retried batch must count its rows once: $m")
+    val store = new SnapshotStore(spark, cfg.targetDir)
+    assert(store.currentVersion().contains(2L) && store.manifest(2L).deltas.size == 1)
+    assert(spark.read.parquet(s"$local/data/v2").count() == 3, "only one attempt's rows may land")
+
+    val clean = cfg.copy(targetDir = Files.createTempDirectory("graft_retry_ref").toString + "/t",
+      checkpointDir = Files.createTempDirectory("graft_retry_ref_ckpt").toString)
+    StreamPipeline.runAvailableNow(spark, schema, clean)
+    assert(hash(store.read().get) == hash(new SnapshotStore(spark, clean.targetDir).read().get))
+  }
+
   test("a StreamPipeline merge batch opens no parquet file under the target's data/") {
     spark.sparkContext.hadoopConfiguration.set("fs.cnt.impl", classOf[CountingFileSystem].getName)
     val src   = Files.createTempDirectory("graft_opens_src").toString
@@ -433,7 +466,9 @@ class StreamingSpec extends SparkSpec {
 
 /** Local FileSystem (`crashfs://`) that fails the creation of a snapshot
   * manifest while armed: a crash between a commit's data write and its
-  * manifest/`VERSION` flip.
+  * manifest/`VERSION` flip. `failDataWrites = n` instead fails the next
+  * n parquet file creations under a `data/v<N>` dir: a transient failure
+  * of a delta's data write.
   */
 final class ManifestCrashFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   import org.apache.hadoop.fs.{FSDataOutputStream, Path}
@@ -441,9 +476,16 @@ final class ManifestCrashFileSystem extends org.apache.hadoop.fs.RawLocalFileSys
   import org.apache.hadoop.util.Progressable
   override def getScheme: String = "crashfs"
   override def getUri: java.net.URI = java.net.URI.create("crashfs:///")
-  private def check(f: Path): Unit =
-    if (ManifestCrashFileSystem.armed && f.getName.endsWith(".manifest.tmp"))
+  private def check(f: Path): Unit = {
+    import ManifestCrashFileSystem._
+    if (armed && f.getName.endsWith(".manifest.tmp"))
       throw new java.io.IOException(s"injected crash before the manifest flip: $f")
+    if (f.getName.endsWith(".parquet") && f.toString.contains("/data/v") &&
+        failDataWrites.getAndUpdate(n => math.max(0, n - 1)) > 0) {
+      dataWritesFailed.incrementAndGet()
+      throw new java.io.IOException(s"injected transient failure of a delta data write: $f")
+    }
+  }
   override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
       blockSize: Long, progress: Progressable): FSDataOutputStream = {
     check(f); super.create(f, overwrite, bufferSize, replication, blockSize, progress)
@@ -454,4 +496,8 @@ final class ManifestCrashFileSystem extends org.apache.hadoop.fs.RawLocalFileSys
   }
 }
 
-object ManifestCrashFileSystem { @volatile var armed = false }
+object ManifestCrashFileSystem {
+  @volatile var armed = false
+  val failDataWrites   = new java.util.concurrent.atomic.AtomicInteger(0)
+  val dataWritesFailed = new java.util.concurrent.atomic.AtomicInteger(0)
+}
