@@ -2,10 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Dev tool: dump the PRE-COLLECT serve/maintenance frames of the
-  * lexical lifecycle (the entry-level Explain shows only the
-  * LocalTableScan tail that [[ServingIndexes.disposeAfter]] collects —
-  * VERDICT r15 #9 asked for the frames that actually show structure).
+/** Dev tool: dump the PRE-COLLECT serve frames of the lexical and
+  * dense lifecycles after a tombstoning CDC batch (the entry-level
+  * Explain shows only the LocalTableScan tail that
+  * [[ServingIndexes.disposeAfter]] collects — VERDICT r15 #9 asked for
+  * the frames that actually show structure).
   * args: [output file] [sf dir]
   */
 object DumpServePlans {
@@ -40,6 +41,21 @@ object DumpServePlans {
     dump("serve_bm25TopK_postCdc") {
       operators.InvertedIndex.bm25TopK(docs, "doc_id", "text", work,
         probeIds = Seq(0L, 7L, 42L), k = 5)
+    }
+    // the dense side's tombstoned serve (the liveRows path): ids ≡ 3
+    // mod 17 take new vectors, ids ≡ 5 mod 19 leave
+    val emb = Tables(spark, sfDir).embeddings
+    val annWork = work.stripSuffix("/idx") + "/ann"
+    val corpus = emb.filter(col("vec_id") >= 20)
+    operators.AnnIndex.build(corpus, "vec_id", "embedding", annWork, nCells = 8)
+    val moved = pmod(col("vec_id"), lit(17)) === 3
+    operators.AnnIndex.applyCdc(
+      upserts = corpus.filter(moved),
+      removalIds = corpus.filter(moved || pmod(col("vec_id"), lit(19)) === 5).select("vec_id"),
+      "vec_id", "embedding", annWork)
+    dump("serve_annTopK_postCdc") {
+      operators.AnnIndex.topK(emb.filter(col("vec_id") < 20), "vec_id", "embedding",
+        annWork, k = 10)
     }
     out.close()
     spark.stop()

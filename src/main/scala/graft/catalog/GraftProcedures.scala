@@ -32,9 +32,9 @@ object GraftProcedures {
       .map(Identifier.of(Array(Namespace), _))
 
   /** The serving indexes (lexical postings / ANN cells) share one
-    * manifest protocol but different manifest shapes — dispatch on the
-    * committed manifest itself so one procedure surface maintains both
-    * (`centroids` is the ANN manifest's defining field).
+    * lifecycle ([[graft.operators.IndexManifests]]): vacuum, export and
+    * rollback run on any committed index dir, and only compact and
+    * describe ask for the payload kind.
     */
   private def isAnnIndex(spark: SparkSession, dir: String): Boolean =
     graft.operators.IndexManifests.isAnnManifest(spark, dir)
@@ -42,10 +42,10 @@ object GraftProcedures {
   /** A FEDERATION root ([[graft.operators.ShardedIndex]], shards.json
     * marker) maintains as its shard list — the ops runbook stays ONE
     * surface: compact/vacuum/describe/export on a federation dir fan
-    * out per shard (each shard's own kind-sniffed path). Rollback is
-    * the exception: per-shard versions advance independently, so a
-    * federation-level version number is meaningless — roll shards back
-    * individually, by their own histories.
+    * out per shard. Rollback is the exception: per-shard versions
+    * advance independently, so a federation-level version number is
+    * meaningless — roll shards back individually, by their own
+    * histories.
     */
   private def shardDirs(spark: SparkSession, dir: String): Option[Seq[String]] =
     if (!graft.operators.ShardedIndex.isFederation(spark, dir)) None
@@ -146,9 +146,7 @@ object GraftProcedures {
         { (spark, in) =>
           val d = in.getUTF8String(0).toString
           def one(s: String) =
-            if (isAnnIndex(spark, s))
-              graft.operators.AnnIndex.vacuum(spark, s, in.getInt(1), in.getLong(2))
-            else graft.operators.InvertedIndex.vacuum(spark, s, in.getInt(1), in.getLong(2))
+            graft.operators.IndexManifests.vacuum(spark, s, in.getInt(1), in.getLong(2))
           val removed = shardDirs(spark, d).fold(one(d))(_.map(one).sum)
           new GenericInternalRow(Array[Any](removed))
         }))
@@ -228,13 +226,8 @@ object GraftProcedures {
               // construction), counts summed, version = max head
               val ann = isAnnIndex(spark, ss.head)
               val (vs, files, tombs, metas) = ss.map { s =>
-                if (ann) {
-                  val m = graft.operators.AnnIndex.currentManifest(spark, s)
-                  (m.version, m.vectors.size, m.deletes.size, m.metaDirs.size)
-                } else {
-                  val m = graft.operators.InvertedIndex.currentManifest(spark, s)
-                  (m.version, m.postings.size, m.deletes.size, m.metaDirs.size)
-                }
+                val m = graft.operators.IndexManifests.head(spark, s)
+                (m.version, m.files.size, m.deletes.size, m.metaDirs.size)
               }.foldLeft((0L, 0, 0, 0)) { case ((v, f, t, md), (v2, f2, t2, md2)) =>
                 (math.max(v, v2), f + f2, t + t2, md + md2)
               }
@@ -275,8 +268,7 @@ object GraftProcedures {
             // shard dirs before re-claiming (no marker = not serving)
             if (graft.operators.ShardedIndex.isFederation(spark, s))
               graft.operators.ShardedIndex.exportSharded(spark, s, d)
-            else if (isAnnIndex(spark, s)) graft.operators.AnnIndex.exportIndex(spark, s, d)
-            else graft.operators.InvertedIndex.exportIndex(spark, s, d)
+            else graft.operators.IndexManifests.exportIndex(spark, s, d)
           new GenericInternalRow(Array[Any](v))
         }))
       case "index_reshard" => Some(proc("index_reshard",
@@ -334,9 +326,7 @@ object GraftProcedures {
             s"$d is a sharded federation: per-shard versions advance independently, " +
               "so a federation-level rollback target is meaningless — roll back each " +
               "shard dir by its own history (CALL index_rollback('<dir>/shard=i', v))")
-          val nv =
-            if (isAnnIndex(spark, d)) graft.operators.AnnIndex.rollback(spark, d, v)
-            else graft.operators.InvertedIndex.rollback(spark, d, v)
+          val nv = graft.operators.IndexManifests.rollback(spark, d, v)
           new GenericInternalRow(Array[Any](v, nv))
         }))
       case _ => None

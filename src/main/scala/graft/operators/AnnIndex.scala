@@ -6,7 +6,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.json4s._
-import org.json4s.jackson.JsonMethods
 
 /** Persisted IVF serving index — the dense-side twin of
   * [[InvertedIndex]] (`search_bm25_indexed`): [[Similarity.ivfTopK]]
@@ -35,12 +34,11 @@ import org.json4s.jackson.JsonMethods
   *    ≤ nCells driver-side collect), the manifest's file list is
   *    pruned to those cells, and the exact cosine + per-probe window
   *    ranks the slice. Same output shape as `ann_ivf`.
-  *  - '''compact''' / '''vacuum''': fold per-delta small files per
-  *    cell / expire old manifests and sweep unreferenced files — the
-  *    same maintenance actions as the lexical index, via the shared
-  *    [[IndexManifests]] commit protocol (atomic exclusive-create
-  *    claim; a crash before the claim leaves only invisible orphans;
-  *    racing maintainers serialize and retry).
+  *  - '''compact''' / '''vacuum''' / '''rollback''' / '''export''': the
+  *    lifecycle both indexes share, written once in [[IndexManifests]]
+  *    (atomic exclusive-create claim; a crash before the claim leaves
+  *    only invisible orphans; racing maintainers serialize and retry);
+  *    this object supplies only the cell rewrite.
   *
   * Recall is the ann_ivf bound (≥ 0.8 vs brute force, spec-pinned):
   * identical centroid training, assignment, and probe-cell selection —
@@ -54,17 +52,15 @@ object AnnIndex {
 
   /** One committed index version: the coarse centroids (bit-exact) and
     * the exact vector files with their cell. Paths relative to root.
-    * `streams` carries per-stream exactly-once batch stamps committed
-    * in the same atomic manifest claim as the content (the lexical
-    * index's contract — see [[InvertedIndex.Manifest]]).
+    * The envelope fields (`streams` stamps, `metaCols`/`metaDirs`,
+    * `deletes`) follow [[IndexManifests.Envelope]]'s contract.
     */
   final case class Manifest(
       version: Long,
       centroids: Array[Array[Double]],
       vectors: Seq[(Int, String)],
       streams: Map[String, Long] = Map.empty,
-      /** vector-metadata sidecar for FILTERED ANN (the lexical index's
-        * [[InvertedIndex.Manifest]] contract): columns pinned at
+      /** vector-metadata sidecar for FILTERED ANN: columns pinned at
         * build, dirs append-ordered so CDC-updated metadata wins;
         * a `where` query against a sidecar-free index fails loudly.
         */
@@ -73,7 +69,7 @@ object AnnIndex {
       /** vector-id tombstones ([[deleteVecs]]/[[applyCdc]]) as
         * (dir, cover): each excludes ids ONLY from the first `cover`
         * vector files — Iceberg equality-delete sequence semantics
-        * (see [[InvertedIndex.Manifest]]), so one atomic commit can
+        * ([[IndexManifests.liveRows]]), so one atomic commit can
         * tombstone an id's old vector and append its new one. No stat
         * corrections needed on the dense side — cosine ranking has no
         * corpus-level terms (centroid drift is the rebuild canary's
@@ -93,33 +89,28 @@ object AnnIndex {
         * delta ∪ old ≡ full re-encode (the ann_ivfpq_delta identity).
         */
       codebooks: Array[Array[Array[Double]]] = Array.empty)
-
-  private def toJson(m: Manifest): String = {
-    // doubles as raw IEEE-754 bits: JSON decimal printing is not
-    // guaranteed to round-trip, and the centroids must be BIT-exact —
-    // assignment with perturbed centroids silently moves cell borders
-    val root = JObject(List(
-      "version" -> JLong(m.version),
-      "centroids" -> JArray(m.centroids.map(c =>
-        JArray(c.map(d => JLong(java.lang.Double.doubleToRawLongBits(d)): JValue).toList)).toList),
-      "streams" -> IndexManifests.streamsToJson(m.streams),
-      "metaCols" -> JArray(m.metaCols.map(JString(_): JValue).toList),
-      "metaDirs" -> JArray(m.metaDirs.map(JString(_): JValue).toList),
-      "deletes" -> JArray(m.deletes.map { case (p, c) =>
-        JObject(List("path" -> JString(p), "cover" -> JInt(c))): JValue
-      }.toList),
-      "codebooks" -> JArray(m.codebooks.map(cb =>
-        JArray(cb.map(c =>
-          JArray(c.map(d =>
-            JLong(java.lang.Double.doubleToRawLongBits(d)): JValue).toList): JValue).toList): JValue).toList),
-      "vectors" -> JArray(m.vectors.map { case (cell, p) =>
-        JObject(List("cell" -> JInt(cell), "path" -> JString(p)))
-      }.toList)))
-    JsonMethods.pretty(JsonMethods.render(root))
+      extends IndexManifests.Envelope {
+    def files: Seq[(Int, String)] = vectors
+    def sidecars: Seq[String] = Nil
+    def payloadRoot: String = "vectors"
+    def idCol: String = "neighbor_id"
+    def withVersion(v: Long): Manifest = copy(version = v)
+    def toJson: String = {
+      // doubles as raw IEEE-754 bits: JSON decimal printing is not
+      // guaranteed to round-trip, and the centroids must be BIT-exact —
+      // assignment with perturbed centroids silently moves cell borders
+      def bits(v: Array[Double]): JValue =
+        JArray(v.map(d => JLong(java.lang.Double.doubleToRawLongBits(d)): JValue).toList)
+      IndexManifests.render(this, List(
+        "centroids" -> JArray(centroids.map(bits).toList),
+        "codebooks" -> JArray(codebooks.map(cb => JArray(cb.map(bits).toList): JValue).toList),
+        "vectors" -> JArray(vectors.map { case (cell, p) =>
+          JObject(List("cell" -> JInt(cell), "path" -> JString(p))): JValue
+        }.toList)))
+    }
   }
 
-  private def fromJson(body: String): Manifest = {
-    val j = JsonMethods.parse(body)
+  private[operators] def fromJson(j: JValue): Manifest = {
     implicit val fmts: Formats = DefaultFormats
     Manifest(
       version = (j \ "version").extract[Long],
@@ -128,21 +119,9 @@ object AnnIndex {
       vectors = (j \ "vectors").extract[List[JValue]].map(e =>
         ((e \ "cell").extract[Int], (e \ "path").extract[String])),
       streams = IndexManifests.streamsFromJson(j \ "streams"),
-      metaCols = j \ "metaCols" match {
-        case JArray(xs) => xs.collect { case JString(s) => s }
-        case _ => Nil
-      },
-      metaDirs = j \ "metaDirs" match {
-        case JArray(xs) => xs.collect { case JString(s) => s }
-        case _ => Nil
-      },
-      deletes = j \ "deletes" match {
-        case JArray(items) => items.collect {
-          case JString(s) => (s, Int.MaxValue) // legacy: covered everything
-          case o: JObject => ((o \ "path").extract[String], (o \ "cover").extract[Int])
-        }
-        case _ => Nil
-      },
+      metaCols = IndexManifests.stringsFromJson(j \ "metaCols"),
+      metaDirs = IndexManifests.stringsFromJson(j \ "metaDirs"),
+      deletes = IndexManifests.deletesFromJson(j \ "deletes"),
       codebooks = j \ "codebooks" match {
         case JArray(cbs) => cbs.map(cb =>
           cb.extract[List[List[Long]]]
@@ -154,18 +133,15 @@ object AnnIndex {
   private[graft] def versions(spark: SparkSession, dir: String): Seq[Long] =
     IndexManifests.versions(spark, dir)
 
-  private[graft] def currentManifest(spark: SparkSession, dir: String): Manifest = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no committed ANN index at $dir")
-    IndexManifests.cachedManifest(spark, dir, vs.last)(fromJson)
-  }
+  private[graft] def currentManifest(spark: SparkSession, dir: String): Manifest =
+    IndexManifests.head(spark, dir).asInstanceOf[Manifest]
 
   /** Manifest at a PINNED version — the federation's transition-MVCC
     * read ([[ShardedIndex]] layout pins; the version must not have been
     * vacuumed: keepVersions >= 2 during a transition).
     */
   private[graft] def readManifest(spark: SparkSession, dir: String, v: Long): Manifest =
-    IndexManifests.cachedManifest(spark, dir, v)(fromJson)
+    IndexManifests.read(spark, dir, v).asInstanceOf[Manifest]
 
   /** Target bytes per staged vector file. One file per cell does NOT
     * scale — `repartition(nCells, cell)` makes a single task write a
@@ -176,49 +152,40 @@ object AnnIndex {
     * task granularity.
     */
   val TargetFileBytes: Long = 64L << 20
-  val MaxSplits = 4096
 
-  private[graft] def stageSplits(assigned: DataFrame, nCells: Int): Int = {
-    val bytes = graft.operators.ScaleSafe.leafScanBytes(assigned)
-    // bytes-derived only, no nCells floor — see InvertedIndex
-    // .stagePostings: a task floor multiplies every churn-sized delta
-    // into ~floor × cells small files; the writer cliff is covered by
-    // the bytes term and readers split large parquet files by row group
-    (bytes / TargetFileBytes).max(1).min(MaxSplits).toInt
-  }
-
-  private def stageVectors(spark: SparkSession, assigned: DataFrame,
-      dir: String, nCells: Int, splits: Option[Int] = None): Seq[(Int, String)] = {
+  /** Stage a batch's vectors cell-partitioned under a fresh dir,
+    * assigned (and PQ-coded) against the given quantizers. The split
+    * count is bytes-derived only, with no nCells floor: a task floor
+    * multiplies every churn-sized delta into ~floor × cells small files,
+    * the writer cliff is covered by the bytes term, and readers split
+    * large parquet files by row group.
+    */
+  private def stageVectors(spark: SparkSession, rows: DataFrame, idCol: String,
+      vecCol: String, dir: String, centroids: Array[Array[Double]],
+      codebooks: Array[Array[Array[Double]]],
+      splits: Option[Int] = None): Seq[(Int, String)] = {
+    val assigned0 = assign(rows, idCol, vecCol, centroids)
+    val assigned = if (codebooks.isEmpty) assigned0
+      else withCodes(assigned0, centroids, codebooks)
     val rel = IndexManifests.freshRel("vectors")
     // the cell rides in the rows too (partitionBy strips its column
     // from file contents, and manifest-pruned reads open leaf files
     // directly, losing the dir value) — serving then never re-runs the
     // nCells × dim assignment per sliced row
     assigned.withColumn("__cell", col("cell"))
-      .repartition(splits.getOrElse(stageSplits(assigned, nCells)),
+      .repartition(splits.getOrElse(
+          IndexManifests.splitsFor(ScaleSafe.leafScanBytes(assigned), TargetFileBytes)),
         col("cell"), col("neighbor_id"))
       .write.mode("errorifexists").partitionBy("cell").parquet(s"$dir/$rel")
     IndexManifests.listStaged(spark, dir, rel, "cell")
   }
 
   // written schemas, declared explicitly on read: footer inference is
-  // a Spark job per read.parquet call (see InvertedIndex.readPostings)
+  // a Spark job per read.parquet call
   private val VectorSchema = org.apache.spark.sql.types.StructType.fromDDL(
     "neighbor_id BIGINT, __cv ARRAY<DOUBLE>, __cell INT")
   private val VectorSchemaCoded = org.apache.spark.sql.types.StructType.fromDDL(
     "neighbor_id BIGINT, __cv ARRAY<DOUBLE>, codes ARRAY<INT>, __cell INT")
-  private val AnnTombstoneSchema =
-    org.apache.spark.sql.types.StructType.fromDDL("neighbor_id BIGINT")
-
-  private def readVectors(spark: SparkSession, dir: String,
-      files: Seq[(Int, String)], withCodes: Boolean = false): DataFrame = {
-    val schema = if (withCodes) VectorSchemaCoded else VectorSchema
-    if (files.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema)
-      .parquet(files.map { case (_, p) => s"$dir/$p" }: _*)
-  }
 
   private def assign(emb: DataFrame, idCol: String, vecCol: String,
       centroids: Array[Array[Double]]): DataFrame =
@@ -313,41 +280,20 @@ object AnnIndex {
     val centroids = Similarity.trainQuantizer(emb, idCol, vecCol, nCells, sampleSize, iters)
     val codebooks = pq.fold(Array.empty[Array[Array[Double]]])(spec =>
       trainCodebooks(emb, idCol, vecCol, centroids, spec.m, spec.nCodes, sampleSize, iters))
-    val assigned0 = assign(emb, idCol, vecCol, centroids)
-    val assigned = if (codebooks.isEmpty) assigned0
-      else withCodes(assigned0, centroids, codebooks)
-    val files = stageVectors(spark, assigned, dir, centroids.length, splits)
+    val files = stageVectors(spark, emb, idCol, vecCol, dir, centroids, codebooks, splits)
     val metaDirs = stageMeta(emb, idCol, metaCols, dir).toSeq
     // a rebuild at a previously-used path must not serve the old tree's
     // cached manifests
     IndexManifests.invalidate(dir)
-    require(IndexManifests.tryCommit(spark, dir, 1L,
-      toJson(Manifest(1L, centroids, files, metaCols = metaCols, metaDirs = metaDirs,
-        codebooks = codebooks))),
+    require(IndexManifests.claim(spark, dir,
+      Manifest(1L, centroids, files, metaCols = metaCols, metaDirs = metaDirs,
+        codebooks = codebooks)),
       s"lost the build commit race at $dir — another maintainer built concurrently")
   }
 
-  /** Stage a (neighbor_id, metaCols…) sidecar batch; None when the
-    * index carries no metadata (see [[InvertedIndex]]'s sidecar).
-    */
   private def stageMeta(emb: DataFrame, idCol: String, metaCols: Seq[String],
       dir: String): Option[String] =
-    if (metaCols.isEmpty) None
-    else {
-      val rel = IndexManifests.freshRel("meta")
-      val meta = emb.select(
-        (col(idCol).cast("long").as("neighbor_id") +: metaCols.map(col)): _*)
-      // one metadata row per vector per batch (loud, like the lexical
-      // sidecar): latest-wins is ordered across batches, and a
-      // within-batch tie would resolve nondeterministically
-      val dup = meta.groupBy(col("neighbor_id")).agg(count(lit(1)).as("__c"))
-        .filter(col("__c") > 1).limit(1).collect()
-      require(dup.isEmpty,
-        s"duplicate neighbor_id ${if (dup.nonEmpty) dup.head.getLong(0) else ""} in the " +
-          "metadata sidecar batch — supply one metadata row per vector per batch")
-      meta.write.mode("errorifexists").parquet(s"$dir/$rel")
-      Some(rel)
-    }
+    IndexManifests.stageMeta(emb, idCol, "neighbor_id", metaCols, dir)
 
   /** Fold NEW vectors (ids disjoint from the indexed set) in against
     * the persisted centroids: churn-sized, shuffle-free assignment,
@@ -359,67 +305,27 @@ object AnnIndex {
       maxAttempts: Int = 5, stamp: Option[(String, Long)] = None): Unit = {
     val spark = delta.sparkSession
     val base0 = currentManifest(spark, dir)
-    stamp.foreach { case (ns, batchId) =>
-      if (base0.streams.get(ns).exists(_ >= batchId)) return
-    }
-    val assigned0 = assign(delta, idCol, vecCol, base0.centroids)
-    val assigned = if (base0.codebooks.isEmpty) assigned0
-      else withCodes(assigned0, base0.centroids, base0.codebooks)
-    val files = stageVectors(spark, assigned, dir, base0.centroids.length)
+    if (IndexManifests.stamped(base0, stamp)) return
+    val files = stageVectors(spark, delta, idCol, vecCol, dir, base0.centroids, base0.codebooks)
     val metaRel = stageMeta(delta, idCol, base0.metaCols, dir)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val base = currentManifest(spark, dir)
-      stamp.foreach { case (ns, batchId) =>
-        // a replay that raced past the pre-check: the stamp is already
-        // committed, the staged files become orphans for vacuum
-        if (base.streams.get(ns).exists(_ >= batchId)) return
-      }
-      val next = Manifest(base.version + 1, base.centroids, base.vectors ++ files,
-        base.streams ++ stamp.toMap, base.metaCols, base.metaDirs ++ metaRel,
-        base.deletes, base.codebooks)
-      if (IndexManifests.tryCommit(spark, dir, next.version, toJson(next))) return
+    IndexManifests.commit[Manifest](spark, dir, "ANN index delta", maxAttempts, stamp) { base =>
+      Some(base.copy(version = base.version + 1, vectors = base.vectors ++ files,
+        streams = base.streams ++ stamp.toMap, metaDirs = base.metaDirs ++ metaRel))
     }
-    throw new graft.catalog.GraftCommitConflict(
-      s"ANN index delta lost the version race $maxAttempts times at $dir")
+    ()
   }
 
   /** Highest batch id committed under stream namespace `ns`, if any. */
   def committedBatchId(spark: SparkSession, dir: String, ns: String): Option[Long] =
-    currentManifest(spark, dir).streams.get(ns)
+    IndexManifests.committedBatchId(spark, dir, ns)
 
-  /** LIVE rows of `selected` vector files under `m`'s tombstones — the
-    * coverage-aware exclusion shared with the lexical index (see
-    * [[InvertedIndex.liveRows]]); a plain read when no tombstones.
+  /** LIVE rows of `selected` vector files under `m`'s tombstones
+    * ([[IndexManifests.liveRows]]).
     */
   private[graft] def liveRows(spark: SparkSession, dir: String, m: Manifest,
-      selected: Seq[(Int, String)]): DataFrame = {
-    val base = readVectors(spark, dir, selected, withCodes = m.codebooks.nonEmpty)
-    if (m.deletes.isEmpty) return base
-    // last THREE path components as the key — leaf names collide across
-    // a partitionBy job's cell dirs (see InvertedIndex.liveRows)
-    val posRows = m.vectors.map(_._2).zipWithIndex.map { case (p, i) =>
-      org.apache.spark.sql.Row(p.split('/').takeRight(3).mkString("/"), i)
-    }
-    // LocalRelation (List overload), NOT parallelize — the broadcast of
-    // an RDD-backed frame costs a job per serve (see InvertedIndex)
-    val posDf = spark.createDataFrame(
-      java.util.Arrays.asList(posRows: _*),
-      org.apache.spark.sql.types.StructType.fromDDL("__fn STRING, __fidx INT"))
-    val tomb = m.deletes.map { case (d, c) =>
-      spark.read.schema(AnnTombstoneSchema).parquet(s"$dir/$d")
-        .select(col("neighbor_id"), lit(c).as("__cover"))
-    }.reduce(_ unionByName _)
-    val tagged = base
-      .withColumn("__fn",
-        concat_ws("/", slice(split(input_file_name(), "/"), -3, 3)))
-      .join(broadcast(posDf), Seq("__fn"))
-    tagged
-      .join(tomb, tagged("neighbor_id") === tomb("neighbor_id") &&
-        tagged("__fidx") < tomb("__cover"), "left_anti")
-      .drop("__fn", "__fidx")
-  }
+      selected: Seq[(Int, String)]): DataFrame =
+    IndexManifests.liveRows(spark, dir, m, IndexManifests.readFiles(spark, dir, selected,
+      if (m.codebooks.nonEmpty) VectorSchemaCoded else VectorSchema))
 
   /** Delete vectors from the index: one atomic tombstone commit (no
     * index scan needed — the dense side has no corpus-level stats to
@@ -432,29 +338,23 @@ object AnnIndex {
       maxAttempts: Int = 5): Unit = {
     val spark = ids.sparkSession
     val del = ids.select(col(idCol).cast("long").as("neighbor_id")).distinct()
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val base = currentManifest(spark, dir)
+    IndexManifests.commit[Manifest](spark, dir, "ANN index delete", maxAttempts) { base =>
       // certainly-dead ids: tombstoned with cover == current file count
       // (no delta appended since, so no resurrection possible)
       val full = base.deletes.filter(_._2 >= base.vectors.size).map(_._1)
       val fresh =
         if (full.isEmpty) del
-        else del.join(
-          spark.read.schema(AnnTombstoneSchema)
-            .parquet(full.map(d => s"$dir/$d"): _*),
+        else del.join(IndexManifests.tombstones(spark, dir, "neighbor_id", full),
           Seq("neighbor_id"), "left_anti")
-      if (fresh.isEmpty) return
-      val delRel = IndexManifests.freshRel("deletes")
-      fresh.coalesce(1).write.mode("errorifexists").parquet(s"$dir/$delRel")
-      val next = Manifest(base.version + 1, base.centroids, base.vectors,
-        base.streams, base.metaCols, base.metaDirs,
-        base.deletes :+ (delRel -> base.vectors.size), base.codebooks)
-      if (IndexManifests.tryCommit(spark, dir, next.version, toJson(next))) return
+      if (fresh.isEmpty) None
+      else {
+        val delRel = IndexManifests.freshRel("deletes")
+        fresh.coalesce(1).write.mode("errorifexists").parquet(s"$dir/$delRel")
+        Some(base.copy(version = base.version + 1,
+          deletes = base.deletes :+ (delRel -> base.vectors.size)))
+      }
     }
-    throw new graft.catalog.GraftCommitConflict(
-      s"ANN index delete lost the version race $maxAttempts times at $dir")
+    ()
   }
 
   /** One ATOMIC CDC micro-batch: `upserts` = new (id, vector) versions,
@@ -469,29 +369,16 @@ object AnnIndex {
       maxAttempts: Int = 5): Unit = {
     val spark = upserts.sparkSession
     val base0 = currentManifest(spark, dir)
-    stamp.foreach { case (ns, batchId) =>
-      if (base0.streams.get(ns).exists(_ >= batchId)) return
-    }
+    if (IndexManifests.stamped(base0, stamp)) return
     val files =
       if (upserts.isEmpty) Nil
-      else {
-        val assigned0 = assign(upserts, idCol, vecCol, base0.centroids)
-        val assigned = if (base0.codebooks.isEmpty) assigned0
-          else withCodes(assigned0, base0.centroids, base0.codebooks)
-        stageVectors(spark, assigned, dir, base0.centroids.length)
-      }
+      else stageVectors(spark, upserts, idCol, vecCol, dir, base0.centroids, base0.codebooks)
     val metaRel =
       if (upserts.isEmpty) None
       else stageMeta(upserts, idCol, base0.metaCols, dir)
     val tombstoneIds = removalIds.select(col(idCol).cast("long").as("neighbor_id")).distinct()
     val hasRemovals = !tombstoneIds.isEmpty
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val base = currentManifest(spark, dir)
-      stamp.foreach { case (ns, batchId) =>
-        if (base.streams.get(ns).exists(_ >= batchId)) return
-      }
+    IndexManifests.commit[Manifest](spark, dir, "ANN CDC batch", maxAttempts, stamp) { base =>
       val delEntry =
         if (!hasRemovals) None
         else {
@@ -499,13 +386,11 @@ object AnnIndex {
           tombstoneIds.coalesce(1).write.mode("errorifexists").parquet(s"$dir/$delRel")
           Some(delRel -> base.vectors.size)
         }
-      val next = Manifest(base.version + 1, base.centroids, base.vectors ++ files,
-        base.streams ++ stamp.toMap, base.metaCols, base.metaDirs ++ metaRel,
-        base.deletes ++ delEntry, base.codebooks)
-      if (IndexManifests.tryCommit(spark, dir, next.version, toJson(next))) return
+      Some(base.copy(version = base.version + 1, vectors = base.vectors ++ files,
+        streams = base.streams ++ stamp.toMap, metaDirs = base.metaDirs ++ metaRel,
+        deletes = base.deletes ++ delEntry))
     }
-    throw new graft.catalog.GraftCommitConflict(
-      s"ANN CDC batch lost the version race $maxAttempts times at $dir")
+    ()
   }
 
   /** Exact-cosine top-`k` within the probes' nProbe nearest cells,
@@ -560,21 +445,12 @@ object AnnIndex {
     // arithmetic, bit-identical centroids) and stored in the rows, so
     // each probe compares only within ITS probed cells — the exact
     // ivfTopK join semantics with no per-row re-assignment at serve
-    val slice0 = liveRows(spark, dir, m, m.vectors.filter(e => probeCells(e._1)))
-      .withColumn("cell", col("__cell"))
     // filtered ANN: restrict the candidate slice by the meta-sidecar
-    // predicate BEFORE ranking — top-k of the allowed subset (the
-    // lexical index's filtered-retrieval contract; latest metadata
-    // wins under CDC, sidecar reads are vector-count-sized)
-    val slice = where match {
-      case None => slice0
-      case Some(pred) =>
-        require(m.metaCols.nonEmpty,
-          s"filtered query against $dir, but the index was built without metaCols " +
-            "(build(metaCols = ...) pins the sidecar)")
-        val latest = IndexManifests.latestMeta(spark, dir, m.metaDirs, "neighbor_id")
-        slice0.join(latest.filter(pred).select("neighbor_id"), Seq("neighbor_id"), "left_semi")
-    }
+    // predicate BEFORE ranking — top-k of the allowed subset (latest
+    // metadata wins under CDC, sidecar reads are vector-count-sized)
+    val slice = IndexManifests.metaFilter(spark, dir, m,
+      liveRows(spark, dir, m, m.vectors.filter(e => probeCells(e._1)))
+        .withColumn("cell", col("__cell")), where)
     val w = Window.partitionBy(col("probe_id")).orderBy(col("cosine").desc, col("neighbor_id"))
     // self-exclusion only when the probes ARE corpus vectors (the
     // "query is a document" shape); a raw query vector (the SQL TVF
@@ -667,16 +543,8 @@ object AnnIndex {
     import spark.implicits._
     val probeTables = probeSide.toDF("probe_id", "cell", "cdot", "tables")
     val probeCells = probeSide.map(_._2).toSet
-    val slice0 = liveRows(spark, dir, m, m.vectors.filter(e => probeCells(e._1)))
-    val slice = where match {
-      case None => slice0
-      case Some(pred) =>
-        require(m.metaCols.nonEmpty,
-          s"filtered query against $dir, but the index was built without metaCols " +
-            "(build(metaCols = ...) pins the sidecar)")
-        val latest = IndexManifests.latestMeta(spark, dir, m.metaDirs, "neighbor_id")
-        slice0.join(latest.filter(pred).select("neighbor_id"), Seq("neighbor_id"), "left_semi")
-    }
+    val slice = IndexManifests.metaFilter(spark, dir, m,
+      liveRows(spark, dir, m, m.vectors.filter(e => probeCells(e._1))), where)
     // stage 1: ADC shortlist — column pruning keeps __cv out of this scan
     val adc = col("cdot") + aggregate(sequence(lit(1), lit(nSub)), lit(0.0), (acc, j) =>
       acc + element_at(element_at(col("tables"), j), element_at(col("codes"), j) + 1))
@@ -703,198 +571,47 @@ object AnnIndex {
   }
 
   /** Fold each cell's accumulated per-delta files into
-    * TargetFileBytes-sized files; when tombstones exist every cell is a
-    * victim (the physical-delete pass) and the new manifest clears
-    * `deletes`. Commits a new manifest, superseded files become
-    * unreferenced ([[vacuum]]). Bounded at nCells jobs over the
-    * victim cells' rows.
+    * TargetFileBytes-sized files, dropping tombstoned rows — the shared
+    * [[IndexManifests.compact]] with the cell rewrite. Bounded at nCells
+    * jobs over the victim cells' rows.
     */
   def compact(spark: SparkSession, dir: String,
       targetFileBytes: Long = TargetFileBytes): Int =
     compactWithHook(spark, dir, () => (), targetFileBytes = targetFileBytes)
 
-  /** Compaction body with a pre-commit seam for the race spec. A lost
-    * claim retries against the fresh manifest (restaged — the prior
-    * rewrites reference a superseded file set; orphans go to
-    * [[vacuum]]), matching [[addDelta]]/[[applyCdc]]'s posture instead
-    * of the single-shot `require` round 11 shipped: compaction racing
-    * a live stream must land eventually, never kill the caller.
-    */
+  /** [[compact]] with the pre-commit seam of the race spec. */
   private[graft] def compactWithHook(spark: SparkSession, dir: String,
       onBeforeCommit: () => Unit, maxAttempts: Int = 5,
-      targetFileBytes: Long = TargetFileBytes): Int = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val base = currentManifest(spark, dir)
-      val byCell = base.vectors.groupBy(_._1)
-      // per-cell byte totals, computed ONCE (shared by the victims
-      // filter and the width derivation — see InvertedIndex.compact)
-      val cellBytes: Map[Int, Long] = byCell.map { case (c, files) =>
-        c -> IndexManifests.fileBytes(spark, dir, files.map(_._2))
-      }
-      val victims =
-        if (base.deletes.nonEmpty) byCell
-        else byCell.filter { case (c, files) =>
-          // multi-file cells fold; single-file cells re-split when the
-          // file exceeds the target (the lexical compact's force-merge
-          // knob). Default target on a compacted index stays a no-op.
-          files.size > 1 ||
-            (cellBytes(c) / targetFileBytes).max(1) > files.size
-        }
-      // fold the vector-metadata sidecar alongside the cell files —
-      // the lexical index's contract (see InvertedIndex.compact): one
-      // latest-wins dir after maintenance, dead ids dropped, so
-      // filtered-ANN cost never grows with CDC batch count
-      val foldMeta = base.metaDirs.size > 1 ||
-        (base.deletes.nonEmpty && base.metaDirs.nonEmpty)
-      if (victims.isEmpty && !foldMeta) return 0
-      val compacted = victims.toSeq.sortBy(_._1).map { case (cell, files) =>
+      targetFileBytes: Long = TargetFileBytes): Int =
+    IndexManifests.compact[Manifest, Unit](spark, dir, "ANN compaction", targetFileBytes,
+        maxAttempts, onBeforeCommit, liveRows(spark, dir, _, _)) { (base, victims) =>
+      (victims.map { case (cell, files, width) =>
         val rel = IndexManifests.freshRel("vectors")
-        val width = (cellBytes(cell) / targetFileBytes).max(1).min(MaxSplits).toInt
         liveRows(spark, dir, base, files)
           .repartition(width, col("neighbor_id"))
           .write.mode("errorifexists").parquet(s"$dir/$rel/cell=$cell")
         cell -> IndexManifests.listStaged(spark, dir, rel, "cell")
-      }.toMap
-      val newMetaDirs =
-        if (!foldMeta) base.metaDirs
-        else {
-          val latest = IndexManifests.latestMeta(spark, dir, base.metaDirs, "neighbor_id")
-          val folded =
-            if (base.deletes.isEmpty) latest
-            else {
-              val tombIds = base.deletes.map { case (d, _) =>
-                spark.read.schema(AnnTombstoneSchema).parquet(s"$dir/$d")
-              }.reduce(_ unionByName _).distinct()
-              // a vector re-inserted AFTER its tombstone has a live row
-              // in later files — its latest metadata must survive
-              val liveTomb = liveRows(spark, dir, base, base.vectors)
-                .join(broadcast(tombIds), Seq("neighbor_id"))
-                .select("neighbor_id").distinct()
-              val dead = tombIds.join(liveTomb, Seq("neighbor_id"), "left_anti")
-              latest.join(broadcast(dead), Seq("neighbor_id"), "left_anti")
-            }
-          val rel = IndexManifests.freshRel("meta")
-          folded.write.mode("errorifexists").parquet(s"$dir/$rel")
-          Seq(rel)
-        }
-      if (attempt == 1) onBeforeCommit()
-      val next = Manifest(base.version + 1, base.centroids,
-        byCell.toSeq.flatMap { case (c, files) => compacted.getOrElse(c, files) }.toSeq.sortBy(_._2),
-        base.streams, base.metaCols, newMetaDirs, deletes = Nil,
-        codebooks = base.codebooks)
-      if (IndexManifests.tryCommit(spark, dir, next.version, toJson(next)))
-        // count the sidecar fold too: a meta-only pass still committed a
-        // new version (callers gate vacuum on "did compact do work")
-        return victims.valuesIterator.map(_.size).sum +
-          (if (foldMeta) base.metaDirs.size else 0)
-      if (attempt >= maxAttempts)
-        throw new graft.catalog.GraftCommitConflict(
-          s"ANN compaction lost the version race $maxAttempts times at $dir")
+      }.toMap, ())
+    } { (base, _, vectors, metaDirs) =>
+      base.copy(version = base.version + 1, vectors = vectors, metaDirs = metaDirs,
+        deletes = Nil)
     }
-    sys.error("unreachable")
-  }
 
-  /** Roll the ANN index back to `toVersion`'s content as a new head
-    * commit — the lexical index's [[InvertedIndex.rollback]] contract:
-    * vectors/centroids/tombstones/stream-stamps all rewind together,
-    * history stays travelable, the target must not be vacuumed away.
+  /** [[IndexManifests.rollback]]: vectors, centroids, tombstones and
+    * stream stamps rewind together as a new head commit.
     */
   def rollback(spark: SparkSession, dir: String, toVersion: Long,
-      maxAttempts: Int = 5): Long = {
-    require(versions(spark, dir).contains(toVersion),
-      s"no manifest v$toVersion at $dir — expired by vacuum (keepVersions bounds rollback reach)")
-    val target = IndexManifests.cachedManifest(spark, dir, toVersion)(fromJson)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val base = currentManifest(spark, dir)
-      if (base.version == toVersion) return base.version
-      val next = target.copy(version = base.version + 1)
-      if (IndexManifests.tryCommit(spark, dir, next.version, toJson(next))) return next.version
-    }
-    throw new graft.catalog.GraftCommitConflict(
-      s"ANN index rollback lost the version race $maxAttempts times at $dir")
-  }
+      maxAttempts: Int = 5): Long =
+    IndexManifests.rollback(spark, dir, toVersion, maxAttempts)
 
-  /** Export/promote the CURRENT version to a virgin destination — the
-    * dense twin of [[InvertedIndex.exportIndex]]: copy the head
-    * manifest's vector files, meta sidecars and tombstones preserving
-    * relative paths, then commit at the destination as version 1
-    * through the exclusive-create claim. Centroids and PQ codebooks
-    * travel INSIDE the manifest (bit-exact IEEE longs), so the
-    * promoted index assigns/encodes identically; stream stamps travel
-    * with the content; history does not (fresh version line).
+  /** [[IndexManifests.exportIndex]]: centroids and PQ codebooks travel
+    * inside the manifest, so the copy assigns and encodes identically.
     */
-  def exportIndex(spark: SparkSession, srcDir: String, destDir: String): Long = {
-    val m = currentManifest(spark, srcDir)
-    require(IndexManifests.versions(spark, destDir).isEmpty,
-      s"export destination $destDir already holds a committed index")
-    val rels = m.vectors.map(_._2) ++ m.metaDirs ++ m.deletes.map(_._1)
-    IndexManifests.copyTree(spark, srcDir, destDir, rels)
-    // same-path hygiene as build(): no stale cache for (destDir, 1)
-    IndexManifests.invalidate(destDir)
-    val next = m.copy(version = 1L)
-    require(IndexManifests.tryCommit(spark, destDir, next.version, toJson(next)),
-      s"export lost the first-commit race at $destDir — another writer is active there")
-    next.version
-  }
+  def exportIndex(spark: SparkSession, srcDir: String, destDir: String): Long =
+    IndexManifests.exportIndex(spark, srcDir, destDir)
 
-  /** Expire all but the newest `keepVersions` manifests and sweep
-    * unreferenced vector files (file-granular — compaction supersedes
-    * individual files inside stagings whose other cells stay live).
-    * `graceMs` protects a concurrent maintainer's in-flight staging.
-    */
+  /** [[IndexManifests.vacuum]]. */
   def vacuum(spark: SparkSession, dir: String, keepVersions: Int = 2,
-      graceMs: Long = 60L * 60 * 1000): Int = {
-    require(keepVersions >= 1, s"keepVersions must be >= 1, got $keepVersions")
-    val f = IndexManifests.fs(spark, dir)
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no committed ANN index at $dir")
-    val (expire, keep) = vs.splitAt(math.max(0, vs.size - keepVersions))
-    val kept = keep.map(v => IndexManifests.cachedManifest(spark, dir, v)(fromJson))
-    expire.foreach(v => f.delete(IndexManifests.manifestPath(dir, v), false))
-    val now = System.currentTimeMillis()
-    val root = new org.apache.hadoop.fs.Path(dir).toUri.getPath.stripSuffix("/")
-    val live: Set[String] = kept.flatMap(_.vectors.map(_._2)).toSet
-    var removed = 0
-    val vRoot = new org.apache.hadoop.fs.Path(s"$dir/vectors")
-    if (f.exists(vRoot)) f.listStatus(vRoot).foreach { st =>
-      val it = f.listFiles(st.getPath, true)
-      val all = Seq.newBuilder[org.apache.hadoop.fs.LocatedFileStatus]
-      while (it.hasNext) all += it.next()
-      val files = all.result()
-      def rel(p: org.apache.hadoop.fs.Path) = p.toUri.getPath.stripPrefix(root + "/")
-      if (!files.exists(x => live.contains(rel(x.getPath)))) {
-        if (now - st.getModificationTime >= graceMs &&
-            files.forall(x => now - x.getModificationTime >= graceMs)) {
-          f.delete(st.getPath, true); removed += 1
-        }
-      } else files.foreach { x =>
-        if (x.getPath.getName.endsWith(".parquet") &&
-            !live.contains(rel(x.getPath)) &&
-            now - x.getModificationTime >= graceMs) {
-          f.delete(x.getPath, false); removed += 1
-        }
-      }
-    }
-    val liveDel: Set[String] = kept.flatMap(_.deletes.map(_._1)).toSet
-    val dRoot = new org.apache.hadoop.fs.Path(s"$dir/deletes")
-    if (f.exists(dRoot)) f.listStatus(dRoot).foreach { st =>
-      if (!liveDel.contains(s"deletes/${st.getPath.getName}") &&
-          now - st.getModificationTime >= graceMs) {
-        f.delete(st.getPath, true); removed += 1
-      }
-    }
-    val liveMeta: Set[String] = kept.flatMap(_.metaDirs).toSet
-    val mRoot = new org.apache.hadoop.fs.Path(s"$dir/meta")
-    if (f.exists(mRoot)) f.listStatus(mRoot).foreach { st =>
-      if (!liveMeta.contains(s"meta/${st.getPath.getName}") &&
-          now - st.getModificationTime >= graceMs) {
-        f.delete(st.getPath, true); removed += 1
-      }
-    }
-    removed
-  }
+      graceMs: Long = 60L * 60 * 1000): Int =
+    IndexManifests.vacuum(spark, dir, keepVersions, graceMs)
 }

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.json4s._
-import org.json4s.jackson.JsonMethods
 
 /** Persisted inverted index for lexical retrieval — the 100 TB shape of
   * [[TextAnalysis.bm25TopK]].
@@ -171,6 +170,31 @@ object InvertedIndex {
         * the flat serve, travels with export/rollback).
         */
       championEpoch: String = "")
+      extends IndexManifests.Envelope {
+    def files: Seq[(Int, String)] = postings
+    def sidecars: Seq[String] = Seq(vocabDir, statsDir) ++ champions.map(_._2)
+    def payloadRoot: String = "postings"
+    def idCol: String = "doc_id"
+    def withVersion(v: Long): Manifest = copy(version = v)
+    def toJson: String = IndexManifests.render(this, List(
+      "buckets" -> JInt(buckets),
+      "positions" -> JBool(positions),
+      "vocab" -> JString(vocabDir),
+      "stats" -> JString(statsDir),
+      "champions" -> JArray(champions.map { case (b, p) =>
+        JObject(List("bucket" -> (JInt(b): JValue), "path" -> (JString(p): JValue))): JValue
+      }.toList),
+      "championCover" -> JInt(championCover),
+      "championC" -> JInt(championC),
+      "championEpoch" -> JString(championEpoch),
+      "postings" -> JArray(postings.map { case (b, p) =>
+        val base = List("bucket" -> (JInt(b): JValue), "path" -> (JString(p): JValue))
+        val range = tokRanges.get(p).toList.flatMap { case (lo, hi) =>
+          List("tmin" -> (JString(lo): JValue), "tmax" -> (JString(hi): JValue))
+        }
+        JObject(base ++ range): JValue
+      }.toList)))
+  }
 
   /** Staged-but-uncommitted delta: immutable postings files under a
     * fresh UUID dir. Visible only once a manifest referencing them is
@@ -225,41 +249,9 @@ object InvertedIndex {
   private[graft] def bucketOf(tok: Column, buckets: Int): Column =
     pmod(xxhash64(tok), lit(buckets.toLong)).cast("int")
 
-  // ---- manifest IO (commit protocol shared via IndexManifests) -------
+  // ---- manifest IO (the lifecycle lives in IndexManifests) ----------
 
-  private def fs(spark: SparkSession, dir: String) = IndexManifests.fs(spark, dir)
-
-  private def toJson(m: Manifest): String = {
-    val root = JObject(List(
-      "version" -> JLong(m.version),
-      "buckets" -> JInt(m.buckets),
-      "positions" -> JBool(m.positions),
-      "metaCols" -> JArray(m.metaCols.map(JString(_): JValue).toList),
-      "metaDirs" -> JArray(m.metaDirs.map(JString(_): JValue).toList),
-      "vocab" -> JString(m.vocabDir),
-      "stats" -> JString(m.statsDir),
-      "streams" -> IndexManifests.streamsToJson(m.streams),
-      "deletes" -> JArray(m.deletes.map { case (p, c) =>
-        JObject(List("path" -> JString(p), "cover" -> JInt(c))): JValue
-      }.toList),
-      "champions" -> JArray(m.champions.map { case (b, p) =>
-        JObject(List("bucket" -> (JInt(b): JValue), "path" -> (JString(p): JValue))): JValue
-      }.toList),
-      "championCover" -> JInt(m.championCover),
-      "championC" -> JInt(m.championC),
-      "championEpoch" -> JString(m.championEpoch),
-      "postings" -> JArray(m.postings.map { case (b, p) =>
-        val base = List("bucket" -> (JInt(b): JValue), "path" -> (JString(p): JValue))
-        val range = m.tokRanges.get(p).toList.flatMap { case (lo, hi) =>
-          List("tmin" -> (JString(lo): JValue), "tmax" -> (JString(hi): JValue))
-        }
-        JObject(base ++ range)
-      }.toList)))
-    JsonMethods.pretty(JsonMethods.render(root))
-  }
-
-  private def fromJson(body: String): Manifest = {
-    val j = JsonMethods.parse(body)
+  private[operators] def fromJson(j: JValue): Manifest = {
     implicit val fmts: Formats = DefaultFormats
     val postingEntries = (j \ "postings").extract[List[JValue]]
     Manifest(
@@ -280,21 +272,9 @@ object InvertedIndex {
         case JBool(b) => b
         case _ => true // legacy manifests predate the flag and carry positions
       },
-      metaCols = j \ "metaCols" match {
-        case JArray(xs) => xs.collect { case JString(s) => s }
-        case _ => Nil
-      },
-      metaDirs = j \ "metaDirs" match {
-        case JArray(xs) => xs.collect { case JString(s) => s }
-        case _ => Nil
-      },
-      deletes = j \ "deletes" match {
-        case JArray(items) => items.collect {
-          case JString(s) => (s, Int.MaxValue) // legacy: covered everything
-          case o: JObject => ((o \ "path").extract[String], (o \ "cover").extract[Int])
-        }
-        case _ => Nil
-      },
+      metaCols = IndexManifests.stringsFromJson(j \ "metaCols"),
+      metaDirs = IndexManifests.stringsFromJson(j \ "metaDirs"),
+      deletes = IndexManifests.deletesFromJson(j \ "deletes"),
       champions = j \ "champions" match {
         case JArray(items) => items.collect {
           case o: JObject => ((o \ "bucket").extract[Int], (o \ "path").extract[String])
@@ -319,16 +299,10 @@ object InvertedIndex {
     IndexManifests.versions(spark, dir)
 
   private[graft] def readManifest(spark: SparkSession, dir: String, v: Long): Manifest =
-    IndexManifests.cachedManifest(spark, dir, v)(fromJson)
+    IndexManifests.read(spark, dir, v).asInstanceOf[Manifest]
 
-  private[graft] def currentManifest(spark: SparkSession, dir: String): Manifest = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no committed inverted index at $dir")
-    readManifest(spark, dir, vs.last)
-  }
-
-  private def tryCommit(spark: SparkSession, dir: String, m: Manifest): Boolean =
-    IndexManifests.tryCommit(spark, dir, m.version, toJson(m))
+  private[graft] def currentManifest(spark: SparkSession, dir: String): Manifest =
+    IndexManifests.head(spark, dir).asInstanceOf[Manifest]
 
   // ---- staging -------------------------------------------------------
 
@@ -341,7 +315,6 @@ object InvertedIndex {
     * readers stay task-sized.
     */
   val TargetFileBytes: Long = 64L << 20
-  val MaxSplits = 4096
 
   /** Write `(doc_id, tok, tf, dl, bucket)` rows as file-sets per
     * bucket under a fresh UUID dir; returns the (bucket, relative path)
@@ -351,18 +324,16 @@ object InvertedIndex {
   private def stagePostings(spark: SparkSession, postings: DataFrame, dir: String,
       buckets: Int, splits: Option[Int] = None): Seq[(Int, String)] = {
     val rel = IndexManifests.freshRel("postings")
-    val n = splits.getOrElse {
-      val bytes = graft.operators.ScaleSafe.leafScanBytes(postings)
-      // bytes-derived ONLY — no task floor: each staging task writes a
-      // file into every bucket dir its rows touch, so a floor of
-      // `buckets` turns every churn-sized delta into ~buckets² small
-      // files (measured: 10 deltas → 2173 files and a 3.7× serve
-      // penalty at sf0.1, vs ~1 file/bucket/delta without the floor).
-      // The 100 TB writer cliff is covered by the bytes term, and
-      // READ parallelism never needed the floor — parquet scans split
-      // large files by row group.
-      (bytes / TargetFileBytes).max(1).min(MaxSplits).toInt
-    }
+    // bytes-derived ONLY — no task floor: each staging task writes a
+    // file into every bucket dir its rows touch, so a floor of
+    // `buckets` turns every churn-sized delta into ~buckets² small
+    // files (measured: 10 deltas → 2173 files and a 3.7× serve
+    // penalty at sf0.1, vs ~1 file/bucket/delta without the floor).
+    // The 100 TB writer cliff is covered by the bytes term, and
+    // READ parallelism never needed the floor — parquet scans split
+    // large files by row group.
+    val n = splits.getOrElse(
+      IndexManifests.splitsFor(ScaleSafe.leafScanBytes(postings), TargetFileBytes))
     postings.repartition(n, col("bucket"), col("doc_id"))
       .write.mode("errorifexists").partitionBy("bucket").parquet(s"$dir/$rel")
     IndexManifests.listStaged(spark, dir, rel, "bucket")
@@ -449,7 +420,8 @@ object InvertedIndex {
     * pruning; declaring a column the file lacks would read nulls, so
     * `withPositions` must be accurate wherever positions are consumed
     * (liveRows keys it on the manifest; the correction paths read the
-    * 4-col shape regardless of the index's positional flag).
+    * 4-col shape regardless of the index's positional flag). Tombstones
+    * are read as `doc_id BIGINT` ([[IndexManifests.tombstones]]).
     */
   private[graft] val PostingsSchema =
     org.apache.spark.sql.types.StructType.fromDDL(
@@ -459,21 +431,14 @@ object InvertedIndex {
       "doc_id BIGINT, tok STRING, tf BIGINT, dl BIGINT, positions ARRAY<INT>")
   private[graft] val VocabSchema =
     org.apache.spark.sql.types.StructType.fromDDL("tok STRING, df BIGINT")
-  private[graft] val TombstoneSchema =
-    org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT")
 
   /** Read a committed (or staged) file list; empty lists yield an empty
     * postings frame with the right schema.
     */
   private def readPostings(spark: SparkSession, dir: String,
-      files: Seq[(Int, String)], withPositions: Boolean = true): DataFrame = {
-    val schema = if (withPositions) PostingsSchemaPositional else PostingsSchema
-    if (files.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema)
-      .parquet(files.map { case (_, p) => s"$dir/$p" }: _*)
-  }
+      files: Seq[(Int, String)], withPositions: Boolean = true): DataFrame =
+    IndexManifests.readFiles(spark, dir, files,
+      if (withPositions) PostingsSchemaPositional else PostingsSchema)
 
   // ---- build ---------------------------------------------------------
 
@@ -507,7 +472,18 @@ object InvertedIndex {
     // tree in between: its manifests are gone from disk)
     IndexManifests.invalidate(dir)
     val tf = termFreqs(docs, idCol, textCol, withPositions)
-    val files = stagePostings(spark, postingsOf(tf, idCol, buckets), dir, buckets, splits)
+    commitBuild(spark, dir, postingsOf(tf, idCol, buckets), buckets, splits, withPositions,
+      metaCols, stageMeta(docs, idCol, metaCols, dir).toSeq)
+  }
+
+  /** Both builds' tail: stage the bucketed postings, derive vocab and
+    * stats from the STAGED files (column-pruned reads, never the input
+    * again), stage the meta sidecar, claim v1.
+    */
+  private def commitBuild(spark: SparkSession, dir: String, postings: DataFrame,
+      buckets: Int, splits: Option[Int], withPositions: Boolean, metaCols: Seq[String],
+      metaDirs: => Seq[String]): Unit = {
+    val files = stagePostings(spark, postings, dir, buckets, splits)
     val staged = readPostings(spark, dir, files, withPositions)
     val vocabRel = IndexManifests.freshRel("vocab")
     val statsRel = IndexManifests.freshRel("stats")
@@ -519,8 +495,7 @@ object InvertedIndex {
         val (n, sumdl) = collectDocStats(staged)
         IndexManifests.writeStats(spark, dir, statsRel, n, sumdl)
       }))
-    val metaDirs = stageMeta(docs, idCol, metaCols, dir).toSeq
-    require(tryCommit(spark, dir,
+    require(IndexManifests.claim(spark, dir,
       Manifest(1L, buckets, files, vocabRel, statsRel, positions = withPositions,
         metaCols = metaCols, metaDirs = metaDirs)),
       s"lost the build commit race at $dir — another maintainer built concurrently")
@@ -547,48 +522,14 @@ object InvertedIndex {
     IndexManifests.invalidate(dir)
     val cols = Seq(col("doc_id"), col("tok"), col("tf"), col("dl")) ++
       (if (withPositions) Seq(col("positions")) else Nil)
-    val files = stagePostings(spark,
-      rows.select(cols :+ bucketOf(col("tok"), buckets).as("bucket"): _*),
-      dir, buckets)
-    val staged = readPostings(spark, dir, files, withPositions)
-    val vocabRel = IndexManifests.freshRel("vocab")
-    val statsRel = IndexManifests.freshRel("stats")
-    inParallel(Seq(
-      () => staged.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-        .select(col("tok"), col("df"))
-        .write.mode("errorifexists").parquet(s"$dir/$vocabRel"),
-      () => {
-        val (n, sumdl) = collectDocStats(staged)
-        IndexManifests.writeStats(spark, dir, statsRel, n, sumdl)
-      }))
-    val metaDirs = meta.flatMap(m => stageMeta(m, "doc_id", metaCols, dir)).toSeq
-    require(tryCommit(spark, dir,
-      Manifest(1L, buckets, files, vocabRel, statsRel, positions = withPositions,
-        metaCols = metaCols, metaDirs = metaDirs)),
-      s"lost the build commit race at $dir — another maintainer built concurrently")
+    commitBuild(spark, dir, rows.select(cols :+ bucketOf(col("tok"), buckets).as("bucket"): _*),
+      buckets, None, withPositions, metaCols,
+      meta.flatMap(m => stageMeta(m, "doc_id", metaCols, dir)).toSeq)
   }
 
-  /** Stage a (doc_id, metaCols…) sidecar batch; None when the index
-    * carries no metadata. Doc-count-sized — never token-sized.
-    */
   private def stageMeta(docs: DataFrame, idCol: String, metaCols: Seq[String],
       dir: String): Option[String] =
-    if (metaCols.isEmpty) None
-    else {
-      val rel = IndexManifests.freshRel("meta")
-      val meta = docs.select((col(idCol).cast("long").as("doc_id") +: metaCols.map(col)): _*)
-      // one metadata row per doc per batch, enforced loudly: latest-wins
-      // is ordered ACROSS batches (sidecar dir index); two rows for one
-      // doc inside a batch would tie and resolve nondeterministically —
-      // the same loud contract duplicate ids have on the postings side
-      val dup = meta.groupBy(col("doc_id")).agg(count(lit(1)).as("__c"))
-        .filter(col("__c") > 1).limit(1).collect()
-      require(dup.isEmpty,
-        s"duplicate doc_id ${if (dup.nonEmpty) dup.head.getLong(0) else ""} in the metadata " +
-          "sidecar batch — supply one metadata row per doc per batch")
-      meta.write.mode("errorifexists").parquet(s"$dir/$rel")
-      Some(rel)
-    }
+    IndexManifests.stageMeta(docs, idCol, "doc_id", metaCols, dir)
 
   // ---- delta maintenance ---------------------------------------------
 
@@ -619,13 +560,13 @@ object InvertedIndex {
     *
     * With a `stamp` (streaming exactly-once): the batch id commits in
     * the SAME manifest claim as the content, and a base manifest that
-    * already carries `>= batchId` under the namespace aborts the commit
-    * (returns the base unchanged; the staged files become orphans for
+    * already carries `>= batchId` under the namespace refuses the commit
+    * ([[IndexManifests.commit]]; the staged files become orphans for
     * [[vacuum]]) — a replayed micro-batch can never double-count.
     */
   private[graft] def commitDelta(spark: SparkSession, dir: String,
       staged: StagedDelta, maxAttempts: Int = 5,
-      stamp: Option[(String, Long)] = None): Manifest = {
+      stamp: Option[(String, Long)] = None): Unit = {
     // ONE batch-scoped scan of the staged files (column-pruned past
     // positions) shared by the stats collect — which materializes it —
     // and every attempt's vocab merge; before, the vocab job re-listed
@@ -641,13 +582,7 @@ object InvertedIndex {
     // the former distributed merge re-read the base stats parquet and
     // re-aggregated the staged files on every attempt
     val (deltaN, deltaSumdl) = collectDocStats(deltaPostings)
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val base = currentManifest(spark, dir)
-      stamp.foreach { case (ns, batchId) =>
-        if (base.streams.get(ns).exists(_ >= batchId)) return base
-      }
+    IndexManifests.commit[Manifest](spark, dir, "index delta", maxAttempts, stamp) { base =>
       val vocabRel = IndexManifests.freshRel("vocab")
       val statsRel = IndexManifests.freshRel("stats")
       inParallel(Seq(
@@ -660,20 +595,13 @@ object InvertedIndex {
           IndexManifests.writeStats(spark, dir, statsRel,
             baseN + deltaN, baseSumdl + deltaSumdl)
         }))
-      val next = Manifest(base.version + 1, base.buckets,
-        base.postings ++ staged.files, vocabRel, statsRel,
-        base.streams ++ stamp.toMap, base.positions,
-        base.metaCols, base.metaDirs ++ staged.meta, base.deletes,
-        base.tokRanges,
-        // champions survive deltas: the new files land PAST
-        // championCover, so approximate serves read them fully
-        base.champions, base.championCover, base.championC, base.championEpoch)
-      if (tryCommit(spark, dir, next)) return next
-      if (attempt >= maxAttempts)
-        throw new graft.catalog.GraftCommitConflict(
-          s"index delta lost the version race $maxAttempts times at $dir")
+      // champions survive deltas: the new files land PAST
+      // championCover, so approximate serves read them fully
+      Some(base.copy(version = base.version + 1, postings = base.postings ++ staged.files,
+        vocabDir = vocabRel, statsDir = statsRel, streams = base.streams ++ stamp.toMap,
+        metaDirs = base.metaDirs ++ staged.meta))
     }
-    sys.error("unreachable")
+    ()
     } finally deltaPostings.unpersist(blocking = false)
   }
 
@@ -696,55 +624,23 @@ object InvertedIndex {
       if (committedBatchId(spark, dir, ns).exists(_ >= batchId)) return
     }
     commitDelta(spark, dir, stageDelta(delta, idCol, textCol, dir), stamp = stamp)
-    ()
   }
 
   /** Highest batch id committed under stream namespace `ns`, if any. */
   def committedBatchId(spark: SparkSession, dir: String, ns: String): Option[Long] =
-    currentManifest(spark, dir).streams.get(ns)
+    IndexManifests.committedBatchId(spark, dir, ns)
 
   // ---- deletes -------------------------------------------------------
 
-  /** LIVE rows of `selected` postings files under `m`'s tombstones: a
-    * row is dead when some tombstone's cover extends past its file's
-    * position in the manifest (Iceberg equality-delete sequence
-    * semantics). The file position rides in via the leaf file name —
-    * globally unique part-file UUIDs — joined against a driver-built
-    * O(#files) (name, position) table; with no tombstones this is a
-    * plain read.
+  /** LIVE rows of `selected` postings files under `m`'s tombstones
+    * ([[IndexManifests.liveRows]]). An empty file list synthesizes its
+    * schema, which must match the MANIFEST's positions flag, or a
+    * positions-free federation with an empty shard breaks every union
+    * over per-shard liveRows.
     */
   private[graft] def liveRows(spark: SparkSession, dir: String, m: Manifest,
-      selected: Seq[(Int, String)]): DataFrame = {
-    // empty file lists synthesize their schema — it must match the
-    // MANIFEST's positions flag, or a positions-free federation with an
-    // empty shard breaks every union over per-shard liveRows
-    val base = readPostings(spark, dir, selected, m.positions)
-    if (m.deletes.isEmpty) return base
-    // key = the last THREE path components (staging-uuid/bucket=N/part
-    // file): the leaf NAME alone collides — one partitionBy job writes
-    // identically-named part files into every bucket dir it touches
-    val posRows = m.postings.map(_._2).zipWithIndex.map { case (p, i) =>
-      org.apache.spark.sql.Row(p.split('/').takeRight(3).mkString("/"), i)
-    }
-    // LocalRelation (List overload), NOT parallelize: a broadcast of an
-    // RDD-backed frame materializes via a Spark job, a LocalTableScan
-    // collects driver-side — one job less per tombstoned serve
-    val posDf = spark.createDataFrame(
-      java.util.Arrays.asList(posRows: _*),
-      org.apache.spark.sql.types.StructType.fromDDL("__fn STRING, __fidx INT"))
-    val tomb = m.deletes.map { case (d, c) =>
-      spark.read.schema(TombstoneSchema).parquet(s"$dir/$d")
-        .select(col("doc_id"), lit(c).as("__cover"))
-    }.reduce(_ unionByName _)
-    val tagged = base
-      .withColumn("__fn",
-        concat_ws("/", slice(split(input_file_name(), "/"), -3, 3)))
-      .join(broadcast(posDf), Seq("__fn"))
-    tagged
-      .join(tomb, tagged("doc_id") === tomb("doc_id") &&
-        tagged("__fidx") < tomb("__cover"), "left_anti")
-      .drop("__fn", "__fidx")
-  }
+      selected: Seq[(Int, String)]): DataFrame =
+    IndexManifests.liveRows(spark, dir, m, readPostings(spark, dir, selected, m.positions))
 
   /** Delete documents from the index: commits a doc-id tombstone PLUS
     * df/n/sumdl corrections in one atomic manifest claim, so a served
@@ -765,15 +661,12 @@ object InvertedIndex {
       maxAttempts: Int = 5): Unit = {
     val spark = ids.sparkSession
     val del = ids.select(col(idCol).cast("long").as("doc_id")).distinct()
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val base = currentManifest(spark, dir)
+    IndexManifests.commit[Manifest](spark, dir, "index delete", maxAttempts) { base =>
       // corrections must be computed against the SAME postings the
       // claim commits over — the (live-row) scan re-derives inside the
       // CAS loop (retries are rare). WITHIN an attempt the scan runs
       // once: the stats collect (which doubles as the emptiness probe —
-      // n == 0 ⟺ nothing to delete) and commitRemoval's vocab
+      // n == 0 ⟺ nothing to delete) and removal's vocab
       // correction both consume the persisted hit rows (lineage kept —
       // a lost block recomputes), not separate postings scans.
       val hit = liveRows(spark, dir, base, base.postings)
@@ -781,16 +674,12 @@ object InvertedIndex {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         val hitStats = collectDocStats(hit)
-        if (hitStats._1 == 0L) return
-        val committed = commitRemoval(spark, dir, base,
-          removed = hit, removedStats = hitStats, tombstoneIds = del,
-          staged = Nil, stagedStats = (0L, 0L), stamp = None)
-        if (committed) return
+        if (hitStats._1 == 0L) None
+        else Some(removal(spark, dir, base, removed = hit, removedStats = hitStats,
+          tombstoneIds = del, staged = Nil, stagedStats = (0L, 0L), stamp = None))
       } finally hit.unpersist(blocking = false)
-      if (attempt >= maxAttempts)
-        throw new graft.catalog.GraftCommitConflict(
-          s"index delete lost the version race $maxAttempts times at $dir")
     }
+    ()
   }
 
   /** Tombstone PRE-COMPUTED outgoing rows (the in-place reshard's
@@ -806,7 +695,7 @@ object InvertedIndex {
   private[graft] def removeRows(spark: SparkSession, dir: String,
       removed: DataFrame, maxAttempts: Int = 5): Unit = {
     // one materialization feeds the stats collect (which doubles as the
-    // emptiness probe), the tombstone ids and commitRemoval's vocab
+    // emptiness probe), the tombstone ids and removal's vocab
     // correction — the caller's `removed` may be a staged-tree read
     // (cheap) or a computed frame (the reshard's pinned live set):
     // either way it runs once
@@ -815,23 +704,17 @@ object InvertedIndex {
       val rmStats = collectDocStats(rm)
       if (rmStats._1 == 0L) return
       val tombstoneIds = rm.select(col("doc_id")).distinct()
-      var attempt = 0
-      while (true) {
-        attempt += 1
-        val base = currentManifest(spark, dir)
-        if (commitRemoval(spark, dir, base, rm, rmStats, tombstoneIds,
-          staged = Nil, stagedStats = (0L, 0L), stamp = None)) return
-        if (attempt >= maxAttempts)
-          throw new graft.catalog.GraftCommitConflict(
-            s"reshard removal lost the version race $maxAttempts times at $dir")
+      IndexManifests.commit[Manifest](spark, dir, "reshard removal", maxAttempts) { base =>
+        Some(removal(spark, dir, base, rm, rmStats, tombstoneIds,
+          staged = Nil, stagedStats = (0L, 0L), stamp = None))
       }
     } finally rm.unpersist(blocking = false)
   }
 
   /** Stage corrected vocab/stats from `removed` (outgoing (tok, tf,
     * dl) rows) plus `staged` (incoming postings files), write the
-    * tombstone, and try ONE manifest claim against `base`. Returns
-    * false on a lost race (caller re-reads and retries).
+    * tombstone, and return the manifest to claim over `base` (the
+    * caller's [[IndexManifests.commit]] loop re-derives on a lost race).
     *
     * The stats corrections arrive as DRIVER SCALARS (`removedStats` /
     * `stagedStats`, collected once per batch by the callers — pure
@@ -840,12 +723,12 @@ object InvertedIndex {
     * the former distributed job re-read the base stats parquet and
     * cross-joined two aggregate broadcasts on every commit attempt.
     */
-  private def commitRemoval(spark: SparkSession, dir: String, base: Manifest,
+  private def removal(spark: SparkSession, dir: String, base: Manifest,
       removed: DataFrame, removedStats: (Long, Long), tombstoneIds: DataFrame,
       staged: Seq[(Int, String)], stagedStats: (Long, Long),
       stamp: Option[(String, Long)], appendTombstone: Boolean = true,
       stagedMeta: Option[String] = None,
-      stagedRows: Option[DataFrame] = None): Boolean = {
+      stagedRows: Option[DataFrame] = None): Manifest = {
     // ONE merged df-delta per token (minus from the persisted outgoing
     // rows, plus from the staged postings — [[applyCdc]] hands the
     // latter in PERSISTED so the batch's one scan is shared with its
@@ -889,15 +772,12 @@ object InvertedIndex {
       }) ++ delEntry.map { case (delRel, _) =>
         () => tombstoneIds.coalesce(1).write.mode("errorifexists").parquet(s"$dir/$delRel")
       })
-    val next = Manifest(base.version + 1, base.buckets, base.postings ++ staged,
-      vocabRel, statsRel, base.streams ++ stamp.toMap, base.positions,
-      base.metaCols, base.metaDirs ++ stagedMeta, base.deletes ++ delEntry,
-      base.tokRanges,
-      // champions survive tombstones/CDC: the tombstone's cover is
-      // ≥ championCover (postings append-only between compactions), so
-      // an approximate serve applies it to the champion rows too
-      base.champions, base.championCover, base.championC, base.championEpoch)
-    tryCommit(spark, dir, next)
+    // champions survive tombstones/CDC: the tombstone's cover is
+    // ≥ championCover (postings append-only between compactions), so
+    // an approximate serve applies it to the champion rows too
+    base.copy(version = base.version + 1, postings = base.postings ++ staged,
+      vocabDir = vocabRel, statsDir = statsRel, streams = base.streams ++ stamp.toMap,
+      metaDirs = base.metaDirs ++ stagedMeta, deletes = base.deletes ++ delEntry)
   }
 
   /** One ATOMIC CDC micro-batch against the index — the reference's
@@ -915,6 +795,12 @@ object InvertedIndex {
     * trick), corrected vocab/stats, and the stream stamp. A replayed
     * batch is refused by the committed stamp; a crash leaves the old
     * version serving.
+    *
+    * NULL text: `tokens(null)` is null, so a NULL-text document is
+    * never indexed — it stages no postings and counts in no df, n or
+    * sumdl, exactly as a rebuild over it would. Its removal therefore
+    * has no postings for a tombstone to cover and commits none; a later
+    * upsert with text inserts it like any new document.
     */
   def applyCdc(upserts: DataFrame, removals: DataFrame, idCol: String,
       textCol: String, dir: String, stamp: Option[(String, Long)] = None,
@@ -964,19 +850,10 @@ object InvertedIndex {
       val removedStats = collectDocStats(removed)
       val hasRemovals = removedStats._1 > 0L
       val stagedStats = stagedRows.map(collectDocStats).getOrElse((0L, 0L))
-      var attempt = 0
-      while (true) {
-        attempt += 1
-        val base = currentManifest(spark, dir)
-        stamp.foreach { case (ns, batchId) =>
-          if (base.streams.get(ns).exists(_ >= batchId)) return
-        }
-        if (commitRemoval(spark, dir, base, removed, removedStats, tombstoneIds,
+      IndexManifests.commit[Manifest](spark, dir, "index CDC batch", maxAttempts, stamp) { base =>
+        Some(removal(spark, dir, base, removed, removedStats, tombstoneIds,
           staged.files, stagedStats, stamp, appendTombstone = hasRemovals,
-          stagedMeta = staged.meta, stagedRows = stagedRows)) return
-        if (attempt >= maxAttempts)
-          throw new graft.catalog.GraftCommitConflict(
-            s"index CDC batch lost the version race $maxAttempts times at $dir")
+          stagedMeta = staged.meta, stagedRows = stagedRows))
       }
     } finally {
       removed.unpersist(blocking = false)
@@ -995,70 +872,26 @@ object InvertedIndex {
     * hash across all buckets), rows anti-join the tombstone set during
     * the fold, and the new manifest clears `deletes` — the same
     * rewrite-on-maintenance contract as the catalog's MOR delete
-    * folding. Commits a new manifest; superseded files become
-    * unreferenced (swept by [[vacuum]]). Returns the number of storage
-    * units folded — postings FILES plus metadata sidecar DIRS — so a
-    * committed meta-only pass is never reported as a no-op (callers
-    * gate vacuum on a nonzero return); 0 means nothing was committed.
+    * folding. The shared body is [[IndexManifests.compact]]; this
+    * supplies the bucket rewrite. Returns the number of storage units
+    * folded (postings files plus meta sidecar dirs); 0 means nothing
+    * was committed.
     */
   def compact(spark: SparkSession, dir: String,
       targetFileBytes: Long = TargetFileBytes): Int =
     compactWithHook(spark, dir, () => (), targetFileBytes = targetFileBytes)
 
-  /** Compaction body with a pre-commit seam (the race spec commits a
-    * concurrent delta there). A lost claim RETRIES against the fresh
-    * manifest — the same re-derive-and-retry posture as
-    * [[commitDelta]]/[[deleteDocs]]: maintenance racing a live
-    * delta/CDC stream must land eventually, never throw away its work
-    * AND kill the caller (round 11 shipped a single-shot `require`
-    * here, which failed the explicitly-supported two-streams-one-index
-    * configuration whenever a compact cadence raced the other stream's
-    * commit). Each attempt restages from the fresh manifest — the prior
-    * attempt's rewrites reference a superseded file set, so reusing
-    * them could resurrect tombstoned rows or miss a racing delta's
-    * files; the orphaned staging is [[vacuum]]'s job. Retries are
-    * maintenance-cadence-rare; correctness beats rewrite reuse.
+  /** [[compact]] with a pre-commit seam (the race spec commits a
+    * concurrent delta there).
     */
   private[graft] def compactWithHook(spark: SparkSession, dir: String,
       onBeforeCommit: () => Unit, maxAttempts: Int = 5,
-      targetFileBytes: Long = TargetFileBytes): Int = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val base = currentManifest(spark, dir)
-      val byBucket = base.postings.groupBy(_._1)
-      // per-bucket byte totals, computed ONCE (the victims filter and
-      // the width derivation both need them — duplicate getFileStatus
-      // round-trips double per-compact metadata RPCs on an object store)
-      val bucketBytes: Map[Int, Long] = byBucket.map { case (b, files) =>
-        b -> IndexManifests.fileBytes(spark, dir, files.map(_._2))
-      }
-      val victims =
-        if (base.deletes.nonEmpty) byBucket
-        else byBucket.filter { case (b, files) =>
-          // multi-file buckets fold; single-file buckets re-split when
-          // the file exceeds the target (so a compact with a smaller
-          // targetFileBytes re-layouts into ranged files — the
-          // force-merge knob). Default target on a compacted index
-          // stays a no-op.
-          files.size > 1 ||
-            (bucketBytes(b) / targetFileBytes).max(1) > files.size
-        }
-      // the meta sidecar folds whenever CDC/deltas accumulated dirs or
-      // tombstones left dead rows: without the fold a FILTERED query
-      // pays an O(#batches × corpus-docs) union + latest-wins window
-      // forever — cost must return to one doc-count-sized dir here,
-      // exactly like postings return to one file-set per bucket
-      val foldMeta = base.metaDirs.size > 1 ||
-        (base.deletes.nonEmpty && base.metaDirs.nonEmpty)
-      if (victims.isEmpty && !foldMeta) return 0
-      val ranges = scala.collection.mutable.Map.empty[String, (String, String)]
-      val compacted = victims.toSeq.sortBy(_._1).map { case (bucket, files) =>
+      targetFileBytes: Long = TargetFileBytes): Int =
+    IndexManifests.compact[Manifest, Map[String, (String, String)]](spark, dir,
+        "index compaction", targetFileBytes, maxAttempts, onBeforeCommit,
+        liveRows(spark, dir, _, _)) { (base, victims) =>
+      val compacted = victims.map { case (bucket, files, width) =>
         val rel = IndexManifests.freshRel("postings")
-        // fold to as few targetFileBytes-sized files as the bucket's
-        // actual bytes need — coalesce(1) would push a huge bucket's
-        // rewrite through one task (the same cliff staging avoids)
-        val width = (bucketBytes(bucket) / targetFileBytes).max(1).min(MaxSplits).toInt
         // RANGE-split by token (tok-sorted within files): each rewritten
         // file covers a contiguous token range, recorded in the manifest
         // so queries skip files whose range cannot contain their terms,
@@ -1077,17 +910,7 @@ object InvertedIndex {
           // size is ONE row group, i.e. unskippable
           .option("parquet.block.size", (8L << 20).toString)
           .parquet(s"$dir/$rel/bucket=$bucket")
-        val f = fs(spark, dir)
-        val root = new org.apache.hadoop.fs.Path(dir).toUri.getPath.stripSuffix("/")
-        val it = f.listFiles(new org.apache.hadoop.fs.Path(s"$dir/$rel"), true)
-        val out = Seq.newBuilder[(Int, String)]
-        while (it.hasNext) {
-          val p = it.next().getPath
-          if (p.getName.endsWith(".parquet"))
-            out += bucket -> p.toUri.getPath.stripPrefix(root + "/")
-        }
-        val written = out.result()
-        bucket -> written
+        bucket -> IndexManifests.listStaged(spark, dir, rel, "bucket")
       }.toMap
       // ONE footer-cheap pass over ALL rewritten files records each
       // file's (min, max) token — Spark string aggregates compare in
@@ -1097,67 +920,30 @@ object InvertedIndex {
       // LEAF paths, not the staging dirs: multi-root partition
       // discovery trips CONFLICTING_DIRECTORY_STRUCTURES.)
       val rewrittenFiles = compacted.valuesIterator.flatMap(_.map(_._2)).toSeq
-      if (rewrittenFiles.nonEmpty) {
-        val root = new org.apache.hadoop.fs.Path(dir).toUri.getPath.stripSuffix("/")
-        spark.read.schema(PostingsSchema)
+      val root = new org.apache.hadoop.fs.Path(dir).toUri.getPath.stripSuffix("/")
+      val ranges =
+        if (rewrittenFiles.isEmpty) Map.empty[String, (String, String)]
+        else spark.read.schema(PostingsSchema)
           .parquet(rewrittenFiles.map(p => s"$dir/$p"): _*)
           .select(input_file_name().as("__f"), col("tok"))
           .groupBy("__f").agg(min(col("tok")).as("lo"), max(col("tok")).as("hi"))
-          .collect().foreach { r =>
-            val relPath = new java.net.URI(r.getString(0)).getPath.stripPrefix(root + "/")
-            ranges += relPath -> (r.getString(1), r.getString(2))
-          }
-      }
-      // fold the sidecar to ONE materialized latest-wins dir; docs whose
-      // tombstone left no live postings drop out (dead weight otherwise
-      // — tombstoned docs never reach a scored set, but their sidecar
-      // rows would ride every filtered query's scan forever). A doc
-      // re-inserted AFTER its tombstone has live postings in later
-      // files, so its latest metadata row survives the fold.
-      val newMetaDirs =
-        if (!foldMeta) base.metaDirs
-        else {
-          val latest = IndexManifests.latestMeta(spark, dir, base.metaDirs, "doc_id")
-          val folded =
-            if (base.deletes.isEmpty) latest
-            else {
-              val tombIds = base.deletes.map { case (d, _) =>
-                spark.read.schema(TombstoneSchema).parquet(s"$dir/$d")
-              }.reduce(_ unionByName _).distinct()
-              val liveTomb = liveRows(spark, dir, base, base.postings)
-                .join(broadcast(tombIds), Seq("doc_id"))
-                .select("doc_id").distinct()
-              val dead = tombIds.join(liveTomb, Seq("doc_id"), "left_anti")
-              latest.join(broadcast(dead), Seq("doc_id"), "left_anti")
-            }
-          val rel = IndexManifests.freshRel("meta")
-          folded.write.mode("errorifexists").parquet(s"$dir/$rel")
-          Seq(rel)
-        }
-      if (attempt == 1) onBeforeCommit()
-      val nextPostings =
-        byBucket.toSeq.flatMap { case (b, files) => compacted.getOrElse(b, files) }.toSeq.sortBy(_._2)
-      val survivors = nextPostings.map(_._2).toSet
-      // champions clear with the defaults here ON PURPOSE: compaction
-      // rewrites/reorders the postings list, so championCover's index
-      // into it is meaningless afterwards — rebuild via
-      // [[buildChampions]] once maintenance folds (vacuum sweeps the
-      // orphaned sidecar files like any superseded rel)
-      val next = Manifest(base.version + 1, base.buckets, nextPostings,
-        base.vocabDir, base.statsDir, base.streams, base.positions,
-        base.metaCols, newMetaDirs, deletes = Nil,
-        tokRanges = base.tokRanges.filter { case (p, _) => survivors(p) } ++ ranges)
-      if (tryCommit(spark, dir, next))
-        // count the sidecar fold too: a meta-only pass still committed a
-        // new version (callers gate vacuum on "did compact do work")
-        return victims.valuesIterator.map(_.size).sum +
-          (if (foldMeta) base.metaDirs.size else 0)
-      if (attempt >= maxAttempts)
-        throw new graft.catalog.GraftCommitConflict(
-          s"index compaction lost the version race $maxAttempts times at $dir")
+          .collect().map { r =>
+            new java.net.URI(r.getString(0)).getPath.stripPrefix(root + "/") ->
+              (r.getString(1), r.getString(2))
+          }.toMap
+      (compacted, ranges)
+    } { (base, ranges, postings, metaDirs) =>
+      val survivors = postings.map(_._2).toSet
+      // champions clear ON PURPOSE: compaction rewrites/reorders the
+      // postings list, so championCover's index into it is meaningless
+      // afterwards — rebuild via [[buildChampions]] once maintenance
+      // folds (vacuum sweeps the orphaned sidecar files like any
+      // superseded rel)
+      base.copy(version = base.version + 1, postings = postings, metaDirs = metaDirs,
+        deletes = Nil,
+        tokRanges = base.tokRanges.filter { case (p, _) => survivors(p) } ++ ranges,
+        champions = Nil, championCover = 0, championC = 0, championEpoch = "")
     }
-    sys.error("unreachable")
-  }
 
   /** Build the IMPACT-ORDERED champion sidecar for the opt-in
     * APPROXIMATE BM25 mode ([[bm25TopKTextApprox]]): per term, the
@@ -1182,10 +968,7 @@ object InvertedIndex {
   def buildChampions(spark: SparkSession, dir: String, c: Int,
       maxAttempts: Int = 5): Unit = {
     require(c >= 1, s"buildChampions needs c >= 1, got $c")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val base = currentManifest(spark, dir)
+    IndexManifests.commit[Manifest](spark, dir, "champion build", maxAttempts) { base =>
       val (nDocs, sumdl) = IndexManifests.cachedStats(spark, dir, base.statsDir)
       val avgdlFp = if (nDocs == 0) 1L else 100L * sumdl / nDocs
       val rel = IndexManifests.freshRel("champions")
@@ -1206,13 +989,11 @@ object InvertedIndex {
         .option("parquet.block.size", (8L << 20).toString)
         .parquet(s"$dir/$rel")
       val files = IndexManifests.listStaged(spark, dir, rel, "bucket")
-      val next = base.copy(version = base.version + 1, champions = files,
+      Some(base.copy(version = base.version + 1, champions = files,
         championCover = base.postings.size, championC = c,
-        championEpoch = java.util.UUID.randomUUID().toString)
-      if (tryCommit(spark, dir, next)) return
+        championEpoch = java.util.UUID.randomUUID().toString))
     }
-    throw new graft.catalog.GraftCommitConflict(
-      s"champion build lost the version race $maxAttempts times at $dir")
+    ()
   }
 
   /** Commit an EXTERNALLY-staged champion sidecar (the federation's
@@ -1226,135 +1007,30 @@ object InvertedIndex {
       epoch: String): Boolean = {
     val base = currentManifest(spark, dir)
     if (base.version != baseVersion) return false
-    tryCommit(spark, dir, base.copy(version = base.version + 1,
+    IndexManifests.claim(spark, dir, base.copy(version = base.version + 1,
       champions = files, championCover = base.postings.size, championC = c,
       championEpoch = epoch))
   }
 
-  /** Roll the index back to `toVersion`'s content as a NEW head commit
-    * (the catalog's `rollback` posture: history stays travelable, the
-    * rollback itself is one more OCC claim — so a bad CDC batch is one
-    * call to undo, and a racing maintainer serializes like any other).
-    * Everything rewinds together: postings/vocab/stats/tombstones AND
-    * the stream stamps — the rolled-back batches are no longer applied,
-    * so their replays must re-apply, not be refused by a stamp whose
-    * content was discarded. The target manifest must still exist
-    * ([[vacuum]] `keepVersions` bounds how far back this reaches —
-    * fails loudly past it). Returns the new head version.
+  /** [[IndexManifests.rollback]]: postings, vocab/stats, tombstones
+    * and stream stamps rewind together as a new head commit.
     */
   def rollback(spark: SparkSession, dir: String, toVersion: Long,
-      maxAttempts: Int = 5): Long = {
-    require(versions(spark, dir).contains(toVersion),
-      s"no manifest v$toVersion at $dir — expired by vacuum (keepVersions bounds rollback reach)")
-    val target = readManifest(spark, dir, toVersion)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val base = currentManifest(spark, dir)
-      if (base.version == toVersion) return base.version
-      val next = target.copy(version = base.version + 1)
-      if (tryCommit(spark, dir, next)) return next.version
-    }
-    throw new graft.catalog.GraftCommitConflict(
-      s"index rollback lost the version race $maxAttempts times at $dir")
-  }
+      maxAttempts: Int = 5): Long =
+    IndexManifests.rollback(spark, dir, toVersion, maxAttempts)
 
-  /** Export/promote the CURRENT version to a virgin destination (build
-    * cluster → serving cluster): copy every file the head manifest
-    * references — postings, vocab/stats, meta sidecars, tombstones —
-    * preserving relative paths, then commit it at the destination as
-    * version 1 through the same exclusive-create claim every writer
-    * uses (a racing writer at the destination loses cleanly). Token
-    * ranges stay valid (keyed by the copied rel paths) and stream
-    * stamps travel with the content, so a stream repointed at the
-    * promoted copy keeps exactly-once. History does NOT transfer —
-    * the destination starts a fresh version line (rollback reach at
-    * the source is vacuum's concern, not the copy's). Returns the
-    * committed destination version (1).
+  /** [[IndexManifests.exportIndex]]: token ranges stay valid (keyed by
+    * the copied rel paths) and champion sidecars travel with the head.
     */
-  def exportIndex(spark: SparkSession, srcDir: String, destDir: String): Long = {
-    val m = currentManifest(spark, srcDir)
-    require(IndexManifests.versions(spark, destDir).isEmpty,
-      s"export destination $destDir already holds a committed index")
-    val rels = m.postings.map(_._2) ++ Seq(m.vocabDir, m.statsDir) ++
-      m.metaDirs ++ m.deletes.map(_._1) ++ m.champions.map(_._2)
-    IndexManifests.copyTree(spark, srcDir, destDir, rels)
-    // same-path hygiene as build(): a wiped tree re-exported into must
-    // not serve a stale cached manifest for (destDir, 1)
-    IndexManifests.invalidate(destDir)
-    val next = m.copy(version = 1L)
-    require(tryCommit(spark, destDir, next),
-      s"export lost the first-commit race at $destDir — another writer is active there")
-    next.version
-  }
+  def exportIndex(spark: SparkSession, srcDir: String, destDir: String): Long =
+    IndexManifests.exportIndex(spark, srcDir, destDir)
 
-  /** Expire all but the newest `keepVersions` manifests, then sweep
-    * everything no surviving manifest references — torn stagings from
-    * crashed maintainers, files superseded by compaction, and stale
-    * vocab/stats versions all go here. Postings sweep at FILE
-    * granularity (compaction supersedes individual files inside a
-    * staging dir whose single-file buckets stay live); vocab/stats at
-    * directory granularity (each version is a whole dir). `graceMs`
-    * protects a CONCURRENT maintainer's in-flight staging (not yet
-    * referenced by any manifest): anything younger is kept. Returns
-    * files/directories removed.
+  /** [[IndexManifests.vacuum]]: postings sweep file by file; vocab,
+    * stats, tombstone, meta and champion dirs dir by dir.
     */
   def vacuum(spark: SparkSession, dir: String, keepVersions: Int = 2,
-      graceMs: Long = 60L * 60 * 1000): Int = {
-    require(keepVersions >= 1, s"keepVersions must be >= 1, got $keepVersions")
-    val f = fs(spark, dir)
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no committed inverted index at $dir")
-    val (expire, keep) = vs.splitAt(math.max(0, vs.size - keepVersions))
-    val kept = keep.map(readManifest(spark, dir, _))
-    expire.foreach(v => f.delete(IndexManifests.manifestPath(dir, v), false))
-    val now = System.currentTimeMillis()
-    val root = new org.apache.hadoop.fs.Path(dir).toUri.getPath.stripSuffix("/")
-    var removed = 0
-
-    val liveFiles: Set[String] = kept.flatMap(_.postings.map(_._2)).toSet
-    val pRoot = new org.apache.hadoop.fs.Path(s"$dir/postings")
-    if (f.exists(pRoot)) f.listStatus(pRoot).foreach { st =>
-      val it = f.listFiles(st.getPath, true)
-      val files = Seq.newBuilder[org.apache.hadoop.fs.LocatedFileStatus]
-      while (it.hasNext) files += it.next()
-      val all = files.result()
-      def rel(p: org.apache.hadoop.fs.Path) = p.toUri.getPath.stripPrefix(root + "/")
-      val anyLive = all.exists(x => liveFiles.contains(rel(x.getPath)))
-      if (!anyLive) {
-        // fully orphaned staging (crashed maintainer, or wholly
-        // superseded): remove the dir, crumbs and all
-        if (now - st.getModificationTime >= graceMs &&
-            all.forall(x => now - x.getModificationTime >= graceMs)) {
-          f.delete(st.getPath, true); removed += 1
-        }
-      } else all.foreach { x =>
-        // partially superseded: sweep the dead files, keep the live ones
-        if (x.getPath.getName.endsWith(".parquet") &&
-            !liveFiles.contains(rel(x.getPath)) &&
-            now - x.getModificationTime >= graceMs) {
-          f.delete(x.getPath, false); removed += 1
-        }
-      }
-    }
-
-    val liveDirs: Set[String] =
-      kept.flatMap(m => Seq(m.vocabDir, m.statsDir) ++ m.metaDirs ++ m.deletes.map(_._1) ++
-        // champion entries are FILE paths under champions/<uuid>/bucket=N;
-        // the sweep unit is the sidecar dir (first two components)
-        m.champions.map(_._2.split('/').take(2).mkString("/"))).toSet
-    Seq("vocab", "stats", "deletes", "meta", "champions").foreach { kind =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$kind")
-      if (f.exists(p)) f.listStatus(p).foreach { st =>
-        if (!liveDirs.contains(s"$kind/${st.getPath.getName}") &&
-            now - st.getModificationTime >= graceMs) {
-          f.delete(st.getPath, true)
-          removed += 1
-        }
-      }
-    }
-    removed
-  }
+      graceMs: Long = 60L * 60 * 1000): Int =
+    IndexManifests.vacuum(spark, dir, keepVersions, graceMs)
 
   // ---- query ---------------------------------------------------------
 
@@ -1679,12 +1355,8 @@ object InvertedIndex {
       // re-inserted after an EARLY tombstone must keep its champions
       val postTombs = m.deletes.filter(_._2 >= m.championCover)
       if (postTombs.isEmpty) rows
-      else {
-        val tomb = postTombs.map { case (d, _) =>
-            spark.read.schema(TombstoneSchema).parquet(s"$dir/$d") }
-          .reduce(_ unionByName _).distinct()
-        rows.join(tomb, Seq("doc_id"), "left_anti")
-      }
+      else rows.join(IndexManifests.tombstoneIds(spark, dir, "doc_id", postTombs),
+        Seq("doc_id"), "left_anti")
     }
     // postings staged since the champion build serve UNCHAMPIONED —
     // fresh docs are findable immediately; tombstone covers apply
@@ -1786,7 +1458,7 @@ object InvertedIndex {
     val postings = pushTerms(
         liveRows(spark, dir, m, selectFiles(m, probeBuckets, termList)), termList)
       .filter(col("tok").isin(distinctTerms: _*) && col("doc_id").isin(docIds: _*))
-    applyMetaFilter(spark, dir, m, postings, where)
+    IndexManifests.metaFilter(spark, dir, m, postings, where)
       .select(col("doc_id"), col("tok"), explode(col("positions")).as("pos"))
   }
 
@@ -2062,30 +1734,13 @@ object InvertedIndex {
     // doc-count-sized and column-pruned; scoring stays posting-sized;
     // [[compact]] folds the accumulated dirs to ONE, so the latest-wins
     // window here is a between-maintenance cost, never unbounded.
-    val scored = applyMetaFilter(spark, dir, m, scored0, where)
+    val scored = IndexManifests.metaFilter(spark, dir, m, scored0, where)
     val rank = Window.partitionBy(col("probe_id"))
       .orderBy(col("__score_fp").desc, col("doc_id").asc)
     scored.withColumn("rank", row_number().over(rank))
       .filter(col("rank") <= k)
       .select(col("probe_id"), col("rank"), col("doc_id"),
         (col("__score_fp").cast("double") / 1.0e7).as("score"))
-  }
-
-  /** Filtered-retrieval gate shared by every serve path (BM25, phrase,
-    * proximity, span-near): semi-join the per-doc candidates against
-    * the predicate-filtered LATEST sidecar metadata BEFORE ranking —
-    * top-k of the allowed subset. No-op without a predicate; loud
-    * refusal against a sidecar-free index.
-    */
-  private[graft] def applyMetaFilter(spark: SparkSession, dir: String, m: Manifest,
-      candidates: DataFrame, where: Option[Column]): DataFrame = where match {
-    case None => candidates
-    case Some(pred) =>
-      require(m.metaCols.nonEmpty,
-        s"filtered query against $dir, but the index was built without metaCols " +
-          "(build(metaCols = ...) pins the sidecar)")
-      val latest = IndexManifests.latestMeta(spark, dir, m.metaDirs, "doc_id")
-      candidates.join(latest.filter(pred).select("doc_id"), Seq("doc_id"), "left_semi")
   }
 
   /** Exact phrase search FROM the positional postings: top-`k` docs per
@@ -2205,7 +1860,7 @@ object InvertedIndex {
         liveRows(spark, dir, m, selectFiles(m, probeBuckets, terms)), terms)
       .select(col("doc_id"), col("tok"), col("positions"))
     val matched = phraseMatches(postings, phrases)
-    val allowed = applyMetaFilter(spark, dir, m, matched, where)
+    val allowed = IndexManifests.metaFilter(spark, dir, m, matched, where)
     val rank = Window.partitionBy(col("phrase"))
       .orderBy(col("n").desc, col("doc_id").asc)
     allowed.withColumn("rank", row_number().over(rank))
@@ -2235,7 +1890,7 @@ object InvertedIndex {
         liveRows(spark, dir, m, selectFiles(m, probeBuckets, terms)), terms)
       .select(col("doc_id"), col("tok"), col("positions"))
     val matched = proximityMatches(postings, pairs, window)
-    val allowed = applyMetaFilter(spark, dir, m, matched, where)
+    val allowed = IndexManifests.metaFilter(spark, dir, m, matched, where)
     val rank = Window.partitionBy(col("q")).orderBy(col("n").desc, col("doc_id").asc)
     allowed.withColumn("rank", row_number().over(rank))
       .filter(col("rank") <= k)
@@ -2283,7 +1938,7 @@ object InvertedIndex {
         liveRows(spark, dir, m, selectFiles(m, probeBuckets, terms)), terms)
       .select(col("doc_id"), col("tok"), col("positions"))
     val matched = spanNearMatches(postings, queries, slop, inOrder)
-    val allowed = applyMetaFilter(spark, dir, m, matched, where)
+    val allowed = IndexManifests.metaFilter(spark, dir, m, matched, where)
     val rank = Window.partitionBy(col("q")).orderBy(col("n").desc, col("doc_id").asc)
     allowed.withColumn("rank", row_number().over(rank))
       .filter(col("rank") <= k)

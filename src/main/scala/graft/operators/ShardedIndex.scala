@@ -61,7 +61,7 @@ object ShardedIndex {
   def shardDir(dir: String, i: Int): String = s"$dir/shard=$i"
 
   /** Is `dir` a committed federation root? (The procedure surface
-    * dispatches on this, the same way it kind-sniffs single indexes.)
+    * dispatches on this.)
     */
   private[graft] def isFederation(spark: SparkSession, dir: String): Boolean = {
     val p = shardsPath(dir)
@@ -184,21 +184,19 @@ object ShardedIndex {
     l.shards
   }
 
-  /** Per-shard lexical manifests under the CURRENT layout: heads in
-    * steady state; the PINNED pre-reshard versions while an in-place
-    * reshard is in flight (the statistics, vocab, postings and
-    * champion state a pinned manifest names all stay on disk until
+  /** Per-shard manifests under the CURRENT layout: heads in steady
+    * state; the PINNED pre-reshard versions while an in-place reshard is
+    * in flight (everything a pinned manifest names stays on disk until
     * vacuum — keepVersions >= 2 is the documented transition floor).
+    * `M` is the federation's kind, homogeneous by construction.
     */
-  private def lexManifests(spark: SparkSession,
-      dir: String): Seq[(String, InvertedIndex.Manifest)] = {
+  private def shardManifests[M <: IndexManifests.Envelope](spark: SparkSession,
+      dir: String): Seq[(String, M)] = {
     val l = layout(spark, dir)
     (0 until l.shards).map { i =>
       val d = shardDir(dir, i)
-      d -> (l.pins match {
-        case Some(ps) => InvertedIndex.readManifest(spark, d, ps(i))
-        case None => InvertedIndex.currentManifest(spark, d)
-      })
+      d -> l.pins.fold(IndexManifests.head(spark, d))(ps =>
+        IndexManifests.read(spark, d, ps(i))).asInstanceOf[M]
     }
   }
 
@@ -232,21 +230,6 @@ object ShardedIndex {
   }
 
   // ---- lexical federation ---------------------------------------------
-
-  /** Dense twin of [[lexManifests]]: per-shard ANN manifests under the
-    * current layout, pinned while an in-place reshard is in flight.
-    */
-  private def annManifests(spark: SparkSession,
-      dir: String): Seq[(String, AnnIndex.Manifest)] = {
-    val l = layout(spark, dir)
-    (0 until l.shards).map { i =>
-      val d = shardDir(dir, i)
-      d -> (l.pins match {
-        case Some(ps) => AnnIndex.readManifest(spark, d, ps(i))
-        case None => AnnIndex.currentManifest(spark, d)
-      })
-    }
-  }
 
   /** Build an S-shard lexical federation. The corpus is routed ONCE
     * into a staging tree partitioned by shard (one corpus pass — at
@@ -474,13 +457,20 @@ object ShardedIndex {
     * some shards committed and some not.
     */
   def addDeltaSharded(delta: DataFrame, idCol: String, textCol: String,
-      dir: String, stamp: Option[(String, Long)] = None): Seq[Int] = {
-    val n = requireSteady(delta.sparkSession, dir, "addDeltaSharded")
-    withRoutedSlices(delta, idCol, n, dir) { slices =>
+      dir: String, stamp: Option[(String, Long)] = None): Seq[Int] =
+    foldRouted(delta, idCol, dir, "addDeltaSharded")((slice, d) =>
+      InvertedIndex.addDelta(slice, idCol, textCol, d, stamp = stamp))
+
+  /** The one-frame folds of both kinds (deltas, deletes): route the
+    * batch once, fold each affected shard's slice concurrently, return
+    * the affected shard ids.
+    */
+  private def foldRouted(batch: DataFrame, idCol: String, dir: String, op: String)(
+      fold: (DataFrame, String) => Unit): Seq[Int] = {
+    val n = requireSteady(batch.sparkSession, dir, op)
+    withRoutedSlices(batch, idCol, n, dir) { slices =>
       val byShard = slices.toMap
-      concurrently(slices.map(_._1)) { i =>
-        InvertedIndex.addDelta(byShard(i), idCol, textCol, shardDir(dir, i), stamp = stamp)
-      }
+      concurrently(slices.map(_._1))(i => fold(byShard(i), shardDir(dir, i)))
       slices.map(_._1)
     }
   }
@@ -494,19 +484,26 @@ object ShardedIndex {
     * returns the affected shard ids.
     */
   def applyCdcSharded(upserts: DataFrame, removals: DataFrame, idCol: String,
-      textCol: String, dir: String, stamp: Option[(String, Long)] = None): Seq[Int] = {
+      textCol: String, dir: String, stamp: Option[(String, Long)] = None): Seq[Int] =
+    foldCdc(upserts, removals, idCol, dir, "applyCdcSharded")((up, rm, d) =>
+      InvertedIndex.applyCdc(up, rm, idCol, textCol, d, stamp = stamp))
+
+  /** The CDC fold of both kinds: route each side once, fold every shard
+    * either side hit (an empty, schema-correct frame for the side that
+    * has no rows there), return the affected shard ids.
+    */
+  private def foldCdc(upserts: DataFrame, removals: DataFrame, idCol: String,
+      dir: String, op: String)(fold: (DataFrame, DataFrame, String) => Unit): Seq[Int] = {
     val spark = upserts.sparkSession
-    val n = requireSteady(spark, dir, "applyCdcSharded")
+    val n = requireSteady(spark, dir, op)
     withRoutedSlices(upserts, idCol, n, dir) { upSlices =>
       withRoutedSlices(removals, idCol, n, dir) { rmSlices =>
         val up = upSlices.toMap
         val rm = rmSlices.toMap
         val hit = (up.keySet ++ rm.keySet).toSeq.sorted
         concurrently(hit) { i =>
-          InvertedIndex.applyCdc(
-            up.getOrElse(i, emptyDf(spark, upserts.schema)),
-            rm.getOrElse(i, emptyDf(spark, removals.schema)),
-            idCol, textCol, shardDir(dir, i), stamp = stamp)
+          fold(up.getOrElse(i, emptyDf(spark, upserts.schema)),
+            rm.getOrElse(i, emptyDf(spark, removals.schema)), shardDir(dir, i))
         }
         hit
       }
@@ -516,31 +513,24 @@ object ShardedIndex {
   /** Tombstone documents across the federation — only the shards their
     * ids route to scan and commit. Returns the affected shard ids.
     */
-  def deleteDocsSharded(ids: DataFrame, idCol: String, dir: String): Seq[Int] = {
-    val n = requireSteady(ids.sparkSession, dir, "deleteDocsSharded")
-    withRoutedSlices(ids, idCol, n, dir) { slices =>
-      val byShard = slices.toMap
-      concurrently(slices.map(_._1)) { i =>
-        InvertedIndex.deleteDocs(byShard(i), idCol, shardDir(dir, i))
-      }
-      slices.map(_._1)
-    }
-  }
+  def deleteDocsSharded(ids: DataFrame, idCol: String, dir: String): Seq[Int] =
+    foldRouted(ids, idCol, dir, "deleteDocsSharded")((slice, d) =>
+      InvertedIndex.deleteDocs(slice, idCol, d))
 
   /** Compact every shard (independent claims — at real scale these run
     * on each shard's own maintenance cadence; here concurrent in-process
     * jobs, [[concurrently]]).
     */
-  def compactSharded(spark: SparkSession, dir: String): Unit = {
-    concurrently(0 until requireSteady(spark, dir, "compactSharded"))(i =>
-      InvertedIndex.compact(spark, shardDir(dir, i)))
-    ()
-  }
+  def compactSharded(spark: SparkSession, dir: String): Unit =
+    compactAll(spark, dir, "compactSharded")(InvertedIndex.compact(spark, _))
 
-  /** The dense twin of [[compactSharded]]. */
-  def compactShardedAnn(spark: SparkSession, dir: String): Unit = {
-    concurrently(0 until requireSteady(spark, dir, "compactShardedAnn"))(i =>
-      AnnIndex.compact(spark, shardDir(dir, i)))
+  /** [[compactSharded]] for a dense federation. */
+  def compactShardedAnn(spark: SparkSession, dir: String): Unit =
+    compactAll(spark, dir, "compactShardedAnn")(AnnIndex.compact(spark, _))
+
+  private def compactAll(spark: SparkSession, dir: String, op: String)(
+      compact: String => Int): Unit = {
+    concurrently(0 until requireSteady(spark, dir, op))(i => compact(shardDir(dir, i)))
     ()
   }
 
@@ -560,7 +550,7 @@ object ShardedIndex {
     // layout-resolved (and transition-PINNED) per-shard manifests: the
     // BM25 serve keeps answering the pre-reshard snapshot while an
     // in-place reshard lands its invisible tombstones
-    val manifests = lexManifests(spark, dir)
+    val manifests = shardManifests[InvertedIndex.Manifest](spark, dir)
     val pairs = queries.flatMap(q =>
       DriverEval.tokenize(q).distinct.map(t => (q, t))).distinct
     val terms = pairs.map(_._2).distinct
@@ -589,7 +579,7 @@ object ShardedIndex {
       else None).getOrElse {
       manifests
         .map { case (d, m) =>
-          InvertedIndex.applyMetaFilter(spark, d, m,
+          IndexManifests.metaFilter(spark, d, m,
             InvertedIndex.candidateRows(spark, d, m, terms), where)
         }
         .reduce(_ unionByName _)
@@ -721,7 +711,7 @@ object ShardedIndex {
   def bm25TopKTextApproxSharded(spark: SparkSession, dir: String,
       queries: Seq[String], k: Int = 5, where: Option[Column] = None): DataFrame = {
     require(queries.nonEmpty, "bm25TopKTextApproxSharded needs at least one query")
-    val manifests = lexManifests(spark, dir)
+    val manifests = shardManifests[InvertedIndex.Manifest](spark, dir)
     manifests.foreach { case (d, m) =>
       require(m.championC > 0,
         s"no champion sidecar at federation shard $d — approximate serving is " +
@@ -761,7 +751,7 @@ object ShardedIndex {
       else None).getOrElse {
       manifests
         .map { case (d, m) =>
-          InvertedIndex.applyMetaFilter(spark, d, m,
+          IndexManifests.metaFilter(spark, d, m,
             InvertedIndex.approxCandidateRows(spark, d, m, terms), where)
         }
         .reduce(_ unionByName _)
@@ -963,7 +953,7 @@ object ShardedIndex {
     require(prefixes.forall(_.nonEmpty), "suggestTopKSharded prefixes must be non-empty")
     val p = prefixes.toDF("prefix")
     val pred = prefixes.map(px => col("tok").startsWith(px)).reduce(_ || _)
-    val slices = lexManifests(spark, dir).map { case (d, m) =>
+    val slices = shardManifests[InvertedIndex.Manifest](spark, dir).map { case (d, m) =>
       spark.read.schema(InvertedIndex.VocabSchema)
         .parquet(s"$d/${m.vocabDir}").filter(pred)
     }
@@ -978,7 +968,7 @@ object ShardedIndex {
   }
 
   /** Promote a whole federation (build cluster → serving cluster):
-    * every shard exports through [[InvertedIndex.exportIndex]] (head
+    * every shard exports through [[IndexManifests.exportIndex]] (head
     * version's referenced files, rel-path-preserving, one
     * exclusive-create claim per shard at the destination) and the
     * shards.json marker lands LAST — an interrupted export leaves a
@@ -1006,14 +996,8 @@ object ShardedIndex {
         s"no committed index at federation shard $s — a federation's marker " +
           "lands only after every shard commits, so this tree is corrupt or " +
           "hand-assembled; rebuild it before exporting")
-      val head = vs.last
-      // kind-sniff per shard (the index_export procedure's test): a
-      // federation is homogeneous by construction, but a hardcoded
-      // lexical export would silently mangle an ANN federation
-      if (IndexManifests.isAnnManifest(spark, s))
-        AnnIndex.exportIndex(spark, s, shardDir(destDir, i))
-      else InvertedIndex.exportIndex(spark, s, shardDir(destDir, i))
-      head
+      IndexManifests.exportIndex(spark, s, shardDir(destDir, i))
+      vs.last
     }
     writeShardsFile(spark, destDir, n)
     promoted.max
@@ -1049,8 +1033,8 @@ object ShardedIndex {
     val n = requireSteady(spark, srcDir, "reshard")
     requireVirginRoot(spark, destDir, "reshard destination")
     sweepUncommitted(spark, destDir)
-    // kind-sniff shard 0 (federations are homogeneous by construction —
-    // exportSharded's rule)
+    // the rebuild is payload code: shard 0's manifest names the kind
+    // (federations are homogeneous by construction)
     if (IndexManifests.isAnnManifest(spark, shardDir(srcDir, 0)))
       reshardAnn(spark, srcDir, destDir, n, newShards)
     else reshardLexical(spark, srcDir, destDir, n, newShards)
@@ -1079,7 +1063,7 @@ object ShardedIndex {
     * transition overlay pinning every old shard's manifest version, so
     * every pin-capable serve keeps answering the pre-reshard snapshot
     * while builds and tombstones land invisibly above the pins
-    * ([[lexManifests]]); maintenance and positional serves refuse
+    * ([[shardManifests]]); maintenance and positional serves refuse
     * mid-transition ([[requireSteady]]). The final overlay flips the
     * layout to `kS` shards at their heads in one exclusive-create —
     * whole-or-nothing, the source serves throughout, and a crash at ANY
@@ -1116,11 +1100,7 @@ object ShardedIndex {
             "pmod(h, S), so each old shard splits into its own family with no " +
             "cross-family movement; any other ratio moves nearly every " +
             "document — use reshard(srcDir, destDir, newShards)")
-        val heads = (0 until n).map { i =>
-          val d = shardDir(dir, i)
-          if (ann) AnnIndex.currentManifest(spark, d).version
-          else InvertedIndex.currentManifest(spark, d).version
-        }
+        val heads = (0 until n).map(i => IndexManifests.versions(spark, shardDir(dir, i)).last)
         commitOverlay(spark, dir,
           s"""{"shards": $n, "pins": [${heads.mkString(", ")}], "target": $newShards}""")
     }
@@ -1135,7 +1115,7 @@ object ShardedIndex {
     * train the new shards' quantizers (the federation's shard-local-
     * geometry semantics), and dense removals are id-only tombstones
     * (no corpus stats to correct — cheaper than the lexical side's
-    * vocab corrections). Serving pins through [[annManifests]]; at
+    * vocab corrections). Serving pins through [[shardManifests]]; at
     * full probe the merged answer is exact over the unchanged corpus,
     * so old-vs-new serve identity holds exactly ([[annTopKSharded]]).
     */
@@ -1239,12 +1219,7 @@ object ShardedIndex {
     val l = layout(spark, dir)
     require(l.pins.nonEmpty, s"no in-place reshard in flight at $dir")
     val pins = l.pins.get
-    val ann = IndexManifests.isAnnManifest(spark, shardDir(dir, 0))
-    val heads = (0 until l.shards).map { i =>
-      val d = shardDir(dir, i)
-      if (ann) AnnIndex.currentManifest(spark, d).version
-      else InvertedIndex.currentManifest(spark, d).version
-    }
+    val heads = (0 until l.shards).map(i => IndexManifests.versions(spark, shardDir(dir, i)).last)
     require(heads.zip(pins).forall { case (h, p) => h == p },
       s"cannot abort the in-place reshard at $dir: leaver removals already " +
         s"landed on ${heads.zip(pins).count { case (h, p) => h != p }} shard(s) " +
@@ -1491,16 +1466,9 @@ object ShardedIndex {
     * [[addDeltaSharded]] contract on the dense side.
     */
   def addDeltaShardedAnn(delta: DataFrame, idCol: String, vecCol: String,
-      dir: String, stamp: Option[(String, Long)] = None): Seq[Int] = {
-    val n = requireSteady(delta.sparkSession, dir, "addDeltaShardedAnn")
-    withRoutedSlices(delta, idCol, n, dir) { slices =>
-      val byShard = slices.toMap
-      concurrently(slices.map(_._1)) { i =>
-        AnnIndex.addDelta(byShard(i), idCol, vecCol, shardDir(dir, i), stamp = stamp)
-      }
-      slices.map(_._1)
-    }
-  }
+      dir: String, stamp: Option[(String, Long)] = None): Seq[Int] =
+    foldRouted(delta, idCol, dir, "addDeltaShardedAnn")((slice, d) =>
+      AnnIndex.addDelta(slice, idCol, vecCol, d, stamp = stamp))
 
   /** CDC upsert across the ANN federation — the dense twin of
     * [[applyCdcSharded]]: an id's upsert and removal route to the same
@@ -1509,24 +1477,9 @@ object ShardedIndex {
     * correct). One scan per input frame; returns affected shard ids.
     */
   def applyCdcShardedAnn(upserts: DataFrame, removals: DataFrame, idCol: String,
-      vecCol: String, dir: String, stamp: Option[(String, Long)] = None): Seq[Int] = {
-    val spark = upserts.sparkSession
-    val n = requireSteady(spark, dir, "applyCdcShardedAnn")
-    withRoutedSlices(upserts, idCol, n, dir) { upSlices =>
-      withRoutedSlices(removals, idCol, n, dir) { rmSlices =>
-        val up = upSlices.toMap
-        val rm = rmSlices.toMap
-        val hit = (up.keySet ++ rm.keySet).toSeq.sorted
-        concurrently(hit) { i =>
-          AnnIndex.applyCdc(
-            up.getOrElse(i, emptyDf(spark, upserts.schema)),
-            rm.getOrElse(i, emptyDf(spark, removals.schema)),
-            idCol, vecCol, shardDir(dir, i), stamp = stamp)
-        }
-        hit
-      }
-    }
-  }
+      vecCol: String, dir: String, stamp: Option[(String, Long)] = None): Seq[Int] =
+    foldCdc(upserts, removals, idCol, dir, "applyCdcShardedAnn")((up, rm, d) =>
+      AnnIndex.applyCdc(up, rm, idCol, vecCol, d, stamp = stamp))
 
   /** ANN top-`k` over the federation: fan the probes out (each shard
     * answers its own top-k from its nProbe nearest cells — per-shard
@@ -1553,7 +1506,7 @@ object ShardedIndex {
     // layout-resolved (and transition-PINNED) manifests: mid-reshard
     // the serve answers the pre-reshard snapshot, like the lexical
     // side. ONE layout read per query (the serving hot path).
-    val manifests = annManifests(spark, dir)
+    val manifests = shardManifests[AnnIndex.Manifest](spark, dir)
     val perShard = manifests.map { case (d, m) =>
       AnnIndex.topKRows(spark, probeRows, d, k, nProbe,
         where = where, excludeSelf = excludeSelf, manifest = Some(m))
@@ -1577,7 +1530,7 @@ object ShardedIndex {
       texts: Seq[String], m: Int = 8, k: Int = 5): DataFrame = {
     require(texts.nonEmpty, "moreLikeThisTopKTextSharded needs at least one exemplar")
     require(m >= 1, s"moreLikeThisTopKTextSharded needs m >= 1, got $m")
-    val manifests = lexManifests(spark, dir)
+    val manifests = shardManifests[InvertedIndex.Manifest](spark, dir)
     val probePairs = texts.flatMap(t =>
       DriverEval.tokenize(t).distinct.map(tok => (t, tok))).distinct
     require(probePairs.length <= InvertedIndex.MaxTermPrune,
@@ -1658,9 +1611,9 @@ object ShardedIndex {
     val spark = probes.sparkSession
     // one bounded probe collect feeds every shard (each shard's ADC
     // tables still derive from ITS codebooks — driver math, no jobs);
-    // one layout read per query (annManifests)
+    // one layout read per query (shardManifests)
     val probeRows = AnnIndex.collectProbes(probes, idCol, vecCol, maxProbes)
-    val manifests = annManifests(spark, dir)
+    val manifests = shardManifests[AnnIndex.Manifest](spark, dir)
     val perShard = manifests.map { case (d, m) =>
       AnnIndex.pqTopKRows(spark, probeRows, d, k, nProbe,
         shortlist, where = where, excludeSelf = excludeSelf, manifest = Some(m))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{AnnIndex, InvertedIndex}
+import graft.operators.{AnnIndex, IndexManifests, InvertedIndex}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 
@@ -80,18 +80,29 @@ object StreamIndex {
     * was applied, false for a replay skip.
     */
   def invertedBatch(cfg: Config, textCol: String)(
-      batch: DataFrame, batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    val replay = InvertedIndex.committedBatchId(spark, cfg.indexDir, cfg.ns)
-      .exists(_ >= batchId)
-    if (!replay)
+      batch: DataFrame, batchId: Long): Boolean =
+    flatFold(cfg, batchId, batch.sparkSession, () => compactLexical(batch.sparkSession, cfg)) {
       InvertedIndex.addDelta(batch, cfg.idCol, textCol, cfg.indexDir,
         stamp = Some(cfg.ns -> batchId))
-    maintain(cfg, batchId,
-      () => compactLexical(spark, cfg),
-      () => InvertedIndex.vacuum(spark, cfg.indexDir, cfg.keepVersions, cfg.vacuumGraceMs))
+    }
+
+  /** The scaffolding behind the four flat handlers: skip a replay the
+    * committed stamp already covers, else `apply` the batch (stamped),
+    * then the cadenced maintenance either way. Returns true if the batch
+    * was applied, false for a replay skip.
+    */
+  private def flatFold(cfg: Config, batchId: Long, spark: org.apache.spark.sql.SparkSession,
+      compact: () => Int)(apply: => Unit): Boolean = {
+    val replay = IndexManifests.committedBatchId(spark, cfg.indexDir, cfg.ns)
+      .exists(_ >= batchId)
+    if (!replay) apply
+    maintain(cfg, batchId, compact,
+      () => IndexManifests.vacuum(spark, cfg.indexDir, cfg.keepVersions, cfg.vacuumGraceMs))
     !replay
   }
+
+  private val NoChampions =
+    "championC is the LEXICAL approximate-serving knob — an ANN index has no champion sidecar"
 
   // compact + (optional) champion-sidecar rebuild: compaction clears the
   // impact lists (the cover indexes die with the postings rewrite), so a
@@ -111,18 +122,12 @@ object StreamIndex {
     */
   def annBatch(cfg: Config, vecCol: String)(
       batch: DataFrame, batchId: Long): Boolean = {
-    require(cfg.championC.isEmpty,
-      "championC is the LEXICAL approximate-serving knob — an ANN index has no champion sidecar")
+    require(cfg.championC.isEmpty, NoChampions)
     val spark = batch.sparkSession
-    val replay = AnnIndex.committedBatchId(spark, cfg.indexDir, cfg.ns)
-      .exists(_ >= batchId)
-    if (!replay)
+    flatFold(cfg, batchId, spark, () => AnnIndex.compact(spark, cfg.indexDir)) {
       AnnIndex.addDelta(batch, cfg.idCol, vecCol, cfg.indexDir,
         stamp = Some(cfg.ns -> batchId))
-    maintain(cfg, batchId,
-      () => AnnIndex.compact(spark, cfg.indexDir),
-      () => AnnIndex.vacuum(spark, cfg.indexDir, cfg.keepVersions, cfg.vacuumGraceMs))
-    !replay
+    }
   }
 
   // outside the stamp (maintenance is content-neutral and idempotent);
@@ -157,24 +162,12 @@ object StreamIndex {
     * stamp.
     */
   def invertedCdcBatch(cfg: Config, textCol: String, opCol: String,
-      oldTexts: DataFrame => DataFrame)(batch: DataFrame, batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    val replay = InvertedIndex.committedBatchId(spark, cfg.indexDir, cfg.ns)
-      .exists(_ >= batchId)
-    if (!replay) {
-      val upserts = batch.filter(org.apache.spark.sql.functions.col(opCol) =!= "D")
-        .drop(opCol)
-      val leaving = batch
-        .filter(org.apache.spark.sql.functions.col(opCol).isin("U", "D"))
-        .select(cfg.idCol)
+      oldTexts: DataFrame => DataFrame)(batch: DataFrame, batchId: Long): Boolean =
+    flatFold(cfg, batchId, batch.sparkSession, () => compactLexical(batch.sparkSession, cfg)) {
+      val (upserts, leaving) = splitCdc(batch, cfg, opCol)
       InvertedIndex.applyCdc(upserts, oldTexts(leaving), cfg.idCol, textCol,
         cfg.indexDir, stamp = Some(cfg.ns -> batchId))
     }
-    maintain(cfg, batchId,
-      () => compactLexical(spark, cfg),
-      () => InvertedIndex.vacuum(spark, cfg.indexDir, cfg.keepVersions, cfg.vacuumGraceMs))
-    !replay
-  }
 
   /** CDC foreachBatch against the ANN index: same shape, no resolver —
     * the dense side needs only the LEAVING IDS (no corpus stats to
@@ -182,24 +175,13 @@ object StreamIndex {
     */
   def annCdcBatch(cfg: Config, vecCol: String, opCol: String)(
       batch: DataFrame, batchId: Long): Boolean = {
-    require(cfg.championC.isEmpty,
-      "championC is the LEXICAL approximate-serving knob — an ANN index has no champion sidecar")
+    require(cfg.championC.isEmpty, NoChampions)
     val spark = batch.sparkSession
-    val replay = AnnIndex.committedBatchId(spark, cfg.indexDir, cfg.ns)
-      .exists(_ >= batchId)
-    if (!replay) {
-      val upserts = batch.filter(org.apache.spark.sql.functions.col(opCol) =!= "D")
-        .drop(opCol)
-      val leaving = batch
-        .filter(org.apache.spark.sql.functions.col(opCol).isin("U", "D"))
-        .select(cfg.idCol)
+    flatFold(cfg, batchId, spark, () => AnnIndex.compact(spark, cfg.indexDir)) {
+      val (upserts, leaving) = splitCdc(batch, cfg, opCol)
       AnnIndex.applyCdc(upserts, leaving, cfg.idCol, vecCol,
         cfg.indexDir, stamp = Some(cfg.ns -> batchId))
     }
-    maintain(cfg, batchId,
-      () => AnnIndex.compact(spark, cfg.indexDir),
-      () => AnnIndex.vacuum(spark, cfg.indexDir, cfg.keepVersions, cfg.vacuumGraceMs))
-    !replay
   }
 
   /** foreachBatch handler growing a DOCUMENT-PARTITIONED federation
@@ -229,7 +211,7 @@ object StreamIndex {
     */
   def shardedInvertedBatch(cfg: Config, textCol: String)(
       batch: DataFrame, batchId: Long): Boolean =
-    shardedFold(cfg, batchId, batch.sparkSession, lexical = true,
+    shardedFold(cfg, batchId, batch.sparkSession, compactShardedLexical(batch.sparkSession, cfg),
       () => graft.operators.ShardedIndex.addDeltaSharded(
         batch, cfg.idCol, textCol, cfg.indexDir, stamp = Some(cfg.ns -> batchId)))
 
@@ -242,7 +224,7 @@ object StreamIndex {
   def shardedCdcBatch(cfg: Config, textCol: String, opCol: String,
       oldTexts: DataFrame => DataFrame)(batch: DataFrame, batchId: Long): Boolean = {
     val (upserts, leaving) = splitCdc(batch, cfg, opCol)
-    shardedFold(cfg, batchId, batch.sparkSession, lexical = true,
+    shardedFold(cfg, batchId, batch.sparkSession, compactShardedLexical(batch.sparkSession, cfg),
       () => graft.operators.ShardedIndex.applyCdcSharded(upserts, oldTexts(leaving),
         cfg.idCol, textCol, cfg.indexDir, stamp = Some(cfg.ns -> batchId)))
   }
@@ -254,7 +236,7 @@ object StreamIndex {
     */
   def shardedAnnBatch(cfg: Config, vecCol: String)(
       batch: DataFrame, batchId: Long): Boolean =
-    shardedFold(cfg, batchId, batch.sparkSession, lexical = false,
+    shardedFold(cfg, batchId, batch.sparkSession, compactShardedAnn(batch.sparkSession, cfg),
       () => graft.operators.ShardedIndex.addDeltaShardedAnn(
         batch, cfg.idCol, vecCol, cfg.indexDir, stamp = Some(cfg.ns -> batchId)))
 
@@ -265,7 +247,7 @@ object StreamIndex {
   def shardedAnnCdcBatch(cfg: Config, vecCol: String, opCol: String)(
       batch: DataFrame, batchId: Long): Boolean = {
     val (upserts, leaving) = splitCdc(batch, cfg, opCol)
-    shardedFold(cfg, batchId, batch.sparkSession, lexical = false,
+    shardedFold(cfg, batchId, batch.sparkSession, compactShardedAnn(batch.sparkSession, cfg),
       () => graft.operators.ShardedIndex.applyCdcShardedAnn(upserts, leaving,
         cfg.idCol, vecCol, cfg.indexDir, stamp = Some(cfg.ns -> batchId)))
   }
@@ -278,41 +260,41 @@ object StreamIndex {
     batch.filter(org.apache.spark.sql.functions.col(opCol).isin("U", "D"))
       .select(cfg.idCol))
 
+  // the federated compaction passes: per-shard compact, plus the
+  // lexical champion re-selection when `cfg.championC` is set
+  private def compactShardedLexical(spark: org.apache.spark.sql.SparkSession,
+      cfg: Config): () => Unit = () => {
+    graft.operators.ShardedIndex.compactSharded(spark, cfg.indexDir)
+    cfg.championC.foreach(c =>
+      graft.operators.ShardedIndex.buildChampionsSharded(spark, cfg.indexDir, c))
+  }
+
+  private def compactShardedAnn(spark: org.apache.spark.sql.SparkSession,
+      cfg: Config): () => Unit = {
+    require(cfg.championC.isEmpty, NoChampions)
+    () => graft.operators.ShardedIndex.compactShardedAnn(spark, cfg.indexDir)
+  }
+
   /** The ONE scaffolding behind the four federated handlers: per-shard
     * stamp snapshot before/after the routed fold, the
-    * empty-batch-applied rule, and cadenced maintenance (per-shard
-    * compact — with the lexical champion re-selection when
-    * `cfg.championC` is set — per-shard vacuum, and the routing-staging
-    * orphan sweep). Handlers differ ONLY in the fold they run; keeping
-    * the semantics here means the next contract change lands once, not
-    * four times.
+    * empty-batch-applied rule, and cadenced maintenance (the handler's
+    * `compact` pass, per-shard vacuum, and the routing-staging orphan
+    * sweep). Handlers differ ONLY in the fold and compaction they run;
+    * keeping the semantics here means the next contract change lands
+    * once, not four times.
     */
   private def shardedFold(cfg: Config,
       batchId: Long, spark: org.apache.spark.sql.SparkSession,
-      lexical: Boolean, fold: () => Seq[Int]): Boolean = {
+      compact: () => Unit, fold: () => Seq[Int]): Boolean = {
     import graft.operators.ShardedIndex
-    require(lexical || cfg.championC.isEmpty,
-      "championC is the LEXICAL approximate-serving knob — an ANN index has no champion sidecar")
     val n = ShardedIndex.shardCount(spark, cfg.indexDir)
-    def committed(i: Int): Option[Long] = {
-      val d = ShardedIndex.shardDir(cfg.indexDir, i)
-      if (lexical) InvertedIndex.committedBatchId(spark, d, cfg.ns)
-      else AnnIndex.committedBatchId(spark, d, cfg.ns)
-    }
-    def stamped: Seq[Boolean] = (0 until n).map(committed(_).exists(_ >= batchId))
+    def stamped: Seq[Boolean] = (0 until n).map(i => IndexManifests.committedBatchId(
+      spark, ShardedIndex.shardDir(cfg.indexDir, i), cfg.ns).exists(_ >= batchId))
     val before = stamped
     val hit = fold()
     val applied = hit.isEmpty ||
       stamped.zip(before).exists { case (now, was) => now && !was }
-    maintain(cfg, batchId,
-      () => {
-        if (lexical) {
-          ShardedIndex.compactSharded(spark, cfg.indexDir)
-          cfg.championC.foreach(c =>
-            ShardedIndex.buildChampionsSharded(spark, cfg.indexDir, c))
-        } else ShardedIndex.compactShardedAnn(spark, cfg.indexDir)
-        n
-      },
+    maintain(cfg, batchId, () => { compact(); n },
       () =>
         // an in-flight in-place reshard pins serving to pre-transition
         // manifest versions — vacuuming them out from under the pins
@@ -320,11 +302,9 @@ object StreamIndex {
         // vacuum until the flip (the fold itself already refused, so
         // this only matters for the vacuum-only cadence window)
         if (ShardedIndex.inTransition(spark, cfg.indexDir)) 0
-        else (0 until n).map { i =>
-          val d = ShardedIndex.shardDir(cfg.indexDir, i)
-          if (lexical) InvertedIndex.vacuum(spark, d, cfg.keepVersions, cfg.vacuumGraceMs)
-          else AnnIndex.vacuum(spark, d, cfg.keepVersions, cfg.vacuumGraceMs)
-        }.sum + ShardedIndex.sweepStaging(spark, cfg.indexDir, cfg.vacuumGraceMs))
+        else (0 until n).map(i => IndexManifests.vacuum(spark,
+          ShardedIndex.shardDir(cfg.indexDir, i), cfg.keepVersions, cfg.vacuumGraceMs)
+        ).sum + ShardedIndex.sweepStaging(spark, cfg.indexDir, cfg.vacuumGraceMs))
     applied
   }
 

@@ -138,6 +138,36 @@ class InvertedIndexSpec extends SparkSpec {
     assert(got("nu") == 2L, "new token's df must sum across the batch's docs")
   }
 
+  test("a NULL-text doc is never indexed: its CDC removal and re-insert serve like a rebuild") {
+    // tokens(null) is null, so a NULL-text doc stages no postings and
+    // counts in no df, n or sumdl; its removal has no postings for a
+    // tombstone to cover. Served answers equal a rebuild at every step.
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("invidx_nulltext").toString
+    InvertedIndex.build(docs.unionByName(Seq((9L, null: String)).toDF("doc_id", "text")),
+      "doc_id", "text", dir)
+    def served(d: String) = InvertedIndex.bm25TopKText(spark, d,
+      Seq("alpha beta", "omega", "delta omega"), k = 5)
+      .orderBy("q", "rank").collect().map(_.toSeq).toSeq
+    def rebuilt(corpus: org.apache.spark.sql.DataFrame) = {
+      val d = java.nio.file.Files.createTempDirectory("invidx_nulltext_rb").toString
+      InvertedIndex.build(corpus, "doc_id", "text", d)
+      served(d)
+    }
+    val none = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    assert(served(dir) == rebuilt(docs), "the NULL-text doc contributed to the index")
+    InvertedIndex.applyCdc(upserts = none,
+      removals = Seq((9L, null: String)).toDF("doc_id", "text"), "doc_id", "text", dir)
+    assert(InvertedIndex.currentManifest(spark, dir).deletes.isEmpty,
+      "a removal with no postings committed a tombstone")
+    assert(served(dir) == rebuilt(docs), "removing the NULL-text doc changed answers")
+    val reinserted = Seq((9L, "omega alpha omega")).toDF("doc_id", "text")
+    InvertedIndex.applyCdc(upserts = reinserted, removals = none, "doc_id", "text", dir)
+    assert(served(dir) == rebuilt(docs.unionByName(reinserted)),
+      "the re-inserted doc does not serve like a rebuild")
+  }
+
   test("phrase search still answers after a delta grows the index") {
     val s = spark
     import s.implicits._

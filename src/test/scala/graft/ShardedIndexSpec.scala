@@ -173,8 +173,8 @@ class ShardedIndexSpec extends SparkSpec {
       .select("probe_id", "neighbor_id").as[(Long, Long)].collect().toSet
     assert(got2 == exact2, "post-delta sharded ANN diverged from brute force")
 
-    // the export path kind-sniffs per shard: an ANN federation promotes
-    // through AnnIndex.exportIndex, and the copy answers identically
+    // the export path is kind-agnostic per shard: an ANN federation
+    // promotes through the shared exportIndex, and the copy answers identically
     val dest = java.nio.file.Files.createTempDirectory("shidx_ann_dest").toString
     new java.io.File(dest).delete()
     ShardedIndex.exportSharded(spark, dir, dest)
