@@ -57,12 +57,16 @@ object Tables {
   // map could never evict — entries kept their own keys reachable (the
   // round-15 advisor's finding). Instead sessions get an identity uuid
   // through a (value-only, collectable) weak map and the plan cache is
-  // BOUNDED with clear-on-overflow, capping retained sessions/relations
-  // at the bound.
-  private val ReadCacheMax = 512
+  // BOUNDED. A miss first drops the plans of stopped SparkContexts
+  // (never servable again); on overflow it evicts other sessions' plans
+  // before the caller's own, so one session's sweep of many paths does
+  // not cost another live session its resolved relations.
+  private[graft] val ReadCacheMax = 512
   private val sessionIds = new java.util.WeakHashMap[SparkSession, String]()
   private val readCache =
     new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+
+  private[graft] def readCacheSize: Int = readCache.size
 
   private def cachedRead(spark: SparkSession, path: String): DataFrame = {
     val sid = sessionIds.synchronized {
@@ -73,8 +77,17 @@ object Tables {
       }
       id
     }
-    if (readCache.size >= ReadCacheMax) readCache.clear()
-    readCache.computeIfAbsent((sid, path), _ => spark.read.parquet(path))
+    val key = (sid, path)
+    val hit = readCache.get(key)
+    if (hit != null) hit
+    else {
+      readCache.values.removeIf(_.sparkSession.sparkContext.isStopped)
+      if (readCache.size >= ReadCacheMax) {
+        readCache.keySet.removeIf(_._1 != sid)
+        if (readCache.size >= ReadCacheMax) readCache.clear()
+      }
+      readCache.computeIfAbsent(key, _ => spark.read.parquet(path))
+    }
   }
 
   /** Normalize the `ts` column of an events frame (batch or streaming) to

@@ -2615,8 +2615,8 @@ object TrainingDataOps {
         // BM25-only lifecycle -> BM25-only index (withPositions=false,
         // the honest production config for a non-span index; the
         // POSITIONAL build cost is visible in search_bm25_served's cold
-        // pass and the InvIndexScale positions axis, and the positional
-        // CDC lifecycle is spec-gated via phrase-over-CDC)
+        // pass, and the positional CDC lifecycle is spec-gated via
+        // phrase-over-CDC)
         operators.InvertedIndex.build(docs, "doc_id", "text", work,
           withPositions = false)
         operators.InvertedIndex.bm25TopK(docs, "doc_id", "text", work,
@@ -3032,7 +3032,7 @@ object TrainingDataOps {
       // exact and overlapping, which is what the oracle's naive
       // token-slice scan computes. SERVE-ONLY since round 12: answers
       // from the shared prebuilt index (no mutation in this entry; the
-      // build axis is covered by search_bm25_indexed + InvIndexScale)
+      // build axis is covered by search_bm25_indexed)
       (spark, dir) =>
         operators.InvertedIndex.phraseTopK(spark, ServingIndexes.lexicalDir(spark, dir),
             phrases = Seq("fast key scan", "table table", "value fast"), k = 5)

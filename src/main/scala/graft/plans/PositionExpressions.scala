@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * stopword-frequency terms in a long doc paid quadratic work where the
   * sorted arrays admit a linear merge (VERDICT r11 #3). These kernels
   * are the linear replacements; answers are row-identical (spec-pinned)
-  * and the hot-pair microbench rides InvIndexScale.
+  * and the hot-pair A/B is recorded in BENCH_SF1.md (round-12 addendum 1).
   */
 
 /** Anchor count for ordered proximity: positions `p` of the first term

@@ -1,17 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
-/** Dev tool: dump formatted plans for headline queries. */
+
+/** Dumps the formatted plans of the bench queries.
+  * Usage: sbt "Test/runMain graft.Explain [substring filter] [output file] [sf dir]"
+  */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      // unsound in Spark 4.1 — see GraftSession for the full account
-      .config("spark.sql.unionOutputPartitioning", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder("local[8]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // optional args: [substring filter] [output file] [sf dir]
     val only = args.lift(0)
     val dir = args.lift(2).getOrElse("/root/testdata/sf0.01")
     val out = new java.io.PrintWriter(args.lift(1).getOrElse("/tmp/plans.txt"))

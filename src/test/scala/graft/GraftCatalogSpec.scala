@@ -246,8 +246,8 @@ class GraftCatalogSpec extends SparkSpec {
   test("delete-file cache is a pure optimization: identical reads cached, cleared, and uncached") {
     // sustained MOR change capture accumulates delete files whose
     // re-parsing per data file measured super-linear at 30×
-    // (CatalogScale: 1.4→4.5 s over six rounds; flat ~1.0 s with the
-    // cache). Correctness must be identical in every cache regime.
+    // (BENCH_SF1.md round-9 addendum: 1.4→4.5 s over six rounds; flat
+    // ~1.0 s with the cache). Correctness must be identical in every cache regime.
     spark.sql(s"CREATE TABLE $cat.db.delcache (k BIGINT, v STRING) TBLPROPERTIES ('graft.merge.mode' = 'merge-on-read')")
     spark.range(0, 1000).selectExpr("id AS k", "CAST(id AS STRING) AS v")
       .repartition(4).writeTo(s"$cat.db.delcache").append()

@@ -96,4 +96,27 @@ class InventorySpec extends SparkSpec {
     }
     assert(wrong.isEmpty, s"SURVEY §2 oracle column disagrees with the registry: $wrong")
   }
+
+  test("src/main defines exactly the allowlisted mains (no dev rig ships in the library jar)") {
+    // the entry points that deployments, Verify and Bench run; a
+    // profiler or scale rig belongs under src/test (Test/runMain)
+    val allowlist = Set("graft.Bench", "graft.StreamBenchSection", "graft.Verify",
+      "graft.CurateMain", "graft.streaming.StreamMain")
+    val mainDef = """def main\(args: Array\[String\]\)""".r
+    val objectDef = """(?m)^\s*(?:private |final |case )*object (\w+)""".r
+    val mains = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala")).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val body = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        val pkg = """(?m)^package ([\w.]+)""".r.findFirstMatchIn(body).fold("")(_.group(1) + ".")
+        // a main belongs to the nearest object declared above it
+        mainDef.findAllMatchIn(body).map { m =>
+          pkg + objectDef.findAllMatchIn(body).takeWhile(_.start < m.start).toSeq.last.group(1)
+        }
+      }.toSet
+    assert((mains -- allowlist).isEmpty, s"mains outside the allowlist: ${mains -- allowlist}")
+    assert((allowlist -- mains).isEmpty,
+      s"allowlisted mains no longer defined (remove them): ${allowlist -- mains}")
+  }
 }

@@ -145,4 +145,36 @@ class PlanSpec extends SparkSpec {
       assert(Queries.queries("q5_multijoin")(spark, sfDir).count() > 0)
     }
   }
+
+  /** The operator tree of a frame's formatted plan: the block from
+    * `== Physical Plan ==` down to the first blank line (no expression
+    * ids, no paths).
+    */
+  private def operatorTree(formatted: String): String =
+    formatted.linesIterator.dropWhile(_ != "== Physical Plan ==").takeWhile(_.nonEmpty)
+      .mkString("", "\n", "\n")
+
+  private def resource(name: String): String =
+    scala.io.Source.fromResource(name, getClass.getClassLoader).mkString
+
+  test("post-CDC serve frames (bm25TopK, AnnIndex.topK) keep their checked-in operator trees") {
+    val sc = new ServeScenario(spark)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_plan_serve").toString
+    sc.lexBuild(s"$tmp/idx")
+    sc.lexApplyCdc(s"$tmp/idx")
+    sc.annBuild(s"$tmp/ann")
+    sc.annApplyCdc(s"$tmp/ann")
+    val lexical = resource("plans/serve_bm25_postcdc.tree")
+    // the checked-in lexical tree is the r16 record's, not a re-baseline
+    val r16 = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("plans/r16/serve_bm25_postcdc_final.txt")), "UTF-8")
+    assert(lexical == operatorTree(r16))
+    for ((name, df, want) <- Seq(
+        ("bm25TopK", sc.lexServe(s"$tmp/idx"), lexical),
+        ("AnnIndex.topK", sc.annServe(s"$tmp/ann"), resource("plans/serve_ann_postcdc.tree")))) {
+      val tree = operatorTree(
+        df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
+      assert(tree == want, s"$name post-CDC serve tree changed:\n$tree")
+    }
+  }
 }

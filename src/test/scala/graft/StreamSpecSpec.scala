@@ -183,7 +183,6 @@ class StreamSpecSpec extends SparkSpec {
 
   test("a spec-booted micro-batch with a staging section runs 2 jobs and writes only the delta") {
     import graft.streaming.StreamRunner
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val tmp    = Files.createTempDirectory("graft_spec_jobs").toString
     val src    = s"$tmp/src"
     val target = s"$tmp/t"
@@ -204,28 +203,15 @@ class StreamSpecSpec extends SparkSpec {
     val n = 100
     Thread.sleep(1100) // a later blob version than the seed's
     (1 to n).map(i => (i, s"p$i")).toDF("k", "payload").coalesce(1).write.mode("append").parquet(src)
-    val jobsByBatch = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = Option(e.properties).foreach { p =>
-        Option(p.getProperty("streaming.sql.batchId"))
-          .foreach(b => jobsByBatch.merge(b, 1, (a: Integer, c: Integer) => a + c))
-        if (p.getProperty("graft.spec.marker") != null) drained.countDown()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val cycle = try {
+    val (cycle, jobs) = JobCounter(spark) { counter =>
       val r = StreamRunner.boot(spark, schema, env, maxCycles = 1,
         sourceDir = Some(src), targetDir = Some(target), checkpointDir = Some(ckpt))
-      // listener events arrive asynchronously but in order: once a marked
-      // job's start is seen, every batch job's start has been counted
-      spark.sparkContext.setLocalProperty("graft.spec.marker", "1")
-      try spark.range(1).collect() finally spark.sparkContext.setLocalProperty("graft.spec.marker", null)
-      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
-      r
-    } finally spark.sparkContext.removeSparkListener(listener)
+      (r, counter.drain())
+    }
+    val jobsByBatch = jobs.flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+      .groupBy(identity).map { case (b, js) => b -> js.size }
     assert(cycle.batches == 1 && cycle.rowsStaged == n, s"unexpected metrics: $cycle")
-    assert(jobsByBatch.asScala.toMap == Map("1" -> 2),
+    assert(jobsByBatch == Map("1" -> 2),
       s"a merge batch runs the latestByKey exchange and the delta write only: $jobsByBatch")
     assert(!new java.io.File(s"$tmp/graft-staging").exists(), "no staged copy may be written")
 

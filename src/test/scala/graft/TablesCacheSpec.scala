@@ -55,4 +55,18 @@ class TablesCacheSpec extends SparkSpec {
     assert(t1.region.agg(sum(length(col("r_name")))).head.getLong(0) ==
       fresh.agg(sum(length(col("r_name")))).head.getLong(0))
   }
+
+  test("an overflow caused by the live session evicts another session's plans, not its own") {
+    val live = Tables(spark, sfDir).region
+    // another session fills the cache to its bound with distinct paths
+    // (`/.` segments normalize to the same region file)
+    val other = spark.newSession()
+    Iterator.from(1).map(i => sfDir + "/." * i).take(Tables.ReadCacheMax - Tables.readCacheSize)
+      .foreach(d => Tables(other, d).region)
+    assert(Tables.readCacheSize == Tables.ReadCacheMax)
+    // the live session's next miss overflows the cache
+    Tables(spark, s"$sfDir/.").nation
+    assert(Tables(spark, sfDir).region eq live,
+      "the live session's cached relation was evicted by another session's entries")
+  }
 }

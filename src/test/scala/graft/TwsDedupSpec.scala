@@ -31,7 +31,7 @@ class TwsDedupSpec extends SparkSpec {
     val enabled = sys.env.contains("GRAFT_TWS_SPEC")
     assume(enabled,
       "suite-embedded RocksDB deadlocks this container under load; " +
-        "run `runMain graft.tools.TwsProbe` (isolated JVM) instead, " +
+        "run `Test/runMain graft.tools.TwsProbe` (isolated JVM) instead, " +
         "or set GRAFT_TWS_SPEC=1 on a healthy host")
   }
 

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * candidate-pair mass of the blocked dedup family is stress-tested at
   * its worst (all replicas share every band/bucket/cell).
   *
-  * Usage: runMain graft.tools.ScaleGen <srcDir> <destDir> <factor>
+  * Usage: sbt "Test/runMain graft.tools.ScaleGen <srcDir> <destDir> <factor>"
   */
 object ScaleGen {
 

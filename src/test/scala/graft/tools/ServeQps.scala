@@ -16,7 +16,7 @@ import graft.operators.{AnnIndex, InvertedIndex}
   * the scaling ratio. Queries rotate probe terms/vectors so no plan or
   * page-cache artifact repeats back-to-back.
   *
-  * Usage: SPARK_GRAFT_SF_DIR=<dir> runMain graft.tools.ServeQps
+  * Usage: SPARK_GRAFT_SF_DIR=<dir> sbt "Test/runMain graft.tools.ServeQps"
   */
 object ServeQps {
   def main(args: Array[String]): Unit = {
