@@ -25,8 +25,9 @@ import scala.jdk.CollectionConverters._
   * plain Spark SQL.
   *
   * Layout: `warehouse/<ns...>/<table>/` where a table directory is any
-  * directory holding a `VERSION` pointer. All catalog operations are
-  * driver-side metadata ops, O(#files) at worst.
+  * directory whose manifest log ([[GraftManifestIO]]) holds a version.
+  * All catalog operations are driver-side metadata ops, O(#files) at
+  * worst.
   */
 final class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCatalog {
 
@@ -49,7 +50,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces with Proce
     ns.foldLeft(warehouse)((p, s) => new Path(p, s))
   private def tablePath(ident: Identifier): Path =
     new Path(nsPath(ident.namespace()), ident.name())
-  private def isTableDir(p: Path): Boolean = fs.exists(new Path(p, "VERSION"))
+  private def isTableDir(p: Path): Boolean = new GraftManifestIO(p, conf).currentVersion().nonEmpty
 
   // ---- tables ----
 

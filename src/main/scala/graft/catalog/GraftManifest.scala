@@ -60,8 +60,8 @@ final case class DeleteEntry(path: String, rows: Long, targets: Seq[String])
 final case class EqDeleteEntry(path: String, rows: Long, cols: Seq[String], seq: Long = 0L)
 
 /** One table snapshot: the complete file list plus the schema under
-  * which it was committed. Snapshots are immutable; a commit writes
-  * manifest v(N+1) and atomically flips `VERSION` — the Iceberg
+  * which it was committed. Snapshots are immutable; a commit claims
+  * manifest v(N+1) by atomic exclusive create — the Iceberg
   * snapshot model (reference merges into Iceberg via Trino:
   * /root/reference/src/main/scala/main.scala:34-40,121-126) realized
   * over plain parquet + JSON manifests so it runs with zero external
@@ -94,127 +94,50 @@ final class GraftCommitConflict(msg: String) extends RuntimeException(msg)
   * Layout:
   * {{{
   *   tableDir/
-  *     VERSION               advisory current-version cache
-  *     manifests/v<N>.json   snapshot manifest (exclusive-create claimed)
+  *     manifests/v<N>.json   snapshot manifest, claimed through [[ManifestLog]]
   *     data/part-*.parquet   immutable data files, shared across snapshots
   *     deletes/<f>.parquet   merge-on-read position-delete files
   * }}}
   *
   * Commit protocol: the mutation function is applied to the CURRENT
-  * snapshot inside a bounded retry loop, and the new version is
-  * CLAIMED by atomically creating its manifest file exclusively
-  * (O_EXCL locally, create-no-overwrite on HDFS-likes) — exactly one
-  * racing writer wins each version, losers re-derive and retry, so
-  * concurrent appends are lost-update-free (8-thread stress test in
-  * GraftCatalogSpec). The VERSION file is an advisory cache; the
-  * manifest listing is authoritative. Object stores without atomic
-  * create-exclusive need a locking catalog in front, as with Iceberg.
+  * snapshot inside the manifest log's bounded CAS loop, and the new
+  * version is CLAIMED by atomically creating its manifest file
+  * exclusively — exactly one racing writer wins each version, losers
+  * re-derive and retry, so concurrent appends are lost-update-free
+  * (8-thread stress test in GraftCatalogSpec). The manifest listing is
+  * the only record of the head; a table directory is one whose log
+  * holds a version. Object stores without atomic create-exclusive need
+  * a locking catalog in front, as with Iceberg.
   */
 final class GraftManifestIO(val tableDir: Path, conf: Configuration) {
   private def fs = tableDir.getFileSystem(conf)
-  private def versionFile = new Path(tableDir, "VERSION")
-  private def manifestFile(v: Long) = new Path(tableDir, s"manifests/v$v.json")
+  private def log = ManifestLog(new Path(tableDir, "manifests"), conf)
 
-  def exists(): Boolean = fs.exists(versionFile)
+  def currentVersion(): Option[Long] = log.head()
 
-  /** The manifest listing is authoritative (manifest files are claimed
-    * by atomic exclusive create, so max(version) is exact even under
-    * racing writers); the VERSION pointer is an advisory cache.
-    */
-  def currentVersion(): Option[Long] = versions().lastOption.orElse {
-    if (!fs.exists(versionFile)) None
-    else {
-      val in = fs.open(versionFile)
-      try Some(new String(in.readAllBytes(), "UTF-8").trim.toLong)
-      finally in.close()
-    }
-  }
-
-  /** Read a file that becomes VISIBLE at exclusive create microseconds
-    * before its bytes land: every claimed artifact (snapshot manifest,
-    * staged WAP snapshot, tag ref) is read through this one retry so
-    * no reader forgets the sliver. An empty read retries too — the
-    * open itself can succeed on zero bytes.
-    */
-  private def retryRead(path: Path): String = {
-    var last: Throwable = null
-    for (_ <- 1 to 5) {
-      try {
-        val in = fs.open(path)
-        val body = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-        if (body.nonEmpty) return body
-        last = new java.io.IOException(s"empty read at $path (create/write sliver)")
-      } catch { case t: Throwable => last = t }
-      Thread.sleep(10)
-    }
-    throw last
-  }
-
-  /** Atomically CLAIM `path` by exclusive create (O_EXCL locally via
-    * java.nio — Hadoop's RawLocalFileSystem create(overwrite=false) is
-    * check-then-create; create-no-overwrite on HDFS-likes, where some
-    * implementations signal the lost race as a generic IOException
-    * naming 'exist'). Returns whether THIS writer won. One shared
-    * implementation for commit / stageWap / createTag, so the claim
-    * semantics can never drift between them.
-    */
-  private def writeExclusive(target: Path, bytes: Array[Byte]): Boolean =
-    if (fs.getScheme == "file") {
-      try {
-        val nio = java.nio.file.Paths.get(target.toUri.getPath)
-        val ch = java.nio.file.Files.newByteChannel(nio,
-          java.nio.file.StandardOpenOption.CREATE_NEW,
-          java.nio.file.StandardOpenOption.WRITE)
-        try ch.write(java.nio.ByteBuffer.wrap(bytes)) finally ch.close()
-        true
-      } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    } else {
-      try {
-        val out = fs.create(target, false)
-        try out.write(bytes) finally out.close()
-        true
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-        case e: java.io.IOException if e.getMessage != null &&
-          e.getMessage.toLowerCase.contains("exist") => false
-      }
-    }
-
-  def readSnapshot(v: Long): GraftSnapshot =
-    GraftManifestIO.fromJson(retryRead(manifestFile(v)))
+  def readSnapshot(v: Long): GraftSnapshot = GraftManifestIO.fromJson(log.read(v))
 
   def currentSnapshot(): Option[GraftSnapshot] = currentVersion().map(readSnapshot)
 
-  def versions(): Seq[Long] = {
-    val dir = new Path(tableDir, "manifests")
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).map(_.getPath.getName)
-      .collect { case n if n.startsWith("v") && n.endsWith(".json") =>
-        n.stripPrefix("v").stripSuffix(".json").toLong }
-      .sorted.toSeq
-  }
+  def versions(): Seq[Long] = log.versions()
 
   /** Optimistically commit `mutate(current)` as the next snapshot.
     * `mutate` returns the new snapshot CONTENT (version/parent are
     * assigned here) or throws [[GraftCommitConflict]] itself if its
     * preconditions no longer hold (e.g. a replaced file vanished).
     *
-    * The version claim is an ATOMIC EXCLUSIVE CREATE of the manifest
-    * file (O_EXCL on the local FS, create-no-overwrite on HDFS-likes):
-    * exactly one of any number of racing writers wins a version; the
-    * losers re-read the fresh snapshot, re-derive, and retry up to
-    * `maxAttempts` — so concurrent appends are genuinely
-    * lost-update-free, not just conflict-detected (stress-proven with
-    * 8 racing threads in GraftCatalogSpec). Data files are staged
-    * before and immutable, so retries re-derive only the manifest.
-    * Object stores without atomic create-exclusive need a locking
-    * catalog in front, exactly as Iceberg requires.
+    * The version is claimed through the manifest log's CAS loop
+    * ([[ManifestLog.commit]]): exactly one of any number of racing
+    * writers wins a version; the losers re-read the fresh snapshot,
+    * re-derive, and retry up to `maxAttempts` — so concurrent appends
+    * are genuinely lost-update-free, not just conflict-detected
+    * (stress-proven with 8 racing threads in GraftCatalogSpec). Data
+    * files are staged before and immutable, so retries re-derive only
+    * the manifest.
     */
   def commit(operation: String, maxAttempts: Int = 5)(
-      mutate: Option[GraftSnapshot] => GraftManifestIO.Content): GraftSnapshot = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
+      mutate: Option[GraftSnapshot] => GraftManifestIO.Content): GraftSnapshot =
+    log.commit(s"commit of '$operation'", maxAttempts) {
       val base = currentSnapshot()
       val c = mutate(base)
       // streaming exactly-once seam: inside a GraftCommitStamp scope
@@ -238,20 +161,8 @@ final class GraftManifestIO(val tableDir: Path, conf: Configuration) {
         deletes = c.deletes,
         eqDeletes = c.eqDeletes.map(d =>
           if (d.seq == GraftManifestIO.PendingSeq) d.copy(seq = version) else d))
-      fs.mkdirs(new Path(tableDir, "manifests"))
-      val bytes = GraftManifestIO.toJson(next).getBytes("UTF-8")
-      val target = manifestFile(next.version)
-      val won = writeExclusive(target, bytes)
-      if (won) {
-        writeAtomic(versionFile, next.version.toString) // advisory cache
-        return next
-      } else if (attempt >= maxAttempts) {
-        throw new GraftCommitConflict(
-          s"commit of '$operation' lost the version race $maxAttempts times at $tableDir")
-      }
-    }
-    sys.error("unreachable")
-  }
+      Some((version, GraftManifestIO.toJson(next), next))
+    }.get
 
   /** Roll the table back to `version` by committing a NEW snapshot with
     * that version's exact content (Iceberg `rollback_to_snapshot`
@@ -302,7 +213,7 @@ final class GraftManifestIO(val tableDir: Path, conf: Configuration) {
 
   def readWap(id: String): GraftSnapshot = {
     requireWapId(id)
-    GraftManifestIO.fromJson(retryRead(wapFile(id)))
+    GraftManifestIO.fromJson(ManifestLog.read(fs, wapFile(id)))
   }
 
   /** Stage `added` files under ref `id` against the CURRENT snapshot.
@@ -329,9 +240,7 @@ final class GraftManifestIO(val tableDir: Path, conf: Configuration) {
       files = base.files ++ provisional,
       deletes = base.deletes,
       eqDeletes = base.eqDeletes)
-    val target = wapFile(id)
-    fs.mkdirs(target.getParent)
-    if (!writeExclusive(target, GraftManifestIO.toJson(staged).getBytes("UTF-8")))
+    if (!ManifestLog.claim(fs, wapFile(id), GraftManifestIO.toJson(staged)))
       throw new GraftCommitConflict(
         s"WAP ref '$id' already staged at $tableDir — publish/abort it, or stage under a new id")
     staged
@@ -439,7 +348,7 @@ final class GraftManifestIO(val tableDir: Path, conf: Configuration) {
       val target = wapFile(id)
       val tmp = new Path(tableDir,
         s"manifests/.wap-$id.${java.util.UUID.randomUUID().toString.replace("-", "")}.tmp")
-      val out = fs.create(tmp, false)
+      val out = fs.create(tmp)
       try out.write(GraftManifestIO.toJson(next).getBytes("UTF-8")) finally out.close()
       fs.delete(target, false)
       if (!fs.rename(tmp, target)) {
@@ -469,9 +378,7 @@ final class GraftManifestIO(val tableDir: Path, conf: Configuration) {
         files = base.files ++ provisional,
         deletes = base.deletes,
         eqDeletes = base.eqDeletes)
-      val target = wapFile(id)
-      fs.mkdirs(target.getParent)
-      if (!writeExclusive(target, GraftManifestIO.toJson(staged).getBytes("UTF-8")))
+      if (!ManifestLog.claim(fs, wapFile(id), GraftManifestIO.toJson(staged)))
         throw new GraftCommitConflict(
           s"WAP ref '$id' already staged at $tableDir — two streams on one ref? " +
             "each stream needs its own audit ref")
@@ -516,16 +423,14 @@ final class GraftManifestIO(val tableDir: Path, conf: Configuration) {
 
   def readTag(name: String): Long = {
     requireTagName(name)
-    retryRead(tagFile(name)).trim.toLong
+    ManifestLog.read(fs, tagFile(name)).trim.toLong
   }
 
   def createTag(name: String, version: Long): Unit = {
     requireTagName(name)
     require(versions().contains(version),
       s"cannot tag v$version at $tableDir: not a live snapshot")
-    val target = tagFile(name)
-    fs.mkdirs(target.getParent)
-    if (!writeExclusive(target, version.toString.getBytes("UTF-8")))
+    if (!ManifestLog.claim(fs, tagFile(name), version.toString))
       throw new GraftCommitConflict(
         s"tag '$name' already exists at $tableDir (tags are immutable — drop it first)")
   }
@@ -589,19 +494,9 @@ final class GraftManifestIO(val tableDir: Path, conf: Configuration) {
     val pinned = tags().values.toSet
     val expired = versions().dropRight(math.max(keepLast, 1))
       .filterNot(pinned.contains)
-    expired.foreach(v => fs.delete(manifestFile(v), false))
+    expired.foreach(v => fs.delete(log.path(v), false))
     removeOrphans()
     expired
-  }
-
-  private def writeAtomic(path: Path, content: String): Unit = {
-    // unique tmp per writer: racing writers must never share a staging path
-    val tmp = new Path(path.getParent,
-      path.getName + "." + java.util.UUID.randomUUID().toString.take(8) + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-    fs.delete(path, false)
-    fs.rename(tmp, path)
   }
 }
 

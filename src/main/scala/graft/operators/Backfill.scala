@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * of per-shard upserts equals the global upsert (latest-per-key never
   * crosses shards). Each shard stage is one distributed job over a
   * pruned scan; the completion swap is a SnapshotStore commit (atomic
-  * VERSION rename), so readers see either the old target or the complete
+  * manifest claim), so readers see either the old target or the complete
   * backfill, never a partial one.
   *
   * `BackfillStateManager` persists which shards are staged (the

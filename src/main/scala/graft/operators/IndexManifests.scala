@@ -9,13 +9,11 @@ import org.json4s.jackson.JsonMethods
   * payloads ([[InvertedIndex]] postings, [[AnnIndex]] cell vectors).
   *
   *  - '''commit protocol''': versioned JSON manifests under
-  *    `dir/manifest/v<N>.json`, claimed by ATOMIC EXCLUSIVE CREATE — the
-  *    same protocol as [[graft.catalog.GraftManifestIO]] (O_EXCL via
-  *    java.nio locally, create-no-overwrite on HDFS-likes; object stores
-  *    without atomic create need a locking catalog in front). Exactly
-  *    one racing maintainer wins a version; a crash before the claim
-  *    leaves only invisible orphans. Every mutation goes through
-  *    [[commit]], the one CAS loop (stamp refusal, re-derive on a lost
+  *    `dir/manifest/v<N>.json`, a [[graft.catalog.ManifestLog]] — the
+  *    same claim, listing and read as the catalog's tables. Exactly one
+  *    racing maintainer wins a version; a crash before the claim leaves
+  *    only invisible orphans. Every mutation goes through [[commit]]
+  *    (stamp refusal, then the log's CAS loop: re-derive on a lost
   *    claim, [[graft.catalog.GraftCommitConflict]] on exhaustion).
   *  - '''envelope''': the fields both manifests carry ([[Envelope]]:
   *    version, stream stamps, meta sidecar, coverage tombstones), encoded
@@ -34,19 +32,11 @@ private[graft] object IndexManifests {
     new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  def manifestPath(dir: String, v: Long) =
-    new org.apache.hadoop.fs.Path(s"$dir/manifest/v$v.json")
+  private def log(spark: SparkSession, dir: String) = graft.catalog.ManifestLog(
+    new org.apache.hadoop.fs.Path(s"$dir/manifest"), spark.sparkContext.hadoopConfiguration)
 
   /** Committed versions, ascending; the listing is authoritative. */
-  def versions(spark: SparkSession, dir: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/manifest")
-    val f = fs(spark, dir)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).map(_.getPath.getName)
-      .collect { case n if n.startsWith("v") && n.endsWith(".json") =>
-        n.stripPrefix("v").stripSuffix(".json").toLong }
-      .sorted.toSeq
-  }
+  def versions(spark: SparkSession, dir: String): Seq[Long] = log(spark, dir).versions()
 
   /** Is the committed index at `dir` a dense one? Only for the
     * payload-specific operations (compact, reshard, describe); the
@@ -71,62 +61,11 @@ private[graft] object IndexManifests {
     read(spark, dir, vs.last)
   }
 
-  /** Read manifest `v`'s body. A manifest becomes visible at exclusive
-    * create, microseconds before its bytes land — retry the (local-FS)
-    * sliver.
-    */
-  def readBody(spark: SparkSession, dir: String, v: Long): String = {
-    var last: Throwable = null
-    for (_ <- 1 to 5) {
-      try {
-        val in = fs(spark, dir).open(manifestPath(dir, v))
-        try return new String(in.readAllBytes(), "UTF-8") finally in.close()
-      } catch { case t: Throwable => last = t; Thread.sleep(10) }
-    }
-    throw last
-  }
-
   /** Atomically claim manifest `m.version` with `m`'s encoding; false =
-    * lost the race. Hadoop's local create(overwrite=false) is
-    * check-then-create, not O_EXCL — java.nio CREATE_NEW is the true
-    * atomic claim locally.
+    * lost the race.
     */
-  def claim(spark: SparkSession, dir: String, m: Envelope): Boolean = {
-    val f = fs(spark, dir)
-    f.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/manifest"))
-    exclusiveCreate(f, manifestPath(dir, m.version), m.toJson)
-  }
-
-  /** TRUE atomic exclusive-create of a small marker/manifest file —
-    * Hadoop's local fs.create(p, false) is check-then-create (two
-    * racers can both succeed, the second silently truncating the
-    * first), so the local scheme goes through java.nio CREATE_NEW.
-    * Shared by manifest claims and the federation's layout overlays.
-    */
-  def exclusiveCreate(f: org.apache.hadoop.fs.FileSystem,
-      target: org.apache.hadoop.fs.Path, body: String): Boolean = {
-    val bytes = body.getBytes("UTF-8")
-    if (f.getScheme == "file") {
-      try {
-        val nio = java.nio.file.Paths.get(target.toUri.getPath)
-        val ch = java.nio.file.Files.newByteChannel(nio,
-          java.nio.file.StandardOpenOption.CREATE_NEW,
-          java.nio.file.StandardOpenOption.WRITE)
-        try ch.write(java.nio.ByteBuffer.wrap(bytes)) finally ch.close()
-        true
-      } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    } else {
-      try {
-        val out = f.create(target, false)
-        try out.write(bytes) finally out.close()
-        true
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-        case e: java.io.IOException if e.getMessage != null &&
-          e.getMessage.toLowerCase.contains("exist") => false
-      }
-    }
-  }
+  def claim(spark: SparkSession, dir: String, m: Envelope): Boolean =
+    log(spark, dir).claim(m.version, m.toJson)
 
   /** Per-process cache of PARSED manifests, keyed (dir, version).
     * Manifests are immutable once committed (every mutation claims a
@@ -171,7 +110,7 @@ private[graft] object IndexManifests {
     val hit = manifestCache.get(key)
     if (hit != null) return hit
     val gen = dirGen.get(dir)
-    val parsed = parse(readBody(spark, dir, v))
+    val parsed = parse(log(spark, dir).read(v))
     if (manifestCache.size >= ManifestCacheMax) manifestCache.clear()
     // only cache if no invalidation raced the read — a stale parse may
     // be RETURNED once (the caller read a then-live manifest) but must
@@ -478,20 +417,11 @@ private[graft] object IndexManifests {
     */
   def commit[M <: Envelope](spark: SparkSession, dir: String, what: String,
       maxAttempts: Int, stamp: Option[(String, Long)] = None)(
-      next: M => Option[M]): Option[M] = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
+      next: M => Option[M]): Option[M] =
+    log(spark, dir).commit(what, maxAttempts) {
       val base = head(spark, dir).asInstanceOf[M]
-      if (stamped(base, stamp)) return None
-      next(base) match {
-        case None => return None
-        case Some(m) => if (claim(spark, dir, m)) return Some(m)
-      }
+      (if (stamped(base, stamp)) None else next(base)).map(m => (m.version, m.toJson, m))
     }
-    throw new graft.catalog.GraftCommitConflict(
-      s"$what lost the version race $maxAttempts times at $dir")
-  }
 
   /** Highest batch id committed under stream namespace `ns`, if any. */
   def committedBatchId(spark: SparkSession, dir: String, ns: String): Option[Long] =
@@ -751,7 +681,7 @@ private[graft] object IndexManifests {
     require(vs.nonEmpty, s"no committed serving index at $dir")
     val (expire, keep) = vs.splitAt(math.max(0, vs.size - keepVersions))
     val kept = keep.map(read(spark, dir, _))
-    expire.foreach(v => f.delete(manifestPath(dir, v), false))
+    expire.foreach(v => f.delete(log(spark, dir).path(v), false))
     val now = System.currentTimeMillis()
     def old(mtime: Long) = now - mtime >= graceMs
     val root = new Path(dir).toUri.getPath.stripSuffix("/")

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.catalog.ManifestLog
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -112,10 +113,8 @@ object ShardedIndex {
     require(fs.exists(base),
       s"no sharded index at $dir — shards.json is written by buildSharded " +
         "as the federation's commit marker (a crashed build never writes it)")
-    val vs = overlayVersions(fs, dir)
-    val body = readMarker(fs,
-      if (vs.isEmpty) base else overlayPath(dir, vs.last))
-    parseLayout(body, dir)
+    val overlays = overlayLog(spark, dir)
+    parseLayout(overlays.head().fold(ManifestLog.read(fs, base))(overlays.read), dir)
   }
 
   final case class Layout(shards: Int, pins: Option[Seq[Long]], target: Int)
@@ -124,24 +123,8 @@ object ShardedIndex {
   private[graft] def inTransition(spark: SparkSession, dir: String): Boolean =
     layout(spark, dir).pins.nonEmpty
 
-  private def overlayPath(dir: String, v: Long) =
-    new org.apache.hadoop.fs.Path(s"$dir/reshard/v$v.json")
-
-  private def overlayVersions(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String): Seq[Long] = {
-    val root = new org.apache.hadoop.fs.Path(s"$dir/reshard")
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).map(_.getPath.getName)
-      .collect { case n if n.startsWith("v") && n.endsWith(".json") =>
-        n.stripPrefix("v").stripSuffix(".json").toLong }
-      .sorted.toSeq
-  }
-
-  private def readMarker(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): String = {
-    val in = fs.open(p)
-    try new String(in.readAllBytes(), "UTF-8") finally in.close()
-  }
+  private def overlayLog(spark: SparkSession, dir: String) =
+    ManifestLog(new org.apache.hadoop.fs.Path(s"$dir/reshard"), spark.sparkContext.hadoopConfiguration)
 
   private def parseLayout(body: String, dir: String): Layout = {
     val n = """"shards"\s*:\s*(\d+)""".r.findFirstMatchIn(body)
@@ -154,18 +137,14 @@ object ShardedIndex {
     Layout(n, pins, target)
   }
 
-  /** Commit the next layout overlay through the TRUE atomic
-    * exclusive-create ([[IndexManifests.exclusiveCreate]] — local
-    * fs.create(p, false) is check-then-create and two racers could
-    * both "succeed"): a racing second resharder fails loudly instead
-    * of interleaving two transitions with different pin sets.
+  /** Claim the next layout overlay in the overlay log: a racing second
+    * resharder fails loudly instead of interleaving two transitions with
+    * different pin sets.
     */
   private def commitOverlay(spark: SparkSession, dir: String, json: String): Unit = {
-    val fs = shardsPath(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val next = overlayVersions(fs, dir).lastOption.getOrElse(0L) + 1
-    val p = overlayPath(dir, next)
-    fs.mkdirs(p.getParent)
-    require(IndexManifests.exclusiveCreate(fs, p, json),
+    val overlays = overlayLog(spark, dir)
+    val next = overlays.head().getOrElse(0L) + 1
+    require(overlays.claim(next, json),
       s"lost the layout-overlay race at $dir (v$next) — a concurrent reshard " +
         "is in flight; re-run after it finishes (or resume it)")
   }
@@ -221,12 +200,11 @@ object ShardedIndex {
     }
   }
 
+  /** Claim the federation marker: a second build fails loudly. */
   private def writeShardsFile(spark: SparkSession, dir: String, shards: Int): Unit = {
     val p = shardsPath(dir)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    f.mkdirs(p.getParent)
-    val out = f.create(p, false) // exclusive: a second build fails loudly
-    try out.write(s"""{"shards": $shards}""".getBytes("UTF-8")) finally out.close()
+    require(ManifestLog.claim(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
+      s"""{"shards": $shards}"""), s"a federation marker already exists at $dir")
   }
 
   // ---- lexical federation ---------------------------------------------

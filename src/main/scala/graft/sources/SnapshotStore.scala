@@ -20,8 +20,9 @@ import org.apache.spark.sql.types.{DataType, LongType, StructType}
   *   tableDir/
   *     data/v<N>/part-*.parquet     one immutable dir per commit
   *     manifests/v<N>.manifest      table schema + the base and the
-  *                                  delta chain, in commit order
-  *     VERSION                      current version number (atomic rename)
+  *                                  delta chain, in commit order; a
+  *                                  [[graft.catalog.ManifestLog]] whose
+  *                                  highest version is the current one
   * }}}
   *
   * A version is a base plus a chain of deltas. [[commit]] writes a new
@@ -47,23 +48,17 @@ final class SnapshotStore(spark: SparkSession, tableDir: String) {
   private val root = new Path(tableDir)
   private def fs   = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def versionFile    = new Path(root, "VERSION")
-  private def dataDir(v: Long)     = new Path(root, s"data/v$v")
-  private def manifestFile(v: Long) = new Path(root, s"manifests/v$v.manifest")
+  private def dataDir(v: Long) = new Path(root, s"data/v$v")
+  private def log = graft.catalog.ManifestLog(new Path(root, "manifests"),
+    spark.sparkContext.hadoopConfiguration, ".manifest")
 
-  def currentVersion(): Option[Long] =
-    if (!fs.exists(versionFile)) None
-    else {
-      val in = fs.open(versionFile)
-      try Some(new String(in.readAllBytes(), "UTF-8").trim.toLong)
-      finally in.close()
-    }
+  def currentVersion(): Option[Long] = log.head()
 
   /** Commit `df` as the next snapshot's base; returns the new version.
     * `retry` bounds transient commit failures (the reference's merge
     * client `queryRetryMaxAttempts`/`queryRetryBaseDuration`): a failed
-    * attempt never advanced VERSION, so the re-attempt recomputes the
-    * same version and overwrites the same (incomplete) data dir —
+    * attempt never claimed its manifest, so the re-attempt recomputes
+    * the same version and overwrites the same (incomplete) data dir —
     * retrying the whole commit is idempotent.
     */
   def commit(
@@ -89,25 +84,22 @@ final class SnapshotStore(spark: SparkSession, tableDir: String) {
     commitChecked(df, keys, maxRowsPerFile, retry, expectedVersion)
   }
 
-  /** Shared commit body; `keys` empty = base commit. `expected =
-    * Some(exp)` enables OCC: the expectation is re-validated both at
-    * attempt start (cheap fail before staging) and again IMMEDIATELY
-    * before the manifest/pointer flip — shrinking the unguarded race
-    * window from the full (possibly long) distributed data write down to
-    * the two atomic renames. A conflict under a retrying policy re-fails
-    * the attempt at the pre-stage check, so retries never re-stage data.
+  /** Shared commit body; `keys` empty = base commit. The version is
+    * claimed by an atomic exclusive create of its manifest, so a writer
+    * that lost it to a racing commit fails with a
+    * [[SnapshotStore.CommitConflictException]] and never overwrites the
+    * winner's manifest. `expected = Some(exp)` also checks the head at
+    * attempt start, a cheap fail before staging; a conflict under a
+    * retrying policy re-fails the attempt there, so retries never
+    * re-stage data.
     */
   private def commitChecked(
       df: DataFrame, keys: Seq[String], maxRowsPerFile: Option[Int],
       retry: graft.streaming.RetryPolicy, expected: Option[Option[Long]]
   ): Commit = {
-    def occCheck(): Unit = expected.foreach { exp =>
-      val cur = currentVersion()
-      if (cur != exp) throw new SnapshotStore.CommitConflictException(exp, cur)
-    }
     graft.streaming.Retry.withRetry(retry) {
-      occCheck()
       val cur = currentVersion()
+      expected.foreach(exp => if (cur != exp) throw new SnapshotStore.CommitConflictException(exp, cur))
       val v = cur.getOrElse(0L) + 1
       val prev = if (keys.isEmpty) None else cur.map(manifest)
       prev.foreach { p =>
@@ -128,10 +120,8 @@ final class SnapshotStore(spark: SparkSession, tableDir: String) {
         if (prev.isEmpty) Nil else keys, written.map(s => s"data/v$v/${s.getPath.getName}").toSeq)
       val m = prev.fold(Manifest(part.schema, part, Nil))(p =>
         Manifest(SchemaMigration.unionSchema(p.schema, part.schema), p.base, p.deltas :+ part))
-      fs.mkdirs(new Path(root, "manifests"))
-      occCheck() // re-validate at the flip, not just before staging
-      writeAtomic(manifestFile(v), m.render)
-      writeAtomic(versionFile, v.toString)
+      if (!log.claim(v, m.render))
+        throw new SnapshotStore.CommitConflictException(expected.getOrElse(cur), currentVersion())
       Commit(v, written.map(_.getLen).sum, m.deltas.size)
     }
   }
@@ -144,15 +134,11 @@ final class SnapshotStore(spark: SparkSession, tableDir: String) {
     * staged, and the caller re-reads + re-derives + retries. Plain
     * [[commit]] keeps last-writer-wins semantics for single-writer
     * streams; concurrent writers (compaction beside ingestion, two
-    * backfill shards racing) use this. The expectation is validated
-    * twice: before staging (cheap fail) and again immediately before
-    * the manifest/pointer flip, so the unguarded window is just the two
-    * atomic renames — not the full data write. A race inside that final
-    * sliver can still slip through on a filesystem without atomic
-    * compare-and-swap — exactly Iceberg's exposure without a locking
-    * catalog, which is why production deployments put a catalog in
-    * front; single-writer correctness and conflict DETECTION are what
-    * this layer guarantees.
+    * backfill shards racing) use this. The expectation is checked
+    * before staging (cheap fail), and the version itself is claimed by
+    * an atomic exclusive create of its manifest: a racing writer that
+    * advanced the table after the check makes the claim fail, which is
+    * the same conflict — a true compare-and-swap.
     */
   def commitIf(df: DataFrame, expectedVersion: Option[Long],
       maxRowsPerFile: Option[Int] = None,
@@ -196,19 +182,10 @@ final class SnapshotStore(spark: SparkSession, tableDir: String) {
   }
 
   /** Version `v`'s manifest: table schema, base and delta chain. */
-  def manifest(v: Long): Manifest = {
-    val in = fs.open(manifestFile(v))
-    val body = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    Manifest.parse(v, body, files => spark.read.parquet(files.map(absolute): _*).schema)
-  }
+  def manifest(v: Long): Manifest =
+    Manifest.parse(v, log.read(v), files => spark.read.parquet(files.map(absolute): _*).schema)
 
-  def versions(): Seq[Long] =
-    if (!fs.exists(new Path(root, "manifests"))) Seq.empty
-    else
-      fs.listStatus(new Path(root, "manifests"))
-        .map(_.getPath.getName)
-        .collect { case n if n.endsWith(".manifest") => n.stripPrefix("v").stripSuffix(".manifest").toLong }
-        .sorted.toSeq
+  def versions(): Seq[Long] = log.versions()
 
   /** Expire old snapshots, keeping the most recent `keepLast` — the
     * reference's snapshot expiration. Expired manifests go first, then
@@ -220,7 +197,7 @@ final class SnapshotStore(spark: SparkSession, tableDir: String) {
     val (expired, kept) = vs.splitAt(math.max(0, vs.size - math.max(keepLast, 1)))
     if (expired.isEmpty) return Seq.empty
     val liveDirs = kept.flatMap(v => manifest(v).files).map(f => f.substring(0, f.lastIndexOf('/'))).toSet
-    expired.foreach(v => fs.delete(manifestFile(v), false))
+    expired.foreach(v => fs.delete(log.path(v), false))
     val dataRoot = new Path(root, "data")
     if (fs.exists(dataRoot))
       fs.listStatus(dataRoot).map(_.getPath.getName).collect {
@@ -252,14 +229,6 @@ final class SnapshotStore(spark: SparkSession, tableDir: String) {
   }
 
   private def absolute(rel: String): String = new Path(root, rel).toString
-
-  private def writeAtomic(path: Path, content: String): Unit = {
-    val tmp = new Path(path.getParent, path.getName + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-    fs.delete(path, false)
-    fs.rename(tmp, path)
-  }
 }
 
 object SnapshotStore {

@@ -32,8 +32,8 @@ import org.apache.hadoop.util.Progressable
   *     exists. This is S3's 2024 conditional-write primitive and it makes
   *     `create(path, overwrite = false)` a GENUINE atomic claim, so the
   *     Graft commit protocol's exclusive version-file create works
-  *     unmodified on object store (GraftManifest.exclusiveCreate's
-  *     non-local branch).
+  *     unmodified on object store (ManifestLog.claim's non-local
+  *     branch).
   *   - ListObjectsV2 with prefix/delimiter/continuation-token
   *   - DELETE object
   *

@@ -7,9 +7,9 @@ import java.util.concurrent.atomic.AtomicBoolean
   * orchestrator stop) flips the active flag, the poll loop finishes its
   * current cycle cleanly and exits instead of being killed mid-commit.
   *
-  * Snapshot commits are atomic (VERSION rename) and the streaming
-  * checkpoint dedupes files across restarts, so "finish the cycle, then
-  * stop" is all that exactly-once delivery needs.
+  * Snapshot commits are atomic (an exclusive manifest claim) and the
+  * streaming checkpoint dedupes files across restarts, so "finish the
+  * cycle, then stop" is all that exactly-once delivery needs.
   */
 final class StreamLifetime {
   private val active = new AtomicBoolean(true)

@@ -375,7 +375,7 @@ class GraftCatalogSpec extends SparkSpec {
   test("real concurrent appenders all land through the OCC retry loop") {
     spark.sql(s"CREATE TABLE $cat.db.race (w INT, i INT)")
     val io = manifestIO("race")
-    // 8 writers x 5 manifest commits each, racing on the VERSION flip:
+    // 8 writers x 5 manifest commits each, racing on the version claim:
     // every commit must land (bounded retries re-derive from the fresh
     // snapshot), no file lost, no version skipped
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)

@@ -119,4 +119,25 @@ class InventorySpec extends SparkSpec {
     assert((allowlist -- mains).isEmpty,
       s"allowlisted mains no longer defined (remove them): ${allowlist -- mains}")
   }
+
+  test("only ManifestLog claims, lists or names manifest versions in src/main") {
+    // one commit primitive: a second copy of the claim, the v<N> listing
+    // or the v<N> path template is how the protocols drifted apart before
+    val forbidden = Seq(
+      "an exclusive-create claim" -> """CREATE_NEW|\bcreate\([^()]*,\s*false\)""".r,
+      "a v<N> listing" -> """(stripPrefix|startsWith)\("v"\)""".r,
+      "a v<N> manifest path" -> """/v\$\{?\w+\}?\.(json|manifest)""".r)
+    val offenders = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala")).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "ManifestLog.scala")
+      .flatMap { p =>
+        val lines = new String(java.nio.file.Files.readAllBytes(p), "UTF-8").split("\n").toSeq
+        lines.zipWithIndex.collect {
+          case (line, i) if !line.trim.startsWith("*") && !line.trim.startsWith("//") &&
+              forbidden.exists(_._2.findFirstIn(line).nonEmpty) =>
+            s"$p:${i + 1} (${forbidden.filter(_._2.findFirstIn(line).nonEmpty).map(_._1).mkString(", ")})"
+        }
+      }
+    assert(offenders.isEmpty, s"manifest-log protocol outside ManifestLog: ${offenders.mkString("; ")}")
+  }
 }

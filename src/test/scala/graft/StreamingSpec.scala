@@ -464,22 +464,32 @@ class StreamingSpec extends SparkSpec {
   }
 }
 
-/** Local FileSystem (`crashfs://`) that fails the creation of a snapshot
-  * manifest while armed: a crash between a commit's data write and its
-  * manifest/`VERSION` flip. `failDataWrites = n` instead fails the next
-  * n parquet file creations under a `data/v<N>` dir: a transient failure
-  * of a delta's data write.
+/** Local FileSystem (`crashfs://`) that injects commit faults.
+  *  - `armed`: fails the creation of a snapshot manifest — a crash
+  *    between a commit's data write and its manifest claim.
+  *  - `failDataWrites = n`: fails the next n parquet file creations under
+  *    a `data/v<N>` dir — a transient failure of a delta's data write.
+  *  - `crashAt = n`: the n-th create, rename or delete from now on, and
+  *    every one after it, fails — a process that dies at that point of a
+  *    commit. `ops` counts them (set `crashAt` to `Int.MaxValue` to count
+  *    a whole commit).
+  *  - `emptyOpens = n`: the next n opens of a `.json` file read zero
+  *    bytes — a reader racing a claim between its create and its write.
   */
 final class ManifestCrashFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
-  import org.apache.hadoop.fs.{FSDataOutputStream, Path}
+  import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, Path}
   import org.apache.hadoop.fs.permission.FsPermission
   import org.apache.hadoop.util.Progressable
+  import ManifestCrashFileSystem._
   override def getScheme: String = "crashfs"
   override def getUri: java.net.URI = java.net.URI.create("crashfs:///")
+  private def op(f: Path): Unit =
+    if (ops.incrementAndGet() >= crashAt.get)
+      throw new java.io.IOException(s"injected crash at commit op ${ops.get}: $f")
   private def check(f: Path): Unit = {
-    import ManifestCrashFileSystem._
-    if (armed && f.getName.endsWith(".manifest.tmp"))
-      throw new java.io.IOException(s"injected crash before the manifest flip: $f")
+    op(f)
+    if (armed && f.getName.endsWith(".manifest"))
+      throw new java.io.IOException(s"injected crash before the manifest claim: $f")
     if (f.getName.endsWith(".parquet") && f.toString.contains("/data/v") &&
         failDataWrites.getAndUpdate(n => math.max(0, n - 1)) > 0) {
       dataWritesFailed.incrementAndGet()
@@ -494,10 +504,19 @@ final class ManifestCrashFileSystem extends org.apache.hadoop.fs.RawLocalFileSys
       replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
     check(f); super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
   }
+  override def rename(src: Path, dst: Path): Boolean = { op(src); super.rename(src, dst) }
+  override def delete(f: Path, recursive: Boolean): Boolean = { op(f); super.delete(f, recursive) }
+  override def open(f: Path, bufferSize: Int): FSDataInputStream =
+    if (f.getName.endsWith(".json") && emptyOpens.getAndUpdate(n => math.max(0, n - 1)) > 0)
+      super.open(new Path(java.nio.file.Files.createTempFile("graft_empty", ".json").toString), bufferSize)
+    else super.open(f, bufferSize)
 }
 
 object ManifestCrashFileSystem {
   @volatile var armed = false
   val failDataWrites   = new java.util.concurrent.atomic.AtomicInteger(0)
   val dataWritesFailed = new java.util.concurrent.atomic.AtomicInteger(0)
+  val crashAt          = new java.util.concurrent.atomic.AtomicInteger(Int.MaxValue)
+  val ops              = new java.util.concurrent.atomic.AtomicInteger(0)
+  val emptyOpens       = new java.util.concurrent.atomic.AtomicInteger(0)
 }
