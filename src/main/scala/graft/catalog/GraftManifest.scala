@@ -304,8 +304,8 @@ final class GraftManifestIO(val tableDir: Path, conf: Configuration) {
 
   /** Stage a STREAM micro-batch's files under WAP ref `id`,
     * ACCUMULATING across batches: the first batch creates the ref
-    * (exclusive create, like [[stageWap]]), later ones rewrite it via
-    * temp+rename, and `stampKey -> batchId` rides in the staged
+    * (exclusive create, like [[stageWap]]), later ones replace it
+    * ([[ManifestLog.replace]]), and `stampKey -> batchId` rides in the staged
     * properties so a replayed batch (restart between the stage and the
     * checkpoint advance) is refused by the ref itself — and, after
     * publish moved the stamp into the head's properties, by the head.
@@ -314,9 +314,9 @@ final class GraftManifestIO(val tableDir: Path, conf: Configuration) {
     *
     * Single writer per ref — one stream stages one audit window; a
     * second stream uses a distinct ref (same contract as checkpoint
-    * dirs). The rewrite is temp+rename (atomic on HDFS-likes), with a
-    * delete-before-rename sliver in which an audit read retries like
-    * any create/write visibility race.
+    * dirs). An audit read sees the old or the new ref (off the local
+    * filesystem it may retry through the replace's delete-to-rename
+    * gap).
     *
     * Returns false when the batch was already staged or published
     * (replay) — the caller drops its redundantly written files.
@@ -345,17 +345,9 @@ final class GraftManifestIO(val tableDir: Path, conf: Configuration) {
           (GraftManifestIO.WapAdded ->
             (prior ++ added.map(_.path)).mkString(",")),
         files = staged.files ++ provisional)
-      val target = wapFile(id)
-      val tmp = new Path(tableDir,
-        s"manifests/.wap-$id.${java.util.UUID.randomUUID().toString.replace("-", "")}.tmp")
-      val out = fs.create(tmp)
-      try out.write(GraftManifestIO.toJson(next).getBytes("UTF-8")) finally out.close()
-      fs.delete(target, false)
-      if (!fs.rename(tmp, target)) {
-        fs.delete(tmp, false)
+      if (!ManifestLog.replace(fs, wapFile(id), GraftManifestIO.toJson(next)))
         throw new GraftCommitConflict(
           s"WAP ref '$id' restage rename failed at $tableDir")
-      }
       true
     } else {
       // not staged: the batch may have been PUBLISHED already (publish

@@ -1,7 +1,9 @@
 package graft.catalog
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
+import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
+import scala.util.control.NonFatal
 
 /** A versioned manifest log: the files `dir/v<N><suffix>`, each version
   * CLAIMED by an atomic exclusive create. It is the one commit primitive
@@ -14,7 +16,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *
   * The listing is authoritative: the head is the highest claimed
   * version, and a commit becomes visible exactly when its claim lands.
-  * There is no pointer to flip, so a crash at any point leaves v or v+1.
+  * There is no pointer to flip, and a claim lands with its whole body
+  * ([[ManifestLog.claim]] has the one HDFS caveat), so a crash at any
+  * point leaves v or v+1.
   * Exactly one of any number of racing writers wins a version. Object
   * stores without an atomic create-if-absent need a locking catalog in
   * front, as with Iceberg (docs/OBJECT_STORE.md).
@@ -60,38 +64,77 @@ object ManifestLog {
     new ManifestLog(dir, dir.getFileSystem(conf), suffix)
 
   /** Atomically create `target` with `body` unless it exists; returns
-    * whether THIS writer created it. Hadoop's local
-    * `create(overwrite = false)` is check-then-create (two racers can
-    * both succeed, the second truncating the first), so the local scheme
-    * goes through java.nio CREATE_NEW (O_EXCL). Elsewhere it is
+    * whether THIS writer created it. The claim is all-or-nothing: a
+    * failed write never leaves a claimed version without its whole body.
+    * On the local filesystem the body goes to a private temp file that
+    * is then hard-linked to `target` — link(2) fails if the target
+    * exists, and the target appears with its bytes (Hadoop's local
+    * `create(overwrite = false)` is check-then-create, and create-then-
+    * write shows a reader an empty file). Elsewhere it is
     * create-no-overwrite, where some filesystems signal the lost race as
-    * a generic IOException naming 'exist'.
+    * a generic IOException naming 'exist', and a write or close that
+    * fails deletes the target before the error propagates. On `s3x://`
+    * the body lands whole at close with its conditional PUT; on HDFS a
+    * process killed between the create and the close still leaves an
+    * empty version file.
     */
   def claim(fs: FileSystem, target: Path, body: String): Boolean = {
-    val bytes = body.getBytes("UTF-8")
     fs.mkdirs(target.getParent)
     if (fs.getScheme == "file") {
-      try {
-        val ch = java.nio.file.Files.newByteChannel(java.nio.file.Paths.get(target.toUri.getPath),
-          java.nio.file.StandardOpenOption.CREATE_NEW, java.nio.file.StandardOpenOption.WRITE)
-        try ch.write(java.nio.ByteBuffer.wrap(bytes)) finally ch.close()
-        true
-      } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      val tmp = localTemp(target, body)
+      try { Files.createLink(local(target), tmp); true }
+      catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      finally dropTemp(tmp)
     } else {
-      try {
-        val out = fs.create(target, false)
-        try out.write(bytes) finally out.close()
-        true
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
+      val out = try fs.create(target, false) catch {
+        case _: FileAlreadyExistsException => return false
         case e: java.io.IOException if e.getMessage != null &&
-          e.getMessage.toLowerCase.contains("exist") => false
+          e.getMessage.toLowerCase.contains("exist") => return false
+      }
+      try { try out.write(body.getBytes("UTF-8")) finally out.close(); true }
+      catch {
+        case _: FileAlreadyExistsException => false // s3x: lost at the close-time PUT
+        case NonFatal(e) =>
+          try fs.delete(target, false) catch { case NonFatal(_) => () }
+          throw e
       }
     }
   }
 
-  /** Read a claimed file. A claim is VISIBLE at its create, microseconds
-    * before its bytes land, so a missing or empty body is retried
+  /** Replace `target` with `body` — a mutable ref, not a version. On
+    * the local filesystem a temp file is renamed over the target in one
+    * step (rename(2)), so a reader sees the old or the new body.
+    * Elsewhere it is temp → delete → rename, and a reader between the
+    * delete and the rename retries ([[read]]). False if the final rename
+    * failed.
+    */
+  def replace(fs: FileSystem, target: Path, body: String): Boolean =
+    if (fs.getScheme == "file") {
+      val tmp = localTemp(target, body)
+      try { Files.move(tmp, local(target), StandardCopyOption.ATOMIC_MOVE); true }
+      finally dropTemp(tmp)
+    } else {
+      val tmp = new Path(target.getParent, s".${target.getName}.${java.util.UUID.randomUUID()}.tmp")
+      val out = fs.create(tmp, true)
+      try out.write(body.getBytes("UTF-8")) finally out.close()
+      fs.delete(target, false)
+      fs.rename(tmp, target) || { fs.delete(tmp, false); false }
+    }
+
+  /** Best effort: a temp left behind is hidden from every listing. */
+  private def dropTemp(tmp: java.nio.file.Path): Unit =
+    try Files.deleteIfExists(tmp) catch { case NonFatal(_) => () }
+
+  private def local(p: Path): java.nio.file.Path = Paths.get(p.toUri.getPath)
+
+  /** `body` in a fresh hidden file beside `target` (never a `v<N>` name). */
+  private def localTemp(target: Path, body: String): java.nio.file.Path =
+    Files.write(local(target).resolveSibling(s".${target.getName}.${java.util.UUID.randomUUID()}.tmp"),
+      body.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
+
+  /** Read a claimed file. Off the local filesystem a claim can be
+    * VISIBLE at its create, before its bytes land, and a replaced ref is
+    * briefly absent, so a missing or empty body is retried
     * before the read fails. A plain loop: a `return` from inside a
     * closure is an exception, and the catch below would swallow it.
     */
@@ -106,7 +149,7 @@ object ManifestLog {
         val in = fs.open(path)
         body = try new String(in.readAllBytes(), "UTF-8") finally in.close()
         if (body.isEmpty) last = new java.io.IOException(s"empty read at $path (create/write sliver)")
-      } catch { case scala.util.control.NonFatal(e) => last = e }
+      } catch { case NonFatal(e) => last = e }
     }
     if (body.isEmpty) throw last
     body

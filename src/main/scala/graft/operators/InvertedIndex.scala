@@ -55,7 +55,7 @@ import org.json4s._
   * '''Commit protocol''' (shared with [[graft.catalog.GraftManifestIO]]):
   * every mutation stages immutable files under fresh UUID directories,
   * then atomically claims `manifest/v<N>.json` by exclusive create
-  * (O_EXCL locally, create-no-overwrite on HDFS-likes). The manifest
+  * ([[graft.catalog.ManifestLog.claim]]). The manifest
   * lists the EXACT postings files plus the vocab/stats directories of
   * that version and pins the bucket count, so:
   *

@@ -18,7 +18,9 @@ import org.apache.spark.sql.types.{DataType, LongType, StructType}
   * Layout:
   * {{{
   *   tableDir/
-  *     data/v<N>/part-*.parquet     one immutable dir per commit
+  *     data/v<N>-<attempt>/part-*.parquet
+  *                                  one immutable dir per commit
+  *                                  attempt (`data/v<N>` before)
   *     manifests/v<N>.manifest      table schema + the base and the
   *                                  delta chain, in commit order; a
   *                                  [[graft.catalog.ManifestLog]] whose
@@ -48,7 +50,6 @@ final class SnapshotStore(spark: SparkSession, tableDir: String) {
   private val root = new Path(tableDir)
   private def fs   = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def dataDir(v: Long) = new Path(root, s"data/v$v")
   private def log = graft.catalog.ManifestLog(new Path(root, "manifests"),
     spark.sparkContext.hadoopConfiguration, ".manifest")
 
@@ -57,9 +58,9 @@ final class SnapshotStore(spark: SparkSession, tableDir: String) {
   /** Commit `df` as the next snapshot's base; returns the new version.
     * `retry` bounds transient commit failures (the reference's merge
     * client `queryRetryMaxAttempts`/`queryRetryBaseDuration`): a failed
-    * attempt never claimed its manifest, so the re-attempt recomputes
-    * the same version and overwrites the same (incomplete) data dir —
-    * retrying the whole commit is idempotent.
+    * attempt never claimed its manifest and drops its own data dir, so
+    * the re-attempt recomputes the same version — retrying the whole
+    * commit is idempotent.
     */
   def commit(
       df: DataFrame, maxRowsPerFile: Option[Int] = None,
@@ -84,11 +85,12 @@ final class SnapshotStore(spark: SparkSession, tableDir: String) {
     commitChecked(df, keys, maxRowsPerFile, retry, expectedVersion)
   }
 
-  /** Shared commit body; `keys` empty = base commit. The version is
+  /** Shared commit body; `keys` empty = base commit. Each attempt
+    * stages into its own `data/v<N>-<attempt>` dir, and the version is
     * claimed by an atomic exclusive create of its manifest, so a writer
     * that lost it to a racing commit fails with a
-    * [[SnapshotStore.CommitConflictException]] and never overwrites the
-    * winner's manifest. `expected = Some(exp)` also checks the head at
+    * [[SnapshotStore.CommitConflictException]] and touches neither the
+    * winner's manifest nor its files. `expected = Some(exp)` also checks the head at
     * attempt start, a cheap fail before staging; a conflict under a
     * retrying policy re-fails the attempt there, so retries never
     * re-stage data.
@@ -109,19 +111,24 @@ final class SnapshotStore(spark: SparkSession, tableDir: String) {
         p.deltas.headOption.foreach(d => require(d.keys == keys,
           s"delta keys ${keys.mkString(",")} differ from the chain's ${d.keys.mkString(",")} in $tableDir"))
       }
-      val writer = maxRowsPerFile.foldLeft(df.write.mode("overwrite"))(
-        (w, n) => w.option("maxRecordsPerFile", n.toLong))
-      writer.parquet(dataDir(v).toString)
-
-      val written = fs.listStatus(dataDir(v))
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .sortBy(_.getPath.getName)
-      val part = Part(StructType(df.schema.map(_.copy(nullable = true))),
-        if (prev.isEmpty) Nil else keys, written.map(s => s"data/v$v/${s.getPath.getName}").toSeq)
-      val m = prev.fold(Manifest(part.schema, part, Nil))(p =>
-        Manifest(SchemaMigration.unionSchema(p.schema, part.schema), p.base, p.deltas :+ part))
-      if (!log.claim(v, m.render))
+      val stage = new Path(root, s"data/v$v-${java.util.UUID.randomUUID().toString.replace("-", "")}")
+      def drop(): Unit = try fs.delete(stage, true) catch { case scala.util.control.NonFatal(_) => () }
+      val (written, m) = try {
+        val writer = maxRowsPerFile.foldLeft(df.write.mode("errorifexists"))(
+          (w, n) => w.option("maxRecordsPerFile", n.toLong))
+        writer.parquet(stage.toString)
+        val written = fs.listStatus(stage)
+          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+          .sortBy(_.getPath.getName)
+        val part = Part(StructType(df.schema.map(_.copy(nullable = true))),
+          if (prev.isEmpty) Nil else keys, written.map(s => s"data/${stage.getName}/${s.getPath.getName}").toSeq)
+        (written, prev.fold(Manifest(part.schema, part, Nil))(p =>
+          Manifest(SchemaMigration.unionSchema(p.schema, part.schema), p.base, p.deltas :+ part)))
+      } catch { case scala.util.control.NonFatal(e) => drop(); throw e }
+      if (!log.claim(v, m.render)) {
+        drop()
         throw new SnapshotStore.CommitConflictException(expected.getOrElse(cur), currentVersion())
+      }
       Commit(v, written.map(_.getLen).sum, m.deltas.size)
     }
   }
@@ -132,9 +139,10 @@ final class SnapshotStore(spark: SparkSession, tableDir: String) {
     * has advanced the table since, the commit is refused with a
     * [[SnapshotStore.CommitConflictException]] BEFORE any data is
     * staged, and the caller re-reads + re-derives + retries. Plain
-    * [[commit]] keeps last-writer-wins semantics for single-writer
-    * streams; concurrent writers (compaction beside ingestion, two
-    * backfill shards racing) use this. The expectation is checked
+    * [[commit]] claims the next version the same way, so of two racing
+    * plain commits the loser also fails with the conflict; concurrent
+    * writers (compaction beside ingestion, two backfill shards racing)
+    * use this to state what they derived from. The expectation is checked
     * before staging (cheap fail), and the version itself is claimed by
     * an atomic exclusive create of its manifest: a racing writer that
     * advanced the table after the check makes the claim fail, which is
@@ -153,7 +161,7 @@ final class SnapshotStore(spark: SparkSession, tableDir: String) {
     * of its base; otherwise the chain resolves as
     * `latest-per-key(deltas) ∪ base ⟕anti keys(deltas)`: one scan per
     * distinct delta schema (each aligned to the table schema), each
-    * row's commit order taken from its file's `data/v<N>` dir, so the
+    * row's commit order taken from its file's `data/v<N>-<attempt>` dir, so the
     * plan does not grow with the chain.
     */
   def readVersion(v: Long): DataFrame = {
@@ -201,8 +209,8 @@ final class SnapshotStore(spark: SparkSession, tableDir: String) {
     val dataRoot = new Path(root, "data")
     if (fs.exists(dataRoot))
       fs.listStatus(dataRoot).map(_.getPath.getName).collect {
-        case n @ DataDirName(d) if d.toLong < kept.head && !liveDirs(s"data/$n") => d.toLong
-      }.foreach(d => fs.delete(dataDir(d), true))
+        case n @ DataDirName(d) if d.toLong < kept.head && !liveDirs(s"data/$n") => n
+      }.foreach(n => fs.delete(new Path(dataRoot, n), true))
     expired
   }
 
@@ -232,13 +240,13 @@ final class SnapshotStore(spark: SparkSession, tableDir: String) {
 }
 
 object SnapshotStore {
-  private val DataDirName = "v([0-9]+)".r
-  /** A data file's commit version, from its `data/v<N>/` dir. */
-  private val CommitDirPattern = "/data/v([0-9]+)/[^/]+$"
+  private val DataDirName = "v([0-9]+)(?:-[0-9a-f]+)?".r
+  /** A data file's commit version, from its `data/v<N>[-<attempt>]/` dir. */
+  private val CommitDirPattern = "/data/v([0-9]+)(?:-[0-9a-f]+)?/[^/]+$"
 
   /** One commit's data files, as written with `schema`: the base
     * (`keys` empty) or a delta keyed on `keys`. Paths are table-relative
-    * and name the commit's `data/v<N>` dir.
+    * and name the commit's `data/v<N>[-<attempt>]` dir.
     */
   final case class Part(schema: StructType, keys: Seq[String], files: Seq[String])
 

@@ -15,7 +15,7 @@ import org.apache.spark.sql.connector.catalog.{Identifier, TableCatalog}
   */
 class ManifestLogSpec extends SparkSpec {
   import spark.implicits._
-  import ManifestCrashFileSystem.{crashAt, emptyOpens, ops}
+  import ManifestCrashFileSystem.{crashAt, emptyOpens, ops, tornClaims}
 
   private def crashfsDir(prefix: String): String = {
     spark.sparkContext.hadoopConfiguration.set("fs.crashfs.impl", classOf[ManifestCrashFileSystem].getName)
@@ -104,6 +104,42 @@ class ManifestLogSpec extends SparkSpec {
       s"""MERGE INTO $t t USING crash_merge_src s ON t.k = s.k
          |WHEN MATCHED THEN UPDATE SET t.v = s.v
          |WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)""".stripMargin))
+  }
+
+  test("a claim whose write fails leaves v, not a torn head; the replay converges") {
+    val store = new SnapshotStore(spark, crashfsDir("graft_torn_store") + "/t")
+    store.commit(Seq((1, "a"), (2, "b")).toDF("k", "v"))
+    def delta(): Unit = store.commitDelta(Seq((2, "b2"), (3, "c")).toDF("k", "v"), Seq("k"))
+    tornClaims.set(1)
+    try intercept[java.io.IOException](delta()) finally tornClaims.set(0)
+    assert(store.currentVersion().contains(1L) && hash(store.read().get) == Seq("[1,a]", "[2,b]"))
+    delta()
+    assert(store.currentVersion().contains(2L) && hash(store.read().get) == Seq("[1,a]", "[2,b2]", "[3,c]"))
+
+    val (_, catalog) = crashCatalog
+    spark.sql("CREATE TABLE crashcat.db.torn (k INT, v STRING)")
+    spark.sql("INSERT INTO crashcat.db.torn VALUES (1, 'a')")
+    tornClaims.set(1)
+    try intercept[Exception](spark.sql("INSERT INTO crashcat.db.torn VALUES (2, 'b')"))
+    finally tornClaims.set(0)
+    assert(catalog.tableExists(Identifier.of(Array("db"), "torn")))
+    assert(hash(spark.table("crashcat.db.torn")) == Seq("[1,a]"))
+    spark.sql("INSERT INTO crashcat.db.torn VALUES (2, 'b')")
+    assert(hash(spark.table("crashcat.db.torn")) == Seq("[1,a]", "[2,b]"))
+  }
+
+  test("a racing SnapshotStore commit of the same version cannot touch the winner's files") {
+    val store = new SnapshotStore(spark, crashfsDir("graft_race_store") + "/t")
+    store.commit(Seq((1, "a")).toDF("k", "v"))
+    // A has staged v2; at A's claim, B stages v2 as well and dies before its own claim
+    ManifestCrashFileSystem.onManifestCreate = () => {
+      ManifestCrashFileSystem.onManifestCreate = () => throw new java.io.IOException("injected: B dies before its claim")
+      intercept[java.io.IOException](store.commitDelta(Seq((1, "b")).toDF("k", "v"), Seq("k")))
+      ManifestCrashFileSystem.onManifestCreate = () => ()
+    }
+    try store.commitDelta(Seq((1, "a2"), (2, "c")).toDF("k", "v"), Seq("k"))
+    finally ManifestCrashFileSystem.onManifestCreate = () => ()
+    assert(store.currentVersion().contains(2L) && hash(store.read().get) == Seq("[1,a2]", "[2,c]"))
   }
 
   test("a zero-byte first read of an index manifest or the federation marker is retried") {

@@ -137,8 +137,8 @@ class PipelineServicesSpec extends SparkSpec {
     assert(committed.tail.forall(_.matches("""graft\.stream\.bytes_committed:[1-9][0-9]*\|c\|#kind:delta""")),
       committed)
     // the counter is the data bytes the commit wrote (batch 2 = version 2)
-    val v2Bytes = new java.io.File(s"$target/data/v2").listFiles().filter(_.getName.endsWith(".parquet"))
-      .map(_.length()).sum
+    val v2Bytes = new java.io.File(s"$target/data").listFiles().filter(_.getName.startsWith("v2-"))
+      .flatMap(_.listFiles()).filter(_.getName.endsWith(".parquet")).map(_.length()).sum
     assert(committed(1) == s"graft.stream.bytes_committed:$v2Bytes|c|#kind:delta")
     // the chain grows by one delta per batch; the maintenance fold at
     // batch 3 resets it

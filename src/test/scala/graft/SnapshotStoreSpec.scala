@@ -30,7 +30,8 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(expired == Seq(1L, 2L, 3L))
     assert(store.versions() == Seq(4L, 5L))
     assert(store.read().get.as[(Int, Int)].head() == ((5, 5)))
-    assert(!new java.io.File(s"$dir/data/v1").exists())
+    assert(new java.io.File(s"$dir/data").list().map(_.takeWhile(_ != '-')).sorted.toSeq == Seq("v4", "v5"),
+      "only the kept versions' commit dirs remain")
   }
 
   test("removeOrphanFiles deletes unreferenced data files only") {
@@ -38,7 +39,8 @@ class SnapshotStoreSpec extends SparkSpec {
     val store = new SnapshotStore(spark, dir)
     store.commit(Seq((1, "a")).toDF("k", "v"))
     // plant an orphan inside the live snapshot dir and a stray dir
-    val orphan = new java.io.File(s"$dir/data/v1/orphan-file.parquet")
+    val orphan = new java.io.File(new java.io.File(s"$dir/${store.manifest(1).files.head}").getParentFile,
+      "orphan-file.parquet")
     Files.write(orphan.toPath, Array[Byte](1, 2, 3))
     val removed = store.removeOrphanFiles()
     assert(removed.exists(_.endsWith("orphan-file.parquet")))
@@ -158,7 +160,7 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(store.versions() == Seq(6L))
     listedFilesExist()
     assert(answer(store.read().get) == expected)
-    assert(new java.io.File(s"$dir/data").list().toSeq == Seq("v6"))
+    assert(new java.io.File(s"$dir/data").list().toSeq.map(_.takeWhile(_ != '-')) == Seq("v6"))
   }
 
   test("a manifest of bare paths reads as a base with its footer schema") {

@@ -376,8 +376,8 @@ class StreamingSpec extends SparkSpec {
     ManifestCrashFileSystem.armed = true
     try intercept[Exception](StreamPipeline.runAvailableNow(spark, schema, cfg))
     finally ManifestCrashFileSystem.armed = false
-    assert(Option(new java.io.File(s"$local/data/v2").list()).exists(_.exists(_.endsWith(".parquet"))),
-      "the injected crash must follow the delta's data write")
+    assert(new java.io.File(s"$local/data").listFiles().filter(_.getName.startsWith("v2-"))
+      .exists(_.list().exists(_.endsWith(".parquet"))), "the injected crash must follow the delta's data write")
     assert(!new java.io.File(s"$local/manifests/v2.manifest").exists())
     assert(store.currentVersion().contains(1L) && hash(store.read().get) == before,
       "a crashed commit must leave version 1 visible")
@@ -416,7 +416,9 @@ class StreamingSpec extends SparkSpec {
     assert(m.batches == 1 && m.rowsStaged == 3, s"the retried batch must count its rows once: $m")
     val store = new SnapshotStore(spark, cfg.targetDir)
     assert(store.currentVersion().contains(2L) && store.manifest(2L).deltas.size == 1)
-    assert(spark.read.parquet(s"$local/data/v2").count() == 3, "only one attempt's rows may land")
+    val v2Dirs = new java.io.File(s"$local/data").listFiles().filter(_.getName.startsWith("v2-"))
+    assert(v2Dirs.length == 1, "the failed attempt must drop its own data dir")
+    assert(spark.read.parquet(v2Dirs.head.toString).count() == 3, "only one attempt's rows may land")
 
     val clean = cfg.copy(targetDir = Files.createTempDirectory("graft_retry_ref").toString + "/t",
       checkpointDir = Files.createTempDirectory("graft_retry_ref_ckpt").toString)
@@ -475,6 +477,11 @@ class StreamingSpec extends SparkSpec {
   *    a whole commit).
   *  - `emptyOpens = n`: the next n opens of a `.json` file read zero
   *    bytes — a reader racing a claim between its create and its write.
+  *  - `tornClaims = n`: the next n writes of a `.manifest` or `.json`
+  *    file land half their bytes and then fail — a claim whose write
+  *    fails (a full disk, a failed stream write).
+  *  - `onManifestCreate`: runs at each create of a `.manifest` file — a
+  *    racing writer interleaved at a snapshot commit's claim.
   */
 final class ManifestCrashFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, Path}
@@ -488,6 +495,7 @@ final class ManifestCrashFileSystem extends org.apache.hadoop.fs.RawLocalFileSys
       throw new java.io.IOException(s"injected crash at commit op ${ops.get}: $f")
   private def check(f: Path): Unit = {
     op(f)
+    if (f.getName.endsWith(".manifest")) onManifestCreate()
     if (armed && f.getName.endsWith(".manifest"))
       throw new java.io.IOException(s"injected crash before the manifest claim: $f")
     if (f.getName.endsWith(".parquet") && f.toString.contains("/data/v") &&
@@ -498,12 +506,22 @@ final class ManifestCrashFileSystem extends org.apache.hadoop.fs.RawLocalFileSys
   }
   override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
       blockSize: Long, progress: Progressable): FSDataOutputStream = {
-    check(f); super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+    check(f); torn(f, super.create(f, overwrite, bufferSize, replication, blockSize, progress))
   }
   override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
       replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
-    check(f); super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+    check(f); torn(f, super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress))
   }
+  private def torn(f: Path, out: FSDataOutputStream): FSDataOutputStream =
+    if (!f.getName.matches("[^.].*\\.(manifest|json)") || tornClaims.getAndUpdate(n => math.max(0, n - 1)) == 0) out
+    else new FSDataOutputStream(new java.io.OutputStream {
+      override def write(b: Int): Unit = out.write(b)
+      override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+        out.write(b, off, len / 2)
+        throw new java.io.IOException(s"injected failure in the middle of a claim's write: $f")
+      }
+      override def close(): Unit = out.close()
+    }, null)
   override def rename(src: Path, dst: Path): Boolean = { op(src); super.rename(src, dst) }
   override def delete(f: Path, recursive: Boolean): Boolean = { op(f); super.delete(f, recursive) }
   override def open(f: Path, bufferSize: Int): FSDataInputStream =
@@ -519,4 +537,6 @@ object ManifestCrashFileSystem {
   val crashAt          = new java.util.concurrent.atomic.AtomicInteger(Int.MaxValue)
   val ops              = new java.util.concurrent.atomic.AtomicInteger(0)
   val emptyOpens       = new java.util.concurrent.atomic.AtomicInteger(0)
+  val tornClaims       = new java.util.concurrent.atomic.AtomicInteger(0)
+  @volatile var onManifestCreate: () => Unit = () => ()
 }
