@@ -20,7 +20,7 @@ import org.apache.spark.sql.types.{DataType, LongType, StructType}
   *   tableDir/
   *     data/v<N>-<attempt>/part-*.parquet
   *                                  one immutable dir per commit
-  *                                  attempt (`data/v<N>` before)
+  *                                  attempt (older tables: `data/v<N>`)
   *     manifests/v<N>.manifest      table schema + the base and the
   *                                  delta chain, in commit order; a
   *                                  [[graft.catalog.ManifestLog]] whose
