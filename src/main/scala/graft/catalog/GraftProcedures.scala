@@ -31,14 +31,6 @@ object GraftProcedures {
       "tag", "drop_tag", "index_describe")
       .map(Identifier.of(Array(Namespace), _))
 
-  /** The serving indexes (lexical postings / ANN cells) share one
-    * lifecycle ([[graft.operators.IndexManifests]]): vacuum, export and
-    * rollback run on any committed index dir, and only compact and
-    * describe ask for the payload kind.
-    */
-  private def isAnnIndex(spark: SparkSession, dir: String): Boolean =
-    graft.operators.IndexManifests.isAnnManifest(spark, dir)
-
   /** A FEDERATION root ([[graft.operators.ShardedIndex]], shards.json
     * marker) maintains as its shard list — the ops runbook stays ONE
     * surface: compact/vacuum/describe/export on a federation dir fan
@@ -130,9 +122,7 @@ object GraftProcedures {
         StructType(Seq(StructField("files_folded", IntegerType))),
         { (spark, in) =>
           val d = in.getUTF8String(0).toString
-          def one(s: String) =
-            if (isAnnIndex(spark, s)) graft.operators.AnnIndex.compact(spark, s)
-            else graft.operators.InvertedIndex.compact(spark, s)
+          def one(s: String) = graft.operators.IndexManifests.head(spark, s).compact(spark, s)
           val folded = shardDirs(spark, d).fold(one(d))(_.map(one).sum)
           new GenericInternalRow(Array[Any](folded))
         }))
@@ -219,37 +209,16 @@ object GraftProcedures {
           StructField("shape", StringType))),
         { (spark, in) =>
           val d = in.getUTF8String(0).toString
-          import org.apache.spark.unsafe.types.UTF8String
-          shardDirs(spark, d) match {
-            case Some(ss) =>
-              // federation summary: kind from shard 0 (homogeneous by
-              // construction), counts summed, version = max head
-              val ann = isAnnIndex(spark, ss.head)
-              val (vs, files, tombs, metas) = ss.map { s =>
-                val m = graft.operators.IndexManifests.head(spark, s)
-                (m.version, m.files.size, m.deletes.size, m.metaDirs.size)
-              }.foldLeft((0L, 0, 0, 0)) { case ((v, f, t, md), (v2, f2, t2, md2)) =>
-                (math.max(v, v2), f + f2, t + t2, md + md2)
-              }
-              new GenericInternalRow(Array[Any](
-                UTF8String.fromString(if (ann) "sharded-ann" else "sharded-lexical"),
-                vs, files, tombs, metas,
-                UTF8String.fromString(s"shards=${ss.size}")))
-            case None if isAnnIndex(spark, d) =>
-              val m = graft.operators.AnnIndex.currentManifest(spark, d)
-              new GenericInternalRow(Array[Any](
-                UTF8String.fromString("ann"), m.version, m.vectors.size,
-                m.deletes.size, m.metaDirs.size,
-                UTF8String.fromString(
-                  s"cells=${m.centroids.length} pq=${if (m.codebooks.nonEmpty) s"m=${m.codebooks.length}" else "no"}")))
-            case None =>
-              val m = graft.operators.InvertedIndex.currentManifest(spark, d)
-              new GenericInternalRow(Array[Any](
-                UTF8String.fromString("lexical"), m.version, m.postings.size,
-                m.deletes.size, m.metaDirs.size,
-                UTF8String.fromString(
-                  s"buckets=${m.buckets} positions=${m.positions} ranged=${m.tokRanges.size}")))
-          }
+          // a federation summarizes as one row: the kind from shard 0
+          // (homogeneous by construction), counts summed, version = max head
+          val fed = shardDirs(spark, d)
+          val heads = fed.getOrElse(Seq(d)).map(graft.operators.IndexManifests.head(spark, _))
+          val (kind, shape) = fed.fold((heads.head.kind, heads.head.shape))(ss =>
+            (s"sharded-${heads.head.kind}", s"shards=${ss.size}"))
+          new GenericInternalRow(Array[Any](UTF8String.fromString(kind),
+            heads.map(_.version).max, heads.map(_.files.size).sum,
+            heads.map(_.deletes.size).sum, heads.map(_.metaDirs.size).sum,
+            UTF8String.fromString(shape)))
         }))
       case "index_export" => Some(proc("index_export",
         "export/promote a serving index's current version to a virgin destination " +

@@ -95,6 +95,13 @@ object AnnIndex {
     def payloadRoot: String = "vectors"
     def idCol: String = "neighbor_id"
     def withVersion(v: Long): Manifest = copy(version = v)
+    def kind: String = "ann"
+    def shape: String = s"cells=${centroids.length} pq=${
+      if (codebooks.nonEmpty) s"m=${codebooks.length}" else "no"}"
+    def compact(spark: SparkSession, dir: String): Int = AnnIndex.compact(spark, dir)
+    def federation(shards: Seq[(String, IndexManifests.Envelope)],
+        dir: String): ShardedIndex.Payload =
+      AnnIndex.federation(shards.map { case (d, m) => d -> m.asInstanceOf[Manifest] }, dir)
     def toJson: String = {
       // doubles as raw IEEE-754 bits: JSON decimal printing is not
       // guaranteed to round-trip, and the centroids must be BIT-exact —
@@ -294,6 +301,39 @@ object AnnIndex {
   private def stageMeta(emb: DataFrame, idCol: String, metaCols: Seq[String],
       dir: String): Option[String] =
     IndexManifests.stageMeta(emb, idCol, "neighbor_id", metaCols, dir)
+
+  /** The dense part in the federation's layout operations
+    * ([[ShardedIndex.reshard]], [[ShardedIndex.reshardInPlace]]): live
+    * vectors re-route with their metadata joined on (one row per id),
+    * each new shard trains its own quantizer on its slice (the
+    * federation's shard-local geometry; the PQ shape re-derives from
+    * shard 0's codebooks), leavers tombstone by id alone (no corpus
+    * stats to correct), and a shard no vector routes to cannot be
+    * built.
+    */
+  private[graft] def federation(shards: Seq[(String, Manifest)],
+      dir: String): ShardedIndex.Payload = {
+    val metaCols = ShardedIndex.uniform("metaCols", shards.map(_._2.metaCols), dir)
+    val pq = shards.head._2.codebooks match {
+      case cb if cb.nonEmpty => Some(PqSpec(cb.length, cb.head.length))
+      case _ => None
+    }
+    val nCells = shards.map(_._2.centroids.length).max
+    new ShardedIndex.Payload {
+      def live(spark: SparkSession, i: Int) = {
+        val (d, m) = shards(i)
+        liveRows(spark, d, m, m.vectors).select("neighbor_id", "__cv")
+      }
+      def withMeta(rows: DataFrame, meta: Option[DataFrame]) =
+        (meta.fold(rows)(rows.join(_, Seq("neighbor_id"), "left")), None)
+      def build(spark: SparkSession, rows: DataFrame, meta: Option[DataFrame], d: String) =
+        AnnIndex.build(rows, "neighbor_id", "__cv", d, nCells, metaCols = metaCols, pq = pq)
+      def remove(spark: SparkSession, d: String, leavers: DataFrame) =
+        deleteVecs(leavers.select("neighbor_id"), "neighbor_id", d)
+      val emptyRefusal = Some(ShardedIndex.NoVectors)
+      val championC = 0
+    }
+  }
 
   /** Fold NEW vectors (ids disjoint from the indexed set) in against
     * the persisted centroids: churn-sized, shuffle-free assignment,

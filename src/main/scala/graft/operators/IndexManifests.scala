@@ -38,16 +38,11 @@ private[graft] object IndexManifests {
   /** Committed versions, ascending; the listing is authoritative. */
   def versions(spark: SparkSession, dir: String): Seq[Long] = log(spark, dir).versions()
 
-  /** Is the committed index at `dir` a dense one? Only for the
-    * payload-specific operations (compact, reshard, describe); the
-    * kind-agnostic ones below never ask.
-    */
-  def isAnnManifest(spark: SparkSession, dir: String): Boolean =
-    head(spark, dir).isInstanceOf[AnnIndex.Manifest]
-
   /** Parse a manifest body of either kind — the ONE kind dispatch: ANN
     * manifests carry `centroids`, lexical ones don't. Every read goes
-    * through here, so the manifest cache holds one class per (dir, v).
+    * through here, so the manifest cache holds one class per (dir, v),
+    * and every payload-specific operation (compact, describe, the
+    * federation's layout operations) is a method of the parsed value.
     */
   private def parse(body: String): Envelope = {
     val j = JsonMethods.parse(body)
@@ -370,6 +365,15 @@ private[graft] object IndexManifests {
     def idCol: String
     def withVersion(v: Long): Envelope
     def toJson: String
+    /** the kind's name and payload shape, as index_describe reports them */
+    def kind: String
+    def shape: String
+    /** compact the committed index at `dir` with the payload's rewrite */
+    def compact(spark: SparkSession, dir: String): Int
+    /** the payload's part in the federation's layout operations, over
+      * `shards` — every shard's manifest, all of this one's kind
+      */
+    def federation(shards: Seq[(String, Envelope)], dir: String): ShardedIndex.Payload
   }
 
   /** Encode a manifest: the envelope's fields, then the payload's. */

@@ -176,6 +176,12 @@ object InvertedIndex {
     def payloadRoot: String = "postings"
     def idCol: String = "doc_id"
     def withVersion(v: Long): Manifest = copy(version = v)
+    def kind: String = "lexical"
+    def shape: String = s"buckets=$buckets positions=$positions ranged=${tokRanges.size}"
+    def compact(spark: SparkSession, dir: String): Int = InvertedIndex.compact(spark, dir)
+    def federation(shards: Seq[(String, IndexManifests.Envelope)],
+        dir: String): ShardedIndex.Payload =
+      InvertedIndex.federation(shards.map { case (d, m) => d -> m.asInstanceOf[Manifest] }, dir)
     def toJson: String = IndexManifests.render(this, List(
       "buckets" -> JInt(buckets),
       "positions" -> JBool(positions),
@@ -530,6 +536,35 @@ object InvertedIndex {
   private def stageMeta(docs: DataFrame, idCol: String, metaCols: Seq[String],
       dir: String): Option[String] =
     IndexManifests.stageMeta(docs, idCol, "doc_id", metaCols, dir)
+
+  /** The lexical part in the federation's layout operations
+    * ([[ShardedIndex.reshard]], [[ShardedIndex.reshardInPlace]]): live
+    * postings re-route with their metadata routed apart (a posting row
+    * is per (doc, term), metadata per doc), new shards build with no
+    * re-tokenization ([[buildFromPostings]]), leavers tombstone with
+    * vocab/stats corrections from the same staged rows ([[removeRows]]),
+    * an empty shard builds as an empty index, and a source that served
+    * approximate gets its champion selection back.
+    */
+  private[graft] def federation(shards: Seq[(String, Manifest)],
+      dir: String): ShardedIndex.Payload = {
+    val buckets = ShardedIndex.uniform("bucket modulus", shards.map(_._2.buckets), dir)
+    val positions = ShardedIndex.uniform("positions flag", shards.map(_._2.positions), dir)
+    val metaCols = ShardedIndex.uniform("metaCols", shards.map(_._2.metaCols), dir)
+    new ShardedIndex.Payload {
+      def live(spark: SparkSession, i: Int) = {
+        val (d, m) = shards(i)
+        liveRows(spark, d, m, m.postings)
+      }
+      def withMeta(rows: DataFrame, meta: Option[DataFrame]) = (rows, meta)
+      def build(spark: SparkSession, rows: DataFrame, meta: Option[DataFrame], d: String) =
+        buildFromPostings(spark, rows, meta, d, buckets, positions, metaCols)
+      def remove(spark: SparkSession, d: String, leavers: DataFrame) =
+        removeRows(spark, d, leavers)
+      val emptyRefusal = None
+      val championC = shards.map(_._2.championC).max
+    }
+  }
 
   // ---- delta maintenance ---------------------------------------------
 

@@ -73,11 +73,17 @@ object ShardedIndex {
     * federation refuses outright, and so does a committed FLAT index —
     * the procedure surface dispatches federation-first, so dropping a
     * shards.json next to a flat manifest chain would silently shadow
-    * the flat index behind the new marker (and [[sweepUncommitted]]
+    * the flat index behind the new marker (and the debris sweep
     * would sweep its staging siblings). Shared by build / export /
     * reshard destinations (ADVICE r14).
+    *
+    * A root that passes owns its tree: nothing is serving (the marker
+    * lands LAST), so a crashed earlier attempt's debris — staging trees
+    * and half-built `shard=i` roots — is swept instead of failing the
+    * retry with an errorifexists that never mentions the half-built
+    * federation.
     */
-  private def requireVirginRoot(spark: SparkSession, dir: String, what: String): Unit = {
+  private def claimVirginRoot(spark: SparkSession, dir: String, what: String): Unit = {
     require(!isFederation(spark, dir),
       s"$what $dir already holds a committed federation")
     val vs = IndexManifests.versions(spark, dir)
@@ -85,6 +91,16 @@ object ShardedIndex {
       s"$what $dir already holds a committed FLAT index (head v${vs.lastOption.getOrElse(0L)}) — " +
         "a federation marker would silently shadow it (procedures dispatch " +
         "federation-first); pick a fresh root or retire the flat index explicitly")
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(root)) fs.listStatus(root).foreach { st =>
+      val nm = st.getPath.getName
+      // prefix match: earlier layouts staged builds and reshards under
+      // _route_staging and _route_staging_meta
+      if (st.isDirectory && (nm.startsWith("_route_staging") ||
+          nm == MaintStagingDir || nm.startsWith("shard=")))
+        fs.delete(st.getPath, true)
+    }
   }
 
   /** Shard count pinned at build; loud refusal when the federation
@@ -179,35 +195,12 @@ object ShardedIndex {
     }
   }
 
-  /** A build that found no shards.json owns the tree: nothing is
-    * serving (the marker lands LAST), so leftover debris from a crashed
-    * earlier build — the `_route_staging` tree and half-built
-    * `shard=i` roots — is swept instead of failing the retry with an
-    * errorifexists that never mentions the half-built federation.
-    */
-  private def sweepUncommitted(spark: SparkSession, dir: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    fs.listStatus(root).foreach { st =>
-      val nm = st.getPath.getName
-      // prefix match: reshard stages BOTH _route_staging and
-      // _route_staging_meta — an exact-name sweep would leave the meta
-      // tree behind and dead-end the retry on errorifexists
-      if (st.isDirectory && (nm.startsWith("_route_staging") ||
-          nm == MaintStagingDir || nm.startsWith("shard=")))
-        fs.delete(st.getPath, true)
-    }
-  }
-
   /** Claim the federation marker: a second build fails loudly. */
   private def writeShardsFile(spark: SparkSession, dir: String, shards: Int): Unit = {
     val p = shardsPath(dir)
     require(ManifestLog.claim(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
       s"""{"shards": $shards}"""), s"a federation marker already exists at $dir")
   }
-
-  // ---- lexical federation ---------------------------------------------
 
   /** Build an S-shard lexical federation. The corpus is routed ONCE
     * into a staging tree partitioned by shard (one corpus pass — at
@@ -220,38 +213,69 @@ object ShardedIndex {
     */
   def buildSharded(docs: DataFrame, idCol: String, textCol: String, dir: String,
       shards: Int, buckets: Int = InvertedIndex.DefaultBuckets,
-      withPositions: Boolean = true, metaCols: Seq[String] = Nil): Unit = {
-    require(shards >= 1, s"buildSharded needs shards >= 1, got $shards")
-    val spark = docs.sparkSession
-    requireVirginRoot(spark, dir, "sharded build root")
-    sweepUncommitted(spark, dir)
-    val staging = s"$dir/_route_staging"
-    docs.withColumn("__shard", routeOf(col(idCol), shards))
-      .write.partitionBy("__shard").mode("errorifexists").parquet(staging)
-    try {
-      concurrently(0 until shards) { i =>
-        val slice = shardSlice(spark, staging, i, docs.schema)
-        InvertedIndex.build(slice, idCol, textCol, shardDir(dir, i),
-          buckets, withPositions = withPositions, metaCols = metaCols)
-      }
-    } finally {
-      val sp = new org.apache.hadoop.fs.Path(staging)
-      sp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(sp, true)
+      withPositions: Boolean = true, metaCols: Seq[String] = Nil): Unit =
+    buildFederation(docs, None, idCol, dir, shards, "buildSharded", "sharded build root",
+        emptyRefusal = None) { (slice, _, d) =>
+      InvertedIndex.build(slice, idCol, textCol, d, buckets,
+        withPositions = withPositions, metaCols = metaCols)
     }
+
+  /** Build an S-shard ANN federation: each shard trains its OWN
+    * centroids on its slice (shard-local quantizers — the federation
+    * never needs a global codebook; a probe fans out and each shard
+    * answers from its own geometry). Every shard must receive at least
+    * one vector (quantizer training needs data): fewer vectors than
+    * shards is a config error, loudly, before any shard builds.
+    */
+  def buildShardedAnn(emb: DataFrame, idCol: String, vecCol: String, dir: String,
+      shards: Int, nCells: Int = AnnIndex.DefaultCells,
+      metaCols: Seq[String] = Nil, pq: Option[AnnIndex.PqSpec] = None): Unit =
+    buildFederation(emb, None, idCol, dir, shards, "buildShardedAnn", "sharded build root",
+        emptyRefusal = Some(NoVectors)) { (slice, _, d) =>
+      AnnIndex.build(slice, idCol, vecCol, d, nCells, metaCols = metaCols, pq = pq)
+    }
+
+  /** Why a dense shard no vector routed to cannot be built. */
+  private[graft] val NoVectors =
+    "would receive no vectors — quantizer training needs data in every shard"
+
+  /** The builds' and [[reshard]]'s one body: route `rows` (and `meta`,
+    * when the kind stages it apart) ONCE by `shards`, build every shard
+    * of a virgin root from its slices concurrently, rebuild a GLOBAL
+    * champion selection when `championC > 0`, and claim shards.json
+    * LAST — a crash anywhere leaves an unreadable root whose retry
+    * sweeps the debris. A kind that cannot build an empty shard refuses
+    * from the staging listing, before any shard builds.
+    */
+  private def buildFederation(rows: DataFrame, meta: Option[DataFrame], idCol: String,
+      dir: String, shards: Int, op: String, what: String, emptyRefusal: Option[String],
+      championC: Int = 0)(build: (DataFrame, Option[DataFrame], String) => Unit): Unit = {
+    require(shards >= 1, s"$op needs shards >= 1, got $shards")
+    val spark = rows.sparkSession
+    claimVirginRoot(spark, dir, what)
+    withRoutedContent(rows, meta, idCol, shards, dir) { (hit, slice) =>
+      unfilled(emptyRefusal, 0 until shards, hit).foreach(why =>
+        throw new IllegalArgumentException(s"$op: $why at $dir — use fewer shards for this corpus"))
+      concurrently(0 until shards) { i =>
+        val (r, m) = slice(i)
+        build(r, m, shardDir(dir, i))
+      }
+    }
+    // champion lifecycle BEFORE the marker: a source that served
+    // approximate produces a destination that serves approximate with
+    // no manual step, whole-or-nothing under the marker-last rule
+    if (championC > 0)
+      buildChampionsOver(spark, dir, (0 until shards).map(shardDir(dir, _)), championC)
     writeShardsFile(spark, dir, shards)
   }
 
-  /** One shard's routed slice — or an empty, schema-correct relation
-    * when nothing routed there (partitionBy writes no dir for an empty
-    * partition; a sparse corpus must still build ALL declared shards so
-    * the federation serves uniformly).
+  /** The refusal for the `targets` no row routed to, when the kind
+    * cannot build an empty shard.
     */
-  private def shardSlice(spark: SparkSession, staging: String, i: Int,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$staging/__shard=$i")
-    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      spark.read.schema(schema).parquet(p.toString)
-    else emptyDf(spark, schema)
+  private def unfilled(emptyRefusal: Option[String], targets: Seq[Int],
+      hit: Seq[Int]): Option[String] = {
+    val empty = targets.filterNot(hit.contains)
+    emptyRefusal.filter(_ => empty.nonEmpty).map(why => s"shards ${empty.mkString(", ")} $why")
   }
 
   /** Empty, schema-correct local relation — the shared "no rows routed
@@ -263,32 +287,33 @@ object ShardedIndex {
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
-  /** Route a maintenance batch ONCE into a staging tree partitioned by
-    * shard — the build's own pattern ([[buildSharded]]), applied to the
-    * delta/CDC/delete paths. Two properties the round-13 filter-per-
-    * shard version lacked:
+  /** Route a batch ONCE into a staging tree partitioned by shard — the
+    * one routing step under every build, reshard and maintenance fold.
+    * Two properties the round-13 filter-per-shard version lacked:
     *
     *  - '''one batch scan''': each affected shard's fold re-scans its
     *    input several times ([[InvertedIndex.addDelta]] stages postings
     *    + meta; [[InvertedIndex.applyCdc]] more), and a filter over the
     *    computed `__shard` column pushes nothing — so the old path
     *    re-read the ENTIRE batch once per affected shard per internal
-    *    pass, S× read amplification per micro-batch (the exact hazard
-    *    the build comment calls out). Staging pays one scan + one
-    *    churn-sized write; every later pass reads only its shard's
-    *    staged files (spec-pinned by a files-opened counter).
+    *    pass, S× read amplification per micro-batch. Staging pays one
+    *    scan + one churn-sized write; every later pass reads only its
+    *    shard's staged files (spec-pinned by a files-opened counter).
     *  - '''one materialization''': a nondeterministic input (limit /
     *    sample without ordering) re-evaluated per shard could route a
     *    row to a shard absent from a separately-collected hit set and
     *    silently drop it. Here the hit set IS the staging tree's
     *    partition directories — probe and apply read the same bytes.
     *
-    * The staging tree is swept in `finally`; a JVM crash leaves only an
+    * `f` gets the hit shards (ascending) and each shard's slice: its
+    * staged rows, or an empty, schema-correct relation where nothing
+    * routed (partitionBy writes no dir for an empty partition). The
+    * staging tree is swept in `finally`; a JVM crash leaves only an
     * orphan UUID dir that [[sweepStaging]] (on the stream's vacuum
-    * cadence) or the next [[buildSharded]] at the path removes.
+    * cadence) or the next build at the path removes.
     */
   private def withRoutedSlices[T](batch: DataFrame, idCol: String, shards: Int,
-      dir: String)(f: Seq[(Int, DataFrame)] => T): T = {
+      dir: String)(f: (Seq[Int], Int => DataFrame) => T): T = {
     val spark = batch.sparkSession
     val staging = s"$dir/$MaintStagingDir/" +
       java.util.UUID.randomUUID().toString.replace("-", "")
@@ -301,10 +326,24 @@ object ShardedIndex {
         val hit = fs.listStatus(sp).toSeq
           .filter(s => s.isDirectory && s.getPath.getName.startsWith("__shard="))
           .map(_.getPath.getName.stripPrefix("__shard=").toInt).sorted
-        f(hit.map(i => i -> shardSlice(spark, staging, i, batch.schema)))
+        f(hit, i =>
+          if (hit.contains(i)) spark.read.schema(batch.schema).parquet(s"$staging/__shard=$i")
+          else emptyDf(spark, batch.schema))
       }
     } finally { fs.delete(sp, true); () }
   }
+
+  /** [[withRoutedSlices]] over a kind's rows and, when the kind routes
+    * them apart, their id-keyed metadata rows: each slice pairs the two.
+    */
+  private def withRoutedContent[T](rows: DataFrame, meta: Option[DataFrame], idCol: String,
+      shards: Int, dir: String)(f: (Seq[Int], Int => (DataFrame, Option[DataFrame])) => T): T =
+    withRoutedSlices(rows, idCol, shards, dir) { (hit, slice) =>
+      meta.fold(f(hit, i => (slice(i), None))) { m =>
+        withRoutedSlices(m, idCol, shards, dir)((_, metaSlice) =>
+          f(hit, i => (slice(i), Some(metaSlice(i)))))
+      }
+    }
 
   private[graft] val MaintStagingDir = "_maint_staging"
 
@@ -362,11 +401,10 @@ object ShardedIndex {
 
   /** Per-federation fold parallelism. Bounded: each in-flight fold
     * holds file handles + a staged slice's scan; S beyond the executor
-    * count only queues. Overridable for scale probes.
+    * count only queues.
     */
-  private[graft] val MaxShardConcurrency: Int =
-    sys.env.getOrElse("GRAFT_SHARD_CONCURRENCY",
-      math.max(2, Runtime.getRuntime.availableProcessors() / 4).toString).toInt
+  private val MaxShardConcurrency: Int =
+    math.max(2, Runtime.getRuntime.availableProcessors() / 4)
 
   private[graft] val HeartbeatIntervalMs = 30000L
 
@@ -446,10 +484,9 @@ object ShardedIndex {
   private def foldRouted(batch: DataFrame, idCol: String, dir: String, op: String)(
       fold: (DataFrame, String) => Unit): Seq[Int] = {
     val n = requireSteady(batch.sparkSession, dir, op)
-    withRoutedSlices(batch, idCol, n, dir) { slices =>
-      val byShard = slices.toMap
-      concurrently(slices.map(_._1))(i => fold(byShard(i), shardDir(dir, i)))
-      slices.map(_._1)
+    withRoutedSlices(batch, idCol, n, dir) { (hit, slice) =>
+      concurrently(hit)(i => fold(slice(i), shardDir(dir, i)))
+      hit
     }
   }
 
@@ -472,17 +509,11 @@ object ShardedIndex {
     */
   private def foldCdc(upserts: DataFrame, removals: DataFrame, idCol: String,
       dir: String, op: String)(fold: (DataFrame, DataFrame, String) => Unit): Seq[Int] = {
-    val spark = upserts.sparkSession
-    val n = requireSteady(spark, dir, op)
-    withRoutedSlices(upserts, idCol, n, dir) { upSlices =>
-      withRoutedSlices(removals, idCol, n, dir) { rmSlices =>
-        val up = upSlices.toMap
-        val rm = rmSlices.toMap
-        val hit = (up.keySet ++ rm.keySet).toSeq.sorted
-        concurrently(hit) { i =>
-          fold(up.getOrElse(i, emptyDf(spark, upserts.schema)),
-            rm.getOrElse(i, emptyDf(spark, removals.schema)), shardDir(dir, i))
-        }
+    val n = requireSteady(upserts.sparkSession, dir, op)
+    withRoutedSlices(upserts, idCol, n, dir) { (upHit, up) =>
+      withRoutedSlices(removals, idCol, n, dir) { (rmHit, rm) =>
+        val hit = (upHit ++ rmHit).distinct.sorted
+        concurrently(hit)(i => fold(up(i), rm(i), shardDir(dir, i)))
         hit
       }
     }
@@ -536,15 +567,7 @@ object ShardedIndex {
       s"bm25TopKTextSharded queries exceed ${InvertedIndex.MaxTermPrune} distinct " +
         "terms — batch fewer queries (the sharded serve is the serving-text shape)")
     // GLOBAL statistics: sums over the federation (driver scalars)
-    val stats = manifests.map { case (d, m) =>
-      IndexManifests.cachedStats(spark, d, m.statsDir) }
-    val nDocs = stats.map(_._1).sum
-    val sumdl = stats.map(_._2).sum
-    val dfGlobal: Map[String, Long] = manifests
-      .map { case (d, m) => IndexManifests.cachedTermDfs(spark, d, m.vocabDir, terms) }
-      .foldLeft(Map.empty[String, Long]) { (acc, one) =>
-        one.foldLeft(acc) { case (a, (t, df)) => a.updated(t, a.getOrElse(t, 0L) + df) }
-      }
+    val (nDocs, sumdl, dfGlobal) = globalStats(spark, manifests, terms)
     // filtered retrieval composes per shard: the predicate is per-DOC
     // (each shard's meta sidecar covers exactly its docs), so filtering
     // each shard's candidate rows before the union equals filtering the
@@ -713,15 +736,7 @@ object ShardedIndex {
     require(terms.size <= InvertedIndex.MaxTermPrune,
       s"bm25TopKTextApproxSharded queries exceed ${InvertedIndex.MaxTermPrune} " +
         "distinct terms — batch fewer queries")
-    val stats = manifests.map { case (d, m) =>
-      IndexManifests.cachedStats(spark, d, m.statsDir) }
-    val nDocs = stats.map(_._1).sum
-    val sumdl = stats.map(_._2).sum
-    val dfGlobal: Map[String, Long] = manifests
-      .map { case (d, m) => IndexManifests.cachedTermDfs(spark, d, m.vocabDir, terms) }
-      .foldLeft(Map.empty[String, Long]) { (acc, one) =>
-        one.foldLeft(acc) { case (a, (t, df)) => a.updated(t, a.getOrElse(t, 0L) + df) }
-      }
+    val (nDocs, sumdl, dfGlobal) = globalStats(spark, manifests, terms)
     // unfiltered approx serves over tombstone-free shards take the
     // fused two-scan path (champions + staged), the exact serve's rule
     val candidates = (if (where.isEmpty)
@@ -801,8 +816,9 @@ object ShardedIndex {
       case Some(fused) =>
         rankCounted(InvertedIndex.proximityMatches(fused, pairs, window), k)
       case None =>
-        mergeCounted((0 until n).map(i =>
-          InvertedIndex.proximityTopK(spark, shardDir(dir, i), pairs, window, k, where)), k)
+        rankCounted((0 until n).map(i =>
+          InvertedIndex.proximityTopK(spark, shardDir(dir, i), pairs, window, k, where))
+          .reduce(_ unionByName _), k)
     }
   }
 
@@ -832,18 +848,16 @@ object ShardedIndex {
       case Some(fused) =>
         rankCounted(InvertedIndex.spanNearMatches(fused, queries, slop, inOrder), k)
       case None =>
-        mergeCounted((0 until n).map(i =>
-          InvertedIndex.spanNearTopK(spark, shardDir(dir, i), queries, slop, inOrder, k, where)), k)
+        rankCounted((0 until n).map(i =>
+          InvertedIndex.spanNearTopK(spark, shardDir(dir, i), queries, slop, inOrder, k, where))
+          .reduce(_ unionByName _), k)
     }
   }
 
-  /** Merge per-shard (q, rank, doc_id, n) top-k lists by the single
-    * index's (n desc, doc_id asc) key — counts are per-doc and a doc
-    * lives wholly in one shard, so the merged answer equals the flat
-    * index's.
-    */
-  /** Rank fused (q, doc_id, n) matches globally — the fused paths'
-    * single-window twin of [[mergeCounted]].
+  /** Rank (q, doc_id, n) matches globally by the single index's
+    * (n desc, doc_id asc) key — fused matches, or the union of per-shard
+    * top-k lists: counts are per-doc and a doc lives wholly in one
+    * shard, so the merged answer equals the flat index's.
     */
   private def rankCounted(matches: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -854,14 +868,19 @@ object ShardedIndex {
       .select(col("q"), col("rank"), col("doc_id"), col("n"))
   }
 
-  private def mergeCounted(perShard: Seq[DataFrame], k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("q"))
-      .orderBy(col("n").desc, col("doc_id").asc)
-    perShard.reduce(_ unionByName _)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q"), col("rank"), col("doc_id"), col("n"))
+  /** Federation-GLOBAL BM25 statistics for `terms`: n and sumdl summed
+    * over the shards' cached stats scalars, per-term df over their vocab
+    * sidecars (driver-side, probe-sized, through the per-version caches
+    * — a doc set PARTITIONS across shards, so the sums are exactly the
+    * unsharded corpus statistics).
+    */
+  private def globalStats(spark: SparkSession, manifests: Seq[(String, InvertedIndex.Manifest)],
+      terms: Seq[String]): (Long, Long, Map[String, Long]) = {
+    val stats = manifests.map { case (d, m) => IndexManifests.cachedStats(spark, d, m.statsDir) }
+    val dfs = manifests
+      .flatMap { case (d, m) => IndexManifests.cachedTermDfs(spark, d, m.vocabDir, terms) }
+      .groupMapReduce(_._1)(_._2)(_ + _)
+    (stats.map(_._1).sum, stats.map(_._2).sum, dfs)
   }
 
   /** The single-index scoring arithmetic ([[InvertedIndex]]'s
@@ -962,8 +981,7 @@ object ShardedIndex {
     */
   def exportSharded(spark: SparkSession, srcDir: String, destDir: String): Long = {
     val n = requireSteady(spark, srcDir, "exportSharded")
-    requireVirginRoot(spark, destDir, "sharded export destination")
-    sweepUncommitted(spark, destDir)
+    claimVirginRoot(spark, destDir, "sharded export destination")
     val promoted = concurrently(0 until n) { i =>
       val s = shardDir(srcDir, i)
       // the watermark is the head BEFORE the export: a maintainer
@@ -981,19 +999,84 @@ object ShardedIndex {
     promoted.max
   }
 
+  /** One index kind's part in the federation's layout operations.
+    * [[reshard]] and [[reshardInPlace]] each run one body over either
+    * kind; these are the steps where the kinds differ. A payload is read
+    * off the shards' manifests ([[IndexManifests.Envelope.federation]]),
+    * so no layout operation asks which kind it holds; lexical
+    * ([[InvertedIndex.federation]]) and dense ([[AnnIndex.federation]])
+    * are the two.
+    */
+  private[graft] trait Payload {
+    /** Shard `i`'s live rows at its pinned manifest. */
+    def live(spark: SparkSession, i: Int): DataFrame
+    /** The routed content: the federation's live `rows` with `meta`
+      * (their latest metadata rows) joined on, or routed apart.
+      */
+    def withMeta(rows: DataFrame, meta: Option[DataFrame]): (DataFrame, Option[DataFrame])
+    /** Build a virgin shard at `dir` from its routed slices. */
+    def build(spark: SparkSession, rows: DataFrame, meta: Option[DataFrame], dir: String): Unit
+    /** Tombstone `leavers` — rows routed out of the shard at `dir` — in one claim. */
+    def remove(spark: SparkSession, dir: String, leavers: DataFrame): Unit
+    /** Why a shard no row routed to cannot be built, if it cannot. */
+    def emptyRefusal: Option[String]
+    /** The GLOBAL champion selection to rebuild on the new layout; 0 = none. */
+    def championC: Int
+  }
+
+  /** The one value shards must agree on, refused loudly when they don't. */
+  private[graft] def uniform[A](what: String, vals: Seq[A], dir: String): A = {
+    val d = vals.distinct
+    require(d.size == 1, s"federation shards disagree on $what ($d) at $dir")
+    d.head
+  }
+
+  /** Every shard's manifest (heads, or `pins`) and the federation's
+    * payload, which shard 0's manifest names (federations are
+    * homogeneous by construction).
+    */
+  private def pinned(spark: SparkSession, dir: String, n: Int,
+      pins: Option[Seq[Long]]): (Seq[(String, IndexManifests.Envelope)], Payload) = {
+    val shards = (0 until n).map { i =>
+      val d = shardDir(dir, i)
+      d -> pins.fold(IndexManifests.head(spark, d))(ps => IndexManifests.read(spark, d, ps(i)))
+    }
+    (shards, shards.head._2.federation(shards, dir))
+  }
+
+  /** The shards' live content — rows, and metadata when the kind routes
+    * it apart — keeping on shard `i` the ids `keep(i)` accepts. Each
+    * shard contributes the metadata of the ids it OWNS under the current
+    * layout only: an in-place reshard's leavers keep their metadata rows
+    * in the old shard's sidecar until compaction, and reading those too
+    * would route every moved id's metadata twice.
+    */
+  private def liveContent(spark: SparkSession, shards: Seq[(String, IndexManifests.Envelope)],
+      p: Payload, keep: Int => Column): (DataFrame, Option[DataFrame]) = {
+    val parts = shards.zipWithIndex.map { case ((d, m), i) =>
+      val own = Option.when(m.metaCols.nonEmpty)(
+        IndexManifests.latestMeta(spark, d, m.metaDirs, m.idCol)
+          .filter(routeOf(col(m.idCol), shards.size) === lit(i) && keep(i)))
+      (p.live(spark, i).filter(keep(i)), own)
+    }
+    p.withMeta(parts.map(_._1).reduce(_ unionByName _),
+      parts.flatMap(_._2).reduceOption(_ unionByName _))
+  }
+
   /** Re-shard a federation to a NEW shard count at a NEW root —
     * `shards.json` pins S forever (the route hash bakes it into every
     * maintenance and serve decision), so a growing federation changes S
-    * by rebuilding the LAYOUT, never the content: postings re-route
-    * from the source shards' live rows with no re-tokenization and no
-    * document text ([[InvertedIndex.buildFromPostings]]); an ANN
-    * federation re-routes its live vectors (per-shard quantizers
-    * retrain on the new slices — the federation's documented
-    * shard-local-geometry semantics). Whole-or-nothing visibility: the
-    * destination marker lands LAST, the source keeps serving untouched
-    * throughout, and a crash mid-reshard leaves an unreadable
-    * destination (the same posture as [[buildSharded]] — the retry
-    * sweeps the debris). Serve identity old-vs-new S is spec-pinned.
+    * by rebuilding the LAYOUT, never the content: the source shards'
+    * live rows re-route by the new modulus with no document text —
+    * postings rebuild with no re-tokenization
+    * ([[InvertedIndex.buildFromPostings]]), vectors retrain per-shard
+    * quantizers on the new slices (the federation's documented
+    * shard-local-geometry semantics) — and latest-wins metadata carries.
+    * Whole-or-nothing visibility: the destination marker lands LAST,
+    * the source keeps serving untouched throughout, and a crash
+    * mid-reshard leaves an unreadable destination (the same posture as
+    * [[buildSharded]] — the retry sweeps the debris). Serve identity
+    * old-vs-new S is spec-pinned.
     *
     * Not carried, by design: tombstones (already folded by the live
     * read), champion SIDECARS (layout-dependent — but a source that
@@ -1007,15 +1090,11 @@ object ShardedIndex {
     */
   def reshard(spark: SparkSession, srcDir: String, destDir: String,
       newShards: Int): Unit = {
-    require(newShards >= 1, s"reshard needs newShards >= 1, got $newShards")
     val n = requireSteady(spark, srcDir, "reshard")
-    requireVirginRoot(spark, destDir, "reshard destination")
-    sweepUncommitted(spark, destDir)
-    // the rebuild is payload code: shard 0's manifest names the kind
-    // (federations are homogeneous by construction)
-    if (IndexManifests.isAnnManifest(spark, shardDir(srcDir, 0)))
-      reshardAnn(spark, srcDir, destDir, n, newShards)
-    else reshardLexical(spark, srcDir, destDir, n, newShards)
+    val (shards, p) = pinned(spark, srcDir, n, None)
+    val (rows, meta) = liveContent(spark, shards, p, _ => lit(true))
+    buildFederation(rows, meta, shards.head._2.idCol, destDir, newShards, "reshard",
+      "reshard destination", p.emptyRefusal, p.championC)(p.build(spark, _, _, _))
   }
 
   /** Grow a federation's shard count IN PLACE, moving only the
@@ -1026,16 +1105,18 @@ object ShardedIndex {
     * current count): `pmod(h, kS) mod S == pmod(h, S)`, so every old
     * shard `i` splits into the family `{i, i+S, …, i+(k-1)S}` and a
     * document either STAYS in shard `i` (never read-rebuilt, never
-    * copied) or moves to a NEW shard of i's family. Work done:
+    * copied) or moves to a NEW shard of i's family. Work done, for
+    * either kind:
     *
     *  - one pass over each old shard's pinned live rows, routed once
     *    into a staging tree (leavers only — the stay set is filtered
     *    out at the scan);
-    *  - new shards `S..kS-1` build from their staged slices
-    *    ([[InvertedIndex.buildFromPostings]] — no re-tokenization);
+    *  - new shards `S..kS-1` build from their staged slices (postings
+    *    with no re-tokenization; vectors train the new shards'
+    *    quantizers while stayer shards keep their trained geometry);
     *  - old shards tombstone their leavers in one atomic removal claim
-    *    each, with vocab/stats corrections computed from the SAME
-    *    staged rows ([[InvertedIndex.removeRows]] — no second scan).
+    *    each from the SAME staged rows (lexical vocab/stats corrections
+    *    included — no second scan; dense removals are id-only).
     *
     * Visibility is MVCC at the layout level: step one commits a
     * transition overlay pinning every old shard's manifest version, so
@@ -1048,29 +1129,28 @@ object ShardedIndex {
     * point leaves a resumable transition: re-running with the same
     * target skips committed new shards (manifest exists) and
     * already-tombstoned old shards (head advanced past the pin), then
-    * flips. Vacuum floor during a transition: keepVersions >= 2 (the
-    * pins reference head-1 after tombstoning); pause streams against
-    * the federation (their folds refuse anyway).
+    * flips; re-running after the flip finds nothing left to do.
+    * Vacuum floor during a transition: keepVersions >= 2 (the pins
+    * reference head-1 after tombstoning); pause streams against the
+    * federation (their folds refuse anyway).
     *
     * If the pre-reshard federation served approximate (champion
     * sidecars present), the GLOBAL selection is rebuilt on the new
-    * layout before returning — reshard to approximate serve with no
-    * manual step.
-    *
-    * ANN federations take the same route-diff path
-    * ([[reshardInPlaceAnn]]): stayer shards keep their trained
-    * geometry, leavers train the new shards' quantizers, removals are
-    * id-only tombstones.
+    * layout before the flip — reshard to approximate serve with no
+    * manual step. A dense family shard no leaver routes to cannot train
+    * a quantizer: the transition aborts before any build instead of
+    * wedging.
     */
   def reshardInPlace(spark: SparkSession, dir: String, newShards: Int): Unit = {
     val l = layout(spark, dir)
-    val ann = IndexManifests.isAnnManifest(spark, shardDir(dir, 0))
     val n = l.shards
     l.pins match {
       case Some(_) =>
         require(l.target == newShards,
           s"an in-place reshard to ${l.target} shards is already in flight at " +
             s"$dir — re-run with newShards = ${l.target} to finish it")
+      case None if newShards == n && overlayLog(spark, dir).head().nonEmpty =>
+        return // the flip already landed: a re-run after it has nothing left to do
       case None =>
         require(newShards > n && newShards % n == 0,
           s"reshardInPlace grows along the route-stable axis only (newShards " +
@@ -1083,109 +1163,70 @@ object ShardedIndex {
           s"""{"shards": $n, "pins": [${heads.mkString(", ")}], "target": $newShards}""")
     }
     val pins = layout(spark, dir).pins.get
-    if (ann) reshardInPlaceAnn(spark, dir, n, newShards, pins)
-    else reshardInPlaceLex(spark, dir, n, newShards, pins)
-  }
-
-  /** ANN branch of [[reshardInPlace]]: stayer shards KEEP their trained
-    * geometry (a vector's cell assignment depends only on its shard's
-    * centroids — other docs leaving changes nothing), leaver vectors
-    * train the new shards' quantizers (the federation's shard-local-
-    * geometry semantics), and dense removals are id-only tombstones
-    * (no corpus stats to correct — cheaper than the lexical side's
-    * vocab corrections). Serving pins through [[shardManifests]]; at
-    * full probe the merged answer is exact over the unchanged corpus,
-    * so old-vs-new serve identity holds exactly ([[annTopKSharded]]).
-    */
-  private def reshardInPlaceAnn(spark: SparkSession, dir: String, n: Int,
-      newShards: Int, pins: Seq[Long]): Unit = {
-    val manifests = (0 until n).map { i =>
-      val d = shardDir(dir, i); d -> AnnIndex.readManifest(spark, d, pins(i))
-    }
-    val metaColsAll = manifests.map(_._2.metaCols).distinct
-    require(metaColsAll.size == 1,
-      s"federation shards disagree on metaCols ($metaColsAll) at $dir")
-    val metaCols = metaColsAll.head
-    val pq = manifests.head._2.codebooks match {
-      case cb if cb.nonEmpty => Some(AnnIndex.PqSpec(cb.length, cb.head.length))
-      case _ => None
-    }
-    val nCells = manifests.map(_._2.centroids.length).max
-    val fs = shardsPath(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val leavers = manifests.zipWithIndex.map { case ((d, m), i) =>
-      AnnIndex.liveRows(spark, d, m, m.vectors).select("neighbor_id", "__cv")
-        .filter(routeOf(col("neighbor_id"), newShards) =!= lit(i))
-    }.reduce(_ unionByName _)
-    val emb = if (metaCols.isEmpty) leavers else {
-      val meta = manifests.zipWithIndex.map { case ((d, m), i) =>
-        IndexManifests.latestMeta(spark, d, m.metaDirs, "neighbor_id")
-          .filter(routeOf(col("neighbor_id"), newShards) =!= lit(i))
-      }.reduce(_ unionByName _)
-      leavers.join(meta, Seq("neighbor_id"), "left")
-    }
-    val staging = s"$dir/$MaintStagingDir/reshard-" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val sp = new org.apache.hadoop.fs.Path(staging)
-    emb.withColumn("__shard", routeOf(col("neighbor_id"), newShards))
-      .write.partitionBy("__shard").mode("errorifexists").parquet(staging)
-    try {
-      withHeartbeat(fs, sp) {
-        val schema = org.apache.spark.sql.types.StructType(
-          emb.schema.fields.filterNot(_.name == "__shard"))
-        // DETERMINISTIC pre-check before any build: an uncommitted new
-        // shard with no routed vectors can never train a quantizer, and
-        // the overlay is already committed — without an abort here the
-        // federation would wedge in-transition forever (review r15).
-        // Builds haven't started and removals run after them, so no old
-        // head has advanced: the transition rolls back cleanly.
-        val unbuildable = (n until newShards).filter { j =>
-          IndexManifests.versions(spark, shardDir(dir, j)).isEmpty &&
-            !fs.exists(new org.apache.hadoop.fs.Path(s"$staging/__shard=$j"))
-        }
-        if (unbuildable.nonEmpty) {
-          abortReshardInPlace(spark, dir)
-          throw new IllegalArgumentException(
-            s"ANN reshard shards ${unbuildable.mkString(", ")} of $dir would " +
-              "receive no vectors — quantizer training needs data in every " +
-              "shard; the transition was ABORTED (layout restored to " +
-              s"$n shards). Grow by a smaller multiple or reshard to a new root.")
-        }
-        concurrently(n until newShards) { j =>
-          val jd = shardDir(dir, j)
-          if (IndexManifests.versions(spark, jd).isEmpty) {
-            val jp = new org.apache.hadoop.fs.Path(jd)
-            if (fs.exists(jp)) fs.delete(jp, true)
-            AnnIndex.build(shardSlice(spark, staging, j, schema),
-              "neighbor_id", "__cv", jd, nCells, metaCols = metaCols, pq = pq)
-          }
-        }
-        // removal-shape resume check — the lexical branch's rule on the
-        // dense manifest (vectors untouched, exactly one tombstone)
-        concurrently(0 until n) { i =>
-          val d = shardDir(dir, i)
-          val pinM = manifests(i)._2
-          if (AnnIndex.currentManifest(spark, d).version == pins(i)) {
-            val fam = ((i + n) until newShards by n)
-              .map(j => shardSlice(spark, staging, j, schema))
-            AnnIndex.deleteVecs(
-              fam.reduce(_ unionByName _).select("neighbor_id"), "neighbor_id", d)
-          } else {
-            val next = AnnIndex.readManifest(spark, d, pins(i) + 1)
-            require(next.vectors == pinM.vectors &&
-                next.deletes.size == pinM.deletes.size + 1,
-              s"a foreign commit interleaved with the in-place reshard at $d " +
-                s"(v${pins(i) + 1} is not the transition's removal) — the " +
-                "federation's content is no longer the pinned snapshot; abort " +
-                "is not safe, investigate manually")
-          }
+    val (shards, p) = pinned(spark, dir, n, Some(pins))
+    val idCol = shards.head._2.idCol
+    // leavers only: every leaver's target is >= n (j ≡ i mod n and
+    // j != i implies j >= n)
+    val (rows, meta) = liveContent(spark, shards, p,
+      i => routeOf(col(idCol), newShards) =!= lit(i))
+    withRoutedContent(rows, meta, idCol, newShards, dir) { (hit, slice) =>
+      val unbuilt = (n until newShards).filter(j =>
+        IndexManifests.versions(spark, shardDir(dir, j)).isEmpty)
+      // DETERMINISTIC pre-check before any build: the overlay is already
+      // committed, so a new shard the kind cannot build would wedge the
+      // federation in-transition forever. Builds haven't
+      // started and removals run after them, so no old head has
+      // advanced: the transition rolls back cleanly.
+      unfilled(p.emptyRefusal, unbuilt, hit).foreach { why =>
+        abortReshardInPlace(spark, dir)
+        throw new IllegalArgumentException(s"in-place reshard $why at $dir; the " +
+          s"transition was ABORTED (layout restored to $n shards). Grow by a " +
+          "smaller multiple or reshard to a new root.")
+      }
+      val fs = shardsPath(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      concurrently(unbuilt) { j =>
+        val jp = new org.apache.hadoop.fs.Path(shardDir(dir, j))
+        if (fs.exists(jp)) fs.delete(jp, true) // half-built debris
+        val (r, m) = slice(j)
+        p.build(spark, r, m, shardDir(dir, j))
+      }
+      // old shards: one atomic removal claim each over the SAME staged
+      // rows. A head past the pin is accepted ONLY when version pin+1 is
+      // recognizably OURS (payload files untouched, exactly one
+      // tombstone added — or the champion selection's commit on a
+      // no-leaver shard): a foreign maintenance commit interleaving
+      // with the transition must refuse loudly, not masquerade as a
+      // landed removal
+      concurrently(0 until n) { i =>
+        val (d, pin) = shards(i)
+        if (IndexManifests.head(spark, d).version == pins(i)) {
+          val family = ((i + n) until newShards by n).filter(hit.contains)
+          if (family.nonEmpty)
+            p.remove(spark, d, family.map(j => slice(j)._1).reduce(_ unionByName _))
+        } else {
+          val next = IndexManifests.read(spark, d, pins(i) + 1)
+          require(next.files == pin.files && (next.deletes.size == pin.deletes.size + 1 ||
+              p.championC > 0 && next.deletes == pin.deletes),
+            s"a foreign commit interleaved with the in-place reshard at $d " +
+              s"(v${pins(i) + 1} is neither the transition's removal nor its " +
+              "champion selection) — the federation's content is no longer " +
+              "the pinned snapshot; abort is not safe, investigate manually")
         }
       }
-    } finally { fs.delete(sp, true); () }
+      // champion lifecycle BEFORE the flip: a crash between flip and
+      // rebuild would strand approximate serving with no resume path —
+      // pre-flip, the selection runs over the explicit
+      // post-reshard shard set (old shards at post-tombstone heads, new
+      // shards fresh = the post-flip corpus), invisibly to the pinned
+      // serve; the flip lands last
+      if (p.championC > 0)
+        buildChampionsOver(spark, dir, (0 until newShards).map(shardDir(dir, _)), p.championC)
+    }
     commitOverlay(spark, dir, s"""{"shards": $newShards}""")
   }
 
   /** Abort an in-flight in-place reshard — the escape hatch for a
-    * transition that cannot complete (e.g. an ANN family shard with no
+    * transition that cannot complete (e.g. a dense family shard with no
     * vectors). Only legal while NO old shard has advanced past its pin
     * (leaver removals are the point of no return — after them the only
     * way out is forward: re-run [[reshardInPlace]] with the declared
@@ -1212,230 +1253,7 @@ object ShardedIndex {
     commitOverlay(spark, dir, s"""{"shards": ${l.shards}}""")
   }
 
-  private def reshardInPlaceLex(spark: SparkSession, dir: String, n: Int,
-      newShards: Int, pins: Seq[Long]): Unit = {
-    val manifests = (0 until n).map { i =>
-      val d = shardDir(dir, i); d -> InvertedIndex.readManifest(spark, d, pins(i))
-    }
-    def uniform[A](what: String, vals: Seq[A]): A = {
-      val d = vals.distinct
-      require(d.size == 1, s"federation shards disagree on $what ($d) at $dir")
-      d.head
-    }
-    val buckets   = uniform("bucket modulus", manifests.map(_._2.buckets))
-    val positions = uniform("positions flag", manifests.map(_._2.positions))
-    val metaCols  = uniform("metaCols", manifests.map(_._2.metaCols))
-    val fs = shardsPath(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    // leavers only, routed ONCE into a heartbeated staging tree (the
-    // stay set never leaves its shard — the route-diff bound): every
-    // leaver's target is >= n (j ≡ i mod n and j != i implies j >= n)
-    val leavers = manifests.zipWithIndex.map { case ((d, m), i) =>
-      InvertedIndex.liveRows(spark, d, m, m.postings)
-        .filter(routeOf(col("doc_id"), newShards) =!= lit(i))
-    }.reduce(_ unionByName _)
-    val staging = s"$dir/$MaintStagingDir/reshard-" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val sp = new org.apache.hadoop.fs.Path(staging)
-    leavers.withColumn("__shard", routeOf(col("doc_id"), newShards))
-      .write.partitionBy("__shard").mode("errorifexists").parquet(staging)
-    // the meta slices live INSIDE the heartbeated staging tree: a
-    // sibling dir would sit under _maint_staging with only write-time
-    // mtimes, and a concurrent maintainer's sweep could silently empty
-    // every new shard's sidecar mid-build (review r15)
-    val metaStaging = s"$staging/meta"
-    val liveMeta = if (metaCols.isEmpty) None else Some {
-      manifests.zipWithIndex.map { case ((d, m), i) =>
-        IndexManifests.latestMeta(spark, d, m.metaDirs, "doc_id")
-          .filter(routeOf(col("doc_id"), newShards) =!= lit(i))
-      }.reduce(_ unionByName _)
-    }
-    liveMeta.foreach(_.withColumn("__shard", routeOf(col("doc_id"), newShards))
-      .write.partitionBy("__shard").mode("errorifexists").parquet(metaStaging))
-    try {
-      withHeartbeat(fs, sp) {
-        val rowSchema = org.apache.spark.sql.types.StructType.fromDDL(
-          if (positions)
-            "doc_id BIGINT, tok STRING, tf BIGINT, dl BIGINT, positions ARRAY<INT>"
-          else "doc_id BIGINT, tok STRING, tf BIGINT, dl BIGINT")
-        // new shards: skip the already-committed (resume), sweep + build
-        // the rest from their staged slices
-        concurrently(n until newShards) { j =>
-          val jd = shardDir(dir, j)
-          if (IndexManifests.versions(spark, jd).isEmpty) {
-            val jp = new org.apache.hadoop.fs.Path(jd)
-            if (fs.exists(jp)) fs.delete(jp, true) // half-built debris
-            val slice = shardSlice(spark, staging, j, rowSchema)
-            val metaSlice = liveMeta.map(lm =>
-              shardSlice(spark, metaStaging, j, lm.schema))
-            InvertedIndex.buildFromPostings(spark, slice, metaSlice, jd,
-              buckets, positions, metaCols)
-          }
-        }
-        // old shards: one atomic removal claim each over the SAME staged
-        // rows. A head past the pin is accepted ONLY when version pin+1
-        // is recognizably OURS (stayer postings untouched, exactly one
-        // tombstone added — or a champion-only commit on a no-leaver
-        // shard): a foreign maintenance commit interleaving with the
-        // transition must refuse loudly, not masquerade as a landed
-        // removal (review r15)
-        concurrently(0 until n) { i =>
-          val d = shardDir(dir, i)
-          val pinM = manifests(i)._2
-          if (InvertedIndex.currentManifest(spark, d).version == pins(i)) {
-            val fam = ((i + n) until newShards by n)
-              .map(j => shardSlice(spark, staging, j, rowSchema))
-            InvertedIndex.removeRows(spark, d, fam.reduce(_ unionByName _))
-          } else {
-            val next = InvertedIndex.readManifest(spark, d, pins(i) + 1)
-            val ourRemoval = next.postings == pinM.postings &&
-              next.deletes.size == pinM.deletes.size + 1
-            val ourChampions = next.postings == pinM.postings &&
-              next.deletes == pinM.deletes
-            require(ourRemoval || ourChampions,
-              s"a foreign commit interleaved with the in-place reshard at $d " +
-                s"(v${pins(i) + 1} is neither the transition's removal nor its " +
-                "champion selection) — the federation's content is no longer " +
-                "the pinned snapshot; abort is not safe, investigate manually")
-          }
-        }
-        // champion lifecycle BEFORE the flip: a crash between flip and
-        // rebuild would strand approximate serving with no resume path
-        // (review r15) — pre-flip, the selection runs over the explicit
-        // post-reshard shard set (old shards at post-tombstone heads,
-        // new shards fresh = the post-flip corpus), invisibly to the
-        // pinned serve; the flip lands last
-        val c = manifests.map(_._2.championC).max
-        if (c > 0)
-          buildChampionsOver(spark, dir, (0 until newShards).map(shardDir(dir, _)), c)
-      }
-    } finally { fs.delete(sp, true); () }
-    commitOverlay(spark, dir, s"""{"shards": $newShards}""")
-  }
-
-  private def reshardLexical(spark: SparkSession, srcDir: String, destDir: String,
-      n: Int, newShards: Int): Unit = {
-    val manifests = (0 until n).map { i =>
-      val d = shardDir(srcDir, i); d -> InvertedIndex.currentManifest(spark, d)
-    }
-    def uniform[A](what: String, vals: Seq[A]): A = {
-      val d = vals.distinct
-      require(d.size == 1, s"federation shards disagree on $what ($d) at $srcDir")
-      d.head
-    }
-    val buckets   = uniform("bucket modulus", manifests.map(_._2.buckets))
-    val positions = uniform("positions flag", manifests.map(_._2.positions))
-    val metaCols  = uniform("metaCols", manifests.map(_._2.metaCols))
-    // ONE federated pass over live postings, routed once by the new
-    // modulus into a staging tree (the build's own pattern)
-    val live = manifests.map { case (d, m) =>
-      InvertedIndex.liveRows(spark, d, m, m.postings)
-    }.reduce(_ unionByName _)
-    val staging = s"$destDir/_route_staging"
-    val sp = new org.apache.hadoop.fs.Path(staging)
-    val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    live.withColumn("__shard", routeOf(col("doc_id"), newShards))
-      .write.partitionBy("__shard").mode("errorifexists").parquet(staging)
-    val metaStaging = s"$destDir/_route_staging_meta"
-    val liveMeta = if (metaCols.isEmpty) None else Some {
-      manifests.map { case (d, m) =>
-        IndexManifests.latestMeta(spark, d, m.metaDirs, "doc_id")
-      }.reduce(_ unionByName _)
-    }
-    liveMeta.foreach(_.withColumn("__shard", routeOf(col("doc_id"), newShards))
-      .write.partitionBy("__shard").mode("errorifexists").parquet(metaStaging))
-    try {
-      val rowSchema = org.apache.spark.sql.types.StructType.fromDDL(
-        if (positions)
-          "doc_id BIGINT, tok STRING, tf BIGINT, dl BIGINT, positions ARRAY<INT>"
-        else "doc_id BIGINT, tok STRING, tf BIGINT, dl BIGINT")
-      concurrently(0 until newShards) { i =>
-        val slice = shardSlice(spark, staging, i, rowSchema)
-        val metaSlice = liveMeta.map(lm => shardSlice(spark, metaStaging, i, lm.schema))
-        InvertedIndex.buildFromPostings(spark, slice, metaSlice,
-          shardDir(destDir, i), buckets, positions, metaCols)
-      }
-    } finally {
-      fs.delete(sp, true)
-      fs.delete(new org.apache.hadoop.fs.Path(metaStaging), true)
-      ()
-    }
-    // champion lifecycle BEFORE the marker: a source that served
-    // approximate produces a destination that serves approximate with
-    // no manual step — and the marker-last rule keeps it whole-or-
-    // nothing (a crash mid-selection leaves an unreadable destination;
-    // the retry rebuilds everything)
-    val c = manifests.map(_._2.championC).max
-    if (c > 0)
-      buildChampionsOver(spark, destDir, (0 until newShards).map(shardDir(destDir, _)), c)
-    writeShardsFile(spark, destDir, newShards)
-  }
-
-  private def reshardAnn(spark: SparkSession, srcDir: String, destDir: String,
-      n: Int, newShards: Int): Unit = {
-    val manifests = (0 until n).map { i =>
-      val d = shardDir(srcDir, i); d -> AnnIndex.currentManifest(spark, d)
-    }
-    val metaColsAll = manifests.map(_._2.metaCols).distinct
-    require(metaColsAll.size == 1,
-      s"federation shards disagree on metaCols ($metaColsAll) at $srcDir")
-    val metaCols = metaColsAll.head
-    // PQ spec re-derives from shard 0's codebook shape (uniform by
-    // construction); codebooks retrain per new shard on its slice
-    val pq = manifests.head._2.codebooks match {
-      case cb if cb.nonEmpty => Some(AnnIndex.PqSpec(cb.length, cb.head.length))
-      case _ => None
-    }
-    val nCells = manifests.map(_._2.centroids.length).max
-    val live = manifests.map { case (d, m) =>
-      AnnIndex.liveRows(spark, d, m, m.vectors).select("neighbor_id", "__cv")
-    }.reduce(_ unionByName _)
-    val emb = if (metaCols.isEmpty) live else {
-      val meta = manifests.map { case (d, m) =>
-        IndexManifests.latestMeta(spark, d, m.metaDirs, "neighbor_id")
-      }.reduce(_ unionByName _)
-      live.join(meta, Seq("neighbor_id"), "left")
-    }
-    // buildShardedAnn routes once through its own staging tree and
-    // writes the destination marker LAST
-    buildShardedAnn(emb, "neighbor_id", "__cv", destDir, newShards, nCells,
-      metaCols = metaCols, pq = pq)
-  }
-
   // ---- dense federation -----------------------------------------------
-
-  /** Build an S-shard ANN federation: each shard trains its OWN
-    * centroids on its slice (shard-local quantizers — the federation
-    * never needs a global codebook; a probe fans out and each shard
-    * answers from its own geometry). Every shard must receive at least
-    * one vector (quantizer training needs data): fewer vectors than
-    * shards is a config error, loudly.
-    */
-  def buildShardedAnn(emb: DataFrame, idCol: String, vecCol: String, dir: String,
-      shards: Int, nCells: Int = AnnIndex.DefaultCells,
-      metaCols: Seq[String] = Nil, pq: Option[AnnIndex.PqSpec] = None): Unit = {
-    require(shards >= 1, s"buildShardedAnn needs shards >= 1, got $shards")
-    val spark = emb.sparkSession
-    requireVirginRoot(spark, dir, "sharded build root")
-    sweepUncommitted(spark, dir)
-    val staging = s"$dir/_route_staging"
-    emb.withColumn("__shard", routeOf(col(idCol), shards))
-      .write.partitionBy("__shard").mode("errorifexists").parquet(staging)
-    try {
-      concurrently(0 until shards) { i =>
-        val slice = shardSlice(spark, staging, i, emb.schema)
-        require(!slice.isEmpty,
-          s"ANN shard $i of $dir received no vectors — quantizer training " +
-            "needs data in every shard; use fewer shards for this corpus")
-        AnnIndex.build(slice, idCol, vecCol, shardDir(dir, i), nCells,
-          metaCols = metaCols, pq = pq)
-      }
-    } finally {
-      val sp = new org.apache.hadoop.fs.Path(staging)
-      sp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(sp, true)
-    }
-    writeShardsFile(spark, dir, shards)
-  }
 
   /** Fold new vectors into the federation (per-shard
     * [[AnnIndex.addDelta]] against each shard's persisted centroids).
@@ -1515,15 +1333,7 @@ object ShardedIndex {
       s"moreLikeThisTopKTextSharded exemplars exceed ${InvertedIndex.MaxTermPrune} " +
         "distinct (text, term) pairs — batch fewer/smaller exemplars")
     val toks = probePairs.map(_._2).distinct
-    val stats = manifests.map { case (d, mf) =>
-      IndexManifests.cachedStats(spark, d, mf.statsDir) }
-    val nDocs = stats.map(_._1).sum
-    val sumdl = stats.map(_._2).sum
-    val dfGlobal: Map[String, Long] = manifests
-      .map { case (d, mf) => IndexManifests.cachedTermDfs(spark, d, mf.vocabDir, toks) }
-      .foldLeft(Map.empty[String, Long]) { (acc, one) =>
-        one.foldLeft(acc) { case (a, (t, df)) => a.updated(t, a.getOrElse(t, 0L) + df) }
-      }
+    val (nDocs, sumdl, dfGlobal) = globalStats(spark, manifests, toks)
     // the flat index's exact integer selection over the GLOBAL dfs
     def idfFp(df: Long): Long = ((2L * nDocs - 2L * df + 1L) * 1000L) / (2L * df + 1L)
     val selected = probePairs

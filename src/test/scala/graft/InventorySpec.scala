@@ -140,4 +140,24 @@ class InventorySpec extends SparkSpec {
       }
     assert(offenders.isEmpty, s"manifest-log protocol outside ManifestLog: ${offenders.mkString("; ")}")
   }
+
+  test("the index kind is read only where a manifest is parsed, and no layout operation has per-kind twins") {
+    // payload-specific steps are methods of the parsed manifest
+    // (IndexManifests.parse reads `centroids`): a second kind test, or a
+    // per-kind copy of a federation layout operation, is how the lexical
+    // and dense paths drifted apart before
+    val kindTest = """isAnnManifest|isInstanceOf\[(AnnIndex|InvertedIndex)\.Manifest\]""".r
+    val twin = """def\s+reshard\w*(Lex|Ann)""".r
+    val offenders = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala")).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val body = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        val kinds =
+          if (p.getFileName.toString == "IndexManifests.scala") Nil
+          else kindTest.findAllIn(body).toSeq
+        (kinds ++ twin.findAllIn(body)).map(hit => s"$p ($hit)")
+      }
+    assert(offenders.isEmpty, s"index-kind dispatch outside the manifest parse: ${offenders.mkString("; ")}")
+  }
 }

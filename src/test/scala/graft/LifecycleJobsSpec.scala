@@ -48,4 +48,35 @@ class LifecycleJobsSpec extends SparkSpec {
     assert(jobs == Seq("build" -> 3, "applyCdc" -> 7, "topK serve" -> 8),
       s"jobs per phase: $jobs")
   }
+
+  /** A federation's layout operations over one kind: build at 2 shards,
+    * reshard to 3 at a new root, grow the original to 4 in place. Both
+    * corpora carry one metadata column, so the sidecar's routing counts.
+    */
+  private def federationJobs(build: String => Unit): Seq[(String, Int)] = {
+    val root = Files.createTempDirectory("graft_jobs_fed")
+    val (fed, dest) = (s"$root/fed", s"$root/resharded")
+    JobCounter(spark) { c =>
+      Seq(
+        "build" -> c.jobsOf(build(fed)),
+        "reshard" -> c.jobsOf(operators.ShardedIndex.reshard(spark, fed, dest, 3)),
+        "reshardInPlace" -> c.jobsOf(operators.ShardedIndex.reshardInPlace(spark, fed, 4)))
+    }
+  }
+
+  test("lexical federation: jobs per phase (buildSharded, reshard, reshardInPlace)") {
+    val docs = new ServeScenario(spark).docs.withColumn("src", pmod(col("doc_id"), lit(3)))
+    val jobs = federationJobs(operators.ShardedIndex.buildSharded(docs, "doc_id", "text", _,
+      shards = 2, withPositions = false, metaCols = Seq("src")))
+    assert(jobs == Seq("build" -> 26, "reshard" -> 37, "reshardInPlace" -> 46),
+      s"jobs per phase: $jobs")
+  }
+
+  test("dense federation: jobs per phase (buildShardedAnn, reshard, reshardInPlace)") {
+    val emb = new ServeScenario(spark).emb
+    val jobs = federationJobs(operators.ShardedIndex.buildShardedAnn(emb, "vec_id", "embedding", _,
+      shards = 2, nCells = 4, metaCols = Seq("label")))
+    assert(jobs == Seq("build" -> 13, "reshard" -> 22, "reshardInPlace" -> 22),
+      s"jobs per phase: $jobs")
+  }
 }

@@ -42,7 +42,7 @@ final class ServeScenario(spark: SparkSession) {
   def lexServe(dir: String): DataFrame =
     InvertedIndex.bm25TopK(docs, "doc_id", "text", dir, probeIds = Seq(0L, 7L, 42L), k = 5)
 
-  private val emb = Tables(spark, sfDir).embeddings
+  val emb: DataFrame = Tables(spark, sfDir).embeddings
   private def corpus = emb.filter(col("vec_id") >= 20)
 
   def annBuild(dir: String): Unit =

@@ -45,6 +45,36 @@ class ShardedIndexSpec extends SparkSpec {
       .head().getInt(0)
   }
 
+  /** The dense legs' corpus: vectors with their `label` as metadata. */
+  private def labeled = Tables(spark, sfDir).embeddings.filter(col("vec_id") >= 5)
+
+  private val lowLabel = col("label") < 5
+
+  /** Full-probe (exact) dense serve over a 4-cell federation, optionally
+    * filtered through the shards' metadata sidecars.
+    */
+  private def annServed(dir: String, where: Option[org.apache.spark.sql.Column] = None) =
+    ShardedIndex.annTopKSharded(Tables(spark, sfDir).embeddings.filter(col("vec_id") < 3),
+        "vec_id", "embedding", dir, k = 5, nProbe = 8, where = where, excludeSelf = false)
+      .orderBy("probe_id", "rank").collect().map(_.toSeq).toSeq
+
+  /** A filtered dense serve is non-empty and returns only allowed ids. */
+  private def assertFiltered(rows: Seq[Seq[Any]]): Unit = {
+    val allowed = labeled.filter(lowLabel).select("vec_id").collect().map(_.getLong(0)).toSet
+    assert(rows.nonEmpty && rows.forall(r => allowed(r(1).asInstanceOf[Long])),
+      s"filtered dense serve returned disallowed or no neighbors: $rows")
+  }
+
+  /** Hand-commit a layout overlay: the state a crashed reshard leaves. */
+  private def writeOverlay(dir: String, version: Long, body: String): Unit = {
+    val ov = new org.apache.hadoop.fs.Path(s"$dir/reshard/v$version.json")
+    val fs = ov.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(ov.getParent)
+    val out = fs.create(ov, false)
+    out.write(body.getBytes("UTF-8"))
+    out.close()
+  }
+
   test("sharded BM25 serve is hash-identical to the unsharded index (global statistics)") {
     val flat = java.nio.file.Files.createTempDirectory("shidx_flat").toString
     val shrd = java.nio.file.Files.createTempDirectory("shidx_fed").toString
@@ -537,6 +567,21 @@ class ShardedIndexSpec extends SparkSpec {
       .orderBy("probe_id", "rank").collect().map(_.toSeq).toSeq
     assert(ann(annDst) == ann(annSrc),
       "resharded ANN federation diverged from the source at full probe")
+
+    // a dense federation WITH metadata: the sidecar re-routes with the
+    // vectors, so the filtered serve survives the new layout
+    val metaSrc = java.nio.file.Files.createTempDirectory("shidx_rs_msrc").toString
+    val metaDst = java.nio.file.Files.createTempDirectory("shidx_rs_mdst").toString
+    ShardedIndex.buildShardedAnn(labeled, "vec_id", "embedding", metaSrc,
+      shards = 3, nCells = 4, metaCols = Seq("label"))
+    val preFiltered = annServed(metaSrc, Some(lowLabel))
+    assertFiltered(preFiltered)
+    ShardedIndex.reshard(spark, metaSrc, metaDst, newShards = 2)
+    assert(ShardedIndex.shardCount(spark, metaDst) == 2)
+    assert(annServed(metaDst) == annServed(metaSrc),
+      "resharded dense federation with metadata diverged at full probe")
+    assert(annServed(metaDst, Some(lowLabel)) == preFiltered,
+      "dense metadata sidecar lost in reshard")
   }
 
   test("federated champion serving: GLOBAL top-c selection equals the flat approximate serve") {
@@ -769,6 +814,13 @@ class ShardedIndexSpec extends SparkSpec {
         ShardedIndex.shardDir(dir, i), m.statsDir)._1
     }
     assert(counts.sum == 60, s"per-shard doc counts ${counts} must sum to the live corpus")
+    // the leavers' metadata rows stay in the old shards' sidecars until
+    // compaction: the next reshard must take each shard's metadata for
+    // the ids it owns only, or every moved id arrives twice and the
+    // one-row-per-id sidecar check refuses
+    val again = java.nio.file.Files.createTempDirectory("shidx_rip_again").toString
+    ShardedIndex.reshard(spark, dir, again, newShards = 3)
+    assert(filt(again) == preFilt, "reshard after an in-place reshard lost metadata")
 
     // the ANN federation reshards in place too: stayer shards KEEP
     // their trained geometry (vector file lists untouched), leavers
@@ -793,6 +845,23 @@ class ShardedIndexSpec extends SparkSpec {
           ShardedIndex.shardDir(annDir, i)).vectors == preVectors(i),
         s"ANN stayer shard $i rewrote vector files — movement must be the route-diff")
     }
+
+    // ... and carries its metadata: the filtered serve is unchanged
+    val metaDir = java.nio.file.Files.createTempDirectory("shidx_rip_meta").toString
+    ShardedIndex.buildShardedAnn(labeled, "vec_id", "embedding", metaDir,
+      shards = 2, nCells = 4, metaCols = Seq("label"))
+    val preMeta = annServed(metaDir)
+    val preFiltered = annServed(metaDir, Some(lowLabel))
+    assertFiltered(preFiltered)
+    ShardedIndex.reshardInPlace(spark, metaDir, 4)
+    assert(ShardedIndex.shardCount(spark, metaDir) == 4)
+    assert(annServed(metaDir) == preMeta,
+      "dense in-place reshard with metadata changed the full-probe serve")
+    assert(annServed(metaDir, Some(lowLabel)) == preFiltered,
+      "dense in-place reshard lost metadata")
+    ShardedIndex.reshardInPlace(spark, metaDir, 8)
+    assert(annServed(metaDir, Some(lowLabel)) == preFiltered,
+      "second dense in-place reshard lost metadata")
   }
 
   test("mid-transition: serving stays pinned to the pre-reshard snapshot; maintenance refuses; resume completes") {
@@ -860,6 +929,86 @@ class ShardedIndexSpec extends SparkSpec {
     ShardedIndex.addDeltaSharded(Seq((900L, "alpha omega")).toDF("doc_id", "text"),
       "doc_id", "text", dir)
     assert(served(ShardedIndex.bm25TopKTextSharded(spark, dir, Seq("omega"), k = 3)).nonEmpty)
+
+    // the dense kind: the same crash state (overlay + one landed leaver
+    // removal) serves pinned, refuses maintenance, and resumes
+    val annDir = java.nio.file.Files.createTempDirectory("shidx_mid_ann").toString
+    ShardedIndex.buildShardedAnn(labeled, "vec_id", "embedding", annDir,
+      shards = 2, nCells = 4, metaCols = Seq("label"))
+    val preAnn = annServed(annDir)
+    val preFiltered = annServed(annDir, Some(lowLabel))
+    assertFiltered(preFiltered)
+    val annPins = (0 until 2).map(i =>
+      AnnIndex.currentManifest(spark, ShardedIndex.shardDir(annDir, i)).version)
+    writeOverlay(annDir, 1, s"""{"shards": 2, "pins": [${annPins.mkString(", ")}], "target": 4}""")
+    val a0 = ShardedIndex.shardDir(annDir, 0)
+    val am0 = AnnIndex.currentManifest(spark, a0)
+    AnnIndex.deleteVecs(AnnIndex.liveRows(spark, a0, am0, am0.vectors)
+        .filter(pmod(xxhash64(col("neighbor_id")), lit(4L)).cast("int") =!= lit(0))
+        .select("neighbor_id"), "neighbor_id", a0)
+    assert(AnnIndex.currentManifest(spark, a0).version > annPins(0),
+      "test setup: the dense removal must advance shard 0's head")
+    assert(annServed(annDir) == preAnn,
+      "mid-transition dense serve saw the invisible tombstone — pins not honored")
+    val ame = intercept[IllegalArgumentException] {
+      ShardedIndex.addDeltaShardedAnn(
+        Tables(spark, sfDir).embeddings.filter($"vec_id" < 2)
+          .select(col("vec_id") + 900000L as "vec_id", col("embedding")),
+        "vec_id", "embedding", annDir)
+    }
+    assert(ame.getMessage.contains("in flight"), s"unhelpful: ${ame.getMessage}")
+    ShardedIndex.reshardInPlace(spark, annDir, 4)
+    assert(ShardedIndex.shardCount(spark, annDir) == 4)
+    assert(annServed(annDir) == preAnn, "resumed dense reshard changed the serve")
+    assert(annServed(annDir, Some(lowLabel)) == preFiltered,
+      "resumed dense reshard lost metadata")
+
+    // a FOREIGN dense commit during a transition refuses the resume
+    val fDir = java.nio.file.Files.createTempDirectory("shidx_mid_annf").toString
+    ShardedIndex.buildShardedAnn(labeled, "vec_id", "embedding", fDir,
+      shards = 2, nCells = 4, metaCols = Seq("label"))
+    val fPins = (0 until 2).map(i =>
+      AnnIndex.currentManifest(spark, ShardedIndex.shardDir(fDir, i)).version)
+    writeOverlay(fDir, 1, s"""{"shards": 2, "pins": [${fPins.mkString(", ")}], "target": 4}""")
+    AnnIndex.addDelta(Tables(spark, sfDir).embeddings.filter($"vec_id" < 2)
+        .select(col("vec_id") + 900000L as "vec_id", col("embedding"), col("label")),
+      "vec_id", "embedding", ShardedIndex.shardDir(fDir, 0))
+    val afe = intercept[IllegalArgumentException] {
+      ShardedIndex.reshardInPlace(spark, fDir, 4)
+    }
+    assert(afe.getMessage.contains("foreign commit"), s"unhelpful: ${afe.getMessage}")
+  }
+
+  test("re-running a finished in-place reshard is a no-op, for both kinds") {
+    val s = spark
+    import s.implicits._
+    // the state a crash just after the flip claim leaves: the documented
+    // recovery (re-run with the same target) must succeed and change nothing
+    val corpus = (0L until 40L).map(i => (i, s"alpha beta word-$i gamma")).toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("shidx_rerun").toString
+    ShardedIndex.buildSharded(corpus, "doc_id", "text", dir, shards = 2)
+    ShardedIndex.reshardInPlace(spark, dir, 4)
+    val qs = Seq("alpha gamma", "beta")
+    val done = served(ShardedIndex.bm25TopKTextSharded(spark, dir, qs, k = 5))
+    val heads = shardVersions(dir, 4)
+    def overlays(d: String) = new java.io.File(s"$d/reshard").list().toSet
+    val flipped = overlays(dir)
+    ShardedIndex.reshardInPlace(spark, dir, 4)
+    assert(ShardedIndex.shardCount(spark, dir) == 4)
+    assert(shardVersions(dir, 4) == heads, "re-run committed to a shard")
+    assert(overlays(dir) == flipped, "re-run claimed a layout overlay")
+    assert(served(ShardedIndex.bm25TopKTextSharded(spark, dir, qs, k = 5)) == done)
+
+    val annDir = java.nio.file.Files.createTempDirectory("shidx_rerun_ann").toString
+    ShardedIndex.buildShardedAnn(labeled, "vec_id", "embedding", annDir,
+      shards = 2, nCells = 4)
+    ShardedIndex.reshardInPlace(spark, annDir, 4)
+    val annDone = annServed(annDir)
+    val annFlipped = overlays(annDir)
+    ShardedIndex.reshardInPlace(spark, annDir, 4)
+    assert(ShardedIndex.shardCount(spark, annDir) == 4)
+    assert(overlays(annDir) == annFlipped, "dense re-run claimed a layout overlay")
+    assert(annServed(annDir) == annDone)
   }
 
   test("abort rolls an un-landed transition back; foreign commits and landed removals refuse the easy paths") {
