@@ -1,4 +1,5 @@
 package graft
+import graft.streaming.ChangeCapture
 import org.apache.spark.sql.SparkSession
 
 /** Streaming throughput section of the bench: sustained rows/sec over
@@ -147,13 +148,8 @@ object StreamBenchSection {
     // idempotentAppend bootstraps the table on first commit)
     val tableDir = s"$work/table"
     val t1 = System.nanoTime()
-    val q = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt2")
-      .foreachBatch(graft.streaming.GraftStreamSink.idempotentAppend(tableDir) _)
-      .start()
-    q.awaitTermination()
+    ChangeCapture.drain(ChangeCapture.files(spark, schema, srcDir, Some(1)), s"$work/ckpt2")(
+      graft.streaming.GraftStreamSink.idempotentAppend(tableDir) _)
     val appendSec = (System.nanoTime() - t1) / 1e9
 
     // sanity: both paths must have moved every row, or the rate is a lie
@@ -233,26 +229,19 @@ object StreamBenchSection {
     val morTableDir = s"$work/wh/db/mor"
     val morBytes0   = dirBytes(morTableDir)
     val perBatch = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val keyed = graft.operators.MergeKey.withMergeKey(
-      spark.readStream.schema(churnSchema).option("maxFilesPerTrigger", 1).parquet(churnSrc),
-      Seq("event_id"))
+    val keyed = ChangeCapture.keyed(ChangeCapture.files(spark, churnSchema, churnSrc, Some(1)),
+      graft.operators.FieldSelection.All, Set.empty, Seq("event_id"), Nil, sourceVersion = false)
     val t0 = System.nanoTime()
-    val q = keyed.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt_mor")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        val b0 = System.nanoTime()
-        // tableDir hint = the production path (manifest-read replay
-        // pre-check instead of a per-batch SHOW TBLPROPERTIES), exactly
-        // what StreamMerge.runAvailableNow passes
-        graft.streaming.StreamMerge.idempotentMerge(
-          s"$cat.db.mor", Seq(graft.operators.MergeKey.ColumnName), Seq("version"),
-          tableDir = Some(morTableDir))(batch, batchId)
-        perBatch += (System.nanoTime() - b0) / 1e9
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    ChangeCapture.drain(keyed, s"$work/ckpt_mor") { (batch, batchId) =>
+      val b0 = System.nanoTime()
+      // tableDir hint = the production path (manifest-read replay
+      // pre-check instead of a per-batch SHOW TBLPROPERTIES), exactly
+      // what StreamMerge.runAvailableNow passes
+      graft.streaming.StreamMerge.idempotentMerge(
+        s"$cat.db.mor", Seq(graft.operators.MergeKey.ColumnName), Seq("version"),
+        tableDir = Some(morTableDir))(batch, batchId)
+      perBatch += (System.nanoTime() - b0) / 1e9
+    }
     val morSec = (System.nanoTime() - t0) / 1e9
     val morRows = spark.table(s"$cat.db.mor").count()
     require(morRows == seed.count() + nBatches.toLong * churnN,
@@ -301,22 +290,15 @@ object StreamBenchSection {
     // seed was batch 0: shift the stream's batch ids past it
     val upsBytes0 = dirBytes(upsDir)
     val upsBatch = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val upsKeyed = graft.operators.MergeKey.withMergeKey(
-      spark.readStream.schema(churnSchema).option("maxFilesPerTrigger", 1).parquet(churnSrc),
-      Seq("event_id"))
+    val upsKeyed = ChangeCapture.keyed(ChangeCapture.files(spark, churnSchema, churnSrc, Some(1)),
+      graft.operators.FieldSelection.All, Set.empty, Seq("event_id"), Nil, sourceVersion = false)
     val u0 = System.nanoTime()
-    val uq = upsKeyed.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt_ups")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        val b0 = System.nanoTime()
-        graft.streaming.StreamUpsert.idempotentUpsert(
-          upsDir, graft.operators.MergeKey.ColumnName, Seq("version"))(batch, batchId + 1)
-        upsBatch += (System.nanoTime() - b0) / 1e9
-        ()
-      }
-      .start()
-    uq.awaitTermination()
+    ChangeCapture.drain(upsKeyed, s"$work/ckpt_ups") { (batch, batchId) =>
+      val b0 = System.nanoTime()
+      graft.streaming.StreamUpsert.idempotentUpsert(
+        upsDir, graft.operators.MergeKey.ColumnName, Seq("version"))(batch, batchId + 1)
+      upsBatch += (System.nanoTime() - b0) / 1e9
+    }
     val upsSec = (System.nanoTime() - u0) / 1e9
     val upsCount = spark.table(s"$cat.db.ups").count()
     require(upsCount == morRows, s"eq-upsert growth target has $upsCount rows, MOR has $morRows")
@@ -369,7 +351,7 @@ object StreamBenchSection {
     val schema = spark.read.parquet(churnSrc).schema
 
     // pruned target: bucket column, seed clustered by bucket, modulus
-    // DECLARED — the stream's default Auto posture then prunes with it
+    // DECLARED — every stream into it then prunes with it
     spark.sql(s"""CREATE TABLE $cat.db.morp (
       event_id BIGINT, user_id BIGINT, event_type STRING, value DOUBLE,
       version BIGINT, arcane_merge_key STRING, ${StreamMerge.BucketColumnName} INT)
@@ -389,9 +371,9 @@ object StreamBenchSection {
       .repartition(nFiles)
       .writeTo(s"$cat.db.morf").append()
 
-    // BOTH drains run the DEFAULT config (Auto posture): pruning follows
-    // each table's own declaration — morp declares its modulus, morf is
-    // unbucketed — so this axis measures the out-of-the-box behavior
+    // BOTH drains run the DEFAULT config: pruning follows each table's
+    // own declaration — morp declares its modulus, morf is unbucketed —
+    // so this axis measures the out-of-the-box behavior
     def drain(table: String, ckpt: String): (Double, Double) = {
       val f0 = graft.catalog.GraftReadMetrics.dataFilesOpened
       val t0 = System.nanoTime()

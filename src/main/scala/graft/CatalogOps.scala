@@ -261,8 +261,8 @@ object CatalogOps {
             "CAST(o_totalprice AS DECIMAL(12,2)) AS totalprice",
             "o_orderstatus AS status", "CAST(1 AS BIGINT) AS version")
         // seedTarget: bucket column + declared modulus derived from the
-        // seed's size — the stream's default Auto posture then prunes
-        // its per-batch target reads, so the oracle gates the PRUNED
+        // seed's size — the stream then prunes its per-batch target
+        // reads with that modulus, so the oracle gates the PRUNED
         // merge path end to end
         graft.streaming.StreamMerge.seedTarget(spark, tbl, seed, Seq("o_orderkey"))
         val work = java.nio.file.Files.createTempDirectory("graft_smm").toString

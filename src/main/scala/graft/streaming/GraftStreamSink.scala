@@ -1,7 +1,6 @@
 package graft.streaming
 
-import graft.catalog.{GraftManifestIO, GraftParquetIO}
-import org.apache.hadoop.conf.Configuration
+import graft.catalog.{GraftCommitStamp, GraftManifestIO, GraftParquetIO}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 
@@ -56,27 +55,26 @@ object GraftStreamSink {
     */
   def idempotentAppend(tableDir: String)(batch: DataFrame, batchId: Long): Unit = {
     val io = new GraftManifestIO(new Path(tableDir), graft.catalog.GraftConf.hadoop)
-    def alreadyCommitted: Boolean =
-      io.currentSnapshot().exists(_.properties.get(BatchIdProp).exists(_.toLong >= batchId))
-    if (alreadyCommitted) return
+    if (io.currentSnapshot().exists(s => GraftCommitStamp.committed(s.properties, BatchIdProp, batchId)))
+      return
 
     val schema = batch.schema
     val entries = writeBatchFiles(tableDir, batch, batchId)
 
-    try io.commit("stream-append") { base =>
-      if (base.exists(_.properties.get(BatchIdProp).exists(_.toLong >= batchId)))
-        throw new ReplayedBatch // detected inside the commit window
-      val props = base.map(_.properties).getOrElse(Map.empty) + (BatchIdProp -> batchId.toString)
-      graft.catalog.GraftManifestIO.Content(
-        base.map(_.schema).getOrElse(schema), props,
-        base.map(_.files).getOrElse(Nil) ++
-          entries.map(_.copy(seq = graft.catalog.GraftManifestIO.PendingSeq)),
-        base.map(_.deletes).getOrElse(Nil),
-        base.map(_.eqDeletes).getOrElse(Nil))
+    // the stamp scope refuses a replay inside the commit window and
+    // stamps the batch id into the same snapshot as the files
+    try GraftCommitStamp.withBatchId(BatchIdProp, batchId) {
+      io.commit("stream-append") { base =>
+        graft.catalog.GraftManifestIO.Content(
+          base.map(_.schema).getOrElse(schema), base.map(_.properties).getOrElse(Map.empty),
+          base.map(_.files).getOrElse(Nil) ++
+            entries.map(_.copy(seq = graft.catalog.GraftManifestIO.PendingSeq)),
+          base.map(_.deletes).getOrElse(Nil),
+          base.map(_.eqDeletes).getOrElse(Nil))
+      }
     } catch {
-      case _: ReplayedBatch =>
-        // no snapshot written; drop the redundantly staged files
-        dropFiles(tableDir, entries)
+      // no snapshot written; drop the redundantly staged files
+      case e: Throwable if GraftCommitStamp.isReplay(e) => dropFiles(tableDir, entries)
     }
   }
 
@@ -112,6 +110,4 @@ object GraftStreamSink {
     if (!io.stageWapBatch(wapId, entries, BatchIdProp, batchId))
       dropFiles(tableDir, entries) // replay detected at the stage
   }
-
-  private final class ReplayedBatch extends RuntimeException
 }

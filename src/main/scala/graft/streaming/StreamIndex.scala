@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.operators.{AnnIndex, IndexManifests, InvertedIndex}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming maintenance for the persisted serving indexes: each
   * micro-batch of NEW documents/vectors folds into [[InvertedIndex]] /
@@ -36,11 +35,11 @@ import org.apache.spark.sql.streaming.Trigger
   * on a replayed batch — maintenance still fires, so a crash between
   * the index commit and the checkpoint advance re-runs the (idempotent,
   * content-neutral) pass instead of deferring it a full cadence. They
-  * are also best-effort: an OCC conflict that survives compact/vacuum's
-  * internal retries is swallowed (see [[maintain]]) — maintenance must
-  * never fail a streaming query whose batch already committed. The
-  * cadence bounds the per-delta small-file accumulation that costs
-  * ~30% serve time after ten unmaintained deltas (BENCH_SF1).
+  * are also best-effort ([[ChangeCapture.maintain]]): an OCC conflict
+  * that survives compact/vacuum's internal retries is swallowed —
+  * maintenance must never fail a streaming query whose batch already
+  * committed. The cadence bounds the per-delta small-file accumulation
+  * that costs ~30% serve time after ten unmaintained deltas (BENCH_SF1).
   */
 object StreamIndex {
 
@@ -92,7 +91,7 @@ object StreamIndex {
     * was applied, false for a replay skip.
     */
   private def flatFold(cfg: Config, batchId: Long, spark: org.apache.spark.sql.SparkSession,
-      compact: () => Int)(apply: => Unit): Boolean = {
+      compact: () => Any)(apply: => Unit): Boolean = {
     val replay = IndexManifests.committedBatchId(spark, cfg.indexDir, cfg.ns)
       .exists(_ >= batchId)
     if (!replay) apply
@@ -109,11 +108,9 @@ object StreamIndex {
   // stream serving the approximate mode re-selects on the same cadence —
   // inside the same best-effort wrapper (an OCC race defers to the next
   // cadence, never fails the batch)
-  private def compactLexical(spark: org.apache.spark.sql.SparkSession,
-      cfg: Config): Int = {
-    val folded = InvertedIndex.compact(spark, cfg.indexDir)
+  private def compactLexical(spark: org.apache.spark.sql.SparkSession, cfg: Config): Unit = {
+    InvertedIndex.compact(spark, cfg.indexDir)
     cfg.championC.foreach(c => InvertedIndex.buildChampions(spark, cfg.indexDir, c))
-    folded
   }
 
   /** foreachBatch handler growing an ANN index (vectors assign against
@@ -130,24 +127,11 @@ object StreamIndex {
     }
   }
 
-  // outside the stamp (maintenance is content-neutral and idempotent);
-  // thresholds key off the checkpointed batch id — the StreamMerge rule.
-  // BEST-EFFORT: compact/vacuum retry their OCC claim internally, but a
-  // conflict that survives the retries (a pathologically hot
-  // two-streams-one-index race) is swallowed here — the BATCH already
-  // committed, and failing the streaming query over discarded
-  // maintenance work would trade a deferred cleanup for an outage; the
-  // next cadence multiple simply re-runs it. Handlers also call this on
-  // REPLAYED batches (the stamp pre-check skips only the delta), so a
-  // crash between the index commit and checkpoint advance re-fires the
-  // maintenance pass instead of skipping a cadence.
-  private def maintain(cfg: Config, batchId: Long,
-      compact: () => Int, vacuum: () => Int): Unit = {
-    def bestEffort(step: () => Int): Unit =
-      try { step(); () } catch { case _: graft.catalog.GraftCommitConflict => () }
-    if (cfg.compactEveryBatches.exists(n => (batchId + 1) % n == 0)) bestEffort(compact)
-    if (cfg.vacuumEveryBatches.exists(n => (batchId + 1) % n == 0)) bestEffort(vacuum)
-  }
+  // outside the stamp, on REPLAYED batches too (the stamp pre-check
+  // skips only the delta): a crash between the index commit and the
+  // checkpoint advance re-fires the pass instead of skipping a cadence
+  private def maintain(cfg: Config, batchId: Long, compact: () => Any, vacuum: () => Any): Unit =
+    ChangeCapture.maintain(batchId)(cfg.compactEveryBatches -> compact, cfg.vacuumEveryBatches -> vacuum)
 
   /** CDC foreachBatch against the inverted index — the reference's
     * change-capture loop maintaining the SERVING layer. Batch rows
@@ -294,7 +278,7 @@ object StreamIndex {
     val hit = fold()
     val applied = hit.isEmpty ||
       stamped.zip(before).exists { case (now, was) => now && !was }
-    maintain(cfg, batchId, () => { compact(); n },
+    maintain(cfg, batchId, compact,
       () =>
         // an in-flight in-place reshard pins serving to pre-transition
         // manifest versions — vacuuming them out from under the pins
@@ -329,39 +313,23 @@ object StreamIndex {
   /** Drain a CDC source into the inverted index (one capture cycle). */
   def runInvertedCdcAvailableNow(source: DataFrame, textCol: String, opCol: String,
       oldTexts: DataFrame => DataFrame, cfg: Config): Long =
-    run(source, cfg)(invertedCdcBatch(cfg, textCol, opCol, oldTexts))
+    ChangeCapture.drain(source, cfg.checkpointDir)(invertedCdcBatch(cfg, textCol, opCol, oldTexts)(_, _))
 
   /** Drain all currently-available rows of `source` into the inverted
     * index (one maintenance cycle). Returns micro-batches processed.
     */
   def runInvertedAvailableNow(source: DataFrame, textCol: String, cfg: Config): Long =
-    run(source, cfg)(invertedBatch(cfg, textCol))
+    ChangeCapture.drain(source, cfg.checkpointDir)(invertedBatch(cfg, textCol)(_, _))
 
   /** Same cycle shape for the ANN index. */
   def runAnnAvailableNow(source: DataFrame, vecCol: String, cfg: Config): Long =
-    run(source, cfg)(annBatch(cfg, vecCol))
+    ChangeCapture.drain(source, cfg.checkpointDir)(annBatch(cfg, vecCol)(_, _))
 
   /** Same cycle shape for the sharded federation. */
   def runShardedAvailableNow(source: DataFrame, textCol: String, cfg: Config): Long =
-    run(source, cfg)(shardedInvertedBatch(cfg, textCol))
+    ChangeCapture.drain(source, cfg.checkpointDir)(shardedInvertedBatch(cfg, textCol)(_, _))
 
   /** Same cycle shape for the sharded ANN federation. */
   def runShardedAnnAvailableNow(source: DataFrame, vecCol: String, cfg: Config): Long =
-    run(source, cfg)(shardedAnnBatch(cfg, vecCol))
-
-  private def run(source: DataFrame, cfg: Config)(
-      handler: (DataFrame, Long) => Boolean): Long = {
-    var batches = 0L
-    val q = source.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        handler(batch, batchId)
-        batches += 1
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    batches
-  }
+    ChangeCapture.drain(source, cfg.checkpointDir)(shardedAnnBatch(cfg, vecCol)(_, _))
 }

@@ -4,7 +4,6 @@ import graft.catalog.{GraftCommitStamp, GraftMaintenance}
 import graft.operators.{FieldSelection, MergeKey, Upsert}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** Streaming CDC merge with O(changes) writes per micro-batch: each
@@ -86,23 +85,6 @@ object StreamMerge {
   def bucketExpr(nBuckets: Int): org.apache.spark.sql.Column =
     pmod(xxhash64(col(MergeKey.ColumnName)), lit(nBuckets.toLong)).cast("int")
 
-  /** Bucket pruning posture. [[Auto]] (the default) follows the
-    * target's own declaration: a table seeded with a bucket column and
-    * the [[BucketsProp]] property prunes with that modulus, an
-    * unbucketed table merges full-scan — the 100 TB-correct posture is
-    * on unless the table itself opted out at seed time. [[Fixed]]
-    * asserts the declared count (loud mismatch instead of silent
-    * duplicate-key inserts). [[Off]] skips the pruning conjunct but
-    * still maintains the bucket column on a declared table (so a later
-    * Auto run never sees NULL buckets).
-    */
-  sealed trait Bucketing
-  case object Auto extends Bucketing
-  final case class Fixed(n: Int) extends Bucketing {
-    require(n >= 1 && n <= MaxBuckets, s"bucket count must be in [1, $MaxBuckets], got $n")
-  }
-  case object Off extends Bucketing
-
   /** Bucket count for a target of `bytes`: one bucket per
     * [[DefaultBucketBytes]], clamped to [[[MinBuckets]], [[MaxBuckets]]].
     * At 100 TB this saturates at the cap — per-batch reads are then
@@ -153,17 +135,14 @@ object StreamMerge {
     n
   }
 
-  /** Resolved bucketing for one stream cycle: `n` = the modulus batches
-    * must compute [[BucketColumnName]] with (None ⇒ unbucketed target),
-    * `prune` = whether the per-batch IN conjunct is added. Fails
-    * LOUDLY on every silent-wrong configuration: a bucket column with
-    * no declared modulus, or a [[Fixed]] count that contradicts the
-    * declaration.
+  /** The bucket modulus a stream cycle computes [[BucketColumnName]]
+    * with and prunes by: the target's own [[BucketsProp]] declaration,
+    * or None for an unbucketed target (full-scan merges). Fails LOUDLY on
+    * the two silent-wrong tables: a bucket column with no declared
+    * modulus, and a declared modulus with no column.
     */
-  final case class ResolvedBuckets(n: Option[Int], prune: Boolean)
-
-  def resolveBuckets(spark: SparkSession, table: String, posture: Bucketing,
-      tableDir: Option[String] = None): ResolvedBuckets = {
+  def resolveBuckets(spark: SparkSession, table: String,
+      tableDir: Option[String] = None): Option[Int] = {
     // with the table's directory in hand (the streaming Config carries
     // it), the declaration reads from the manifest directly; the SQL
     // path stays for callers that only know the catalog name
@@ -183,21 +162,7 @@ object StreamMerge {
         s"$table carries $BucketColumnName with no declared $BucketsProp — the modulus is " +
           "unknowable and a mismatched batch silently turns updates into duplicate inserts; " +
           s"declare it (ALTER TABLE $table SET TBLPROPERTIES ('$BucketsProp' = '<n>'))")
-      case _ => ()
-    }
-    posture match {
-      case Off => ResolvedBuckets(declared, prune = false)
-      case Auto => ResolvedBuckets(declared, prune = declared.isDefined)
-      case Fixed(n) =>
-        declared match {
-          case Some(d) if d != n => sys.error(
-            s"$table declares $BucketsProp=$d but the stream was configured with $n — " +
-              "a mismatched modulus silently turns updates into duplicate inserts")
-          case Some(_) => ResolvedBuckets(Some(n), prune = true)
-          case None => sys.error(
-            s"Fixed($n) bucketing requires $table to declare $BucketsProp " +
-              s"(seed via StreamMerge.seedTarget, or ALTER TABLE ... SET TBLPROPERTIES)")
-        }
+      case _ => declared
     }
   }
 
@@ -257,17 +222,7 @@ object StreamMerge {
         * monotonic sequence); sharing one would make stream B's batch 0
         * look like a replay of stream A's batch 3.
         */
-      batchIdProp: String = StreamMerge.BatchIdProp,
-      /** read-amplification pruning posture ([[BucketColumnName]]): the
-        * default [[Auto]] prunes whenever the target declares its
-        * bucket modulus ([[BucketsProp]], set by [[seedTarget]]) — each
-        * batch's MERGE then reads only files whose bucket range covers
-        * the batch's keys, and threshold compaction clusters by bucket
-        * to keep those ranges tight. An unbucketed target (no
-        * declaration) merges full-scan; [[Off]] is the explicit
-        * skip-pruning knob.
-        */
-      bucketing: Bucketing = Auto)
+      batchIdProp: String = StreamMerge.BatchIdProp)
 
   /** Highest batch id stamped into the table's current snapshot under
     * `prop` (one stamp namespace per stream).
@@ -331,46 +286,31 @@ object StreamMerge {
     * (one change-capture cycle): file source → field selection → merge
     * key → per-batch idempotent MERGE, with threshold compaction on the
     * batch-id cadence (restart-safe: the cadence is a pure function of
-    * the checkpointed batch id). Returns micro-batches processed.
+    * the checkpointed batch id). A target that declares its bucket
+    * modulus ([[seedTarget]]) has every batch bucketed with it, each
+    * MERGE reads only the files whose bucket range covers the batch's
+    * keys, and compaction clusters by bucket to keep those ranges
+    * tight. Returns micro-batches processed.
     */
   def runAvailableNow(spark: SparkSession, schema: StructType, cfg: Config): Long = {
-    var batches = 0L
     // resolved ONCE per cycle against the target's own declaration —
     // the modulus can never drift from the table's bucket column
-    val resolved = resolveBuckets(spark, cfg.table, cfg.bucketing, Some(cfg.tableDir))
-    val reader = spark.readStream.schema(schema)
-    val src = cfg.maxFilesPerTrigger.fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(cfg.sourceDir)
-    val essentials = cfg.essentialFields ++ cfg.primaryKeys ++ cfg.versionCols
-    val withKey = MergeKey.withMergeKey(FieldSelection(src, cfg.fieldRule, essentials), cfg.primaryKeys)
-    val keyed = resolved.n.fold(withKey)(n =>
-      withKey.withColumn(BucketColumnName, bucketExpr(n)))
-    val pruneWith = resolved.n.filter(_ => resolved.prune)
-    val q = keyed.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        idempotentMerge(cfg.table, Seq(MergeKey.ColumnName), cfg.versionCols,
-          pruneWith, cfg.batchIdProp, Some(cfg.tableDir))(batch, batchId)
-        batches += 1
-        // OUTSIDE the stamp scope: maintenance is content-neutral and
-        // must not be refused as a "replay" of the batch it follows.
-        // Thresholds key off the checkpointed batchId, so the cadence
-        // is restart-safe (a replayed batch re-fires an idempotent
-        // maintenance pass, never skips one).
-        if (cfg.compactEveryBatches.exists(n => (batchId + 1) % n == 0))
-          GraftMaintenance.compact(spark, cfg.tableDir, cfg.compactSmallBytes,
-            // cluster by bucket so the next batches' scans prune tightly
-            sortCols = resolved.n.map(_ => Seq(BucketColumnName)).getOrElse(Nil))
-        if (cfg.expireEveryBatches.exists(n => (batchId + 1) % n == 0))
-          tableIO(cfg).expireSnapshots(cfg.keepSnapshots)
-        if (cfg.orphansEveryBatches.exists(n => (batchId + 1) % n == 0))
-          tableIO(cfg).removeOrphans()
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    batches
+    val buckets = resolveBuckets(spark, cfg.table, Some(cfg.tableDir))
+    val keyed = ChangeCapture.keyed(
+      ChangeCapture.files(spark, schema, cfg.sourceDir, cfg.maxFilesPerTrigger),
+      cfg.fieldRule, cfg.essentialFields, cfg.primaryKeys, cfg.versionCols, sourceVersion = false)
+    val bucketed = buckets.fold(keyed)(n => keyed.withColumn(BucketColumnName, bucketExpr(n)))
+    ChangeCapture.drain(bucketed, cfg.checkpointDir) { (batch, batchId) =>
+      idempotentMerge(cfg.table, Seq(MergeKey.ColumnName), cfg.versionCols,
+        buckets, cfg.batchIdProp, Some(cfg.tableDir))(batch, batchId)
+      // OUTSIDE the stamp scope: maintenance is content-neutral and
+      // must not be refused as a "replay" of the batch it follows
+      ChangeCapture.maintain(batchId)(
+        cfg.compactEveryBatches -> (() => GraftMaintenance.compact(spark, cfg.tableDir,
+          cfg.compactSmallBytes, sortCols = buckets.map(_ => BucketColumnName).toSeq)),
+        cfg.expireEveryBatches -> (() => tableIO(cfg).expireSnapshots(cfg.keepSnapshots)),
+        cfg.orphansEveryBatches -> (() => tableIO(cfg).removeOrphans()))
+    }
   }
 
   private def tableIO(cfg: Config) =
@@ -389,13 +329,7 @@ object StreamMerge {
       cadence: ChangeCapture, maxCycles: Int,
       lifetime: StreamLifetime = StreamLifetime.always): Long = {
     var total = 0L
-    var cycle = 0
-    while (cycle < maxCycles && lifetime.isActive) {
-      total += runAvailableNow(spark, schema, cfg)
-      cycle += 1
-      if (cycle < maxCycles && lifetime.isActive)
-        lifetime.interruptibleSleep(cadence.nextDelayMs())
-    }
+    ChangeCapture.poll(cadence, maxCycles, lifetime)(total += runAvailableNow(spark, schema, cfg))
     total
   }
 }

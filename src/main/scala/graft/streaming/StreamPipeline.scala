@@ -109,70 +109,52 @@ object StreamPipeline {
       publisher: MetricsPublisher = MetricsPublisher.Noop,
       batchCounter: BatchCounter = new BatchCounter
   ): CycleMetrics = {
-    var batches = 0L
     var rowsStaged = 0L
     var maintenanceRuns = 0L
-    val reader  = spark.readStream.schema(schema)
-    val rateLimit = if (cfg.sourceBuffering) None else cfg.maxFilesPerTrigger
-    val src0    = rateLimit.fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(cfg.sourceDir)
-    // the blob version column must be projected AT the source (hidden
-    // metadata columns are only reachable there)
-    val src = if (cfg.includeSourceVersion)
-      src0.withColumn(SourceVersionColumn, col("_metadata.file_modification_time"))
-    else src0
-
-    val essentials = cfg.essentialFields ++ cfg.primaryKeys ++ cfg.versionCols ++
-      (if (cfg.includeSourceVersion) Set(SourceVersionColumn) else Set.empty)
-    val filtered = FieldSelection(src, cfg.fieldRule, essentials)
-    val keyed    = MergeKey.withMergeKey(filtered, cfg.primaryKeys)
-
-    val q = keyed.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val store = new SnapshotStore(spark, cfg.targetDir)
-        // merge-on-read: the staged latest-per-key rows land as one delta
-        // keyed on the merge key, superseding every earlier row with that
-        // key — the batch neither reads nor rewrites the target. The delta
-        // IS the staged batch (the reference's staging table, capped at
-        // maxRowsPerFile rows per file), written once. Under
-        // detectConflicts the base version is pinned HERE, so an
-        // out-of-band commit since fails the batch with a typed conflict.
-        // A replayed batch re-commits the same rows, which supersede
-        // themselves: the commit is idempotent. An evolved source schema
-        // widens the table schema and reads align every part to it (the
-        // reference's SchemaMigrationProcessor).
-        val expected = if (cfg.detectConflicts) Some(store.currentVersion()) else None
-        // each commitRetry attempt re-executes the staged plan under a
-        // fresh Observation: a failed attempt completes its own with a
-        // partial count, so a shared one would under-count the batch
-        val (landed, staged) = Retry.withRetry(cfg.commitRetry) {
-          val obs = new org.apache.spark.sql.Observation()
-          val plan = Upsert.latestByKey(batch, Seq(MergeKey.ColumnName), cfg.versionCols)
-            .observe(obs, count(lit(1)).as("rows"))
-          val c = store.commitDelta(plan, Seq(MergeKey.ColumnName),
-            maxRowsPerFile = Some(cfg.maxRowsPerFile), expectedVersion = expected)
-          (c, obs.get("rows").asInstanceOf[Long])
-        }
-        batches += 1
-        rowsStaged += staged
-        publisher.counter("graft.stream.bytes_committed", landed.bytes,
-          Map("kind" -> (if (landed.deltas == 0) "base" else "delta")))
-        // threshold-driven maintenance on the stream-lifetime batch number;
-        // its optimize folds the delta chain into a new base
-        val n = batchCounter.incrementAndGet()
-        val maintained = cfg.maintenance.flatMap(s => TargetMaintenance.maybeRun(spark, store, s, n))
-        maintained.foreach { r =>
-          maintenanceRuns += 1
-          publisher.counter("graft.maintenance.runs", 1, Map("at_batch" -> r.atBatch.toString))
-        }
-        val chain = if (maintained.isEmpty) landed.deltas
-          else store.currentVersion().fold(0)(v => store.manifest(v).deltas.size)
-        publisher.gauge("graft.snapshot.deltas", chain.toDouble)
+    val files = ChangeCapture.files(spark, schema, cfg.sourceDir,
+      if (cfg.sourceBuffering) None else cfg.maxFilesPerTrigger)
+    val keyed = ChangeCapture.keyed(files, cfg.fieldRule, cfg.essentialFields, cfg.primaryKeys,
+      cfg.versionCols, cfg.includeSourceVersion)
+    val batches = ChangeCapture.drain(keyed, cfg.checkpointDir) { (batch, _) =>
+      val store = new SnapshotStore(spark, cfg.targetDir)
+      // merge-on-read: the staged latest-per-key rows land as one delta
+      // keyed on the merge key, superseding every earlier row with that
+      // key — the batch neither reads nor rewrites the target. The delta
+      // IS the staged batch (the reference's staging table, capped at
+      // maxRowsPerFile rows per file), written once. Under
+      // detectConflicts the base version is pinned HERE, so an
+      // out-of-band commit since fails the batch with a typed conflict.
+      // A replayed batch re-commits the same rows, which supersede
+      // themselves: the commit is idempotent. An evolved source schema
+      // widens the table schema and reads align every part to it (the
+      // reference's SchemaMigrationProcessor).
+      val expected = if (cfg.detectConflicts) Some(store.currentVersion()) else None
+      // each commitRetry attempt re-executes the staged plan under a
+      // fresh Observation: a failed attempt completes its own with a
+      // partial count, so a shared one would under-count the batch
+      val (landed, staged) = Retry.withRetry(cfg.commitRetry) {
+        val obs = new org.apache.spark.sql.Observation()
+        val plan = Upsert.latestByKey(batch, Seq(MergeKey.ColumnName), cfg.versionCols)
+          .observe(obs, count(lit(1)).as("rows"))
+        val c = store.commitDelta(plan, Seq(MergeKey.ColumnName),
+          maxRowsPerFile = Some(cfg.maxRowsPerFile), expectedVersion = expected)
+        (c, obs.get("rows").asInstanceOf[Long])
       }
-      .start()
-    q.awaitTermination()
+      rowsStaged += staged
+      publisher.counter("graft.stream.bytes_committed", landed.bytes,
+        Map("kind" -> (if (landed.deltas == 0) "base" else "delta")))
+      // threshold-driven maintenance on the stream-lifetime batch number;
+      // its optimize folds the delta chain into a new base
+      val n = batchCounter.incrementAndGet()
+      val maintained = cfg.maintenance.flatMap(s => TargetMaintenance.maybeRun(spark, store, s, n))
+      maintained.foreach { r =>
+        maintenanceRuns += 1
+        publisher.counter("graft.maintenance.runs", 1, Map("at_batch" -> r.atBatch.toString))
+      }
+      val chain = if (maintained.isEmpty) landed.deltas
+        else store.currentVersion().fold(0)(v => store.manifest(v).deltas.size)
+      publisher.gauge("graft.snapshot.deltas", chain.toDouble)
+    }
     // target rows after the cycle's last commit: one count per cycle
     val rowsWritten =
       if (batches == 0) 0L else new SnapshotStore(spark, cfg.targetDir).read().fold(0L)(_.count())
@@ -200,19 +182,14 @@ object StreamPipeline {
       publisher: MetricsPublisher = MetricsPublisher.Noop
   ): CycleMetrics = {
     var total = CycleMetrics(0, 0, 0)
-    var cycle = 0
     val batchCounter = new BatchCounter // maintenance threshold spans cycles
-    while (cycle < maxCycles && lifetime.isActive) {
+    ChangeCapture.poll(cadence, maxCycles, lifetime) {
       val m = runAvailableNowWithMetrics(spark, schema, cfg, publisher, batchCounter)
       // rowsWritten is a gauge (target size at last commit): keep the
       // previous value through cycles that found nothing new
       val written = if (m.batches > 0) m.rowsWritten else total.rowsWritten
       total = CycleMetrics(total.batches + m.batches, total.rowsStaged + m.rowsStaged, written,
         total.maintenanceRuns + m.maintenanceRuns)
-      cycle += 1
-      // interruptible: a SIGTERM (lifetime.stop()) during the poll delay
-      // exits promptly instead of sleeping through it
-      if (cycle < maxCycles && lifetime.isActive) lifetime.interruptibleSleep(cadence.nextDelayMs())
     }
     total
   }

@@ -92,9 +92,8 @@ object StreamRunner {
       env: Map[String, String],
       cfg: StreamPipeline.Config
   ): StreamPipeline.CycleMetrics = {
-    import graft.operators.{Backfill, FieldSelection, MergeKey, Upsert}
+    import graft.operators.{Backfill, MergeKey, Upsert}
     import graft.sources.{BlobListingSource, SnapshotStore}
-    import org.apache.spark.sql.functions.col
 
     val behavior = StreamSpec.backfillBehavior(spec).getOrElse("Overwrite")
     val fromMs = StreamSpec.backfillStartDate(spec)
@@ -103,13 +102,8 @@ object StreamRunner {
     val selected = fromMs.fold(blobs)(ms => blobs.filter(_.modifiedMs >= ms))
     if (selected.isEmpty) return StreamPipeline.CycleMetrics(0, 0, 0)
 
-    val src0 = spark.read.schema(schema).parquet(selected.map(_.path): _*)
-    val src = if (cfg.includeSourceVersion)
-      src0.withColumn(StreamPipeline.SourceVersionColumn, col("_metadata.file_modification_time"))
-    else src0
-    val essentials = cfg.essentialFields ++ cfg.primaryKeys ++ cfg.versionCols ++
-      (if (cfg.includeSourceVersion) Set(StreamPipeline.SourceVersionColumn) else Set.empty)
-    val keyed = MergeKey.withMergeKey(FieldSelection(src, cfg.fieldRule, essentials), cfg.primaryKeys)
+    val keyed = ChangeCapture.keyed(spark.read.schema(schema).parquet(selected.map(_.path): _*),
+      cfg.fieldRule, cfg.essentialFields, cfg.primaryKeys, cfg.versionCols, cfg.includeSourceVersion)
 
     val store = new SnapshotStore(spark, cfg.targetDir)
     behavior match {

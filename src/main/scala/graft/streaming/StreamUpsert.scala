@@ -4,7 +4,6 @@ import graft.catalog.{EqDeleteEntry, FileEntry, GraftCommitStamp, GraftMaintenan
 import graft.operators.{FieldSelection, MergeKey, Upsert}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Streaming upsert via EQUALITY DELETES — zero target reads per batch.
@@ -124,24 +123,13 @@ object StreamUpsert {
     * threshold compaction folding the delete mass. Returns batches.
     */
   def runAvailableNow(spark: SparkSession, schema: StructType, cfg: Config): Long = {
-    var batches = 0L
-    val reader = spark.readStream.schema(schema)
-    val src = cfg.maxFilesPerTrigger.fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(cfg.sourceDir)
-    val essentials = cfg.essentialFields ++ cfg.primaryKeys ++ cfg.versionCols
-    val keyed = MergeKey.withMergeKey(FieldSelection(src, cfg.fieldRule, essentials), cfg.primaryKeys)
-    val q = keyed.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        idempotentUpsert(cfg.tableDir, MergeKey.ColumnName, cfg.versionCols)(batch, batchId)
-        batches += 1
-        if (cfg.compactEveryBatches.exists(n => (batchId + 1) % n == 0))
-          GraftMaintenance.compact(spark, cfg.tableDir, cfg.compactSmallBytes)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    batches
+    val keyed = ChangeCapture.keyed(
+      ChangeCapture.files(spark, schema, cfg.sourceDir, cfg.maxFilesPerTrigger),
+      cfg.fieldRule, cfg.essentialFields, cfg.primaryKeys, cfg.versionCols, sourceVersion = false)
+    ChangeCapture.drain(keyed, cfg.checkpointDir) { (batch, batchId) =>
+      idempotentUpsert(cfg.tableDir, MergeKey.ColumnName, cfg.versionCols)(batch, batchId)
+      ChangeCapture.maintain(batchId)(cfg.compactEveryBatches ->
+        (() => GraftMaintenance.compact(spark, cfg.tableDir, cfg.compactSmallBytes)))
+    }
   }
 }

@@ -160,4 +160,34 @@ class InventorySpec extends SparkSpec {
       }
     assert(offenders.isEmpty, s"index-kind dispatch outside the manifest parse: ${offenders.mkString("; ")}")
   }
+
+  test("only ChangeCapture drains or polls a capture source, and StreamMerge's bucketing knob stays gone") {
+    // one change-capture cycle: a second AvailableNow drain or poll loop
+    // is how the four sinks' copies of the cycle grew apart before.
+    // DsirGate returns a running query and windowedCounts feeds a memory
+    // sink; neither is a capture loop.
+    val cycle = """Trigger\.AvailableNow\(\)|\.interruptibleSleep\(""".r
+    val knob = """StreamMerge\.(Fixed|Off|Bucketing)\b""".r
+    val sources = Seq("src/main/scala", "src/test/scala").flatMap(d =>
+      java.nio.file.Files.walk(java.nio.file.Paths.get(d)).toArray.toSeq
+        .map(_.asInstanceOf[java.nio.file.Path]).filter(_.toString.endsWith(".scala")))
+    val offenders = sources.flatMap { p =>
+      val name = p.getFileName.toString
+      val lines = new String(java.nio.file.Files.readAllBytes(p), "UTF-8").split("\n").toSeq
+      // the lines of StreamPipeline.windowedCounts, up to the next member
+      val w = if (name == "StreamPipeline.scala") lines.indexWhere(_.contains("def windowedCounts(")) else -1
+      val windowed = if (w < 0) Set.empty[Int] else {
+        val end = lines.indexWhere(l => l.startsWith("  def ") || l.startsWith("}"), w + 1)
+        (w until (if (end < 0) lines.size else end)).toSet
+      }
+      lines.zipWithIndex.collect {
+        case (line, i) if knob.findFirstIn(line).nonEmpty => s"$p:${i + 1} (the removed bucketing knob)"
+        case (line, i) if p.startsWith("src/main") && cycle.findFirstIn(line).nonEmpty &&
+            !line.trim.startsWith("*") && !line.trim.startsWith("//") &&
+            !Set("ChangeCapture.scala", "DsirGate.scala")(name) && !windowed(i) =>
+          s"$p:${i + 1} (a capture drain or poll loop)"
+      }
+    }
+    assert(offenders.isEmpty, s"change-capture cycle outside ChangeCapture: ${offenders.mkString("; ")}")
+  }
 }

@@ -5,11 +5,12 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Spark jobs per index lifecycle phase, pinned exactly. Job counts are
-  * the dispatch evidence that survives wall-time drift, so a change
-  * that adds a job to a build, a CDC batch or a serve turns this spec
-  * red. The scenario is [[ServeScenario]]; each serve is run the way
-  * the bench runs it (ordered, written to the noop sink).
+/** Spark jobs per index lifecycle phase and per streaming micro-batch,
+  * pinned exactly. Job counts are the dispatch evidence that survives
+  * wall-time drift, so a change that adds a job to a build, a CDC batch,
+  * a serve or a sink's batch turns this spec red. The index scenario is
+  * [[ServeScenario]]; each serve is run the way the bench runs it
+  * (ordered, written to the noop sink).
   */
 class LifecycleJobsSpec extends SparkSpec {
 
@@ -70,6 +71,61 @@ class LifecycleJobsSpec extends SparkSpec {
       shards = 2, withPositions = false, metaCols = Seq("src")))
     assert(jobs == Seq("build" -> 26, "reshard" -> 37, "reshardInPlace" -> 46),
       s"jobs per phase: $jobs")
+  }
+
+  /** Spark jobs per micro-batch of one AvailableNow drain, in batch
+    * order, grouped by the batch id Structured Streaming puts on every
+    * job it runs for a batch.
+    */
+  private def jobsPerBatch(drain: => Long): Seq[Int] = JobCounter(spark) { c =>
+    c.drain()
+    drain
+    c.drain().flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+      .groupBy(_.toLong).toSeq.sortBy(_._1).map(_._2.size)
+  }
+
+  test("streaming sinks: jobs per micro-batch (StreamMerge on a seeded MOR table, StreamUpsert, invertedBatch)") {
+    import spark.implicits._
+    import graft.streaming.{StreamIndex, StreamMerge, StreamUpsert}
+    val root = Files.createTempDirectory("graft_jobs_stream")
+    spark.conf.set("spark.sql.catalog.jobscat", "graft.catalog.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.jobscat.warehouse", s"$root/wh")
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS jobscat.db")
+    // three one-file churn blobs (two updates, one insert each); batch 1
+    // is the merge and upsert sinks' compaction batch
+    val src = s"$root/src"
+    (0 until 3).foreach { b =>
+      Seq((b, b + 1L, s"upd-$b"), (b + 10, b + 1L, s"upd-$b"), (1000 + b, b + 1L, s"new-$b"))
+        .toDF("k", "version", "payload").coalesce(1).write.mode("append").parquet(src)
+    }
+    val schema = spark.read.parquet(src).schema
+    StreamMerge.seedTarget(spark, "jobscat.db.mor",
+      spark.range(200).selectExpr("CAST(id AS INT) AS k", "CAST(0 AS BIGINT) AS version",
+        "concat('seed-', id) AS payload"), Seq("k"), buckets = Some(8), seedFileBytes = 1L << 10)
+    val merge = jobsPerBatch(StreamMerge.runAvailableNow(spark, schema, StreamMerge.Config(
+      sourceDir = src, table = "jobscat.db.mor", tableDir = s"$root/wh/db/mor",
+      checkpointDir = s"$root/ckpt_mor", primaryKeys = Seq("k"), versionCols = Seq("version"),
+      maxFilesPerTrigger = Some(1), compactEveryBatches = Some(2))))
+    val upsert = jobsPerBatch(StreamUpsert.runAvailableNow(spark, schema, StreamUpsert.Config(
+      sourceDir = src, tableDir = s"$root/wh/db/ups", checkpointDir = s"$root/ckpt_ups",
+      primaryKeys = Seq("k"), versionCols = Seq("version"),
+      maxFilesPerTrigger = Some(1), compactEveryBatches = Some(2))))
+
+    val docs = Tables(spark, sfDir).documents.select("doc_id", "text")
+    val idx = s"$root/idx"
+    operators.InvertedIndex.build(docs.filter(col("doc_id") < 200), "doc_id", "text", idx)
+    val docSrc = s"$root/docs"
+    (0 until 3).foreach(p => docs.filter(col("doc_id") >= 200 && col("doc_id") < 260 &&
+      pmod(col("doc_id"), lit(3)) === p).coalesce(1).write.mode("append").parquet(docSrc))
+    val index = jobsPerBatch(StreamIndex.runInvertedAvailableNow(
+      spark.readStream.schema(spark.read.parquet(docSrc).schema)
+        .option("maxFilesPerTrigger", 1).parquet(docSrc),
+      "text", StreamIndex.Config(indexDir = idx, checkpointDir = s"$root/ckpt_idx",
+        idCol = "doc_id", compactEveryBatches = Some(2))))
+    val jobs = Seq("StreamMerge" -> merge, "StreamUpsert" -> upsert, "invertedBatch" -> index)
+    assert(jobs == Seq("StreamMerge" -> Seq(5, 8, 5), "StreamUpsert" -> Seq(2, 5, 2),
+      "invertedBatch" -> Seq(11, 39, 11)),
+      s"jobs per micro-batch: $jobs")
   }
 
   test("dense federation: jobs per phase (buildShardedAnn, reshard, reshardInPlace)") {

@@ -142,6 +142,75 @@ class ManifestLogSpec extends SparkSpec {
     assert(store.currentVersion().contains(2L) && hash(store.read().get) == Seq("[1,a2]", "[2,c]"))
   }
 
+  /** Run `competitor` at the `n`-th manifest claim from now, once,
+    * before that claim lands.
+    */
+  private def raceAtClaim(n: Int)(competitor: => Unit): Unit = {
+    var seen = 0
+    ManifestCrashFileSystem.onManifestCreate = () => {
+      seen += 1
+      if (seen == n) { ManifestCrashFileSystem.onManifestCreate = () => (); competitor }
+    }
+  }
+
+  test("a stream compaction that loses its inputs to a racing compaction never fails the committed batch") {
+    import graft.catalog.GraftMaintenance
+    import graft.streaming.{StreamMerge, StreamUpsert}
+    val (warehouse, _) = crashCatalog
+    val fs = new Path(warehouse).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def blob(src: String, rows: Seq[(Int, Long, String)]): Unit =
+      rows.toDF("k", "version", "payload").coalesce(1).write.mode("append").parquet(src)
+    def tmp(prefix: String) = java.nio.file.Files.createTempDirectory(prefix).toString
+    /** The head is the racing compaction; the batch's snapshot before it
+      * still lists only files that exist, so it reads as committed.
+      */
+    def compactedOnce(tableDir: String): Unit = {
+      val io = new GraftManifestIO(new Path(tableDir), spark.sparkContext.hadoopConfiguration)
+      val head = io.currentSnapshot().get
+      assert(head.operation == "compact" && io.readSnapshot(head.version - 1).operation != "compact",
+        s"exactly one compaction lands: ${io.versions().map(v => io.readSnapshot(v).operation)}")
+      val batch = io.readSnapshot(head.version - 1).files
+      assert(batch.size >= 2 && batch.forall(f => fs.exists(new Path(new Path(tableDir), f.path))),
+        "the batch's small files must remain")
+    }
+
+    // StreamMerge: claim 1 is the batch's MERGE, claim 2 the compaction
+    val mrgDir = s"$warehouse/db/race_mrg"
+    spark.sql("""CREATE TABLE crashcat.db.race_mrg (k INT, version BIGINT, payload STRING,
+      arcane_merge_key STRING) TBLPROPERTIES ('graft.merge.mode' = 'merge-on-read')""")
+    graft.operators.MergeKey.withMergeKey(Seq((1, 0L, "a"), (2, 0L, "b")).toDF("k", "version", "payload"),
+      Seq("k")).writeTo("crashcat.db.race_mrg").append()
+    val mrgSrc = tmp("graft_race_mrg_src")
+    blob(mrgSrc, Seq((2, 1L, "b2"), (3, 1L, "c")))
+    raceAtClaim(2)(GraftMaintenance.compact(spark, mrgDir))
+    val merged = try StreamMerge.runAvailableNow(spark, spark.read.parquet(mrgSrc).schema,
+      StreamMerge.Config(sourceDir = mrgSrc, table = "crashcat.db.race_mrg", tableDir = mrgDir,
+        checkpointDir = tmp("graft_race_mrg_ckpt"), primaryKeys = Seq("k"), versionCols = Seq("version"),
+        compactEveryBatches = Some(1)))
+      finally ManifestCrashFileSystem.onManifestCreate = () => ()
+    assert(merged == 1L)
+    assert(hash(spark.table("crashcat.db.race_mrg").select("k", "version", "payload")) ==
+      Seq("[1,0,a]", "[2,1,b2]", "[3,1,c]"))
+    assert(StreamMerge.committedBatchId(spark, "crashcat.db.race_mrg").contains(0L))
+    compactedOnce(mrgDir)
+
+    // StreamUpsert: claims 1 and 2 are its two batches, claim 3 the compaction
+    val upsDir = s"$warehouse/db/race_ups"
+    val upsSrc = tmp("graft_race_ups_src")
+    blob(upsSrc, Seq((1, 0L, "a"), (2, 0L, "b")))
+    blob(upsSrc, Seq((2, 1L, "b2"), (3, 1L, "c")))
+    raceAtClaim(3)(GraftMaintenance.compact(spark, upsDir))
+    val upserted = try StreamUpsert.runAvailableNow(spark, spark.read.parquet(upsSrc).schema,
+      StreamUpsert.Config(sourceDir = upsSrc, tableDir = upsDir, checkpointDir = tmp("graft_race_ups_ckpt"),
+        primaryKeys = Seq("k"), versionCols = Seq("version"), maxFilesPerTrigger = Some(1),
+        compactEveryBatches = Some(2)))
+      finally ManifestCrashFileSystem.onManifestCreate = () => ()
+    assert(upserted == 2L)
+    assert(hash(spark.table("crashcat.db.race_ups").select("k", "version", "payload")) ==
+      Seq("[1,0,a]", "[2,1,b2]", "[3,1,c]"))
+    compactedOnce(upsDir)
+  }
+
   test("a zero-byte first read of an index manifest or the federation marker is retried") {
     // built on the local filesystem, read back through crashfs
     val dir = crashfsDir("graft_empty_read") + "/fed"

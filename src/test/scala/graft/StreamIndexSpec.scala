@@ -474,6 +474,44 @@ class StreamIndexSpec extends SparkSpec {
       "vec_id", "embedding", flat2, nCells = 4)
     assert(fedServe() == rows(AIdx.topK(probes, "vec_id", "embedding", flat2,
       k = 5, nProbe = 4)), "ANN federation CDC diverged from a flat rebuild")
+
+    // the lexical federation's CDC handler on the same routing: an
+    // update, a delete and an insert land on their shards only, each
+    // hit shard stamped; the replay is refused shard by shard
+    val lexSeed = docs.filter($"doc_id" < 300)
+    val lex = Files.createTempDirectory("sidx_lexfed").toString
+    ShardedIndex.buildSharded(lexSeed, "doc_id", "text", lex, shards = 3)
+    val lexCfg = cfg.copy(indexDir = lex, idCol = "doc_id", compactEveryBatches = None)
+    val lexCdc = Seq((10L, "fast key scan", "U"), (20L, null.asInstanceOf[String], "D"),
+      (900L, "table value scan", "I")).toDF("doc_id", "text", "op")
+      .select($"doc_id".cast(lexSeed.schema("doc_id").dataType), $"text", $"op")
+    val oldTexts = (ids: org.apache.spark.sql.DataFrame) => lexSeed.join(ids, Seq("doc_id"), "left_semi")
+    def lexVersions = (0 until 3).map(i => InvertedIndex.currentManifest(
+      spark, ShardedIndex.shardDir(lex, i)).version)
+    def lexStamps = (0 until 3).map(i => InvertedIndex.committedBatchId(
+      spark, ShardedIndex.shardDir(lex, i), lexCfg.ns))
+    val queries = Seq("fast key scan", "table value")
+    def lexServe = ShardedIndex.bm25TopKTextSharded(spark, lex, queries, k = 5)
+      .orderBy("q", "rank").collect().map(_.toSeq).toSeq
+    val lBefore = lexVersions
+    assert(StreamIndex.shardedCdcBatch(lexCfg, "text", "op", oldTexts)(lexCdc, 0L))
+    val lexHit = Seq(10L, 20L, 900L).map(id => graft.operators.DriverEval.shardOf(id, 3)).toSet
+    val lAfter = lexVersions
+    (0 until 3).foreach { i =>
+      if (lexHit(i)) assert(lAfter(i) > lBefore(i) && lexStamps(i).contains(0L),
+        s"lexical shard $i should have advanced with the batch stamp")
+      else assert(lAfter(i) == lBefore(i) && lexStamps(i).isEmpty,
+        s"lexical shard $i advanced without receiving CDC rows")
+    }
+    val lexFlat = Files.createTempDirectory("sidx_lexfed_flat").toString
+    InvertedIndex.build(lexSeed.filter(!$"doc_id".isin(10L, 20L))
+      .unionByName(lexCdc.filter($"op" =!= "D").drop("op")), "doc_id", "text", lexFlat)
+    val lexExpect = InvertedIndex.bm25TopKText(spark, lexFlat, queries, k = 5)
+      .orderBy("q", "rank").collect().map(_.toSeq).toSeq
+    assert(lexServe == lexExpect, "lexical federation CDC diverged from a flat rebuild")
+    assert(!StreamIndex.shardedCdcBatch(lexCfg, "text", "op", oldTexts)(lexCdc, 0L),
+      "lexical CDC replay claimed to apply content")
+    assert(lexVersions == lAfter && lexServe == lexExpect, "lexical CDC replay changed the federation")
   }
 
   test("championC: cadenced compaction re-selects champions instead of orphaning approximate serves") {

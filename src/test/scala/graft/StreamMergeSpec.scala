@@ -353,8 +353,7 @@ class StreamMergeSpec extends SparkSpec {
     val schema = spark.read.parquet(src).schema
     assert(StreamMerge.runAvailableNow(spark, schema, StreamMerge.Config(
       sourceDir = src, table = s"$cat.db.$table", tableDir = s"$warehouse/db/$table",
-      checkpointDir = ckpt, primaryKeys = Seq("k"), versionCols = Seq("version"),
-      bucketing = StreamMerge.Fixed(nBuckets))) == 1L)
+      checkpointDir = ckpt, primaryKeys = Seq("k"), versionCols = Seq("version"))) == 1L)
 
     val out = spark.sql(s"SELECT k, version, payload FROM $cat.db.$table")
     assert(out.count() == 20002)
@@ -474,9 +473,9 @@ class StreamMergeSpec extends SparkSpec {
 
   test("seedTarget + DEFAULT config: bucket pruning is on out of the box, files-opened pinned") {
     // the 100 TB-correct posture without any per-run knob: seedTarget
-    // declares the modulus as a table property, the stream's default
-    // Auto posture resolves it, and per-batch target READS open only
-    // the files covering the churn's buckets
+    // declares the modulus as a table property, the stream resolves it,
+    // and per-batch target READS open only the files covering the
+    // churn's buckets
     val table = "mor_auto"
     val seedDf = spark.range(20000).selectExpr(
       "CAST(id AS INT) AS k", "CAST(0 AS BIGINT) AS version", "concat('seed-', id) AS payload")
@@ -517,45 +516,29 @@ class StreamMergeSpec extends SparkSpec {
       k INT, version BIGINT, arcane_merge_key STRING, ${StreamMerge.BucketColumnName} INT)
       TBLPROPERTIES ('graft.merge.mode' = 'merge-on-read')""")
     val e1 = intercept[RuntimeException] {
-      StreamMerge.resolveBuckets(spark, s"$cat.db.$t1", StreamMerge.Auto)
+      StreamMerge.resolveBuckets(spark, s"$cat.db.$t1")
     }
     assert(e1.getMessage.contains(StreamMerge.BucketsProp))
 
-    // declared table + Fixed(other): modulus contradiction — refuse
-    val t2 = "mor_mismatch"
+    // a declared, bucketed table resolves to its declared modulus
+    val t2 = "mor_declared"
     spark.sql(s"""CREATE TABLE $cat.db.$t2 (
       k INT, version BIGINT, arcane_merge_key STRING, ${StreamMerge.BucketColumnName} INT)
       TBLPROPERTIES ('graft.merge.mode' = 'merge-on-read', '${StreamMerge.BucketsProp}' = '64')""")
-    val e2 = intercept[RuntimeException] {
-      StreamMerge.resolveBuckets(spark, s"$cat.db.$t2", StreamMerge.Fixed(32))
-    }
-    assert(e2.getMessage.contains("64") && e2.getMessage.contains("32"))
-    // matching Fixed resolves and prunes
-    assert(StreamMerge.resolveBuckets(spark, s"$cat.db.$t2", StreamMerge.Fixed(64))
-      == StreamMerge.ResolvedBuckets(Some(64), prune = true))
-    // Off on a declared table keeps maintaining the column, skips the conjunct
-    assert(StreamMerge.resolveBuckets(spark, s"$cat.db.$t2", StreamMerge.Off)
-      == StreamMerge.ResolvedBuckets(Some(64), prune = false))
+    assert(StreamMerge.resolveBuckets(spark, s"$cat.db.$t2").contains(64))
     // declaration without the column: the table can't satisfy it — refuse
     val t3 = "mor_nocol"
     spark.sql(s"""CREATE TABLE $cat.db.$t3 (
       k INT, version BIGINT, arcane_merge_key STRING)
       TBLPROPERTIES ('graft.merge.mode' = 'merge-on-read', '${StreamMerge.BucketsProp}' = '16')""")
     intercept[RuntimeException] {
-      StreamMerge.resolveBuckets(spark, s"$cat.db.$t3", StreamMerge.Auto)
+      StreamMerge.resolveBuckets(spark, s"$cat.db.$t3")
     }
-    // Fixed against an undeclared, unbucketed table — refuse (seed first)
+    // an unbucketed table merges full-scan
     val t4 = "mor_plain"
     spark.sql(s"""CREATE TABLE $cat.db.$t4 (
       k INT, version BIGINT, arcane_merge_key STRING)
       TBLPROPERTIES ('graft.merge.mode' = 'merge-on-read')""")
-    intercept[RuntimeException] {
-      StreamMerge.resolveBuckets(spark, s"$cat.db.$t4", StreamMerge.Fixed(16))
-    }
-    // the compatible paths stay open: Auto/Off on an unbucketed table
-    assert(StreamMerge.resolveBuckets(spark, s"$cat.db.$t4", StreamMerge.Auto)
-      == StreamMerge.ResolvedBuckets(None, prune = false))
-    assert(StreamMerge.resolveBuckets(spark, s"$cat.db.$t4", StreamMerge.Off)
-      == StreamMerge.ResolvedBuckets(None, prune = false))
+    assert(StreamMerge.resolveBuckets(spark, s"$cat.db.$t4").isEmpty)
   }
 }

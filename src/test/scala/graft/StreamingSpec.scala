@@ -480,8 +480,9 @@ class StreamingSpec extends SparkSpec {
   *  - `tornClaims = n`: the next n writes of a `.manifest` or `.json`
   *    file land half their bytes and then fail — a claim whose write
   *    fails (a full disk, a failed stream write).
-  *  - `onManifestCreate`: runs at each create of a `.manifest` file — a
-  *    racing writer interleaved at a snapshot commit's claim.
+  *  - `onManifestCreate`: runs at each create of a `.manifest` file or
+  *    a catalog `v<N>.json` claim — a racing writer interleaved at a
+  *    commit's claim.
   */
 final class ManifestCrashFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, Path}
@@ -495,7 +496,7 @@ final class ManifestCrashFileSystem extends org.apache.hadoop.fs.RawLocalFileSys
       throw new java.io.IOException(s"injected crash at commit op ${ops.get}: $f")
   private def check(f: Path): Unit = {
     op(f)
-    if (f.getName.endsWith(".manifest")) onManifestCreate()
+    if (f.getName.endsWith(".manifest") || f.getName.matches("v\\d+\\.json")) onManifestCreate()
     if (armed && f.getName.endsWith(".manifest"))
       throw new java.io.IOException(s"injected crash before the manifest claim: $f")
     if (f.getName.endsWith(".parquet") && f.toString.contains("/data/v") &&
