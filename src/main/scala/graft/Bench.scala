@@ -17,8 +17,8 @@ object StreamBenchSection {
 
   final case class Result(
       mergeRowsPerSec: Double, appendRowsPerSec: Double, batches: Long,
-      /** growing-target axis: churn rows/s through the MOR catalog
-        * merge vs the snapshot store, against a SEEDED target that
+      /** growing-target axis: churn rows/s through the catalog
+        * upsert vs the snapshot store, against a SEEDED target that
         * keeps growing while per-batch churn stays fixed.
         */
       morGrowthRowsPerSec: Double = -1, morGrowthFlatness: Double = -1,
@@ -30,19 +30,7 @@ object StreamBenchSection {
         * byte ratio is scale-invariant and is what a 100 TB deployment
         * pays in I/O and storage churn.
         */
-      morWriteAmp: Double = -1, ssWriteAmp: Double = -1,
-      /** equality-delete upsert (StreamUpsert): O(churn) writes AND
-        * zero target reads per batch — the expected fastest path.
-        */
-      upsGrowthRowsPerSec: Double = -1, upsGrowthFlatness: Double = -1,
-      upsWriteAmp: Double = -1,
-      /** point-churn READ-amplification axis: small-key-count batches
-        * against a bucket-clustered target. Files actually opened per
-        * MERGE batch, bucket-pruned vs full-scan — the target-read half
-        * of the O(churn) contract (writes were already O(churn)).
-        */
-      pointFilesPruned: Double = -1, pointFilesFull: Double = -1,
-      pointSecPruned: Double = -1, pointSecFull: Double = -1)
+      morWriteAmp: Double = -1, ssWriteAmp: Double = -1)
 
   /** Noise-robust combination of repeated passes — the query board's
     * min-of-passes posture applied to the streaming axes (r12's board
@@ -50,8 +38,8 @@ object StreamBenchSection {
     * code cause: machine-day drift a single sample cannot defend
     * against). Rates take the best pass (max rows/s ≡ min time),
     * per-batch seconds and flatness take the min (a drift burst only
-    * ever inflates them), and the byte-ratio write-amp / files-pruned
-    * axes are scale-invariant and take the min as a tie-break.
+    * ever inflates them), and the byte-ratio write-amp axes are
+    * scale-invariant and take the min as a tie-break.
     */
   def best(a: Result, b: Result): Result = {
     // -1 marks a failed/absent axis: max ignores it naturally; min must
@@ -67,14 +55,7 @@ object StreamBenchSection {
       ssGrowthRowsPerSec = math.max(a.ssGrowthRowsPerSec, b.ssGrowthRowsPerSec),
       ssGrowthFlatness = mn(a.ssGrowthFlatness, b.ssGrowthFlatness),
       morWriteAmp = mn(a.morWriteAmp, b.morWriteAmp),
-      ssWriteAmp = mn(a.ssWriteAmp, b.ssWriteAmp),
-      upsGrowthRowsPerSec = math.max(a.upsGrowthRowsPerSec, b.upsGrowthRowsPerSec),
-      upsGrowthFlatness = mn(a.upsGrowthFlatness, b.upsGrowthFlatness),
-      upsWriteAmp = mn(a.upsWriteAmp, b.upsWriteAmp),
-      pointFilesPruned = mn(a.pointFilesPruned, b.pointFilesPruned),
-      pointFilesFull = mn(a.pointFilesFull, b.pointFilesFull),
-      pointSecPruned = mn(a.pointSecPruned, b.pointSecPruned),
-      pointSecFull = mn(a.pointSecFull, b.pointSecFull))
+      ssWriteAmp = mn(a.ssWriteAmp, b.ssWriteAmp))
   }
 
   /** Standalone entry for scale runs:
@@ -92,7 +73,7 @@ object StreamBenchSection {
     require(done.nonEmpty, "every stream-bench pass failed")
     val r = done.reduce(best)
     spark.stop()
-    println(s"""{"stream_merge_rows_per_sec":${r.mergeRowsPerSec.round},"stream_append_rows_per_sec":${r.appendRowsPerSec.round},"stream_batches":${r.batches},"mor_growth_rows_per_sec":${r.morGrowthRowsPerSec.round},"mor_growth_flatness":${math.round(r.morGrowthFlatness * 100) / 100.0},"mor_write_amp":${math.round(r.morWriteAmp * 100) / 100.0},"ss_growth_rows_per_sec":${r.ssGrowthRowsPerSec.round},"ss_growth_flatness":${math.round(r.ssGrowthFlatness * 100) / 100.0},"ss_write_amp":${math.round(r.ssWriteAmp * 100) / 100.0},"ups_growth_rows_per_sec":${r.upsGrowthRowsPerSec.round},"ups_growth_flatness":${math.round(r.upsGrowthFlatness * 100) / 100.0},"ups_write_amp":${math.round(r.upsWriteAmp * 100) / 100.0},"point_files_per_batch_pruned":${math.round(r.pointFilesPruned * 10) / 10.0},"point_files_per_batch_full":${math.round(r.pointFilesFull * 10) / 10.0},"point_sec_per_batch_pruned":${math.round(r.pointSecPruned * 1000) / 1000.0},"point_sec_per_batch_full":${math.round(r.pointSecFull * 1000) / 1000.0},"sf":"$sfDir"}""")
+    println(s"""{"stream_merge_rows_per_sec":${r.mergeRowsPerSec.round},"stream_append_rows_per_sec":${r.appendRowsPerSec.round},"stream_batches":${r.batches},"mor_growth_rows_per_sec":${r.morGrowthRowsPerSec.round},"mor_growth_flatness":${math.round(r.morGrowthFlatness * 100) / 100.0},"mor_write_amp":${math.round(r.morWriteAmp * 100) / 100.0},"ss_growth_rows_per_sec":${r.ssGrowthRowsPerSec.round},"ss_growth_flatness":${math.round(r.ssGrowthFlatness * 100) / 100.0},"ss_write_amp":${math.round(r.ssWriteAmp * 100) / 100.0},"sf":"$sfDir"}""")
   }
 
   private val passCounter = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -157,28 +138,13 @@ object StreamBenchSection {
     val landed = spark.read.parquet(s"$tableDir/data").count()
     require(landed == rows, s"catalog sink landed $landed of $rows rows")
     val g = growthAxis(spark, sfDir, work, cat)
-    val (pf, ff, ps, fs) = pointChurnAxis(spark, sfDir, work, cat)
     Result(rows / mergeSec, rows / appendSec, m.batches,
-      g.morRate, g.morFlat, g.ssRate, g.ssFlat, g.morAmp, g.ssAmp,
-      g.upsRate, g.upsFlat, g.upsAmp,
-      pointFilesPruned = pf, pointFilesFull = ff,
-      pointSecPruned = ps, pointSecFull = fs)
+      g.morRate, g.morFlat, g.ssRate, g.ssFlat, g.morAmp, g.ssAmp)
   }
 
   final case class Growth(morRate: Double, morFlat: Double, morAmp: Double,
-      ssRate: Double, ssFlat: Double, ssAmp: Double,
-      upsRate: Double, upsFlat: Double, upsAmp: Double)
+      ssRate: Double, ssFlat: Double, ssAmp: Double)
 
-  /** The write-amplification axis the fresh-target numbers cannot see:
-    * a target SEEDED with the full events table, then fixed-churn
-    * micro-batches (half updates, half inserts) while the target keeps
-    * growing. The MOR catalog merge commits position deletes + churn
-    * files per batch (O(churn) writes — file-level contract pinned in
-    * StreamMergeSpec); the snapshot store rewrites the whole target per
-    * batch (O(target)). Reported: churn rows/sec for each path, plus a
-    * flatness ratio (second-half avg batch time / first-half avg) —
-    * flat ≈ 1.0 means no per-batch cost term grows with the target.
-    */
   /** Recursive on-disk bytes under `dir` (0 if absent). */
   private def dirBytes(dir: String): Long = {
     val root = new java.io.File(dir)
@@ -191,6 +157,17 @@ object StreamBenchSection {
     }
   }
 
+  /** The write-amplification axis the fresh-target numbers cannot see:
+    * a target SEEDED with the full events table, then fixed-churn
+    * micro-batches (half updates, half inserts) while the target keeps
+    * growing. The catalog upsert commits the churn files per batch,
+    * which are also its equality-delete key set (O(churn) writes, no
+    * target read — file-level contract pinned in StreamMergeSpec); the
+    * snapshot store commits a delta per batch. Reported: churn rows/sec
+    * for each path, plus a flatness ratio (second-half avg batch time /
+    * first-half avg) — flat ≈ 1.0 means no per-batch cost term grows
+    * with the target.
+    */
   private def growthAxis(spark: SparkSession, sfDir: String, work: String,
       cat: String): Growth = {
     import org.apache.spark.sql.functions._
@@ -234,12 +211,8 @@ object StreamBenchSection {
     val t0 = System.nanoTime()
     ChangeCapture.drain(keyed, s"$work/ckpt_mor") { (batch, batchId) =>
       val b0 = System.nanoTime()
-      // tableDir hint = the production path (manifest-read replay
-      // pre-check instead of a per-batch SHOW TBLPROPERTIES), exactly
-      // what StreamMerge.runAvailableNow passes
       graft.streaming.StreamMerge.idempotentMerge(
-        s"$cat.db.mor", Seq(graft.operators.MergeKey.ColumnName), Seq("version"),
-        tableDir = Some(morTableDir))(batch, batchId)
+        morTableDir, graft.operators.MergeKey.ColumnName, Seq("version"))(batch, batchId)
       perBatch += (System.nanoTime() - b0) / 1e9
     }
     val morSec = (System.nanoTime() - t0) / 1e9
@@ -281,124 +254,9 @@ object StreamBenchSection {
     // so the dir-size delta IS the bytes written by the axis
     val ssAmp = (dirBytes(ssDir) - ssBytes0).toDouble / churnBytes
 
-    // equality-delete upsert path: same seed, same churn — zero target
-    // reads per batch, so its rate should track the plain append sink
-    val upsDir = s"$work/wh/db/ups" // under the pass catalog's warehouse → readable as a table
-    graft.streaming.StreamUpsert.idempotentUpsert(
-      upsDir, graft.operators.MergeKey.ColumnName, Seq("version"))(
-      graft.operators.MergeKey.withMergeKey(seed, Seq("event_id")), 0L)
-    // seed was batch 0: shift the stream's batch ids past it
-    val upsBytes0 = dirBytes(upsDir)
-    val upsBatch = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val upsKeyed = ChangeCapture.keyed(ChangeCapture.files(spark, churnSchema, churnSrc, Some(1)),
-      graft.operators.FieldSelection.All, Set.empty, Seq("event_id"), Nil, sourceVersion = false)
-    val u0 = System.nanoTime()
-    ChangeCapture.drain(upsKeyed, s"$work/ckpt_ups") { (batch, batchId) =>
-      val b0 = System.nanoTime()
-      graft.streaming.StreamUpsert.idempotentUpsert(
-        upsDir, graft.operators.MergeKey.ColumnName, Seq("version"))(batch, batchId + 1)
-      upsBatch += (System.nanoTime() - b0) / 1e9
-    }
-    val upsSec = (System.nanoTime() - u0) / 1e9
-    val upsCount = spark.table(s"$cat.db.ups").count()
-    require(upsCount == morRows, s"eq-upsert growth target has $upsCount rows, MOR has $morRows")
-    val (u1, u2) = upsBatch.toSeq.splitAt(upsBatch.size / 2)
-    val upsFlat  = (u2.sum / u2.size) / (u1.sum / u1.size)
-    val upsAmp   = (dirBytes(upsDir) - upsBytes0).toDouble / churnBytes
-
     updBase.unpersist()
     Growth(totalChurn / morSec, morFlat, morAmp,
-      totalChurn / (ssHalf1 + ssHalf2), ssHalf2 / ssHalf1, ssAmp,
-      totalChurn / upsSec, upsFlat, upsAmp)
-  }
-
-  /** Read-amplification axis: a handful of churn keys per batch against
-    * a bucket-clustered MOR target. Uniform md5 merge keys defeat
-    * min/max pruning, so the unbucketed merge OPENS every target file
-    * per batch — O(target) reads. With the bucket column + per-batch IN
-    * conjunct ([[graft.streaming.StreamMerge.BucketColumnName]]) the
-    * scan opens only the files whose bucket range covers the batch's
-    * keys: files/batch ≈ min(churn keys, files) instead of all files.
-    * This ratio is the scale-invariant signal — at 100 TB it is the
-    * difference between reading ~1k files and ~100k files per trigger.
-    * Returns (filesPerBatch pruned, filesPerBatch full, sec/batch
-    * pruned, sec/batch full).
-    */
-  private def pointChurnAxis(
-      spark: SparkSession, sfDir: String, work: String,
-      cat: String): (Double, Double, Double, Double) = {
-    import org.apache.spark.sql.functions._
-    import graft.streaming.StreamMerge
-    val nBuckets = 4096
-    val nFiles   = 64
-    val nB       = 8
-    val c        = 8 // churn keys per batch: c updates + c inserts
-    val seed = spark.read.parquet(s"$sfDir/events.parquet")
-      .select(col("event_id"), col("user_id"), col("event_type"), col("value"),
-        lit(0L).as("version"))
-    val maxId = seed.agg(max("event_id")).head.getLong(0)
-    val updKeys = seed.orderBy("event_id").limit(c)
-
-    val churnSrc = s"$work/point_churn"
-    for (b <- 0 until nB) {
-      val upd = updKeys.withColumn("version", lit(b + 1L)).withColumn("value", col("value") * 2)
-      val ins = spark.range(c).select(
-        (lit(maxId + 1 + b.toLong * c) + col("id")).as("event_id"),
-        col("id").as("user_id"), lit("synthetic").as("event_type"),
-        lit(1.0).as("value"), lit(b + 1L).as("version"))
-      upd.unionByName(ins).coalesce(1).write.mode("append").parquet(churnSrc)
-    }
-    val schema = spark.read.parquet(churnSrc).schema
-
-    // pruned target: bucket column, seed clustered by bucket, modulus
-    // DECLARED — every stream into it then prunes with it
-    spark.sql(s"""CREATE TABLE $cat.db.morp (
-      event_id BIGINT, user_id BIGINT, event_type STRING, value DOUBLE,
-      version BIGINT, arcane_merge_key STRING, ${StreamMerge.BucketColumnName} INT)
-      TBLPROPERTIES ('graft.merge.mode' = 'merge-on-read',
-        '${StreamMerge.BucketsProp}' = '$nBuckets')""")
-    graft.operators.MergeKey.withMergeKey(seed, Seq("event_id"))
-      .withColumn(StreamMerge.BucketColumnName, StreamMerge.bucketExpr(nBuckets))
-      .repartitionByRange(nFiles, col(StreamMerge.BucketColumnName))
-      .sortWithinPartitions(StreamMerge.BucketColumnName)
-      .writeTo(s"$cat.db.morp").append()
-    // full-scan contrast: same rows, same file count, no bucket column
-    spark.sql(s"""CREATE TABLE $cat.db.morf (
-      event_id BIGINT, user_id BIGINT, event_type STRING, value DOUBLE,
-      version BIGINT, arcane_merge_key STRING)
-      TBLPROPERTIES ('graft.merge.mode' = 'merge-on-read')""")
-    graft.operators.MergeKey.withMergeKey(seed, Seq("event_id"))
-      .repartition(nFiles)
-      .writeTo(s"$cat.db.morf").append()
-
-    // BOTH drains run the DEFAULT config: pruning follows each table's
-    // own declaration — morp declares its modulus, morf is unbucketed —
-    // so this axis measures the out-of-the-box behavior
-    def drain(table: String, ckpt: String): (Double, Double) = {
-      val f0 = graft.catalog.GraftReadMetrics.dataFilesOpened
-      val t0 = System.nanoTime()
-      StreamMerge.runAvailableNow(spark, schema, StreamMerge.Config(
-        sourceDir = churnSrc, table = table,
-        tableDir = s"$work/wh/db/${table.split('.').last}",
-        checkpointDir = ckpt, primaryKeys = Seq("event_id"), versionCols = Seq("version"),
-        maxFilesPerTrigger = Some(1),
-        // fold the accumulated churn files mid-axis so pruning stays
-        // tight under sustained capture (re-clustered by bucket)
-        compactEveryBatches = Some(nB / 2), compactSmallBytes = 64L << 10))
-      val sec   = (System.nanoTime() - t0) / 1e9
-      val files = graft.catalog.GraftReadMetrics.dataFilesOpened - f0
-      (files.toDouble / nB, sec / nB)
-    }
-    val (pf, ps) = drain(s"$cat.db.morp", s"$work/ckpt_morp")
-    val (ff, fs) = drain(s"$cat.db.morf", s"$work/ckpt_morf")
-    val expected = seed.count() + nB.toLong * c
-    require(spark.table(s"$cat.db.morp").count() == expected, "pruned point target row drift")
-    require(spark.table(s"$cat.db.morf").count() == expected, "full point target row drift")
-    // the pruned path must actually prune — catches a silently-dropped
-    // IN conjunct, which would make the axis a lie
-    require(pf < ff / 2,
-      s"bucket pruning ineffective: $pf files/batch pruned vs $ff full")
-    (pf, ff, ps, fs)
+      totalChurn / (ssHalf1 + ssHalf2), ssHalf2 / ssHalf1, ssAmp)
   }
 }
 
@@ -562,7 +420,7 @@ object Bench {
       else Some(if (streamPasses.isEmpty) StreamBenchSection.Result(-1, -1, 0)
         else streamPasses.reduce(StreamBenchSection.best))
     val streamJson = stream.fold("") { r =>
-      s""","stream_merge_rows_per_sec":${f2(r.mergeRowsPerSec)},"stream_append_rows_per_sec":${f2(r.appendRowsPerSec)},"stream_batches":${r.batches},"mor_growth_rows_per_sec":${f2(r.morGrowthRowsPerSec)},"mor_growth_flatness":${f2(r.morGrowthFlatness)},"mor_write_amp":${f2(r.morWriteAmp)},"ss_growth_rows_per_sec":${f2(r.ssGrowthRowsPerSec)},"ss_growth_flatness":${f2(r.ssGrowthFlatness)},"ss_write_amp":${f2(r.ssWriteAmp)},"ups_growth_rows_per_sec":${f2(r.upsGrowthRowsPerSec)},"ups_growth_flatness":${f2(r.upsGrowthFlatness)},"ups_write_amp":${f2(r.upsWriteAmp)},"point_files_per_batch_pruned":${f2(r.pointFilesPruned)},"point_files_per_batch_full":${f2(r.pointFilesFull)},"point_sec_per_batch_pruned":${f2(r.pointSecPruned)},"point_sec_per_batch_full":${f2(r.pointSecFull)},"stream_passes":${streamPasses.size}"""
+      s""","stream_merge_rows_per_sec":${f2(r.mergeRowsPerSec)},"stream_append_rows_per_sec":${f2(r.appendRowsPerSec)},"stream_batches":${r.batches},"mor_growth_rows_per_sec":${f2(r.morGrowthRowsPerSec)},"mor_growth_flatness":${f2(r.morGrowthFlatness)},"mor_write_amp":${f2(r.morWriteAmp)},"ss_growth_rows_per_sec":${f2(r.ssGrowthRowsPerSec)},"ss_growth_flatness":${f2(r.ssGrowthFlatness)},"ss_write_amp":${f2(r.ssWriteAmp)},"stream_passes":${streamPasses.size}"""
     }
     println(s"""bench-detail: {"runs":$runs,"cold_total":$coldTotal,"cold_queries":$cold,"steady_queries":${results.map { case (k, v, _, _) => "\"" + k + "\":" + v }.mkString("{", ",", "}")},"spread_queries":${results.map { case (k, v, _, mx) => "\"" + k + "\":[" + f2(v) + "," + f2(mx) + "]" }.mkString("{", ",", "}")}}""")
     spark.stop()

@@ -247,12 +247,12 @@ object CatalogOps {
       "stream_merge_mor",
       (spark, dir) => {
         // the reference's production loop at its 100 TB shape: a stream
-        // of change blobs MERGE'd into a merge-on-read catalog table via
-        // foreachBatch, per-batch writes O(churn) (position deletes +
-        // batch rows; file-level contract pinned in StreamMergeSpec),
-        // batch-id exactly-once via the atomic commit stamp. Oracle =
-        // the same relational merge, so the full stream → MERGE → MOR
-        // read path is hash-gated end to end.
+        // of change blobs upserted into a seeded catalog table via
+        // foreachBatch, per-batch writes O(churn) (the batch rows, which
+        // are also its equality-delete key set; file-level contract
+        // pinned in StreamMergeSpec), batch-id exactly-once via the
+        // atomic commit stamp. Oracle = the same relational merge, so
+        // the full stream → upsert → read path is hash-gated end to end.
         val tbl = freshTable(spark)
         val seed = Tables(spark, dir).orders
           .where("o_orderkey % 4 <> 0")
@@ -260,10 +260,6 @@ object CatalogOps {
             "o_orderkey", "o_custkey",
             "CAST(o_totalprice AS DECIMAL(12,2)) AS totalprice",
             "o_orderstatus AS status", "CAST(1 AS BIGINT) AS version")
-        // seedTarget: bucket column + declared modulus derived from the
-        // seed's size — the stream then prunes its per-batch target
-        // reads with that modulus, so the oracle gates the PRUNED
-        // merge path end to end
         graft.streaming.StreamMerge.seedTarget(spark, tbl, seed, Seq("o_orderkey"))
         val work = java.nio.file.Files.createTempDirectory("graft_smm").toString
         Tables(spark, dir).orders
@@ -306,11 +302,12 @@ object CatalogOps {
     QueryDef(
       "stream_upsert_eqdelete",
       (spark, dir) => {
-        // the zero-target-read CDC shape: each micro-batch commits its
-        // rows + equality-delete key files (Iceberg v2 / Flink upsert
-        // mode); recency ACROSS batches is commit order (the stream's
-        // checkpoint guarantees source order), within a batch the
-        // version column. Two change-capture cycles: seed, then churn.
+        // the same upsert bootstrapping its own table: each micro-batch
+        // commits its rows, which are also its equality-delete key set
+        // (Iceberg v2 / Flink upsert mode); recency ACROSS batches is
+        // commit order (the stream's checkpoint guarantees source order),
+        // within a batch the version column. Two change-capture cycles:
+        // seed, then churn.
         val tbl = freshTable(spark)
         val tableDir = s"$warehouse/db/${tbl.split('.').last}"
         val work = java.nio.file.Files.createTempDirectory("graft_sue").toString
@@ -322,17 +319,17 @@ object CatalogOps {
             "CAST(o_totalprice AS DECIMAL(12,2)) AS totalprice",
             "o_orderstatus AS status", "CAST(1 AS BIGINT) AS version"))
         val schema = spark.read.parquet(s"$work/src").schema
-        val cfg = graft.streaming.StreamUpsert.Config(
-          sourceDir = s"$work/src", tableDir = tableDir,
+        val cfg = graft.streaming.StreamMerge.Config(
+          sourceDir = s"$work/src", table = tbl, tableDir = tableDir,
           checkpointDir = s"$work/ckpt",
           primaryKeys = Seq("o_orderkey"), versionCols = Seq("version"))
-        graft.streaming.StreamUpsert.runAvailableNow(spark, schema, cfg)
+        graft.streaming.StreamMerge.runAvailableNow(spark, schema, cfg)
         blob(Tables(spark, dir).orders
           .where("o_orderkey % 2 = 0")
           .selectExpr("o_orderkey", "o_custkey",
             "CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 3 AS DECIMAL(12,2)) AS totalprice",
             "'X' AS status", "CAST(2 AS BIGINT) AS version"))
-        graft.streaming.StreamUpsert.runAvailableNow(spark, schema, cfg)
+        graft.streaming.StreamMerge.runAvailableNow(spark, schema, cfg)
         spark.sql(s"""SELECT o_orderkey, o_custkey,
           CAST(totalprice AS DOUBLE) AS totalprice, status, version
           FROM $tbl ORDER BY o_orderkey""")

@@ -26,15 +26,7 @@ object GraftMaintenance {
     */
   def compact(
       spark: SparkSession, tableDir: String,
-      smallBytes: Long = 32L << 20, targetBytes: Long = 128L << 20,
-      /** cluster the rewritten files by these columns (range-partition
-        * + sort within): their manifest min/max become tight disjoint
-        * ranges, so point/IN predicates prune the compacted files — the
-        * streaming-merge bucket-pruning contract
-        * ([[graft.streaming.StreamMerge.BucketColumnName]]) and
-        * Iceberg's rewrite_data_files sort strategy.
-        */
-      sortCols: Seq[String] = Nil): (Int, Int) = {
+      smallBytes: Long = 32L << 20, targetBytes: Long = 128L << 20): (Int, Int) = {
     val io = new GraftManifestIO(new Path(tableDir), GraftConf.hadoop)
     val base = io.currentSnapshot().getOrElse(return (0, 0))
     val small = base.files.filter(_.bytes < smallBytes)
@@ -45,17 +37,14 @@ object GraftMaintenance {
     val smallSet = small.map(_.path).toSet
     val applicableDeletes = base.deletes.filter(_.targets.exists(smallSet.contains))
     val applicableEq = base.eqDeletes.filter(d => small.exists(_.seq < d.seq))
-    val read = readThroughDeletes(spark, tableDir, base.schema, small, applicableDeletes, applicableEq)
-    val df =
-      if (sortCols.isEmpty) read.coalesce(nOut)
-      else {
-        import org.apache.spark.sql.functions.col
-        read.repartitionByRange(nOut, sortCols.map(col): _*)
-          .sortWithinPartitions(sortCols.map(col): _*)
-      }
+    val df = readThroughDeletes(spark, tableDir, base.schema, small, applicableDeletes, applicableEq)
+      .coalesce(nOut)
 
     val newEntries = writeEntries(df, tableDir, schema, "compact", base.properties)
-    replaceCommit(io, "compact", schema, small.map(_.path).toSet, newEntries)
+    // a conflict means nothing of this rewrite landed (a racing writer
+    // replaced its inputs): its files would be orphans, so they go now
+    try replaceCommit(io, "compact", schema, small.map(_.path).toSet, newEntries)
+    catch { case e: GraftCommitConflict => dropEntries(tableDir, newEntries); throw e }
     (base.files.size, base.files.size - small.size + newEntries.size)
   }
 
@@ -126,9 +115,10 @@ object GraftMaintenance {
             deletes.filter(_.targets.exists(group.map(_.path).contains)))
           if (delPaths.isEmpty) raw
           else {
-            val keys = spark.read
+            // the key column's own schema: no inference job, and a
+            // data file serves as a key set by projection
+            val keys = spark.read.schema(org.apache.spark.sql.types.StructType(Seq(schema(keyCol))))
               .parquet(delPaths.map(p => new Path(new Path(tableDir), p).toString): _*)
-              .select(col(keyCol))
             raw.join(keys, Seq(keyCol), "left_anti")
           }
         }
@@ -140,7 +130,7 @@ object GraftMaintenance {
   /** Executor-side rewrite through the format's own writer (exact
     * manifest stats), one file per non-empty partition of `df`.
     */
-  private def writeEntries(
+  private[graft] def writeEntries(
       df: DataFrame, tableDir: String, schema: org.apache.spark.sql.types.StructType,
       tag: String, properties: Map[String, String] = Map.empty): Seq[FileEntry] = {
     val id = java.util.UUID.randomUUID().toString
@@ -158,6 +148,14 @@ object GraftMaintenance {
         Iterator.single(w.finish(rel))
       }
     }.collect().toSeq // O(#output files) driver-side
+  }
+
+  /** Best-effort delete of uncommitted `entries` and their bloom sidecars. */
+  private[graft] def dropEntries(tableDir: String, entries: Seq[FileEntry]): Unit = {
+    val fs = new Path(tableDir).getFileSystem(GraftConf.hadoop)
+    entries.flatMap(e => e.path +: e.bloom.toSeq).foreach(p =>
+      try fs.delete(new Path(new Path(tableDir), p), false)
+      catch { case _: Throwable => () })
   }
 
   /** OCC replace of `replaced` by `newEntries`, folding/narrowing

@@ -644,19 +644,11 @@ final class GraftWrite(
     }
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(tableDir).getFileSystem(GraftConf.hadoop)
-    messages.foreach {
-      case GraftCommitMessage(es) => es.foreach { e =>
-        try fs.delete(new Path(new Path(tableDir), e.path), false)
-        catch { case _: Throwable => () }
-        e.bloom.foreach(b =>
-          try fs.delete(new Path(new Path(tableDir), b), false)
-          catch { case _: Throwable => () })
-      }
-      case _ => ()
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    GraftMaintenance.dropEntries(tableDir, messages.toSeq.flatMap {
+      case GraftCommitMessage(es) => es
+      case _ => Nil
+    })
 }
 
 object GraftWrite {

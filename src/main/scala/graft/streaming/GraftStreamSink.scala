@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.catalog.{GraftCommitStamp, GraftManifestIO, GraftParquetIO}
+import graft.catalog.{EqDeleteEntry, GraftCommitConflict, GraftCommitStamp, GraftConf, GraftMaintenance, GraftManifestIO}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 
@@ -21,62 +21,49 @@ object GraftStreamSink {
 
   val BatchIdProp = "graft.stream.batch-id"
 
-  /** Write the batch's rows as immutable data files (invisible until a
-    * snapshot or WAP ref references them); shared by the direct and
-    * the WAP-staged handlers.
+  /** The one stream-batch commit of the catalog: the batch's rows land
+    * once as data files through the table's own writer (so its
+    * `graft.bloom.columns` sidecars are written), and commit in one
+    * snapshot stamped with `batchId` under `prop`; a replay is skipped
+    * before the write or refused inside the commit, and its files go.
+    * With `keyCol` the same files are also listed as equality deletes
+    * on that column at this commit's sequence: each older row whose key
+    * the batch carries is shadowed, the batch's own rows stay visible,
+    * and no key file is written — the data file is its own key set.
+    * Bootstraps the table from the batch's schema. Returns false for a
+    * replay skip.
     */
-  private def writeBatchFiles(tableDir: String, batch: DataFrame,
-      batchId: Long): Seq[graft.catalog.FileEntry] = {
-    val schema = batch.schema
-    val writeId = java.util.UUID.randomUUID().toString
-    val serConf = graft.catalog.GraftConf.serializable
-    batch.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
-      if (!rows.hasNext) Iterator.empty
-      else {
-        val rel = s"data/part-stream-$writeId-$batchId-$pid.parquet"
-        val w = new GraftParquetIO.FileWriter(
-          new Path(new Path(tableDir), rel), schema, serConf.value.value)
-        rows.foreach(w.write)
-        Iterator.single(w.finish(rel))
+  def commitBatch(tableDir: String, batch: DataFrame, batchId: Long,
+      keyCol: Option[String] = None, prop: String = BatchIdProp): Boolean = {
+    val io = new GraftManifestIO(new Path(tableDir), GraftConf.hadoop)
+    val head = io.currentSnapshot()
+    if (head.exists(s => GraftCommitStamp.committed(s.properties, prop, batchId))) return false
+    val entries = GraftMaintenance.writeEntries(batch, tableDir, batch.schema, "stream",
+      head.map(_.properties).getOrElse(Map.empty))
+    try {
+      GraftCommitStamp.withBatchId(prop, batchId) {
+        io.commit(if (keyCol.isEmpty) "stream-append" else "stream-upsert") { base =>
+          GraftManifestIO.Content(
+            base.map(_.schema).getOrElse(batch.schema), base.map(_.properties).getOrElse(Map.empty),
+            base.map(_.files).getOrElse(Nil) ++ entries.map(_.copy(seq = GraftManifestIO.PendingSeq)),
+            base.map(_.deletes).getOrElse(Nil),
+            base.map(_.eqDeletes).getOrElse(Nil) ++ keyCol.toSeq.flatMap(k => entries.map(e =>
+              EqDeleteEntry(e.path, e.rows, Seq(k), GraftManifestIO.PendingSeq))))
+        }
       }
-    }.collect().toSeq
-  }
-
-  private def dropFiles(tableDir: String,
-      entries: Seq[graft.catalog.FileEntry]): Unit = {
-    val fs = new Path(tableDir).getFileSystem(graft.catalog.GraftConf.hadoop)
-    entries.foreach(e =>
-      try fs.delete(new Path(new Path(tableDir), e.path), false)
-      catch { case _: Throwable => () })
+      true
+    } catch {
+      case e: Throwable if GraftCommitStamp.isReplay(e) =>
+        GraftMaintenance.dropEntries(tableDir, entries); false
+      case e: GraftCommitConflict => GraftMaintenance.dropEntries(tableDir, entries); throw e
+    }
   }
 
   /** foreachBatch handler: `stream.writeStream.foreachBatch(
     * GraftStreamSink.idempotentAppend(tableDir) _)`.
     */
-  def idempotentAppend(tableDir: String)(batch: DataFrame, batchId: Long): Unit = {
-    val io = new GraftManifestIO(new Path(tableDir), graft.catalog.GraftConf.hadoop)
-    if (io.currentSnapshot().exists(s => GraftCommitStamp.committed(s.properties, BatchIdProp, batchId)))
-      return
-
-    val schema = batch.schema
-    val entries = writeBatchFiles(tableDir, batch, batchId)
-
-    // the stamp scope refuses a replay inside the commit window and
-    // stamps the batch id into the same snapshot as the files
-    try GraftCommitStamp.withBatchId(BatchIdProp, batchId) {
-      io.commit("stream-append") { base =>
-        graft.catalog.GraftManifestIO.Content(
-          base.map(_.schema).getOrElse(schema), base.map(_.properties).getOrElse(Map.empty),
-          base.map(_.files).getOrElse(Nil) ++
-            entries.map(_.copy(seq = graft.catalog.GraftManifestIO.PendingSeq)),
-          base.map(_.deletes).getOrElse(Nil),
-          base.map(_.eqDeletes).getOrElse(Nil))
-      }
-    } catch {
-      // no snapshot written; drop the redundantly staged files
-      case e: Throwable if GraftCommitStamp.isReplay(e) => dropFiles(tableDir, entries)
-    }
-  }
+  def idempotentAppend(tableDir: String)(batch: DataFrame, batchId: Long): Unit =
+    commitBatch(tableDir, batch, batchId)
 
   /** foreachBatch handler staging under a WAP ref instead of the
     * version chain — write-audit-publish for STREAMS: micro-batches
@@ -98,16 +85,17 @@ object GraftStreamSink {
     */
   def idempotentAppendWap(tableDir: String, wapId: String)(
       batch: DataFrame, batchId: Long): Unit = {
-    val io = new GraftManifestIO(new Path(tableDir), graft.catalog.GraftConf.hadoop)
+    val io = new GraftManifestIO(new Path(tableDir), GraftConf.hadoop)
     // cheap pre-check (both stamps) before paying the file write; the
     // authoritative re-check runs inside stageWapBatch
     val stagedStamp = if (io.wapExists(wapId))
       io.readWap(wapId).properties.get(BatchIdProp).map(_.toLong) else None
-    val headStamp = io.currentSnapshot()
-      .flatMap(_.properties.get(BatchIdProp).map(_.toLong))
+    val head = io.currentSnapshot()
+    val headStamp = head.flatMap(_.properties.get(BatchIdProp).map(_.toLong))
     if ((stagedStamp ++ headStamp).exists(_ >= batchId)) return
-    val entries = writeBatchFiles(tableDir, batch, batchId)
+    val entries = GraftMaintenance.writeEntries(batch, tableDir, batch.schema, "stream",
+      head.map(_.properties).getOrElse(Map.empty))
     if (!io.stageWapBatch(wapId, entries, BatchIdProp, batchId))
-      dropFiles(tableDir, entries) // replay detected at the stage
+      GraftMaintenance.dropEntries(tableDir, entries) // replay detected at the stage
   }
 }

@@ -188,4 +188,44 @@ class GraftBloomSpec extends SparkSpec {
     assert(GraftReadMetrics.dataFilesOpened - f0 <= 2,
       "lookup should touch at most the stale seed file + the batch file")
   }
+
+  test("streamed batches get bloom sidecars through the sink, and point lookups prune them") {
+    import graft.streaming.{ChangeCapture, GraftStreamSink, StreamMerge}
+    val src = java.nio.file.Files.createTempDirectory("graft_bloom_stream_src").toString
+    (0 until 4).foreach { b =>
+      (0 until 50).map(i => (b * 50 + i, 1L, s"v-${b * 50 + i}")).toDF("k", "version", "payload")
+        .coalesce(1).write.mode("append").parquet(src)
+    }
+    val schema = spark.read.parquet(src).schema
+    def lookupPrunes(table: String): Unit = {
+      val snap = io(table).currentSnapshot().get
+      assert(snap.files.size == 4 && snap.files.forall(_.bloom.isDefined),
+        s"$table: streamed files without a bloom sidecar: ${snap.files.filter(_.bloom.isEmpty)}")
+      val key = Seq(123).toDF("k").select(graft.operators.MergeKey.keyExpr(Seq($"k"))).head.getString(0)
+      val q = spark.sql(s"SELECT payload FROM $cat.db.$table WHERE arcane_merge_key = '$key'")
+      assert(physicalPlan(q).toString.contains("GraftScan[files=1"),
+        s"$table: bloom did not prune the plan:\n${physicalPlan(q)}")
+      val f0 = GraftReadMetrics.dataFilesOpened
+      assert(q.collect().map(_.getString(0)).toSeq == Seq("v-123"))
+      assert(GraftReadMetrics.dataFilesOpened - f0 == 1)
+    }
+    def create(table: String): Unit =
+      spark.sql(s"""CREATE TABLE $cat.db.$table (k INT, version BIGINT, payload STRING,
+        arcane_merge_key STRING) TBLPROPERTIES ('graft.bloom.columns' = 'arcane_merge_key',
+        'graft.merge.mode' = 'merge-on-read')""")
+    def ckpt() = java.nio.file.Files.createTempDirectory("graft_bloom_stream_ckpt").toString
+
+    // the append sink
+    create("sa")
+    ChangeCapture.drain(ChangeCapture.keyed(ChangeCapture.files(spark, schema, src, Some(1)),
+      graft.operators.FieldSelection.All, Set.empty, Seq("k"), Seq("version"), sourceVersion = false),
+      ckpt())(GraftStreamSink.idempotentAppend(s"$warehouse/db/sa") _)
+    lookupPrunes("sa")
+    // the keyed upsert
+    create("su")
+    assert(StreamMerge.runAvailableNow(spark, schema, StreamMerge.Config(
+      sourceDir = src, table = s"$cat.db.su", tableDir = s"$warehouse/db/su", checkpointDir = ckpt(),
+      primaryKeys = Seq("k"), versionCols = Seq("version"), maxFilesPerTrigger = Some(1))) == 4L)
+    lookupPrunes("su")
+  }
 }

@@ -190,4 +190,23 @@ class InventorySpec extends SparkSpec {
     }
     assert(offenders.isEmpty, s"change-capture cycle outside ChangeCapture: ${offenders.mkString("; ")}")
   }
+
+  test("the streams commit no SQL MERGE, and only the stream-batch commit and the manifest parser build equality deletes") {
+    // one stream-batch commit: a batch's data files are its own
+    // equality-delete key set, so no second key-file writer (or a
+    // per-batch MERGE) may grow back beside GraftStreamSink.commitBatch
+    def sources(dir: String) = java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path]).filter(_.toString.endsWith(".scala"))
+    def hits(paths: Seq[java.nio.file.Path], pattern: String) = paths.flatMap { p =>
+      new String(java.nio.file.Files.readAllBytes(p), "UTF-8").split("\n").toSeq.zipWithIndex.collect {
+        case (line, i) if line.contains(pattern) && !line.trim.startsWith("*") &&
+            !line.trim.startsWith("//") => s"$p:${i + 1}"
+      }
+    }
+    val merges = hits(sources("src/main/scala/graft/streaming"), "MERGE INTO")
+    assert(merges.isEmpty, s"SQL MERGE in the streaming layer: ${merges.mkString("; ")}")
+    val eq = hits(sources("src/main/scala").filterNot(p =>
+      Set("GraftStreamSink.scala", "GraftManifest.scala")(p.getFileName.toString)), "EqDeleteEntry(")
+    assert(eq.isEmpty, s"equality-delete entries built outside the stream-batch commit: ${eq.mkString("; ")}")
+  }
 }

@@ -84,15 +84,15 @@ class LifecycleJobsSpec extends SparkSpec {
       .groupBy(_.toLong).toSeq.sortBy(_._1).map(_._2.size)
   }
 
-  test("streaming sinks: jobs per micro-batch (StreamMerge on a seeded MOR table, StreamUpsert, invertedBatch)") {
+  test("streaming sinks: jobs per micro-batch (StreamMerge on a seeded MOR table, invertedBatch)") {
     import spark.implicits._
-    import graft.streaming.{StreamIndex, StreamMerge, StreamUpsert}
+    import graft.streaming.{StreamIndex, StreamMerge}
     val root = Files.createTempDirectory("graft_jobs_stream")
     spark.conf.set("spark.sql.catalog.jobscat", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.jobscat.warehouse", s"$root/wh")
     spark.sql("CREATE NAMESPACE IF NOT EXISTS jobscat.db")
     // three one-file churn blobs (two updates, one insert each); batch 1
-    // is the merge and upsert sinks' compaction batch
+    // is the merge sink's compaction batch
     val src = s"$root/src"
     (0 until 3).foreach { b =>
       Seq((b, b + 1L, s"upd-$b"), (b + 10, b + 1L, s"upd-$b"), (1000 + b, b + 1L, s"new-$b"))
@@ -101,14 +101,10 @@ class LifecycleJobsSpec extends SparkSpec {
     val schema = spark.read.parquet(src).schema
     StreamMerge.seedTarget(spark, "jobscat.db.mor",
       spark.range(200).selectExpr("CAST(id AS INT) AS k", "CAST(0 AS BIGINT) AS version",
-        "concat('seed-', id) AS payload"), Seq("k"), buckets = Some(8), seedFileBytes = 1L << 10)
+        "concat('seed-', id) AS payload"), Seq("k"), seedFileBytes = 1L << 10)
     val merge = jobsPerBatch(StreamMerge.runAvailableNow(spark, schema, StreamMerge.Config(
       sourceDir = src, table = "jobscat.db.mor", tableDir = s"$root/wh/db/mor",
       checkpointDir = s"$root/ckpt_mor", primaryKeys = Seq("k"), versionCols = Seq("version"),
-      maxFilesPerTrigger = Some(1), compactEveryBatches = Some(2))))
-    val upsert = jobsPerBatch(StreamUpsert.runAvailableNow(spark, schema, StreamUpsert.Config(
-      sourceDir = src, tableDir = s"$root/wh/db/ups", checkpointDir = s"$root/ckpt_ups",
-      primaryKeys = Seq("k"), versionCols = Seq("version"),
       maxFilesPerTrigger = Some(1), compactEveryBatches = Some(2))))
 
     val docs = Tables(spark, sfDir).documents.select("doc_id", "text")
@@ -122,9 +118,8 @@ class LifecycleJobsSpec extends SparkSpec {
         .option("maxFilesPerTrigger", 1).parquet(docSrc),
       "text", StreamIndex.Config(indexDir = idx, checkpointDir = s"$root/ckpt_idx",
         idCol = "doc_id", compactEveryBatches = Some(2))))
-    val jobs = Seq("StreamMerge" -> merge, "StreamUpsert" -> upsert, "invertedBatch" -> index)
-    assert(jobs == Seq("StreamMerge" -> Seq(5, 8, 5), "StreamUpsert" -> Seq(2, 5, 2),
-      "invertedBatch" -> Seq(11, 39, 11)),
+    val jobs = Seq("StreamMerge" -> merge, "invertedBatch" -> index)
+    assert(jobs == Seq("StreamMerge" -> Seq(2, 5, 2), "invertedBatch" -> Seq(11, 39, 11)),
       s"jobs per micro-batch: $jobs")
   }
 

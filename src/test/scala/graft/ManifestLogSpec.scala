@@ -155,7 +155,7 @@ class ManifestLogSpec extends SparkSpec {
 
   test("a stream compaction that loses its inputs to a racing compaction never fails the committed batch") {
     import graft.catalog.GraftMaintenance
-    import graft.streaming.{StreamMerge, StreamUpsert}
+    import graft.streaming.StreamMerge
     val (warehouse, _) = crashCatalog
     val fs = new Path(warehouse).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def blob(src: String, rows: Seq[(Int, Long, String)]): Unit =
@@ -172,9 +172,15 @@ class ManifestLogSpec extends SparkSpec {
       val batch = io.readSnapshot(head.version - 1).files
       assert(batch.size >= 2 && batch.forall(f => fs.exists(new Path(new Path(tableDir), f.path))),
         "the batch's small files must remain")
+      // the losing compaction took its rewritten files with it
+      val named = io.versions().map(io.readSnapshot)
+        .flatMap(s => s.files.map(_.path) ++ s.eqDeletes.map(_.path)).toSet
+      val unnamed = fs.listStatus(new Path(tableDir, "data")).map(_.getPath.getName)
+        .filterNot(_.startsWith(".")).map(n => s"data/$n").filterNot(named.contains)
+      assert(unnamed.isEmpty, s"data files no retained version names: ${unnamed.mkString(", ")}")
     }
 
-    // StreamMerge: claim 1 is the batch's MERGE, claim 2 the compaction
+    // a seeded table: claim 1 is the batch's commit, claim 2 the compaction
     val mrgDir = s"$warehouse/db/race_mrg"
     spark.sql("""CREATE TABLE crashcat.db.race_mrg (k INT, version BIGINT, payload STRING,
       arcane_merge_key STRING) TBLPROPERTIES ('graft.merge.mode' = 'merge-on-read')""")
@@ -191,17 +197,19 @@ class ManifestLogSpec extends SparkSpec {
     assert(merged == 1L)
     assert(hash(spark.table("crashcat.db.race_mrg").select("k", "version", "payload")) ==
       Seq("[1,0,a]", "[2,1,b2]", "[3,1,c]"))
-    assert(StreamMerge.committedBatchId(spark, "crashcat.db.race_mrg").contains(0L))
+    assert(new GraftManifestIO(new Path(mrgDir), spark.sparkContext.hadoopConfiguration)
+      .currentSnapshot().get.properties.get(StreamMerge.BatchIdProp).contains("0"))
     compactedOnce(mrgDir)
 
-    // StreamUpsert: claims 1 and 2 are its two batches, claim 3 the compaction
+    // a table the stream bootstraps: claims 1 and 2 are its two batches, claim 3 the compaction
     val upsDir = s"$warehouse/db/race_ups"
     val upsSrc = tmp("graft_race_ups_src")
     blob(upsSrc, Seq((1, 0L, "a"), (2, 0L, "b")))
     blob(upsSrc, Seq((2, 1L, "b2"), (3, 1L, "c")))
     raceAtClaim(3)(GraftMaintenance.compact(spark, upsDir))
-    val upserted = try StreamUpsert.runAvailableNow(spark, spark.read.parquet(upsSrc).schema,
-      StreamUpsert.Config(sourceDir = upsSrc, tableDir = upsDir, checkpointDir = tmp("graft_race_ups_ckpt"),
+    val upserted = try StreamMerge.runAvailableNow(spark, spark.read.parquet(upsSrc).schema,
+      StreamMerge.Config(sourceDir = upsSrc, table = "crashcat.db.race_ups", tableDir = upsDir,
+        checkpointDir = tmp("graft_race_ups_ckpt"),
         primaryKeys = Seq("k"), versionCols = Seq("version"), maxFilesPerTrigger = Some(1),
         compactEveryBatches = Some(2)))
       finally ManifestCrashFileSystem.onManifestCreate = () => ()

@@ -8,10 +8,10 @@ import java.nio.file.Files
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
-/** Streaming MERGE into the Graft MOR catalog: per-batch written data
-  * must be proportional to the CHURN, never the target — the property
-  * that makes sustained CDC viable at 100 TB (the snapshot-store
-  * pipeline rewrites the full target per batch; this path must not).
+/** Streaming upsert into the Graft catalog: per-batch written data
+  * must be proportional to the CHURN, never the target, and no batch
+  * may read the target — the properties that make sustained CDC viable
+  * at 100 TB.
   */
 class StreamMergeSpec extends SparkSpec {
   import spark.implicits._
@@ -28,6 +28,9 @@ class StreamMergeSpec extends SparkSpec {
 
   private def io(table: String) =
     new GraftManifestIO(new Path(s"$warehouse/db/$table"), new Configuration())
+
+  private def stamp(table: String, prop: String = StreamMerge.BatchIdProp): Option[Long] =
+    io(table).currentSnapshot().flatMap(_.properties.get(prop)).map(_.toLong)
 
   private def createMorTarget(table: String): Unit =
     spark.sql(s"""CREATE TABLE $cat.db.$table (
@@ -64,25 +67,29 @@ class StreamMergeSpec extends SparkSpec {
       maxFilesPerTrigger = Some(1)))
     assert(batches == nBatches, s"expected $nBatches micro-batches, got $batches")
 
-    // walk every merge commit: added data rows == churn, added delete
-    // rows == matched rows, and NO pre-existing file is dropped — the
-    // write-amplification contract (written bytes ∝ churn, not target)
+    // walk every batch commit: added data rows == churn, NO pre-existing
+    // file is dropped, the added files are exactly the added equality
+    // deletes (the data file is its own key set) and no delete file is
+    // written — the write-amplification contract (written bytes ∝
+    // churn, not target)
     val m = io(table)
     val versions = (1L to m.currentVersion().get).map(m.readSnapshot)
-    val mergeCommits = versions.filter(_.operation.startsWith("merge"))
+    val mergeCommits = versions.filter(_.operation == "stream-upsert")
     assert(mergeCommits.size == nBatches, s"ops: ${versions.map(_.operation)}")
     mergeCommits.foreach { s =>
       val parent = m.readSnapshot(s.parent.get)
       val parentFiles = parent.files.map(_.path).toSet
       assert(parent.files.forall(f => s.files.exists(_.path == f.path)),
         s"v${s.version} rewrote pre-existing data files (O(target) write!)")
-      val addedRows  = s.files.filterNot(f => parentFiles.contains(f.path)).map(_.rows).sum
-      val parentDels = parent.deletes.map(_.path).toSet
-      val addedDels  = s.deletes.filterNot(d => parentDels.contains(d.path)).map(_.rows).sum
-      assert(addedRows == updates + inserts,
-        s"v${s.version}: added $addedRows data rows, churn is ${updates + inserts}")
-      assert(addedDels == updates, s"v${s.version}: added $addedDels delete rows, expected $updates")
+      val added = s.files.filterNot(f => parentFiles.contains(f.path))
+      assert(added.map(_.rows).sum == updates + inserts,
+        s"v${s.version}: added ${added.map(_.rows).sum} data rows, churn is ${updates + inserts}")
+      val addedEq = s.eqDeletes.filterNot(d => parent.eqDeletes.contains(d))
+      assert(addedEq.map(d => (d.path, d.rows, d.seq)).toSet == added.map(f => (f.path, f.rows, s.version)).toSet,
+        s"v${s.version}: eq entries $addedEq are not the added files $added")
+      assert(s.deletes == parent.deletes, s"v${s.version} wrote position deletes")
     }
+    assert(!new java.io.File(s"$warehouse/db/$table/deletes").exists(), "a batch wrote a delete file")
 
     // content: latest version per key, inserts present, untouched keys intact
     val out = spark.sql(s"SELECT k, version, payload FROM $cat.db.$table")
@@ -101,15 +108,14 @@ class StreamMergeSpec extends SparkSpec {
     val batch = MergeKey.withMergeKey(
       Seq((0, 5L, "replayed"), (200, 5L, "fresh")).toDF("k", "version", "payload"), Seq("k"))
 
-    val applied = StreamMerge.idempotentMerge(
-      s"$cat.db.$table", Seq(MergeKey.ColumnName), Seq("version"))(batch, 7L)
+    val dir = s"$warehouse/db/$table"
+    val applied = StreamMerge.idempotentMerge(dir, MergeKey.ColumnName, Seq("version"))(batch, 7L)
     assert(applied)
     val vAfter = io(table).currentVersion().get
-    assert(StreamMerge.committedBatchId(spark, s"$cat.db.$table").contains(7L))
+    assert(stamp(table).contains(7L))
 
     // fast path: the pre-check sees batch 7 stamped and skips
-    val replayed = StreamMerge.idempotentMerge(
-      s"$cat.db.$table", Seq(MergeKey.ColumnName), Seq("version"))(batch, 7L)
+    val replayed = StreamMerge.idempotentMerge(dir, MergeKey.ColumnName, Seq("version"))(batch, 7L)
     assert(!replayed)
     assert(io(table).currentVersion().get == vAfter, "replay must not commit a snapshot")
 
@@ -127,8 +133,7 @@ class StreamMergeSpec extends SparkSpec {
     assert(GraftCommitStamp.isReplay(err), s"got: $err")
     assert(io(table).currentVersion().get == vAfter, "guarded replay must not commit")
     // a LATER batch still goes through (the guard is >=, not ==)
-    assert(StreamMerge.idempotentMerge(
-      s"$cat.db.$table", Seq(MergeKey.ColumnName), Seq("version"))(batch, 8L))
+    assert(StreamMerge.idempotentMerge(dir, MergeKey.ColumnName, Seq("version"))(batch, 8L))
   }
 
   test("MOR stream target matches the snapshot-store pipeline bit-for-bit") {
@@ -214,7 +219,7 @@ class StreamMergeSpec extends SparkSpec {
     // liveness: every commit landed (4 stream + 4 batch + seed), and
     // the batch-id stamp tracked the stream's last batch despite the
     // interleaved unstamped batch commits
-    assert(StreamMerge.committedBatchId(spark, s"$cat.db.$table").contains(3L))
+    assert(stamp(table).contains(3L))
   }
 
   test("continuous change capture: cycles drain newly-landed blobs, maintenance thresholds span cycles") {
@@ -251,7 +256,7 @@ class StreamMergeSpec extends SparkSpec {
     val m = io(table)
     assert(m.versions().size <= cfg.keepSnapshots + 4,
       s"snapshot expiry never fired: ${m.versions()}")
-    assert(StreamMerge.committedBatchId(spark, s"$cat.db.$table").contains(2L))
+    assert(stamp(table).contains(2L))
   }
 
   test("MOR MERGE with a static partition predicate in ON prunes the target scan") {
@@ -292,109 +297,6 @@ class StreamMergeSpec extends SparkSpec {
     assert(spark.sql(s"SELECT count(*) FROM $cat.db.morpart").head.getLong(0) == 300)
   }
 
-  test("bucket pruning: high-cardinality merge reads only files covering the batch's buckets") {
-    // min/max stats never prune uniform md5 merge keys, so an unbucketed
-    // MOR merge reads the WHOLE target every micro-batch — O(target)
-    // READS against O(churn) writes. The bucket column restores file
-    // skipping: seed clustered by bucket, verify the per-batch IN
-    // conjunct prunes the scan, and verify compaction re-clusters the
-    // accumulated batch files so pruning stays tight under sustained CDC.
-    val nBuckets = 64
-    val table = "mor_buckets"
-    spark.sql(s"""CREATE TABLE $cat.db.$table (
-      k INT, version BIGINT, payload STRING, arcane_merge_key STRING,
-      ${StreamMerge.BucketColumnName} INT)
-      TBLPROPERTIES ('graft.merge.mode' = 'merge-on-read',
-        '${StreamMerge.BucketsProp}' = '$nBuckets')""")
-    val seedDf = MergeKey.withMergeKey(
-      spark.range(20000).selectExpr(
-        "CAST(id AS INT) AS k", "CAST(0 AS BIGINT) AS version", "concat('seed-', id) AS payload"),
-      Seq("k"))
-      .withColumn(StreamMerge.BucketColumnName, StreamMerge.bucketExpr(nBuckets))
-    seedDf
-      .repartitionByRange(8, org.apache.spark.sql.functions.col(StreamMerge.BucketColumnName))
-      .sortWithinPartitions(StreamMerge.BucketColumnName)
-      .writeTo(s"$cat.db.$table").append()
-
-    val m = io(table)
-    val seedFiles = m.currentSnapshot().get.files
-    assert(seedFiles.size == 8, s"expected 8 clustered seed files, got ${seedFiles.size}")
-
-    // churn: 6 existing keys + 2 inserts — a handful of buckets
-    val churn = MergeKey.withMergeKey(
-      ((0 until 6).map(k => (k * 997, 1L, s"upd-$k")) ++
-        Seq((30001, 1L, "new-a"), (30002, 1L, "new-b"))).toDF("k", "version", "payload"),
-      Seq("k"))
-      .withColumn(StreamMerge.BucketColumnName, StreamMerge.bucketExpr(nBuckets))
-    val churnBuckets = churn.select(StreamMerge.BucketColumnName)
-      .distinct().collect().map(_.getInt(0)).toSet
-    val affected = seedFiles.filter { f =>
-      val st = f.stats(StreamMerge.BucketColumnName)
-      churnBuckets.exists(b => st.min.get.toInt <= b && b <= st.max.get.toInt)
-    }
-    assert(affected.size < seedFiles.size,
-      s"test needs churn that misses some files (buckets $churnBuckets)")
-
-    // the exact SQL the stream runs, EXPLAIN'd: scan planned only the
-    // files whose bucket range covers the churn
-    churn.createOrReplaceTempView("mor_bucket_churn")
-    val plan = spark.sql("EXPLAIN " + StreamMerge.mergeSql(
-      s"$cat.db.$table", "mor_bucket_churn", Seq(MergeKey.ColumnName),
-      churn.columns.toSeq, Some(churnBuckets.toSeq))).head.getString(0)
-    assert(plan.contains(s"GraftScan[files=${affected.size}"),
-      s"expected ${affected.size} of ${seedFiles.size} files planned:\n$plan")
-
-    // live run via the stream path (bucket column added by the stream)
-    val src  = Files.createTempDirectory("graft_smb_src").toString
-    val ckpt = Files.createTempDirectory("graft_smb_ckpt").toString
-    ((0 until 6).map(k => (k * 997, 1L, s"upd-$k")) ++
-      Seq((30001, 1L, "new-a"), (30002, 1L, "new-b")))
-      .toDF("k", "version", "payload").coalesce(1).write.mode("append").parquet(src)
-    val schema = spark.read.parquet(src).schema
-    assert(StreamMerge.runAvailableNow(spark, schema, StreamMerge.Config(
-      sourceDir = src, table = s"$cat.db.$table", tableDir = s"$warehouse/db/$table",
-      checkpointDir = ckpt, primaryKeys = Seq("k"), versionCols = Seq("version"))) == 1L)
-
-    val out = spark.sql(s"SELECT k, version, payload FROM $cat.db.$table")
-    assert(out.count() == 20002)
-    assert(out.where("version = 1").count() == 8)
-    assert(out.where("k = 997").head.getString(2) == "upd-1")
-    assert(out.where("k = 30001").head.getString(2) == "new-a")
-    // delete mass confined to the affected files
-    val snap1 = m.currentSnapshot().get
-    assert(snap1.deletes.flatMap(_.targets).toSet.subsetOf(affected.map(_.path).toSet),
-      s"deletes leaked outside the bucket-pruned files: ${snap1.deletes.flatMap(_.targets)}")
-
-    // sustained CDC: two more batches then threshold compaction — the
-    // accumulated batch files (each spanning many buckets) must come
-    // back bucket-clustered so later merges keep pruning
-    (1 to 2).foreach { b =>
-      (0 until 6).map(k => (k * 997, (b + 1).toLong, s"upd$b-$k"))
-        .toDF("k", "version", "payload").coalesce(1).write.mode("append").parquet(src)
-    }
-    assert(StreamMerge.runAvailableNow(spark, schema, StreamMerge.Config(
-      sourceDir = src, table = s"$cat.db.$table", tableDir = s"$warehouse/db/$table",
-      checkpointDir = ckpt, primaryKeys = Seq("k"), versionCols = Seq("version"),
-      maxFilesPerTrigger = Some(1),
-      compactEveryBatches = Some(3), compactSmallBytes = 1L << 30)) == 2L)
-    val snap2 = m.currentSnapshot().get
-    assert(snap2.operation == "compact", s"last op: ${snap2.operation}")
-    assert(snap2.deletes.isEmpty, "compaction must fold deletes")
-    // every compacted file covers a tight, disjoint bucket range
-    val spans = snap2.files.map { f =>
-      val st = f.stats(StreamMerge.BucketColumnName)
-      (st.min.get.toInt, st.max.get.toInt)
-    }.sorted
-    assert(spans.sliding(2).forall {
-      case Seq((_, hi), (lo, _)) => hi <= lo
-      case _ => true
-    }, s"compacted files overlap in bucket space: $spans")
-    val out2 = spark.sql(s"SELECT k, version, payload FROM $cat.db.$table")
-    assert(out2.count() == 20002)
-    assert(out2.where("version = 3").count() == 6)
-    assert(out2.where("k = 997").head.getString(2) == "upd2-1")
-  }
-
   test("threshold compaction folds accumulated position deletes; content invariant") {
     val table = "mor_compact"
     createMorTarget(table)
@@ -410,7 +312,8 @@ class StreamMergeSpec extends SparkSpec {
       compactEveryBatches = Some(4), compactSmallBytes = 1L << 30))
     val s = io(table).currentSnapshot().get
     assert(s.operation == "compact", s"last op: ${s.operation}")
-    assert(s.deletes.isEmpty, s"compaction must fold deletes, ${s.deletes.size} remain")
+    assert(s.deletes.isEmpty && s.eqDeletes.isEmpty,
+      s"compaction must fold deletes, ${s.deletes.size + s.eqDeletes.size} remain")
     val out = spark.sql(s"SELECT k, version, payload FROM $cat.db.$table")
     assert(out.count() == 2000 + 4 * 50)
     assert(out.where("version = 4").count() == 250)
@@ -467,24 +370,20 @@ class StreamMergeSpec extends SparkSpec {
     assert(out.where("k = 0").head.getString(2) == "upd-3-0")
     assert(out.where("k = 3000").head.getString(2) == "b-upd-3-0")
     // BOTH stamps advanced to their stream's last batch, independently
-    assert(StreamMerge.committedBatchId(spark, s"$cat.db.$table", propA).contains(3L))
-    assert(StreamMerge.committedBatchId(spark, s"$cat.db.$table", propB).contains(3L))
+    assert(stamp(table, propA).contains(3L))
+    assert(stamp(table, propB).contains(3L))
   }
 
-  test("seedTarget + DEFAULT config: bucket pruning is on out of the box, files-opened pinned") {
-    // the 100 TB-correct posture without any per-run knob: seedTarget
-    // declares the modulus as a table property, the stream resolves it,
-    // and per-batch target READS open only the files covering the
-    // churn's buckets
+  test("seedTarget + default config: a micro-batch opens no target file") {
+    // the 100 TB posture without any per-run knob: the batch is its own
+    // key set, so a stream batch never reads the target, however many
+    // files the seed has
     val table = "mor_auto"
     val seedDf = spark.range(20000).selectExpr(
       "CAST(id AS INT) AS k", "CAST(0 AS BIGINT) AS version", "concat('seed-', id) AS payload")
-    val n = StreamMerge.seedTarget(spark, s"$cat.db.$table", seedDf, Seq("k"),
-      buckets = Some(64), seedFileBytes = 8L << 10)
-    assert(n == 64)
-    assert(StreamMerge.declaredBuckets(spark, s"$cat.db.$table").contains(64))
+    StreamMerge.seedTarget(spark, s"$cat.db.$table", seedDf, Seq("k"), seedFileBytes = 8L << 10)
     val seedFiles = io(table).currentSnapshot().get.files.size
-    assert(seedFiles >= 8, s"need a multi-file seed to observe pruning, got $seedFiles")
+    assert(seedFiles >= 8, s"need a multi-file seed, got $seedFiles")
 
     val src  = Files.createTempDirectory("graft_sm_auto_src").toString
     val ckpt = Files.createTempDirectory("graft_sm_auto_ckpt").toString
@@ -492,53 +391,59 @@ class StreamMergeSpec extends SparkSpec {
     (0 until nBatches).foreach(b => churnBlob(src, b, updates = 2, inserts = 1, target = 20000))
     val schema = spark.read.parquet(src).schema
     val f0 = graft.catalog.GraftReadMetrics.dataFilesOpened
-    // DEFAULT Config — no bucketing argument at all
     assert(StreamMerge.runAvailableNow(spark, schema, StreamMerge.Config(
       sourceDir = src, table = s"$cat.db.$table", tableDir = s"$warehouse/db/$table",
       checkpointDir = ckpt, primaryKeys = Seq("k"), versionCols = Seq("version"),
       maxFilesPerTrigger = Some(1))) == nBatches.toLong)
     val opened = graft.catalog.GraftReadMetrics.dataFilesOpened - f0
-    assert(opened < seedFiles.toLong * nBatches,
-      s"default posture did not prune: opened $opened of ${seedFiles * nBatches} file-reads")
+    assert(opened == 0, s"the stream opened $opened target files")
     val out = spark.sql(s"SELECT k, version, payload FROM $cat.db.$table")
     assert(out.count() == 20003)
     assert(out.where("version = 3").count() == 2 + 1)
-    // inserts carry a real bucket (the stream computed it with the
-    // declared modulus — never NULL, which would escape future pruning)
-    assert(spark.sql(s"SELECT count(*) FROM $cat.db.$table " +
-      s"WHERE ${StreamMerge.BucketColumnName} IS NULL").head.getLong(0) == 0)
   }
 
-  test("resolveBuckets refuses every silent-wrong bucket configuration, loudly") {
-    // bucket column present but modulus undeclared: unknowable — refuse
-    val t1 = "mor_undeclared"
-    spark.sql(s"""CREATE TABLE $cat.db.$t1 (
-      k INT, version BIGINT, arcane_merge_key STRING, ${StreamMerge.BucketColumnName} INT)
-      TBLPROPERTIES ('graft.merge.mode' = 'merge-on-read')""")
-    val e1 = intercept[RuntimeException] {
-      StreamMerge.resolveBuckets(spark, s"$cat.db.$t1")
-    }
-    assert(e1.getMessage.contains(StreamMerge.BucketsProp))
+  test("a target key held twice collapses to one row when the stream updates it") {
+    // the contract: a stream-owned table holds each merge key once.
+    // MERGE updated every copy of a matched key; a batch's rows shadow
+    // every older row with their key, so the copies become one row
+    val table = "mor_dupkey"
+    createMorTarget(table)
+    MergeKey.withMergeKey(Seq((1, 0L, "a"), (1, 0L, "a-copy"), (2, 0L, "b"))
+      .toDF("k", "version", "payload"), Seq("k")).coalesce(1).writeTo(s"$cat.db.$table").append()
+    val src = Files.createTempDirectory("graft_sm_dup_src").toString
+    Seq((1, 1L, "a1")).toDF("k", "version", "payload").coalesce(1).write.mode("append").parquet(src)
+    assert(StreamMerge.runAvailableNow(spark, spark.read.parquet(src).schema, StreamMerge.Config(
+      sourceDir = src, table = s"$cat.db.$table", tableDir = s"$warehouse/db/$table",
+      checkpointDir = Files.createTempDirectory("graft_sm_dup_ckpt").toString,
+      primaryKeys = Seq("k"), versionCols = Seq("version"))) == 1L)
+    val out = spark.sql(s"SELECT k, version, payload FROM $cat.db.$table")
+      .collect().map(_.toString).sorted.toSeq
+    assert(out == Seq("[1,1,a1]", "[2,0,b]"), s"got $out")
+  }
 
-    // a declared, bucketed table resolves to its declared modulus
-    val t2 = "mor_declared"
-    spark.sql(s"""CREATE TABLE $cat.db.$t2 (
-      k INT, version BIGINT, arcane_merge_key STRING, ${StreamMerge.BucketColumnName} INT)
-      TBLPROPERTIES ('graft.merge.mode' = 'merge-on-read', '${StreamMerge.BucketsProp}' = '64')""")
-    assert(StreamMerge.resolveBuckets(spark, s"$cat.db.$t2").contains(64))
-    // declaration without the column: the table can't satisfy it — refuse
-    val t3 = "mor_nocol"
-    spark.sql(s"""CREATE TABLE $cat.db.$t3 (
-      k INT, version BIGINT, arcane_merge_key STRING)
-      TBLPROPERTIES ('graft.merge.mode' = 'merge-on-read', '${StreamMerge.BucketsProp}' = '16')""")
-    intercept[RuntimeException] {
-      StreamMerge.resolveBuckets(spark, s"$cat.db.$t3")
+  test("a target column the stream's batches lack is refused by name at cycle start, a legacy bucket column too") {
+    // a batch's row replaces the whole older row, so a target column
+    // the batch lacks would read as null where MERGE's UPDATE SET kept
+    // the old value: the cycle refuses the table before any commit
+    val src = Files.createTempDirectory("graft_sm_cols_src").toString
+    Seq((1, 1L, "a1")).toDF("k", "version", "payload").coalesce(1).write.mode("append").parquet(src)
+    val schema = spark.read.parquet(src).schema
+    def refused(table: String, ddl: String, props: String, column: String): Unit = {
+      spark.sql(s"""CREATE TABLE $cat.db.$table (k INT, version BIGINT, payload STRING,
+        arcane_merge_key STRING, $ddl) TBLPROPERTIES ('graft.merge.mode' = 'merge-on-read'$props)""")
+      val v = io(table).currentVersion()
+      val e = intercept[IllegalArgumentException] {
+        StreamMerge.runAvailableNow(spark, schema, StreamMerge.Config(
+          sourceDir = src, table = s"$cat.db.$table", tableDir = s"$warehouse/db/$table",
+          checkpointDir = Files.createTempDirectory("graft_sm_cols_ckpt").toString,
+          primaryKeys = Seq("k"), versionCols = Seq("version")))
+      }
+      assert(e.getMessage.contains(column) && e.getMessage.contains(s"$cat.db.$table"), e.getMessage)
+      assert(io(table).currentVersion() == v, s"$table: a refused cycle committed")
     }
-    // an unbucketed table merges full-scan
-    val t4 = "mor_plain"
-    spark.sql(s"""CREATE TABLE $cat.db.$t4 (
-      k INT, version BIGINT, arcane_merge_key STRING)
-      TBLPROPERTIES ('graft.merge.mode' = 'merge-on-read')""")
-    assert(StreamMerge.resolveBuckets(spark, s"$cat.db.$t4").isEmpty)
+    refused("mor_extra_col", "note STRING", "", "note")
+    // a target bucketed by an earlier release: nothing fills the column now
+    refused("mor_legacy_bucket", "arcane_merge_bucket INT", ", 'graft.merge.buckets' = '16'",
+      "arcane_merge_bucket")
   }
 }

@@ -2,16 +2,18 @@ package graft
 
 import graft.catalog.{EqDeleteEntry, FileEntry, GraftChanges, GraftManifestIO, GraftMaintenance}
 import graft.operators.MergeKey
-import graft.streaming.StreamUpsert
+import graft.streaming.StreamMerge
 import java.nio.file.Files
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
-/** Equality-delete streaming upsert: per-batch cost is one pass over
-  * the churn — O(churn) writes AND zero target reads (the handler
-  * never scans the table; shadowing happens at read time by sequence
-  * number). The read side must apply the deletes exactly, compaction
-  * must fold them, and the whole thing must stay exactly-once.
+/** The equality-delete side of the streaming upsert ([[StreamMerge]]
+  * into a table it bootstraps): per-batch cost is one pass over the
+  * churn — O(churn) writes AND zero target reads (the handler never
+  * scans the table; shadowing happens at read time by sequence number,
+  * each batch file being its own key set). The read side must apply
+  * the deletes exactly, compaction must fold them, and the whole thing
+  * must stay exactly-once.
   */
 class StreamUpsertSpec extends SparkSpec {
   import spark.implicits._
@@ -69,8 +71,8 @@ class StreamUpsertSpec extends SparkSpec {
         .coalesce(1).write.mode("append").parquet(src)
     val schema = spark.read.parquet(src).schema
 
-    val batches = StreamUpsert.runAvailableNow(spark, schema, StreamUpsert.Config(
-      sourceDir = src, tableDir = dir, checkpointDir = ckpt,
+    val batches = StreamMerge.runAvailableNow(spark, schema, StreamMerge.Config(
+      sourceDir = src, table = s"$cat.db.$table", tableDir = dir, checkpointDir = ckpt,
       primaryKeys = Seq("k"), versionCols = Seq("version"), maxFilesPerTrigger = Some(1)))
     assert(batches == 3L)
 
@@ -83,6 +85,8 @@ class StreamUpsertSpec extends SparkSpec {
         s"v${c.version} rewrote files — upsert must be append-only")
     case _ => () }
     assert(versions.last.eqDeletes.size == 3, "one eq-delete entry per non-empty write task")
+    assert(versions.last.eqDeletes.map(_.path) == versions.last.files.map(_.path),
+      "each data file is the equality-delete entry of its own batch")
 
     // read through the catalog: latest version per key, inserts present
     val out = spark.sql(s"SELECT k, version, payload FROM $cat.db.$table")
@@ -102,15 +106,15 @@ class StreamUpsertSpec extends SparkSpec {
     val dir = s"$warehouse/db/$table"
     val batch = MergeKey.withMergeKey(
       Seq((1, 1L, "a"), (2, 1L, "b")).toDF("k", "version", "payload"), Seq("k"))
-    assert(StreamUpsert.idempotentUpsert(dir, MergeKey.ColumnName, Seq("version"))(batch, 3L))
+    assert(StreamMerge.idempotentMerge(dir, MergeKey.ColumnName, Seq("version"))(batch, 3L))
     val v = io(table).currentVersion().get
-    assert(!StreamUpsert.idempotentUpsert(dir, MergeKey.ColumnName, Seq("version"))(batch, 3L))
+    assert(!StreamMerge.idempotentMerge(dir, MergeKey.ColumnName, Seq("version"))(batch, 3L))
     assert(io(table).currentVersion().get == v)
-    assert(StreamUpsert.idempotentUpsert(dir, MergeKey.ColumnName, Seq("version"))(batch, 4L))
+    assert(StreamMerge.idempotentMerge(dir, MergeKey.ColumnName, Seq("version"))(batch, 4L))
     // duplicate-key batch: within-batch dedup keeps the latest version
     val dup = MergeKey.withMergeKey(
       Seq((9, 5L, "old"), (9, 6L, "new")).toDF("k", "version", "payload"), Seq("k"))
-    assert(StreamUpsert.idempotentUpsert(dir, MergeKey.ColumnName, Seq("version"))(dup, 5L))
+    assert(StreamMerge.idempotentMerge(dir, MergeKey.ColumnName, Seq("version"))(dup, 5L))
     val out = spark.sql(s"SELECT payload FROM $cat.db.$table WHERE k = 9").collect()
     assert(out.map(_.getString(0)).toSeq == Seq("new"))
   }
@@ -120,10 +124,10 @@ class StreamUpsertSpec extends SparkSpec {
     val dir   = s"$warehouse/db/$table"
     val seed = MergeKey.withMergeKey(
       (0 until 500).map(k => (k, 0L, s"s$k")).toDF("k", "version", "payload"), Seq("k"))
-    assert(StreamUpsert.idempotentUpsert(dir, MergeKey.ColumnName, Seq("version"))(seed, 0L))
+    assert(StreamMerge.idempotentMerge(dir, MergeKey.ColumnName, Seq("version"))(seed, 0L))
     val upd = MergeKey.withMergeKey(
       (0 until 50).map(k => (k, 1L, s"u$k")).toDF("k", "version", "payload"), Seq("k"))
-    assert(StreamUpsert.idempotentUpsert(dir, MergeKey.ColumnName, Seq("version"))(upd, 1L))
+    assert(StreamMerge.idempotentMerge(dir, MergeKey.ColumnName, Seq("version"))(upd, 1L))
 
     // change feed across the upsert: 50 inserts + 50 shadow-deletes
     val changes = GraftChanges.between(spark, dir, 1L, 2L)
@@ -150,10 +154,10 @@ class StreamUpsertSpec extends SparkSpec {
     val dir   = s"$warehouse/db/$table"
     val seed = MergeKey.withMergeKey(
       (0 until 100).map(k => (k, 0L, s"s$k")).toDF("k", "version", "payload"), Seq("k"))
-    assert(StreamUpsert.idempotentUpsert(dir, MergeKey.ColumnName, Seq("version"))(seed, 0L))
+    assert(StreamMerge.idempotentMerge(dir, MergeKey.ColumnName, Seq("version"))(seed, 0L))
     val upd = MergeKey.withMergeKey(
       (0 until 10).map(k => (k, 1L, s"u$k")).toDF("k", "version", "payload"), Seq("k"))
-    assert(StreamUpsert.idempotentUpsert(dir, MergeKey.ColumnName, Seq("version"))(upd, 1L))
+    assert(StreamMerge.idempotentMerge(dir, MergeKey.ColumnName, Seq("version"))(upd, 1L))
     // COW UPDATE reads THROUGH the eq deletes (the rewrite must not
     // resurrect shadowed seed rows) and rewrites matched files
     spark.sql(s"UPDATE $cat.db.$table SET payload = 'X' WHERE k < 5")
