@@ -21,7 +21,9 @@ object GraftMaintenance {
     * The rewrite itself is distributed: the small files are read as a
     * normal parquet scan (Graft data files are standard parquet) and
     * re-written through the engine's file writer, one file per
-    * partition of the coalesced plan. Returns (filesBefore,
+    * partition of the coalesced plan. The files it reads (the small
+    * data files and each position-delete and key-set file applied to
+    * them) count once each in [[GraftReadMetrics]]. Returns (filesBefore,
     * filesAfter); no-ops when fewer than two small files exist.
     */
   def compact(
@@ -41,6 +43,8 @@ object GraftMaintenance {
       .coalesce(nOut)
 
     val newEntries = writeEntries(df, tableDir, schema, "compact", base.properties)
+    GraftReadMetrics.filesOpened(small.size + (applicableDeletes.map(_.path) ++
+      applicableEq.map(_.path)).distinct.size)
     // a conflict means nothing of this rewrite landed (a racing writer
     // replaced its inputs): its files would be orphans, so they go now
     try replaceCommit(io, "compact", schema, small.map(_.path).toSet, newEntries)

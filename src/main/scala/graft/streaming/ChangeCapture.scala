@@ -3,6 +3,7 @@ package graft.streaming
 import graft.catalog.GraftCommitConflict
 import graft.operators.{FieldSelection, MergeKey}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
@@ -68,17 +69,41 @@ object ChangeCapture {
     * `handler` as AvailableNow micro-batches, checkpointed at
     * `checkpointDir` (the checkpoint dedupes files across cycles and
     * keeps batch ids monotonic). Returns the micro-batches processed.
+    *
+    * A batch of exactly one partition reaches `handler` as
+    * `coalesce(1)`, which declares `SinglePartition`: its per-key
+    * clustering (the upsert's latest-per-key window, an index batch's
+    * term grouping) then plans without an exchange, and the batch's
+    * sort, dedup and commit run as one Spark job in the task that reads
+    * it, not as a shuffle map stage plus the write. foreachBatch hands
+    * the batch over as a [[LogicalRDD]] over the rows it already
+    * planned, so the count is read off that RDD without running a job.
+    * The rule is exact: coalescing one partition into one moves no row
+    * and reorders none, it only adds the guarantee that satisfies any
+    * clustered distribution. From the file source such a batch is at
+    * most `spark.sql.files.maxPartitionBytes` of input, which the source
+    * already sized as one task's work. A batch of more partitions
+    * reaches `handler` as it came.
     */
   def drain(source: DataFrame, checkpointDir: String)(handler: (DataFrame, Long) => Unit): Long = {
     var batches = 0L
     val q = source.writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) => handler(batch, batchId); batches += 1 }
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        handler(singlePartition(batch), batchId); batches += 1
+      }
       .start()
     q.awaitTermination()
     batches
   }
+
+  /** `batch` as `coalesce(1)` when it is exactly one partition, else `batch`. */
+  private def singlePartition(batch: DataFrame): DataFrame =
+    batch.queryExecution.logical match {
+      case r: LogicalRDD if r.rdd.getNumPartitions == 1 => batch.coalesce(1)
+      case _ => batch
+    }
 
   /** The poll loop: up to `maxCycles` runs of `cycle`, separated by the
     * cadence's jittered delays. A stop of `lifetime` ends the loop after

@@ -119,7 +119,7 @@ class LifecycleJobsSpec extends SparkSpec {
       "text", StreamIndex.Config(indexDir = idx, checkpointDir = s"$root/ckpt_idx",
         idCol = "doc_id", compactEveryBatches = Some(2))))
     val jobs = Seq("StreamMerge" -> merge, "invertedBatch" -> index)
-    assert(jobs == Seq("StreamMerge" -> Seq(2, 5, 2), "invertedBatch" -> Seq(11, 39, 11)),
+    assert(jobs == Seq("StreamMerge" -> Seq(1, 4, 1), "invertedBatch" -> Seq(10, 38, 10)),
       s"jobs per micro-batch: $jobs")
   }
 

@@ -319,6 +319,76 @@ class StreamMergeSpec extends SparkSpec {
     assert(out.where("version = 4").count() == 250)
   }
 
+  test("a compaction counts each file it reads once: data, position-delete and key-set files") {
+    val table = "mor_compact_reads"
+    createMorTarget(table)
+    seed(table, 2000)
+    val src  = Files.createTempDirectory("graft_sm_cr_src").toString
+    val ckpt = Files.createTempDirectory("graft_sm_cr_ckpt").toString
+    (0 until 2).foreach(b => churnBlob(src, b, updates = 20, inserts = 5, target = 2000))
+    StreamMerge.runAvailableNow(spark, spark.read.parquet(src).schema, StreamMerge.Config(
+      sourceDir = src, table = s"$cat.db.$table", tableDir = s"$warehouse/db/$table",
+      checkpointDir = ckpt, primaryKeys = Seq("k"), versionCols = Seq("version"),
+      maxFilesPerTrigger = Some(1)))
+    spark.sql(s"DELETE FROM $cat.db.$table WHERE k = 1500")
+    // two seed files and two batch files; each batch file is also its
+    // own key set, and the DELETE wrote one position-delete file
+    val base = io(table).currentSnapshot().get
+    assert(base.files.size == 4 && base.deletes.size == 1 &&
+      base.eqDeletes.map(_.path).toSet == base.files.map(_.path).filter(_.contains("-stream-")).toSet,
+      s"unexpected layout: ${base.files.map(_.path)} ${base.deletes} ${base.eqDeletes}")
+    val f0 = graft.catalog.GraftReadMetrics.dataFilesOpened
+    assert(graft.catalog.GraftMaintenance.compact(spark, s"$warehouse/db/$table", 1L << 30) == (4, 1))
+    val opened = graft.catalog.GraftReadMetrics.dataFilesOpened - f0
+    assert(opened == 4 + 1 + 2, s"compaction counted $opened files, read 4 data + 1 delete + 2 key sets")
+    assert(spark.sql(s"SELECT count(*) FROM $cat.db.$table").head.getLong(0) == 2000 + 2 * 5 - 1)
+  }
+
+  test("a one-partition micro-batch dedups without an exchange; a three-partition batch keeps its shuffle") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    // three one-file blobs, each holding two versions of every key
+    val src = Files.createTempDirectory("graft_sm_part_src").toString
+    (0 until 3).foreach { b =>
+      (for (k <- 0 until 20; j <- 0 until 2) yield (k, (b * 10 + j).toLong, s"b$b-k$k-v$j"))
+        .toDF("k", "version", "payload").coalesce(1).write.mode("append").parquet(src)
+    }
+    val schema = spark.read.parquet(src).schema
+    val shuffled = new java.util.concurrent.atomic.LongAdder
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => shuffled.add(m.shuffleWriteMetrics.bytesWritten))
+    }
+    val stages = new AdaptiveSparkPlanHelper {}
+    // per batch: (partitions, exchanges, jobs, shuffle bytes) of the
+    // latest-per-key dedup, and whether its rows are the oracle's
+    def drained(maxFiles: Int): Seq[(Int, Int, Int, Long, Boolean)] = {
+      val out = Seq.newBuilder[(Int, Int, Int, Long, Boolean)]
+      val ckpt = Files.createTempDirectory("graft_sm_part_ckpt").toString
+      spark.sparkContext.addSparkListener(listener)
+      try JobCounter(spark) { c =>
+        ChangeCapture.drain(ChangeCapture.files(spark, schema, src, Some(maxFiles)), ckpt) { (batch, _) =>
+          val oracle = batch.collect().groupBy(_.getInt(0)).values.map(_.maxBy(_.getLong(1))).toSet
+          val dedup = graft.operators.Upsert.latestByKey(batch, Seq("k"), Seq("version"))
+          c.drain()
+          shuffled.reset()
+          val rows = dedup.collect().toSet
+          val jobs = c.drain().size
+          val exchanges = stages.collect(dedup.queryExecution.executedPlan) {
+            case e: ShuffleExchangeLike => e }.size
+          out += ((batch.rdd.getNumPartitions, exchanges, jobs, shuffled.sum, rows == oracle))
+        }
+      } finally spark.sparkContext.removeSparkListener(listener)
+      out.result()
+    }
+    val one = drained(maxFiles = 1)
+    assert(one == Seq.fill(3)((1, 0, 1, 0L, true)), s"one-file batches: $one")
+    val three = drained(maxFiles = 3)
+    assert(three.size == 1 && three.head._1 == 3 && three.head._2 == 1 && three.head._3 == 2 &&
+      three.head._4 > 0 && three.head._5, s"a three-file batch: $three")
+  }
+
   test("two concurrent checkpointed streams on one table: distinct stamps, 0 lost updates") {
     // stream-vs-stream contention (round-10's race was stream-vs-batch):
     // two change-capture streams with their own checkpoints and their

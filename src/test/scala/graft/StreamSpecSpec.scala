@@ -181,7 +181,7 @@ class StreamSpecSpec extends SparkSpec {
     assert(leftovers.isEmpty, s"streaming must write nothing under staging: $leftovers")
   }
 
-  test("a spec-booted micro-batch with a staging section runs 2 jobs and writes only the delta") {
+  test("a spec-booted one-partition micro-batch with a staging section runs 1 job and writes only the delta") {
     import graft.streaming.StreamRunner
     val tmp    = Files.createTempDirectory("graft_spec_jobs").toString
     val src    = s"$tmp/src"
@@ -211,8 +211,8 @@ class StreamSpecSpec extends SparkSpec {
     val jobsByBatch = jobs.flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
       .groupBy(identity).map { case (b, js) => b -> js.size }
     assert(cycle.batches == 1 && cycle.rowsStaged == n, s"unexpected metrics: $cycle")
-    assert(jobsByBatch == Map("1" -> 2),
-      s"a merge batch runs the latestByKey exchange and the delta write only: $jobsByBatch")
+    assert(jobsByBatch == Map("1" -> 1),
+      s"a one-partition merge batch dedups and writes its delta in one job: $jobsByBatch")
     assert(!new java.io.File(s"$tmp/graft-staging").exists(), "no staged copy may be written")
 
     val store = new SnapshotStore(spark, target)
