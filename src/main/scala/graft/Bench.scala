@@ -18,19 +18,17 @@ object StreamBenchSection {
   final case class Result(
       mergeRowsPerSec: Double, appendRowsPerSec: Double, batches: Long,
       /** growing-target axis: churn rows/s through the catalog
-        * upsert vs the snapshot store, against a SEEDED target that
-        * keeps growing while per-batch churn stays fixed.
+        * upsert against a SEEDED target that keeps growing while
+        * per-batch churn stays fixed.
         */
       morGrowthRowsPerSec: Double = -1, morGrowthFlatness: Double = -1,
-      ssGrowthRowsPerSec: Double = -1, ssGrowthFlatness: Double = -1,
       /** bytes written during the axis / churn bytes: the write-
-        * amplification factor — ~O(1) for the MOR merge, O(target /
-        * churn) for the snapshot store. Wall-clock hides this at local
-        * scale (a small target rewrites inside the page cache); the
-        * byte ratio is scale-invariant and is what a 100 TB deployment
-        * pays in I/O and storage churn.
+        * amplification factor, ~O(1) for the MOR merge. Wall-clock hides
+        * a target rewrite at local scale (a small target rewrites inside
+        * the page cache); the byte ratio is scale-invariant and is what a
+        * 100 TB deployment pays in I/O and storage churn.
         */
-      morWriteAmp: Double = -1, ssWriteAmp: Double = -1)
+      morWriteAmp: Double = -1)
 
   /** Noise-robust combination of repeated passes — the query board's
     * min-of-passes posture applied to the streaming axes (r12's board
@@ -52,10 +50,7 @@ object StreamBenchSection {
       batches = math.max(a.batches, b.batches),
       morGrowthRowsPerSec = math.max(a.morGrowthRowsPerSec, b.morGrowthRowsPerSec),
       morGrowthFlatness = mn(a.morGrowthFlatness, b.morGrowthFlatness),
-      ssGrowthRowsPerSec = math.max(a.ssGrowthRowsPerSec, b.ssGrowthRowsPerSec),
-      ssGrowthFlatness = mn(a.ssGrowthFlatness, b.ssGrowthFlatness),
-      morWriteAmp = mn(a.morWriteAmp, b.morWriteAmp),
-      ssWriteAmp = mn(a.ssWriteAmp, b.ssWriteAmp))
+      morWriteAmp = mn(a.morWriteAmp, b.morWriteAmp))
   }
 
   /** Standalone entry for scale runs:
@@ -73,7 +68,7 @@ object StreamBenchSection {
     require(done.nonEmpty, "every stream-bench pass failed")
     val r = done.reduce(best)
     spark.stop()
-    println(s"""{"stream_merge_rows_per_sec":${r.mergeRowsPerSec.round},"stream_append_rows_per_sec":${r.appendRowsPerSec.round},"stream_batches":${r.batches},"mor_growth_rows_per_sec":${r.morGrowthRowsPerSec.round},"mor_growth_flatness":${math.round(r.morGrowthFlatness * 100) / 100.0},"mor_write_amp":${math.round(r.morWriteAmp * 100) / 100.0},"ss_growth_rows_per_sec":${r.ssGrowthRowsPerSec.round},"ss_growth_flatness":${math.round(r.ssGrowthFlatness * 100) / 100.0},"ss_write_amp":${math.round(r.ssWriteAmp * 100) / 100.0},"sf":"$sfDir"}""")
+    println(s"""{"stream_merge_rows_per_sec":${r.mergeRowsPerSec.round},"stream_append_rows_per_sec":${r.appendRowsPerSec.round},"stream_batches":${r.batches},"mor_growth_rows_per_sec":${r.morGrowthRowsPerSec.round},"mor_growth_flatness":${math.round(r.morGrowthFlatness * 100) / 100.0},"mor_write_amp":${math.round(r.morWriteAmp * 100) / 100.0},"sf":"$sfDir"}""")
   }
 
   private val passCounter = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -113,7 +108,7 @@ object StreamBenchSection {
     val schema = spark.read.parquet(srcDir).schema
     val rows   = events.count()
 
-    // path 1: change-capture pipeline into a snapshot store (MERGE each batch)
+    // path 1: change-capture pipeline into a catalog table (keyed commit each batch)
     val cfg = graft.streaming.StreamPipeline.Config(
       sourceDir = srcDir,
       targetDir = s"$work/target",
@@ -138,12 +133,10 @@ object StreamBenchSection {
     val landed = spark.read.parquet(s"$tableDir/data").count()
     require(landed == rows, s"catalog sink landed $landed of $rows rows")
     val g = growthAxis(spark, sfDir, work, cat)
-    Result(rows / mergeSec, rows / appendSec, m.batches,
-      g.morRate, g.morFlat, g.ssRate, g.ssFlat, g.morAmp, g.ssAmp)
+    Result(rows / mergeSec, rows / appendSec, m.batches, g.morRate, g.morFlat, g.morAmp)
   }
 
-  final case class Growth(morRate: Double, morFlat: Double, morAmp: Double,
-      ssRate: Double, ssFlat: Double, ssAmp: Double)
+  final case class Growth(morRate: Double, morFlat: Double, morAmp: Double)
 
   /** Recursive on-disk bytes under `dir` (0 if absent). */
   private def dirBytes(dir: String): Long = {
@@ -162,11 +155,10 @@ object StreamBenchSection {
     * micro-batches (half updates, half inserts) while the target keeps
     * growing. The catalog upsert commits the churn files per batch,
     * which are also its equality-delete key set (O(churn) writes, no
-    * target read — file-level contract pinned in StreamMergeSpec); the
-    * snapshot store commits a delta per batch. Reported: churn rows/sec
-    * for each path, plus a flatness ratio (second-half avg batch time /
-    * first-half avg) — flat ≈ 1.0 means no per-batch cost term grows
-    * with the target.
+    * target read — file-level contract pinned in StreamMergeSpec).
+    * Reported: churn rows/sec, plus a flatness ratio (second-half avg
+    * batch time / first-half avg) — flat ≈ 1.0 means no per-batch cost
+    * term grows with the target.
     */
   private def growthAxis(spark: SparkSession, sfDir: String, work: String,
       cat: String): Growth = {
@@ -223,40 +215,8 @@ object StreamBenchSection {
     val morFlat  = (h2.sum / h2.size) / (h1.sum / h1.size)
     val morAmp   = (dirBytes(morTableDir) - morBytes0).toDouble / churnBytes
 
-    // snapshot-store contrast: same seed, same churn, two timed halves
-    // (per-half timing is enough to expose a per-batch cost growing
-    // with the target; each batch commits one merge-on-read delta)
-    val ssDir  = s"$work/ss_growth"
-    val ssSeed = graft.operators.MergeKey.withMergeKey(seed, Seq("event_id"))
-    new graft.sources.SnapshotStore(spark, ssDir).commit(ssSeed)
-    val ssBytes0 = dirBytes(ssDir)
-    val halfSrc = s"$work/churn_half1"
-    val blobs = new java.io.File(churnSrc).listFiles().filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    def copyBlobs(fs: Seq[java.io.File], dst: String): Unit = {
-      new java.io.File(dst).mkdirs()
-      fs.foreach(f => java.nio.file.Files.copy(f.toPath, new java.io.File(dst, f.getName).toPath))
-    }
-    copyBlobs(blobs.take(nBatches / 2).toSeq, halfSrc)
-    val ssCfg = graft.streaming.StreamPipeline.Config(
-      sourceDir = halfSrc, targetDir = ssDir, checkpointDir = s"$work/ckpt_ss",
-      primaryKeys = Seq("event_id"), versionCols = Seq("version"),
-      maxFilesPerTrigger = Some(1))
-    val s0 = System.nanoTime()
-    graft.streaming.StreamPipeline.runAvailableNow(spark, churnSchema, ssCfg)
-    val ssHalf1 = (System.nanoTime() - s0) / 1e9
-    copyBlobs(blobs.drop(nBatches / 2).toSeq, halfSrc)
-    val s1 = System.nanoTime()
-    graft.streaming.StreamPipeline.runAvailableNow(spark, churnSchema, ssCfg)
-    val ssHalf2 = (System.nanoTime() - s1) / 1e9
-    val ssRows = new graft.sources.SnapshotStore(spark, ssDir).read().get.count()
-    require(ssRows == morRows, s"snapshot-store growth target has $ssRows rows, MOR has $morRows")
-    // no maintenance configured → every snapshot's data dir is retained,
-    // so the dir-size delta IS the bytes written by the axis
-    val ssAmp = (dirBytes(ssDir) - ssBytes0).toDouble / churnBytes
-
     updBase.unpersist()
-    Growth(totalChurn / morSec, morFlat, morAmp,
-      totalChurn / (ssHalf1 + ssHalf2), ssHalf2 / ssHalf1, ssAmp)
+    Growth(totalChurn / morSec, morFlat, morAmp)
   }
 }
 
@@ -420,7 +380,7 @@ object Bench {
       else Some(if (streamPasses.isEmpty) StreamBenchSection.Result(-1, -1, 0)
         else streamPasses.reduce(StreamBenchSection.best))
     val streamJson = stream.fold("") { r =>
-      s""","stream_merge_rows_per_sec":${f2(r.mergeRowsPerSec)},"stream_append_rows_per_sec":${f2(r.appendRowsPerSec)},"stream_batches":${r.batches},"mor_growth_rows_per_sec":${f2(r.morGrowthRowsPerSec)},"mor_growth_flatness":${f2(r.morGrowthFlatness)},"mor_write_amp":${f2(r.morWriteAmp)},"ss_growth_rows_per_sec":${f2(r.ssGrowthRowsPerSec)},"ss_growth_flatness":${f2(r.ssGrowthFlatness)},"ss_write_amp":${f2(r.ssWriteAmp)},"stream_passes":${streamPasses.size}"""
+      s""","stream_merge_rows_per_sec":${f2(r.mergeRowsPerSec)},"stream_append_rows_per_sec":${f2(r.appendRowsPerSec)},"stream_batches":${r.batches},"mor_growth_rows_per_sec":${f2(r.morGrowthRowsPerSec)},"mor_growth_flatness":${f2(r.morGrowthFlatness)},"mor_write_amp":${f2(r.morWriteAmp)},"stream_passes":${streamPasses.size}"""
     }
     println(s"""bench-detail: {"runs":$runs,"cold_total":$coldTotal,"cold_queries":$cold,"steady_queries":${results.map { case (k, v, _, _) => "\"" + k + "\":" + v }.mkString("{", ",", "}")},"spread_queries":${results.map { case (k, v, _, mx) => "\"" + k + "\":[" + f2(v) + "," + f2(mx) + "]" }.mkString("{", ",", "}")}}""")
     spark.stop()

@@ -191,14 +191,12 @@ object ReferenceOps {
       // keyspace disjointly by hash, so the union of per-shard upserts IS
       // the global upsert, committed atomically in one snapshot
       (spark, dir) => {
-        import graft.sources.SnapshotStore
         val base   = java.nio.file.Files.createTempDirectory("graft_backfill").toString
         val source = Tables(spark, dir).events.filter(col("ts") >= ts("2024-01-10"))
-        val store  = new SnapshotStore(spark, s"$base/target")
         val state  = new Backfill.BackfillStateManager(spark, s"$base/state", "bf-verify")
         Backfill.runSharded(spark, source, Seq("user_id"), Seq("ts", "event_id"),
-          nShards = 4, s"$base/staging", store, state)
-        store.read().get.orderBy("user_id")
+          nShards = 4, s"$base/staging", s"$base/target", state)
+        graft.catalog.GraftTable.read(spark, s"$base/target").get.orderBy("user_id")
       },
       Some(latestSql.format("WHERE ts >= TIMESTAMP '2024-01-10 00:00:00'") + "\nORDER BY user_id")
     ),

@@ -59,7 +59,9 @@ object GraftMaintenance {
     * tight boxes and 2-D predicates prune most files
     * ([[graft.operators.Layout]] supplies the interleave math). Applies
     * and folds any position deletes; commits as one OCC replace of the
-    * full file set. Returns (filesBefore, filesAfter).
+    * full file set. The files it reads count once each in
+    * [[GraftReadMetrics]], as [[compact]]'s do. Returns (filesBefore,
+    * filesAfter).
     */
   def zorder(
       spark: SparkSession, tableDir: String, xCol: String, yCol: String,
@@ -76,6 +78,8 @@ object GraftMaintenance {
       .sortWithinPartitions("_z")
       .select(schema.fieldNames.map(col).toIndexedSeq: _*)
     val newEntries = writeEntries(clustered, tableDir, schema, "zorder", base.properties)
+    GraftReadMetrics.filesOpened(base.files.size + (base.deletes.map(_.path) ++
+      base.eqDeletes.map(_.path)).distinct.size)
     replaceCommit(io, "zorder", schema, base.files.map(_.path).toSet, newEntries)
     (base.files.size, newEntries.size)
   }
@@ -132,26 +136,42 @@ object GraftMaintenance {
   }
 
   /** Executor-side rewrite through the format's own writer (exact
-    * manifest stats), one file per non-empty partition of `df`.
+    * manifest stats): one file per non-empty partition of `df`, rolled
+    * to a new file every `maxRowsPerFile` rows, in one Spark job. A
+    * column type the format cannot hold is refused by name before any
+    * file is written; a failed task drops the files it wrote.
     */
   private[graft] def writeEntries(
       df: DataFrame, tableDir: String, schema: org.apache.spark.sql.types.StructType,
-      tag: String, properties: Map[String, String] = Map.empty): Seq[FileEntry] = {
+      tag: String, properties: Map[String, String] = Map.empty,
+      maxRowsPerFile: Long = Long.MaxValue): Seq[FileEntry] = {
+    GraftParquetIO.toMessageType(schema)
     val id = java.util.UUID.randomUUID().toString
     val dirStr = tableDir
     val serConf = GraftConf.serializable
     val bloomCols = GraftBloom.columns(properties)
     val bloomBits = GraftBloom.bits(properties)
     df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
-      if (!rows.hasNext) Iterator.empty
-      else {
-        val rel = s"data/part-$tag-$id-$pid.parquet"
-        val w = new GraftParquetIO.FileWriter(
-          new Path(new Path(dirStr), rel), schema, serConf.value.value, bloomCols, bloomBits)
-        rows.foreach(w.write)
-        Iterator.single(w.finish(rel))
-      }
+      val w = new GraftDataWriter(dirStr, schema, s"part-$tag-$id-$pid", Nil, maxRowsPerFile,
+        serConf.value.value, bloomCols, bloomBits)
+      try { rows.foreach(w.write); w.commit().asInstanceOf[GraftCommitMessage].entries.iterator }
+      catch { case e: Throwable => w.abort(); throw e }
     }.collect().toSeq // O(#output files) driver-side
+  }
+
+  /** One replace commit of the whole table at `tableDir` (bootstrapped
+    * when absent): `df`'s rows become its only files, under `df`'s
+    * schema; the table's properties stay. The files go if the commit
+    * fails.
+    */
+  def overwrite(df: DataFrame, tableDir: String, operation: String): GraftSnapshot = {
+    val io = new GraftManifestIO(new Path(tableDir), GraftConf.hadoop)
+    val entries = writeEntries(df, tableDir, df.schema, operation,
+      io.currentSnapshot().map(_.properties).getOrElse(Map.empty))
+    try io.commit(operation) { base =>
+      GraftManifestIO.Content(df.schema, base.map(_.properties).getOrElse(Map.empty),
+        entries.map(_.copy(seq = GraftManifestIO.PendingSeq)))
+    } catch { case e: Throwable => dropEntries(tableDir, entries); throw e }
   }
 
   /** Best-effort delete of uncommitted `entries` and their bloom sidecars. */

@@ -517,6 +517,10 @@ object GraftManifestIO {
   val WapBase  = "graft.wap.base-version"
   val WapAdded = "graft.wap.added-paths"
 
+  /** The manifest body, as compact JSON: every commit rewrites the
+    * whole manifest, so its size is paid per commit. [[fromJson]] reads
+    * the pretty-printed manifests of older tables too.
+    */
   def toJson(s: GraftSnapshot): String = {
     val files = JArray(s.files.map { f =>
       JObject(List(
@@ -554,7 +558,7 @@ object GraftManifestIO {
       "files" -> files,
       "deletes" -> deletes,
       "eq_deletes" -> eqDeletes))
-    JsonMethods.pretty(JsonMethods.render(root))
+    JsonMethods.compact(JsonMethods.render(root))
   }
 
   def fromJson(body: String): GraftSnapshot = {

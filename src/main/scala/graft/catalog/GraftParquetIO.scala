@@ -252,10 +252,12 @@ object GraftParquetIO {
   /** Streaming reader over one data file, projecting `requested`
     * columns. Columns absent from the FILE schema (added later by
     * schema evolution) read as null — name-based reconciliation, the
-    * Iceberg rule. `filePath` values feed the `_file` metadata column;
-    * `posColOrdinal` feeds `_pos` (physical row index — positions
-    * advance over deleted rows too). `deletedPositions` (sorted) are
-    * skipped: the merge-on-read path applying position deletes.
+    * Iceberg rule — and a long column the file wrote as int (a table
+    * widened since) reads widened. `filePath` values feed the `_file`
+    * metadata column; `posColOrdinal` feeds `_pos` (physical row index
+    * — positions advance over deleted rows too). `deletedPositions`
+    * (sorted) are skipped: the merge-on-read path applying position
+    * deletes.
     */
   final class FileReader(
       fsPath: Path, requested: StructType, conf: Configuration,
@@ -285,6 +287,10 @@ object GraftParquetIO {
       val byName = present.map(_._1.name).zipWithIndex.toMap
       requested.fields.map(f => byName.getOrElse(f.name, -1))
     }
+    private val widened: Array[Boolean] = requested.fields.map(f => f.dataType == LongType &&
+      present.find(_._1.name == f.name).exists { case (_, n) =>
+        val t = (fileSchema: org.apache.parquet.schema.GroupType).getType(n)
+        t.isPrimitive && t.asPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.INT32 })
 
     private val readConf = new Configuration(conf)
     readConf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
@@ -309,7 +315,8 @@ object GraftParquetIO {
             else {
               val gi = groupIdx(i)
               if (gi >= 0 && g.getFieldRepetitionCount(gi) > 0)
-                out.update(i, readValue(g, gi, requested.fields(i).dataType))
+                out.update(i, if (widened(i)) g.getInteger(gi, 0).toLong
+                  else readValue(g, gi, requested.fields(i).dataType))
               // else leave null
             }
             i += 1

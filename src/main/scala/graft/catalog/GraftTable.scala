@@ -135,6 +135,18 @@ final class GraftTable(
 }
 
 object GraftTable {
+  /** The table at `tableDir` as a DataFrame through this reader, with
+    * no catalog in front: its head, or snapshot `version` (None when
+    * the table has no commit).
+    */
+  def read(spark: org.apache.spark.sql.SparkSession, tableDir: String,
+      version: Option[Long] = None): Option[org.apache.spark.sql.DataFrame] = {
+    val table = new GraftTable(tableDir, tableDir, pinned = version)
+    table.snapshot.map(_ => org.apache.spark.sql.GraftShim.dataFrame(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+        table, None, None, CaseInsensitiveStringMap.empty())))
+  }
+
   /** Snapshot property holding the identity partition column list. */
   val PartitionColsProp = "graft.partition-cols"
 

@@ -7,9 +7,8 @@ import scala.util.control.NonFatal
 
 /** A versioned manifest log: the files `dir/v<N><suffix>`, each version
   * CLAIMED by an atomic exclusive create. It is the one commit primitive
-  * of every table format and index — [[GraftManifestIO]]
-  * (`manifests/v<N>.json`), [[graft.sources.SnapshotStore]]
-  * (`manifests/v<N>.manifest`), the serving indexes
+  * of the table format and every index — [[GraftManifestIO]]
+  * (`manifests/v<N>.json`), the serving indexes
   * (`manifest/v<N>.json`) and the index federation's layout overlays
   * (`reshard/v<N>.json`) — so the claim, the listing, the retried read
   * and the CAS loop exist once.

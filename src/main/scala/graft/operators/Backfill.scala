@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.sources.SnapshotStore
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -17,8 +16,10 @@ import org.apache.spark.sql.functions._
   * deterministic disjoint partition of the merge keyspace, so the union
   * of per-shard upserts equals the global upsert (latest-per-key never
   * crosses shards). Each shard stage is one distributed job over a
-  * pruned scan; the completion swap is a SnapshotStore commit (atomic
-  * manifest claim), so readers see either the old target or the complete
+  * pruned scan; the completion swap is one replace commit of the Graft
+  * catalog table at the target dir
+  * ([[graft.catalog.GraftMaintenance.overwrite]], an atomic manifest
+  * claim), so readers see either the old target or the complete
   * backfill, never a partial one.
   *
   * `BackfillStateManager` persists which shards are staged (the
@@ -80,7 +81,7 @@ object Backfill {
       orderCols: Seq[String],
       nShards: Int,
       stagingDir: String,
-      target: SnapshotStore,
+      targetDir: String,
       state: BackfillStateManager
   ): ShardedResult = {
     require(nShards >= 1)
@@ -97,7 +98,7 @@ object Backfill {
     }
     // completion swap: one atomic commit over all staged shards
     val full = spark.read.parquet((0 until nShards).map(i => s"$stagingDir/shard=$i"): _*)
-    val v    = target.commit(full)
+    val v    = graft.catalog.GraftMaintenance.overwrite(full, targetDir, "backfill").version
     state.clear()
     // staged shards are merge inputs, not a second copy of the target:
     // dispose them after the swap (the reference's DisposeBatchProcessor)

@@ -31,10 +31,9 @@ object Maintenance {
 /** Threshold-driven target maintenance — the reference's
   * `TargetMaintenanceProcessor` firing OPTIMIZE / snapshot expiration /
   * orphan removal / ANALYZE every `batchThreshold` processed batches
-  * (`maintenanceSettings.*.batchThreshold`,
-  * /root/reference/stream-spec-yaml-example.yaml:49-63). The pipeline
-  * counts batches across cycles and calls [[TargetMaintenance.maybeRun]]
-  * after each commit.
+  * (`maintenanceSettings.*.batchThreshold` in the reference's stream
+  * spec) on a Graft catalog table. The pipeline counts batches across cycles and calls
+  * [[TargetMaintenance.maybeRun]] after each commit.
   */
 object TargetMaintenance {
 
@@ -50,48 +49,37 @@ object TargetMaintenance {
       atBatch: Long,
       compactedToFiles: Int,
       expiredSnapshots: Seq[Long],
-      orphansRemoved: Int,
       analyzedColumns: Int
   )
 
   /** Fire maintenance iff `batchNumber` is a multiple of the threshold. */
   def maybeRun(
-      spark: SparkSession, store: graft.sources.SnapshotStore,
+      spark: SparkSession, tableDir: String,
       settings: Settings, batchNumber: Long
   ): Option[Report] =
     if (batchNumber % settings.batchThreshold != 0) None
-    else Some(run(spark, store, settings, batchNumber))
+    else Some(run(spark, tableDir, settings, batchNumber))
 
-  /** OPTIMIZE (rewrite the current snapshot into target-sized files as a
-    * new base commit, folding its merge-on-read delta chain), expire old
-    * snapshots, remove orphan files, ANALYZE. Order matters: compaction
-    * first so expiration can retire the fragmented snapshot and the
-    * chain it superseded. `batchThreshold` thus bounds the chain, and
-    * with it the cost of every read between folds.
+  /** OPTIMIZE (every file under `targetFileBytes` rewritten into files
+    * of about that size, folding the equality deletes that shadow them
+    * — [[graft.catalog.GraftMaintenance.compact]]), expire all but the
+    * newest `keepSnapshots` snapshots and sweep the files no retained
+    * one lists, ANALYZE. Order matters: compaction first so expiration
+    * can retire the fragmented snapshots it superseded.
+    * `batchThreshold` thus bounds the delete mass every read applies
+    * between folds.
     */
-  def run(
-      spark: SparkSession, store: graft.sources.SnapshotStore,
-      settings: Settings, batchNumber: Long
-  ): Report = {
-    val compactedTo = store.read() match {
-      case Some(current) =>
-        val bytes = current.queryExecution.optimizedPlan.stats.sizeInBytes
-        val n     = Maintenance.targetFileCount(bytes.min(BigInt(Long.MaxValue)).toLong, settings.targetFileBytes)
-        store.commit(current.repartition(n))
-        n
-      case None => 0
-    }
-    val expired = store.expireSnapshots(settings.keepSnapshots)
-    val orphans = store.removeOrphanFiles()
+  def run(spark: SparkSession, tableDir: String, settings: Settings, batchNumber: Long): Report = {
+    val (_, compactedTo) = graft.catalog.GraftMaintenance.compact(spark, tableDir,
+      smallBytes = settings.targetFileBytes, targetBytes = settings.targetFileBytes)
+    val expired = new graft.catalog.GraftManifestIO(new org.apache.hadoop.fs.Path(tableDir),
+      graft.catalog.GraftConf.hadoop).expireSnapshots(settings.keepSnapshots)
     val analyzed =
       if (settings.analyzeColumns.isEmpty) 0
-      else store.read() match {
-        case Some(current) =>
-          // driver-side stats materialization, the ANALYZE equivalent;
-          // one distributed scan via the shared stats operator
-          Analyze.columnStats(current, settings.analyzeColumns, exact = true).collect().length
-        case None => 0
-      }
-    Report(batchNumber, compactedTo, expired, orphans.length, analyzed)
+      else graft.catalog.GraftTable.read(spark, tableDir).fold(0)(current =>
+        // driver-side stats materialization, the ANALYZE equivalent;
+        // one distributed scan via the shared stats operator
+        Analyze.columnStats(current, settings.analyzeColumns, exact = true).collect().length)
+    Report(batchNumber, compactedTo, expired, analyzed)
   }
 }

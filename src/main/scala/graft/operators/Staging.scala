@@ -8,10 +8,11 @@ import org.apache.spark.sql.functions._
 /** Staging: group rows into batches capped at `maxRowsPerFile`, the
   * reference's `StagingProcessor` + `staging.table.maxRowsPerFile`.
   *
-  * Production write path: the streaming pipeline's merge-on-read delta
-  * IS the staged batch — [[graft.sources.SnapshotStore.commitDelta]] caps
-  * rows per delta file with Spark's native `maxRecordsPerFile` (zero
-  * extra shuffle), so no separate staged copy is written. The
+  * Production write path: a stream batch's data files ARE the staged
+  * batch — [[graft.streaming.GraftStreamSink.commitBatch]] rolls to a
+  * new file every `maxRowsPerFile` rows inside the write task (zero
+  * extra shuffle, one Spark job), so no separate staged copy is
+  * written. The
   * `batchAccounting` query exists for the correctness gate: it assigns
   * deterministic batch ids equal to a global row_number's, through the
   * partition-parallel two-phase numbering ([[withGlobalRank]]).

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import graft.catalog.{EqDeleteEntry, GraftCommitConflict, GraftCommitStamp, GraftConf, GraftMaintenance, GraftManifestIO}
+import graft.catalog.{EqDeleteEntry, GraftCommitConflict, GraftCommitStamp, GraftConf, GraftMaintenance, GraftManifestIO, GraftSnapshot}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
 /** Structured-Streaming sink into a Graft-format table: the engine's
   * version of the reference's core loop — a stream whose micro-batches
@@ -21,6 +22,11 @@ object GraftStreamSink {
 
   val BatchIdProp = "graft.stream.batch-id"
 
+  /** What a commit landed: the rows and data bytes of its files, and
+    * the snapshot it made.
+    */
+  final case class Committed(rows: Long, bytes: Long, snapshot: GraftSnapshot)
+
   /** The one stream-batch commit of the catalog: the batch's rows land
     * once as data files through the table's own writer (so its
     * `graft.bloom.columns` sidecars are written), and commit in one
@@ -30,40 +36,84 @@ object GraftStreamSink {
     * on that column at this commit's sequence: each older row whose key
     * the batch carries is shadowed, the batch's own rows stay visible,
     * and no key file is written — the data file is its own key set.
-    * Bootstraps the table from the batch's schema. Returns false for a
-    * replay skip.
+    * Bootstraps the table from the batch's schema, and evolves it: a
+    * batch column the table lacks is added, and an int column that a
+    * batch carries as long widens. `maxRowsPerFile` rolls the batch's
+    * files; `expectedHead = Some(v)` fails the commit with a
+    * [[GraftCommitConflict]] when the table's head is no longer `v`.
+    * Returns None for a replay skip.
     */
   def commitBatch(tableDir: String, batch: DataFrame, batchId: Long,
-      keyCol: Option[String] = None, prop: String = BatchIdProp): Boolean = {
+      keyCol: Option[String] = None, prop: String = BatchIdProp,
+      maxRowsPerFile: Long = Long.MaxValue,
+      expectedHead: Option[Option[Long]] = None): Option[Committed] = {
     val io = new GraftManifestIO(new Path(tableDir), GraftConf.hadoop)
     val head = io.currentSnapshot()
-    if (head.exists(s => GraftCommitStamp.committed(s.properties, prop, batchId))) return false
+    if (head.exists(s => GraftCommitStamp.committed(s.properties, prop, batchId))) None
+    else try GraftCommitStamp.withBatchId(prop, batchId) {
+      Some(commitRows(io, head, batch, keyCol, maxRowsPerFile, expectedHead))
+    } catch { case e: Throwable if GraftCommitStamp.isReplay(e) => None }
+  }
+
+  /** [[commitBatch]]'s commit without its exactly-once stamp: one commit
+    * of `df` into the table at `tableDir` (a backfill slice merged on
+    * `keyCol`, which a later one may merge again).
+    */
+  def commit(tableDir: String, df: DataFrame, keyCol: Option[String],
+      maxRowsPerFile: Long = Long.MaxValue): Committed = {
+    val io = new GraftManifestIO(new Path(tableDir), GraftConf.hadoop)
+    commitRows(io, io.currentSnapshot(), df, keyCol, maxRowsPerFile, None)
+  }
+
+  private def commitRows(io: GraftManifestIO, head: Option[GraftSnapshot], batch: DataFrame,
+      keyCol: Option[String], maxRowsPerFile: Long, expectedHead: Option[Option[Long]]): Committed = {
+    val tableDir = io.tableDir.toString
+    keyCol.foreach(k => require(batch.columns.contains(k) && head.forall(_.schema.fieldNames.contains(k)),
+      s"key column $k missing from the batch or from table $tableDir"))
+    head.foreach(h => evolved(h.schema, batch.schema, tableDir))
     val entries = GraftMaintenance.writeEntries(batch, tableDir, batch.schema, "stream",
-      head.map(_.properties).getOrElse(Map.empty))
-    try {
-      GraftCommitStamp.withBatchId(prop, batchId) {
-        io.commit(if (keyCol.isEmpty) "stream-append" else "stream-upsert") { base =>
-          GraftManifestIO.Content(
-            base.map(_.schema).getOrElse(batch.schema), base.map(_.properties).getOrElse(Map.empty),
-            base.map(_.files).getOrElse(Nil) ++ entries.map(_.copy(seq = GraftManifestIO.PendingSeq)),
-            base.map(_.deletes).getOrElse(Nil),
-            base.map(_.eqDeletes).getOrElse(Nil) ++ keyCol.toSeq.flatMap(k => entries.map(e =>
-              EqDeleteEntry(e.path, e.rows, Seq(k), GraftManifestIO.PendingSeq))))
-        }
+      head.map(_.properties).getOrElse(Map.empty), maxRowsPerFile)
+    val snapshot = try {
+      io.commit(if (keyCol.isEmpty) "stream-append" else "stream-upsert") { base =>
+        expectedHead.foreach(v => if (base.map(_.version) != v) throw new GraftCommitConflict(
+          s"table $tableDir advanced to v${base.fold(0L)(_.version)} during a batch based on " +
+            s"v${v.getOrElse(0L)}: an out-of-band commit landed"))
+        GraftManifestIO.Content(
+          base.fold(batch.schema)(b => evolved(b.schema, batch.schema, tableDir)),
+          base.map(_.properties).getOrElse(Map.empty),
+          base.map(_.files).getOrElse(Nil) ++ entries.map(_.copy(seq = GraftManifestIO.PendingSeq)),
+          base.map(_.deletes).getOrElse(Nil),
+          base.map(_.eqDeletes).getOrElse(Nil) ++ keyCol.toSeq.flatMap(k => entries.map(e =>
+            EqDeleteEntry(e.path, e.rows, Seq(k), GraftManifestIO.PendingSeq))))
       }
-      true
-    } catch {
-      case e: Throwable if GraftCommitStamp.isReplay(e) =>
-        GraftMaintenance.dropEntries(tableDir, entries); false
-      case e: GraftCommitConflict => GraftMaintenance.dropEntries(tableDir, entries); throw e
+    } catch { case e: Throwable => GraftMaintenance.dropEntries(tableDir, entries); throw e }
+    Committed(entries.map(_.rows).sum, entries.map(_.bytes).sum, snapshot)
+  }
+
+  /** `table` evolved to take `batch`: batch-only columns are appended,
+    * and an int column meets a long one as long. Any other type change
+    * is refused by name.
+    */
+  private def evolved(table: StructType, batch: StructType, tableDir: String): StructType = {
+    val batchTypes = batch.map(f => f.name -> f.dataType).toMap
+    val kept = table.map { f =>
+      (f.dataType, batchTypes.getOrElse(f.name, f.dataType)) match {
+        case (t, b) if t == b => f
+        case (IntegerType, LongType) => f.copy(dataType = LongType)
+        case (LongType, IntegerType) => f
+        case (t, b) => throw new IllegalArgumentException(s"column ${f.name} of table $tableDir is " +
+          s"${t.simpleString}; a batch carrying it as ${b.simpleString} cannot land")
+      }
     }
+    StructType(kept ++ batch.filterNot(f => table.fieldNames.contains(f.name)).map(_.copy(nullable = true)))
   }
 
   /** foreachBatch handler: `stream.writeStream.foreachBatch(
     * GraftStreamSink.idempotentAppend(tableDir) _)`.
     */
-  def idempotentAppend(tableDir: String)(batch: DataFrame, batchId: Long): Unit =
-    commitBatch(tableDir, batch, batchId)
+  def idempotentAppend(tableDir: String)(batch: DataFrame, batchId: Long): Unit = {
+    commitBatch(tableDir, batch, batchId); ()
+  }
 
   /** foreachBatch handler staging under a WAP ref instead of the
     * version chain — write-audit-publish for STREAMS: micro-batches

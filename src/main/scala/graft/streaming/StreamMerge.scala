@@ -97,14 +97,17 @@ object StreamMerge {
       batchIdProp: String = StreamMerge.BatchIdProp)
 
   /** foreachBatch handler: latest-per-key dedup within the batch, then
-    * one commit keyed on `keyCol` — exactly once per batch id. Returns
-    * true if the batch was applied, false for a replay skip.
+    * one commit keyed on `keyCol` — exactly once per batch id, with
+    * [[GraftStreamSink.commitBatch]]'s file cap and head check. Returns
+    * what the batch committed, None for a replay skip.
     */
   def idempotentMerge(tableDir: String, keyCol: String, versionCols: Seq[String],
-      batchIdProp: String = BatchIdProp)(batch: DataFrame, batchId: Long): Boolean = {
+      batchIdProp: String = BatchIdProp, maxRowsPerFile: Long = Long.MaxValue,
+      expectedHead: Option[Option[Long]] = None)(
+      batch: DataFrame, batchId: Long): Option[GraftStreamSink.Committed] = {
     require(versionCols.nonEmpty, "upsert versioning requires at least one version column")
     GraftStreamSink.commitBatch(tableDir, Upsert.latestByKey(batch, Seq(keyCol), versionCols),
-      batchId, Some(keyCol), batchIdProp)
+      batchId, Some(keyCol), batchIdProp, maxRowsPerFile, expectedHead)
   }
 
   /** Drain all currently-available source blobs into the target table

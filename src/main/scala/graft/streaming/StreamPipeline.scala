@@ -1,7 +1,8 @@
 package graft.streaming
 
-import graft.operators.{FieldSelection, MergeKey, TargetMaintenance, Upsert}
-import graft.sources.SnapshotStore
+import graft.catalog.{GraftConf, GraftManifestIO, GraftTable, ManifestLog}
+import graft.operators.{FieldSelection, MergeKey, TargetMaintenance}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -11,17 +12,18 @@ import org.apache.spark.sql.types.StructType
   * in a source directory are discovered incrementally (the engine's file
   * source performs the versioned listing), field-filtered, merge-keyed,
   * deduplicated to latest-per-key within each micro-batch, and committed
-  * to a [[SnapshotStore]] target via `foreachBatch` as one merge-on-read
-  * delta keyed on the merge key — the reference's staging → merge →
-  * dispose → watermark loop in one write: the delta is the staged batch
-  * (capped at `maxRowsPerFile` rows per file, listed by the manifest), so
-  * no staged copy is written, re-read or disposed.
+  * to a Graft catalog table at `targetDir` via `foreachBatch` through
+  * [[StreamMerge.idempotentMerge]] — the reference's staging → merge →
+  * dispose → watermark loop in one write: the batch's data files
+  * (capped at `maxRowsPerFile` rows per file) are the staged batch and
+  * its own equality-delete key set, so no staged copy is written,
+  * re-read or disposed, and the batch id lands in the same snapshot.
   *
   * Scale notes: `maxFilesPerTrigger` is the reference's throughput
   * shaping; the per-batch upsert is one windowed top-1 per key; the
   * commit writes only the staged rows (O(churn)) and never reads the
-  * target, whose MERGE semantics resolve on read until the maintenance
-  * optimize folds the chain. Checkpointing gives exactly-once file
+  * target, whose MERGE semantics resolve on read until maintenance
+  * compacts the delete mass away. Checkpointing gives exactly-once file
   * tracking — the reference's watermark store.
   */
 object StreamPipeline {
@@ -59,30 +61,30 @@ object StreamPipeline {
       /** fire compact/expire/orphans/analyze every N batches (the
         * reference's `maintenanceSettings.*.batchThreshold`). */
       maintenance: Option[TargetMaintenance.Settings] = None,
-      /** bound transient snapshot-commit failures (merge-client retry). */
+      /** bound transient batch-commit failures (merge-client retry); the
+        * batch-id stamp lands a retried batch once. */
       commitRetry: RetryPolicy = RetryPolicy.Never,
       /** scratch root for [[StreamRunner]]'s `Overwrite` backfill shards
         * (`<stagingDir>/backfill-staging`). Streaming never writes here:
-        * each micro-batch's delta is its staged batch.
+        * each micro-batch's files are its staged batch.
         */
       stagingDir: Option[String] = None,
-      /** commit each batch with optimistic-concurrency detection
-        * ([[graft.sources.SnapshotStore.commitIf]]): the batch's base
-        * version is pinned when the batch starts its commit, and an
+      /** commit each batch with optimistic-concurrency detection: the
+        * table's head is pinned when the batch starts its commit, and an
         * out-of-band writer advancing the table mid-batch (a manual
         * backfill, a second stream on the same target) fails the batch
-        * with a typed conflict instead of silently reverting their
-        * commit — last-writer-wins becomes fail-fast. The checkpoint
-        * replays the batch on restart against a fresh base.
+        * with a [[graft.catalog.GraftCommitConflict]] — fail-fast rather
+        * than last-writer-wins. The checkpoint replays the batch on
+        * restart against a fresh head.
         */
       detectConflicts: Boolean = false
   )
 
   /** Per-cycle pipeline metrics — the Spark-native form of the
-    * reference's DeclaredMetrics/DataDog counters. `rowsStaged` is
-    * collected with the Observation API on the running plan (no extra
-    * pass over the data); `rowsWritten` is the target's row count after
-    * the cycle's last commit, counted once per cycle.
+    * reference's DeclaredMetrics/DataDog counters. `rowsStaged` is the
+    * rows the cycle's commits landed, read off their file entries (no
+    * extra pass over the data); `rowsWritten` is the target's row count
+    * after the cycle's last commit, counted once per cycle.
     */
   final case class CycleMetrics(batches: Long, rowsStaged: Long, rowsWritten: Long, maintenanceRuns: Long = 0)
 
@@ -115,55 +117,61 @@ object StreamPipeline {
       if (cfg.sourceBuffering) None else cfg.maxFilesPerTrigger)
     val keyed = ChangeCapture.keyed(files, cfg.fieldRule, cfg.essentialFields, cfg.primaryKeys,
       cfg.versionCols, cfg.includeSourceVersion)
-    val batches = ChangeCapture.drain(keyed, cfg.checkpointDir) { (batch, _) =>
-      val store = new SnapshotStore(spark, cfg.targetDir)
-      // merge-on-read: the staged latest-per-key rows land as one delta
-      // keyed on the merge key, superseding every earlier row with that
-      // key — the batch neither reads nor rewrites the target. The delta
-      // IS the staged batch (the reference's staging table, capped at
-      // maxRowsPerFile rows per file), written once. Under
-      // detectConflicts the base version is pinned HERE, so an
-      // out-of-band commit since fails the batch with a typed conflict.
-      // A replayed batch re-commits the same rows, which supersede
-      // themselves: the commit is idempotent. An evolved source schema
-      // widens the table schema and reads align every part to it (the
-      // reference's SchemaMigrationProcessor).
-      val expected = if (cfg.detectConflicts) Some(store.currentVersion()) else None
-      // each commitRetry attempt re-executes the staged plan under a
-      // fresh Observation: a failed attempt completes its own with a
-      // partial count, so a shared one would under-count the batch
-      val (landed, staged) = Retry.withRetry(cfg.commitRetry) {
-        val obs = new org.apache.spark.sql.Observation()
-        val plan = Upsert.latestByKey(batch, Seq(MergeKey.ColumnName), cfg.versionCols)
-          .observe(obs, count(lit(1)).as("rows"))
-        val c = store.commitDelta(plan, Seq(MergeKey.ColumnName),
-          maxRowsPerFile = Some(cfg.maxRowsPerFile), expectedVersion = expected)
-        (c, obs.get("rows").asInstanceOf[Long])
+    requireCatalogTarget(cfg.targetDir)
+    val batches = ChangeCapture.drain(keyed, cfg.checkpointDir) { (batch, batchId) =>
+      // under detectConflicts the head is pinned HERE, before the retry
+      // loop, so an out-of-band commit since fails every attempt
+      val pinned = if (!cfg.detectConflicts) None
+        else Some(new GraftManifestIO(new Path(cfg.targetDir), GraftConf.hadoop).currentVersion())
+      val landed = Retry.withRetry(cfg.commitRetry) {
+        StreamMerge.idempotentMerge(cfg.targetDir, MergeKey.ColumnName, cfg.versionCols,
+          batchIdProp(cfg.checkpointDir), cfg.maxRowsPerFile, pinned)(batch, batchId)
       }
-      rowsStaged += staged
-      publisher.counter("graft.stream.bytes_committed", landed.bytes,
-        Map("kind" -> (if (landed.deltas == 0) "base" else "delta")))
-      // threshold-driven maintenance on the stream-lifetime batch number;
-      // its optimize folds the delta chain into a new base
+      landed.foreach { c =>
+        rowsStaged += c.rows
+        publisher.counter("graft.stream.bytes_committed", c.bytes)
+      }
+      // threshold-driven maintenance on the stream-lifetime batch number
       val n = batchCounter.incrementAndGet()
-      val maintained = cfg.maintenance.flatMap(s => TargetMaintenance.maybeRun(spark, store, s, n))
+      val maintained = cfg.maintenance.flatMap(s => TargetMaintenance.maybeRun(spark, cfg.targetDir, s, n))
       maintained.foreach { r =>
         maintenanceRuns += 1
         publisher.counter("graft.maintenance.runs", 1, Map("at_batch" -> r.atBatch.toString))
       }
-      val chain = if (maintained.isEmpty) landed.deltas
-        else store.currentVersion().fold(0)(v => store.manifest(v).deltas.size)
-      publisher.gauge("graft.snapshot.deltas", chain.toDouble)
+      val head = landed.filter(_ => maintained.isEmpty).map(_.snapshot).orElse(
+        new GraftManifestIO(new Path(cfg.targetDir), GraftConf.hadoop).currentSnapshot())
+      publisher.gauge("graft.snapshot.deltas", head.fold(0)(_.eqDeletes.size).toDouble)
     }
     // target rows after the cycle's last commit: one count per cycle
     val rowsWritten =
-      if (batches == 0) 0L else new SnapshotStore(spark, cfg.targetDir).read().fold(0L)(_.count())
+      if (batches == 0) 0L else GraftTable.read(spark, cfg.targetDir).fold(0L)(_.count())
     val m = CycleMetrics(batches, rowsStaged, rowsWritten, maintenanceRuns)
     publisher.counter("graft.stream.batches", m.batches)
     publisher.counter("graft.stream.rows_staged", m.rowsStaged)
     publisher.gauge("graft.stream.rows_written", m.rowsWritten.toDouble)
     m
   }
+
+  /** Refuse a target that still holds a table of the retired
+    * tab-separated format (`manifests/v<N>.manifest`): the stream would
+    * otherwise bootstrap an empty catalog table beside its data.
+    */
+  private[streaming] def requireCatalogTarget(targetDir: String): Unit = {
+    val old = ManifestLog(new Path(targetDir, "manifests"), GraftConf.hadoop, ".manifest")
+    old.head().foreach { v =>
+      throw new IllegalArgumentException(s"target $targetDir holds a SnapshotStore table " +
+        s"(manifests/${old.path(v).getName}), a format the stream no longer commits to; " +
+        "point targetDir at a Graft catalog table or at an empty directory")
+    }
+  }
+
+  /** The snapshot property carrying the stream's exactly-once batch
+    * stamp, one per checkpoint: batch ids restart with a fresh
+    * checkpoint, whose batch 0 must not read as a replay of an earlier
+    * checkpoint's.
+    */
+  private def batchIdProp(checkpointDir: String): String =
+    s"${StreamMerge.BatchIdProp}.${Integer.toHexString(new Path(checkpointDir).toString.hashCode)}"
 
   /** Continuous change-capture: repeated AvailableNow cycles separated by
     * jittered delays — exactly the reference's poll loop

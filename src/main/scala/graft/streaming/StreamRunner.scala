@@ -77,9 +77,10 @@ object StreamRunner {
     *  - Overwrite — sharded recompute + atomic completion swap
     *    ([[graft.operators.Backfill.runSharded]]; resumable via the
     *    persisted shard state keyed by `STREAMCONTEXT__BACKFILL_ID`)
-    *  - Merge — commit the slice's latest-per-key rows as one
-    *    merge-on-read delta on the existing target (MERGE semantics,
-    *    without reading or rewriting the target)
+    *  - Merge — commit the slice's latest-per-key rows as one keyed
+    *    commit on the existing target ([[GraftStreamSink.commit]]: MERGE
+    *    semantics, without reading or rewriting the target; no batch-id
+    *    stamp, so a later Merge backfill lands too)
     *
     * Returned metrics: `batches` = shards staged this run (Overwrite) or
     * 1 (Merge); row counters stay 0 — a backfill is one commit, not a
@@ -93,7 +94,7 @@ object StreamRunner {
       cfg: StreamPipeline.Config
   ): StreamPipeline.CycleMetrics = {
     import graft.operators.{Backfill, MergeKey, Upsert}
-    import graft.sources.{BlobListingSource, SnapshotStore}
+    import graft.sources.BlobListingSource
 
     val behavior = StreamSpec.backfillBehavior(spec).getOrElse("Overwrite")
     val fromMs = StreamSpec.backfillStartDate(spec)
@@ -105,18 +106,19 @@ object StreamRunner {
     val keyed = ChangeCapture.keyed(spark.read.schema(schema).parquet(selected.map(_.path): _*),
       cfg.fieldRule, cfg.essentialFields, cfg.primaryKeys, cfg.versionCols, cfg.includeSourceVersion)
 
-    val store = new SnapshotStore(spark, cfg.targetDir)
+    StreamPipeline.requireCatalogTarget(cfg.targetDir)
     behavior match {
       case "Overwrite" =>
         val staging = cfg.stagingDir.getOrElse("/tmp/graft-backfill") + "/backfill-staging"
         val state = new Backfill.BackfillStateManager(spark, s"$staging/state",
           StreamSpec.backfillId(env).getOrElse("backfill"))
         val result = Backfill.runSharded(spark, keyed, Seq(MergeKey.ColumnName), cfg.versionCols,
-          nShards = 8, s"$staging/shards", store, state)
+          nShards = 8, s"$staging/shards", cfg.targetDir, state)
         StreamPipeline.CycleMetrics(result.stagedThisRun.size.toLong, 0, 0)
       case "Merge" =>
-        store.commitDelta(Upsert.latestByKey(keyed, Seq(MergeKey.ColumnName), cfg.versionCols),
-          Seq(MergeKey.ColumnName), maxRowsPerFile = Some(cfg.maxRowsPerFile), retry = cfg.commitRetry)
+        Retry.withRetry(cfg.commitRetry)(GraftStreamSink.commit(cfg.targetDir,
+          Upsert.latestByKey(keyed, Seq(MergeKey.ColumnName), cfg.versionCols), Some(MergeKey.ColumnName),
+          cfg.maxRowsPerFile))
         StreamPipeline.CycleMetrics(1, 0, 0)
     }
   }

@@ -433,7 +433,7 @@ object StreamSpec {
 
   /** Apply the spec's object-store settings to a session's Hadoop conf so
     * every FileSystem the engine opens (BlobListingSource listings, the
-    * streaming file source, the snapshot store) sees them.
+    * streaming file source, the catalog target) sees them.
     */
   def applyObjectStoreConf(spark: org.apache.spark.sql.SparkSession, spec: Mapping): Unit =
     s3HadoopConf(spec).foreach { case (k, v) => spark.sparkContext.hadoopConfiguration.set(k, v) }

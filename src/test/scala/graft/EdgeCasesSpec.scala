@@ -1,5 +1,6 @@
 package graft
 
+import graft.catalog.GraftTable
 import graft.operators._
 import graft.streaming.{ChangeCapture, StreamPipeline}
 import org.apache.spark.sql.functions._
@@ -81,10 +82,9 @@ class EdgeCasesSpec extends SparkSpec {
     // a single shard degenerates to the plain backfill
     val base  = java.nio.file.Files.createTempDirectory("graft_bf1").toString
     val docs  = Seq((1L, 10L, "a"), (1L, 20L, "b"), (2L, 5L, "c")).toDF("k", "v", "p")
-    val store = new graft.sources.SnapshotStore(spark, s"$base/t")
     val state = new graft.operators.Backfill.BackfillStateManager(spark, s"$base/s", "one")
-    graft.operators.Backfill.runSharded(spark, docs, Seq("k"), Seq("v"), 1, s"$base/stage", store, state)
-    val out = store.read().get.select("k", "p").as[(Long, String)].collect().toMap
+    graft.operators.Backfill.runSharded(spark, docs, Seq("k"), Seq("v"), 1, s"$base/stage", s"$base/t", state)
+    val out = GraftTable.read(spark, s"$base/t").get.select("k", "p").as[(Long, String)].collect().toMap
     assert(out == Map(1L -> "b", 2L -> "c"))
   }
 
@@ -151,7 +151,7 @@ class EdgeCasesSpec extends SparkSpec {
     val m = StreamPipeline.runContinuously(spark, schema, cfg, cadence, maxCycles = 2)
     // cycle 2 sees no new files (checkpointed) — rows written stays 1
     assert(m.rowsWritten == 1)
-    assert(new graft.sources.SnapshotStore(spark, target).read().get.count() == 1)
+    assert(GraftTable.read(spark, target).get.count() == 1)
   }
 
   test("round-7 operators tolerate empty and degenerate inputs") {
@@ -225,15 +225,12 @@ class EdgeCasesSpec extends SparkSpec {
   test("stream-bench pass combination: rates take the best pass, -1 failure sentinels never shadow a real sample") {
     val ok = StreamBenchSection.Result(
       mergeRowsPerSec = 10000, appendRowsPerSec = 30000, batches = 8,
-      morGrowthRowsPerSec = 5000, morGrowthFlatness = 1.2,
-      ssGrowthRowsPerSec = 6000, ssGrowthFlatness = 1.0,
-      morWriteAmp = 5.2, ssWriteAmp = 90.0)
-    val slower = ok.copy(mergeRowsPerSec = 7000, appendRowsPerSec = 20000,
-      morGrowthFlatness = 1.5, ssGrowthFlatness = 1.4)
+      morGrowthRowsPerSec = 5000, morGrowthFlatness = 1.2, morWriteAmp = 5.2)
+    val slower = ok.copy(mergeRowsPerSec = 7000, appendRowsPerSec = 20000, morGrowthFlatness = 1.5)
     val combined = StreamBenchSection.best(ok, slower)
     assert(combined.mergeRowsPerSec == 10000 && combined.appendRowsPerSec == 30000,
       "rates must take the best pass")
-    assert(combined.morGrowthFlatness == 1.2 && combined.ssGrowthFlatness == 1.0,
+    assert(combined.morGrowthFlatness == 1.2,
       "flatness must take the min")
     // a failed pass records -1 everywhere: it must lose to any real pass
     // on every field, in either argument order

@@ -653,6 +653,41 @@ class GraftCatalogSpec extends SparkSpec {
     assert(spark.sql(s"SELECT count(DISTINCT v) FROM $cat.db.zord").head.getLong(0) == 4096)
   }
 
+  test("zorder counts the files it reads in GraftReadMetrics once, as compact does") {
+    spark.sql(s"CREATE TABLE $cat.db.zreads (x BIGINT, y BIGINT, k STRING)")
+    spark.range(0, 600).selectExpr("id % 37 AS x", "id % 41 AS y", "concat('k', id % 300) AS k")
+      .repartition(3).writeTo(s"$cat.db.zreads").append()
+    val dir = s"$warehouse/db/zreads"
+    // one keyed batch adds a file that is also an equality-delete key set
+    graft.streaming.GraftStreamSink.commit(dir,
+      spark.range(0, 10).selectExpr("id AS x", "id AS y", "concat('k', id) AS k").coalesce(1), Some("k"))
+    val snap = manifestIO("zreads").currentSnapshot().get
+    assert(snap.files.size == 4 && snap.eqDeletes.size == 1)
+    val f0 = graft.catalog.GraftReadMetrics.dataFilesOpened
+    graft.catalog.GraftMaintenance.zorder(spark, dir, "x", "y", bits = 8, targetFiles = 2)
+    // the 4 data files, plus the key set (itself a data file) once more
+    assert(graft.catalog.GraftReadMetrics.dataFilesOpened - f0 == 5)
+    // 600 rows, less the 20 the batch's 10 keys shadow, plus its 10
+    assert(spark.sql(s"SELECT count(*) FROM $cat.db.zreads").head.getLong(0) == 590)
+  }
+
+  test("a pretty-printed manifest of an older table still reads and commits") {
+    spark.sql(s"CREATE TABLE $cat.db.pretty (k BIGINT, v STRING)")
+    spark.sql(s"INSERT INTO $cat.db.pretty VALUES (1, 'a'), (2, 'b')")
+    val manifest = java.nio.file.Paths.get(s"$warehouse/db/pretty/manifests/v2.json")
+    val compact = new String(java.nio.file.Files.readAllBytes(manifest), "UTF-8")
+    assert(!compact.contains("\n"), "manifests are written as compact JSON")
+    // the rendering tables written before the compact form carry
+    val pretty = org.json4s.jackson.JsonMethods.pretty(org.json4s.jackson.JsonMethods.parse(compact))
+    assert(pretty.contains("\n  \"files\" : ["))
+    java.nio.file.Files.write(manifest, pretty.getBytes("UTF-8"))
+    assert(GraftManifestIO.fromJson(pretty) == GraftManifestIO.fromJson(compact))
+    assert(spark.sql(s"SELECT * FROM $cat.db.pretty ORDER BY k").collect().toSeq == Seq(Row(1L, "a"), Row(2L, "b")))
+    spark.sql(s"INSERT INTO $cat.db.pretty VALUES (3, 'c')")
+    assert(spark.sql(s"SELECT count(*) FROM $cat.db.pretty").head.getLong(0) == 3)
+    assert(manifestIO("pretty").readSnapshot(3L).files.map(_.rows).sum == 3)
+  }
+
   test("metadata-only aggregates answer from the manifest, fall back when unsafe") {
     spark.sql(s"CREATE TABLE $cat.db.agg (k BIGINT, s STRING)")
     spark.sql(s"INSERT INTO $cat.db.agg SELECT id, concat('s', id) FROM range(0, 500)")

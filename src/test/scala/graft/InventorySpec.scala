@@ -209,4 +209,21 @@ class InventorySpec extends SparkSpec {
       Set("GraftStreamSink.scala", "GraftManifest.scala")(p.getFileName.toString)), "EqDeleteEntry(")
     assert(eq.isEmpty, s"equality-delete entries built outside the stream-batch commit: ${eq.mkString("; ")}")
   }
+
+  test("graft.sources.SnapshotStore is a read-only view that nothing in src/main calls") {
+    val methods = classOf[graft.sources.SnapshotStore].getDeclaredMethods.filterNot(_.isSynthetic)
+      .map(_.getName).toSeq
+    assert(methods == Seq("read"), s"SnapshotStore must expose only read(): $methods")
+    val use = """new\s+(graft\.sources\.)?SnapshotStore\b|import\s+graft\.sources\.[^\n]*\bSnapshotStore\b""".r
+    val callers = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala")).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "SnapshotStore.scala")
+      .flatMap { p =>
+        new String(java.nio.file.Files.readAllBytes(p), "UTF-8").split("\n").toSeq.zipWithIndex.collect {
+          case (line, i) if use.findFirstIn(line).nonEmpty && !line.trim.startsWith("*") &&
+              !line.trim.startsWith("//") => s"$p:${i + 1}"
+        }
+      }
+    assert(callers.isEmpty, s"src/main reads through SnapshotStore: ${callers.mkString("; ")}")
+  }
 }

@@ -1,8 +1,8 @@
 package graft
 
-import graft.catalog.GraftManifestIO
+import graft.catalog.{GraftManifestIO, GraftTable}
 import graft.operators.{IndexManifests, ShardedIndex}
-import graft.sources.SnapshotStore
+import graft.streaming.GraftStreamSink
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.connector.catalog.{Identifier, TableCatalog}
@@ -62,13 +62,20 @@ class ManifestLogSpec extends SparkSpec {
     }
   }
 
-  test("a crash at any op of a SnapshotStore commitDelta leaves v or v+1; the replay converges") {
+  private def tableIO(dir: String) = new GraftManifestIO(new Path(dir), spark.sparkContext.hadoopConfiguration)
+
+  /** The table at `dir`: its head version and a hash of what it reads. */
+  private def tableState(dir: String): (Option[Long], Seq[String]) =
+    (tableIO(dir).currentVersion(), GraftTable.read(spark, dir).fold(Seq.empty[String])(hash))
+
+  test("a crash at any op of a keyed stream commitBatch leaves v or v+1; the replay converges") {
     val root = crashfsDir("graft_crash_store")
-    def store(name: String) = new SnapshotStore(spark, s"$root/$name")
     everyCrashPoint(
-      setup = name => store(name).commit(Seq((1, "a"), (2, "b")).toDF("k", "v")),
-      commit = name => store(name).commitDelta(Seq((2, "b2"), (3, "c")).toDF("k", "v"), Seq("k")),
-      state = name => (store(name).currentVersion(), store(name).read().fold(Seq.empty[String])(hash)))
+      setup = name => GraftStreamSink.commitBatch(s"$root/$name", Seq((1, "a"), (2, "b")).toDF("k", "v"),
+        0L, Some("k")),
+      commit = name => GraftStreamSink.commitBatch(s"$root/$name", Seq((2, "b2"), (3, "c")).toDF("k", "v"),
+        1L, Some("k")),
+      state = name => tableState(s"$root/$name"))
   }
 
   private lazy val crashCatalog: (String, TableCatalog) = {
@@ -107,14 +114,14 @@ class ManifestLogSpec extends SparkSpec {
   }
 
   test("a claim whose write fails leaves v, not a torn head; the replay converges") {
-    val store = new SnapshotStore(spark, crashfsDir("graft_torn_store") + "/t")
-    store.commit(Seq((1, "a"), (2, "b")).toDF("k", "v"))
-    def delta(): Unit = store.commitDelta(Seq((2, "b2"), (3, "c")).toDF("k", "v"), Seq("k"))
+    val dir = crashfsDir("graft_torn_store") + "/t"
+    GraftStreamSink.commitBatch(dir, Seq((1, "a"), (2, "b")).toDF("k", "v"), 0L, Some("k"))
+    def batch(): Unit = GraftStreamSink.commitBatch(dir, Seq((2, "b2"), (3, "c")).toDF("k", "v"), 1L, Some("k"))
     tornClaims.set(1)
-    try intercept[java.io.IOException](delta()) finally tornClaims.set(0)
-    assert(store.currentVersion().contains(1L) && hash(store.read().get) == Seq("[1,a]", "[2,b]"))
-    delta()
-    assert(store.currentVersion().contains(2L) && hash(store.read().get) == Seq("[1,a]", "[2,b2]", "[3,c]"))
+    try intercept[java.io.IOException](batch()) finally tornClaims.set(0)
+    assert(tableState(dir) == ((Some(1L), Seq("[1,a]", "[2,b]"))))
+    batch()
+    assert(tableState(dir) == ((Some(2L), Seq("[1,a]", "[2,b2]", "[3,c]"))))
 
     val (_, catalog) = crashCatalog
     spark.sql("CREATE TABLE crashcat.db.torn (k INT, v STRING)")
@@ -128,18 +135,22 @@ class ManifestLogSpec extends SparkSpec {
     assert(hash(spark.table("crashcat.db.torn")) == Seq("[1,a]", "[2,b]"))
   }
 
-  test("a racing SnapshotStore commit of the same version cannot touch the winner's files") {
-    val store = new SnapshotStore(spark, crashfsDir("graft_race_store") + "/t")
-    store.commit(Seq((1, "a")).toDF("k", "v"))
-    // A has staged v2; at A's claim, B stages v2 as well and dies before its own claim
+  test("a racing keyed commitBatch of the same version cannot touch the winner's files") {
+    val dir = crashfsDir("graft_race_store") + "/t"
+    GraftStreamSink.commitBatch(dir, Seq((1, "a")).toDF("k", "v"), 0L, Some("k"))
+    // A has written its batch; at A's claim, B writes one as well and dies before its own claim
     ManifestCrashFileSystem.onManifestCreate = () => {
       ManifestCrashFileSystem.onManifestCreate = () => throw new java.io.IOException("injected: B dies before its claim")
-      intercept[java.io.IOException](store.commitDelta(Seq((1, "b")).toDF("k", "v"), Seq("k")))
+      intercept[java.io.IOException](GraftStreamSink.commit(dir, Seq((1, "b")).toDF("k", "v"), Some("k")))
       ManifestCrashFileSystem.onManifestCreate = () => ()
     }
-    try store.commitDelta(Seq((1, "a2"), (2, "c")).toDF("k", "v"), Seq("k"))
+    try GraftStreamSink.commitBatch(dir, Seq((1, "a2"), (2, "c")).toDF("k", "v"), 1L, Some("k"))
     finally ManifestCrashFileSystem.onManifestCreate = () => ()
-    assert(store.currentVersion().contains(2L) && hash(store.read().get) == Seq("[1,a2]", "[2,c]"))
+    assert(tableState(dir) == ((Some(2L), Seq("[1,a2]", "[2,c]"))))
+    val listed = tableIO(dir).currentSnapshot().get.files.map(_.path).toSet
+    val onDisk = new java.io.File(dir.stripPrefix("crashfs:") + "/data").list()
+      .filter(_.endsWith(".parquet")).map(n => s"data/$n").toSet
+    assert(onDisk == listed, "B's files went with it; A's files all remain")
   }
 
   /** Run `competitor` at the `n`-th manifest claim from now, once,

@@ -1,6 +1,7 @@
 package graft
 
-import graft.sources.{BlobListingSource, SnapshotStore}
+import graft.catalog.GraftTable
+import graft.sources.BlobListingSource
 import graft.streaming.{StreamPipeline, StreamSpec}
 import java.nio.file.Files
 
@@ -61,7 +62,7 @@ class ObjectStoreSpec extends SparkSpec {
       primaryKeys = Seq("k"), versionCols = Seq("version"))
     val batches = StreamPipeline.runAvailableNow(spark, schema, cfg)
     assert(batches >= 1)
-    val rows = new SnapshotStore(spark, mockUri(target)).read().get
+    val rows = GraftTable.read(spark, mockUri(target)).get
       .select("k", "payload").as[(Int, String)].collect().toMap
     assert(rows == Map(1 -> "a", 2 -> "b"))
   }

@@ -65,16 +65,22 @@ class OperatorsSpec extends SparkSpec {
     assert(rows(1).getAs[String]("y") == "extra")
   }
 
-  test("a SnapshotStore delta (the staged batch) respects maxRowsPerFile") {
-    val dir   = java.nio.file.Files.createTempDirectory("graft_staging").toString + "/t"
-    val store = new graft.sources.SnapshotStore(spark, dir)
-    store.commit(spark.range(1).toDF("id"))
+  test("a keyed stream commit (the staged batch) rolls a file every maxRowsPerFile rows in one job") {
+    import graft.streaming.GraftStreamSink
+    val dir = java.nio.file.Files.createTempDirectory("graft_staging").toString + "/t"
+    GraftStreamSink.commitBatch(dir, spark.range(1).toDF("id"), 0L, Some("id"))
     val df = spark.range(100).toDF("id")
-    val c  = store.commitDelta(df.coalesce(1), Seq("id"), maxRowsPerFile = Some(30))
-    val files = store.manifest(c.version).deltas.last.files
+    val (c, jobs) = JobCounter(spark) { counter =>
+      counter.drain()
+      val c = GraftStreamSink.commitBatch(dir, df.coalesce(1), 1L, Some("id"), maxRowsPerFile = 30).get
+      (c, counter.drain().size)
+    }
+    assert(jobs == 1, s"the capped write must stay one Spark job, ran $jobs")
+    val files = c.snapshot.files.filter(_.seq == c.snapshot.version)
     assert(files.length == 4) // 30+30+30+10
-    assert(files.map(f => spark.read.parquet(s"$dir/$f").count()).sorted == Seq(10L, 30L, 30L, 30L))
-    assert(store.read().get.count() == 100)
+    assert(files.map(f => spark.read.parquet(s"$dir/${f.path}").count()).sorted == Seq(10L, 30L, 30L, 30L))
+    assert(c.rows == 100 && c.bytes == files.map(_.bytes).sum)
+    assert(graft.catalog.GraftTable.read(spark, dir).get.count() == 100)
   }
 
   test("memory-bound shaper advises fewer rows per chunk for wider schemas") {

@@ -1,7 +1,7 @@
 package graft
 
+import graft.catalog.{GraftManifestIO, GraftTable}
 import graft.operators.{Backfill, TargetMaintenance, Upsert}
-import graft.sources.SnapshotStore
 import graft.streaming._
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
@@ -11,6 +11,9 @@ import org.apache.spark.sql.functions._
   */
 class PipelineServicesSpec extends SparkSpec {
   import spark.implicits._
+
+  private def tableIO(dir: String) =
+    new GraftManifestIO(new org.apache.hadoop.fs.Path(dir), spark.sparkContext.hadoopConfiguration)
 
   // ---- retry / backoff ----
 
@@ -47,14 +50,20 @@ class PipelineServicesSpec extends SparkSpec {
   }
 
   test("snapshot commit retries transient failures idempotently") {
-    val dir   = Files.createTempDirectory("graft_retry_commit").toString + "/t"
-    val store = new SnapshotStore(spark, dir)
-    store.commit(Seq((1, "a")).toDF("k", "v"))
-    // a commit via the retry path lands exactly one new version
-    val v = store.commit(Seq((1, "b")).toDF("k", "v"),
-      retry = RetryPolicy(maxAttempts = 3, baseDelayMs = 1))
-    assert(v == 2L && store.versions() == Seq(1L, 2L))
-    assert(store.read().get.as[(Int, String)].collect().toSeq == Seq((1, "b")))
+    val dir = Files.createTempDirectory("graft_retry_commit").toString + "/t"
+    GraftStreamSink.commitBatch(dir, Seq((1, "a")).toDF("k", "v"), 0L, Some("k"))
+    // an attempt that fails after its commit landed (a lost reply) is
+    // retried: the retry finds the batch stamped and lands nothing
+    var attempts = 0
+    val landed = Retry.withRetry(RetryPolicy(maxAttempts = 3, baseDelayMs = 1)) {
+      attempts += 1
+      val c = GraftStreamSink.commitBatch(dir, Seq((1, "b")).toDF("k", "v"), 1L, Some("k"))
+      if (attempts == 1) throw new java.io.IOException("connection reset after the commit")
+      c
+    }
+    assert(attempts == 2 && landed.isEmpty, s"the retry must skip the landed batch: $landed")
+    assert(tableIO(dir).versions() == Seq(1L, 2L))
+    assert(GraftTable.read(spark, dir).get.as[(Int, String)].collect().toSeq == Seq((1, "b")))
   }
 
   // ---- graceful lifetime ----
@@ -82,7 +91,7 @@ class PipelineServicesSpec extends SparkSpec {
     val elapsedMs = (System.nanoTime() - t0) / 1000000
     assert(m.batches >= 1, s"first cycle should have processed the blob: $m")
     assert(elapsedMs < 30000, s"stop() must interrupt the 60s poll delay (took ${elapsedMs}ms)")
-    assert(new SnapshotStore(spark, target).read().get.count() == 1)
+    assert(GraftTable.read(spark, target).get.count() == 1)
   }
 
   // ---- metrics publishing ----
@@ -122,7 +131,7 @@ class PipelineServicesSpec extends SparkSpec {
     val schema = spark.read.parquet(src).schema
     val cfg = StreamPipeline.Config(sourceDir = src, targetDir = target, checkpointDir = ckpt,
       primaryKeys = Seq("k"), versionCols = Seq("version"),
-      maintenance = Some(TargetMaintenance.Settings(batchThreshold = 3)))
+      maintenance = Some(TargetMaintenance.Settings(batchThreshold = 3, keepSnapshots = 10)))
     val rec = new StatsdRecorder
     val counter = new StreamPipeline.BatchCounter
     StreamPipeline.runAvailableNowWithMetrics(spark, schema, cfg, rec, counter)
@@ -133,17 +142,15 @@ class PipelineServicesSpec extends SparkSpec {
 
     val committed = rec.lines.toSeq.filter(_.startsWith("graft.stream.bytes_committed:"))
     assert(committed.size == 3, rec.lines.mkString(","))
-    assert(committed.head.matches("""graft\.stream\.bytes_committed:[1-9][0-9]*\|c\|#kind:base"""), committed)
-    assert(committed.tail.forall(_.matches("""graft\.stream\.bytes_committed:[1-9][0-9]*\|c\|#kind:delta""")),
-      committed)
+    assert(committed.forall(_.matches("""graft\.stream\.bytes_committed:[1-9][0-9]*\|c""")), committed)
     // the counter is the data bytes the commit wrote (batch 2 = version 2)
-    val v2Bytes = new java.io.File(s"$target/data").listFiles().filter(_.getName.startsWith("v2-"))
-      .flatMap(_.listFiles()).filter(_.getName.endsWith(".parquet")).map(_.length()).sum
-    assert(committed(1) == s"graft.stream.bytes_committed:$v2Bytes|c|#kind:delta")
-    // the chain grows by one delta per batch; the maintenance fold at
-    // batch 3 resets it
+    val v2Bytes = tableIO(target).readSnapshot(2L).files.filter(_.seq == 2L)
+      .map(f => new java.io.File(s"$target/${f.path}").length()).sum
+    assert(committed(1) == s"graft.stream.bytes_committed:$v2Bytes|c")
+    // each batch lists its files as one more equality delete; the
+    // maintenance compaction at batch 3 folds them all
     assert(rec.lines.toSeq.filter(_.startsWith("graft.snapshot.deltas:")) ==
-      Seq("graft.snapshot.deltas:0.0|g", "graft.snapshot.deltas:1.0|g", "graft.snapshot.deltas:0.0|g"))
+      Seq("graft.snapshot.deltas:1.0|g", "graft.snapshot.deltas:2.0|g", "graft.snapshot.deltas:0.0|g"))
   }
 
   test("statsd UDP emitter delivers wire-format datagrams to a live socket") {
@@ -225,7 +232,7 @@ class PipelineServicesSpec extends SparkSpec {
       maxFilesPerTrigger = Some(1), sourceBuffering = true)
     val m = StreamPipeline.runAvailableNowWithMetrics(spark, schema, cfg)
     assert(m.batches == 1, s"buffering must override the per-trigger cap: $m")
-    assert(new SnapshotStore(spark, target).read().get.count() == 3)
+    assert(GraftTable.read(spark, target).get.count() == 3)
   }
 
   test("source version column stamps each target row with its blob's modification time") {
@@ -239,7 +246,7 @@ class PipelineServicesSpec extends SparkSpec {
       primaryKeys = Seq("k"), versionCols = Seq("version"), includeSourceVersion = true)
     StreamPipeline.runAvailableNow(spark, schema, cfg)
 
-    val out = new SnapshotStore(spark, target).read().get
+    val out = GraftTable.read(spark, target).get
     assert(out.columns.contains(StreamPipeline.SourceVersionColumn))
     // the stamped version IS the blob's modification time — the
     // reference's watermark == latest-source-version invariant
@@ -272,11 +279,11 @@ class PipelineServicesSpec extends SparkSpec {
     assert(rec.lines.count(_.startsWith("graft.maintenance.runs:1|c")) == 2)
     assert(rec.lines.exists(_.contains("at_batch:2")) && rec.lines.exists(_.contains("at_batch:4")))
 
-    val store = new SnapshotStore(spark, target)
     // expiration kept only the most recent snapshots
-    assert(store.versions().size <= 2, s"snapshots not expired: ${store.versions()}")
+    val versions = tableIO(target).versions()
+    assert(versions.size <= 2, s"snapshots not expired: $versions")
     // data survived the compact/expire/orphan cycle byte-exactly
-    val rows = store.read().get.select("k", "payload").as[(Int, String)].collect().toMap
+    val rows = GraftTable.read(spark, target).get.select("k", "payload").as[(Int, String)].collect().toMap
     assert(rows == Map(1 -> "v1", 2 -> "v2", 3 -> "v3", 4 -> "v4"))
   }
 
@@ -300,7 +307,7 @@ class PipelineServicesSpec extends SparkSpec {
     StreamPipeline.runAvailableNow(spark, schema2,
       cfg(s"$src/gen2").copy(checkpointDir = ckpt + "_2"))
 
-    val out = new SnapshotStore(spark, target).read().get
+    val out = GraftTable.read(spark, target).get
     assert(out.columns.contains("extra"), s"target must gain the new column: ${out.columns.toSeq}")
     val rows = out.select("k", "payload", "extra")
       .as[(Int, String, Option[String])].collect().map(r => r._1 -> ((r._2, r._3))).toMap
@@ -308,6 +315,64 @@ class PipelineServicesSpec extends SparkSpec {
       1 -> (("a", None)),          // pre-evolution row null-filled
       2 -> (("b2", Some("x2"))),   // updated by the evolved batch
       3 -> (("c", Some("x3")))))   // inserted with the new column
+  }
+
+  test("pipeline widens an int column to long, and compaction reads the widened files") {
+    val src    = Files.createTempDirectory("graft_widen_src").toString
+    val target = Files.createTempDirectory("graft_widen_tgt").toString + "/t"
+    val ckpt   = Files.createTempDirectory("graft_widen_ckpt").toString
+    Seq((1, 1L, 10), (2, 1L, 20)).toDF("k", "version", "n")
+      .coalesce(1).write.mode("append").parquet(s"$src/gen1")
+    val counter = new StreamPipeline.BatchCounter
+    def cfg(dir: String, ck: String) = StreamPipeline.Config(sourceDir = dir, targetDir = target,
+      checkpointDir = ck, primaryKeys = Seq("k"), versionCols = Seq("version"),
+      maintenance = Some(TargetMaintenance.Settings(batchThreshold = 2, targetFileBytes = 1L << 30)))
+    StreamPipeline.runAvailableNowWithMetrics(spark, spark.read.parquet(s"$src/gen1").schema,
+      cfg(s"$src/gen1", ckpt), batchCounter = counter)
+    // the source evolves: n widens to long, and a column appears
+    Seq((2, 2L, 5000000000L, "x2"), (3, 1L, 30L, "x3")).toDF("k", "version", "n", "extra")
+      .coalesce(1).write.mode("append").parquet(s"$src/gen2")
+    val m = StreamPipeline.runAvailableNowWithMetrics(spark, spark.read.parquet(s"$src/gen2").schema,
+      cfg(s"$src/gen2", ckpt + "_2"), batchCounter = counter)
+    assert(m.maintenanceRuns == 1, s"the second batch must compact: $m")
+    assert(tableIO(target).currentSnapshot().get.files.size == 1, "compaction rewrote both files")
+    val out = GraftTable.read(spark, target).get
+    assert(out.schema("n").dataType == org.apache.spark.sql.types.LongType, out.schema.toString)
+    val rows = out.select("k", "n", "extra").as[(Int, Long, Option[String])].collect()
+      .map(r => r._1 -> ((r._2, r._3))).toMap
+    assert(rows == Map(1 -> ((10L, None)), 2 -> ((5000000000L, Some("x2"))), 3 -> ((30L, Some("x3")))))
+  }
+
+  test("a batch column of a type the table cannot hold is refused by name before any file is written") {
+    val src    = Files.createTempDirectory("graft_struct_src").toString
+    val target = Files.createTempDirectory("graft_struct_tgt").toString + "/t"
+    Seq((1, 1L, "a")).toDF("k", "version", "payload")
+      .withColumn("nested", struct(col("payload").as("inner")))
+      .coalesce(1).write.mode("append").parquet(src)
+    val cfg = StreamPipeline.Config(sourceDir = src, targetDir = target,
+      checkpointDir = Files.createTempDirectory("graft_struct_ckpt").toString,
+      primaryKeys = Seq("k"), versionCols = Seq("version"))
+    val err = intercept[Exception](StreamPipeline.runAvailableNow(spark, spark.read.parquet(src).schema, cfg))
+    val messages = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).map(_.getMessage).toSeq
+    assert(messages.exists(m => m != null && m.contains("column 'nested'")), messages)
+    assert(!new java.io.File(s"$target/data").exists(), "no file may be written")
+    assert(GraftTable.read(spark, target).isEmpty)
+  }
+
+  test("a target that still holds a SnapshotStore table is refused by name") {
+    val src    = Files.createTempDirectory("graft_oldfmt_src").toString
+    val target = Files.createTempDirectory("graft_oldfmt_tgt").toString + "/t"
+    Seq((1, 1L, "a")).toDF("k", "version", "payload").coalesce(1).write.mode("append").parquet(src)
+    val manifests = new java.io.File(s"$target/manifests")
+    manifests.mkdirs()
+    Files.write(new java.io.File(manifests, "v3.manifest").toPath, "data/v3/part-0.parquet".getBytes("UTF-8"))
+    val cfg = StreamPipeline.Config(sourceDir = src, targetDir = target,
+      checkpointDir = Files.createTempDirectory("graft_oldfmt_ckpt").toString,
+      primaryKeys = Seq("k"), versionCols = Seq("version"))
+    val err = intercept[IllegalArgumentException](
+      StreamPipeline.runAvailableNow(spark, spark.read.parquet(src).schema, cfg))
+    assert(err.getMessage.contains("SnapshotStore") && err.getMessage.contains("v3.manifest"), err.getMessage)
+    assert(manifests.list().toSeq == Seq("v3.manifest"), "no catalog table may be bootstrapped beside it")
   }
 
   test("each micro-batch commits its staged rows as the delta; stagingDir is never created") {
@@ -323,13 +388,13 @@ class PipelineServicesSpec extends SparkSpec {
       maxFilesPerTrigger = Some(1), stagingDir = Some(staging))
     val m = StreamPipeline.runAvailableNowWithMetrics(spark, schema, cfg)
     assert(m.batches == 3 && m.rowsStaged == 3, s"unexpected metrics: $m")
-    // the target holds every batch's rows, one delta per batch after the
-    // base; stagingDir is backfill scratch only, so streaming never
-    // writes (or disposes) anything under it
-    val store = new SnapshotStore(spark, target)
-    val rows = store.read().get.select("k", "payload").as[(Int, String)].collect().toMap
+    // the target holds every batch's rows, one file per batch, each its
+    // own key set; stagingDir is backfill scratch only, so streaming
+    // never writes (or disposes) anything under it
+    val rows = GraftTable.read(spark, target).get.select("k", "payload").as[(Int, String)].collect().toMap
     assert(rows == Map(1 -> "v1", 2 -> "v2", 3 -> "v3"), s"target rows: $rows")
-    assert(store.manifest(store.currentVersion().get).deltas.size == 2)
+    val head = tableIO(target).currentSnapshot().get
+    assert(head.files.size == 3 && head.eqDeletes.map(_.path) == head.files.map(_.path))
     assert(!new java.io.File(staging).exists(), s"streaming must not create $staging")
   }
 
@@ -338,15 +403,14 @@ class PipelineServicesSpec extends SparkSpec {
   test("sharded backfill equals the full recompute and swaps atomically") {
     val base   = Files.createTempDirectory("graft_bf").toString
     val events = Tables(spark, sfDir).events.filter($"ts" >= lit("2024-01-10").cast("timestamp"))
-    val store  = new SnapshotStore(spark, s"$base/target")
     val state  = new Backfill.BackfillStateManager(spark, s"$base/state", "bf-1")
     val res = Backfill.runSharded(spark, events, Seq("user_id"), Seq("ts", "event_id"),
-      nShards = 4, s"$base/staging", store, state)
+      nShards = 4, s"$base/staging", s"$base/target", state)
     assert(res.stagedThisRun == Seq(0, 1, 2, 3) && res.skippedResumed.isEmpty)
 
     val expected = Upsert.latestByKey(events, Seq("user_id"), Seq("ts", "event_id"))
       .orderBy("user_id").collect().toSeq
-    val actual = store.read().get.orderBy("user_id").collect().toSeq
+    val actual = GraftTable.read(spark, s"$base/target").get.orderBy("user_id").collect().toSeq
     assert(actual == expected, "shard-parallel result must equal the global upsert")
     assert(state.completedShards().isEmpty, "state must be cleared after the completion swap")
     // staged shards are disposed after the swap (DisposeBatchProcessor)
@@ -366,14 +430,13 @@ class PipelineServicesSpec extends SparkSpec {
     state.markCompleted(1)
     assert(state.completedShards() == Set(0, 1))
 
-    val store = new SnapshotStore(spark, s"$base/target")
     val res = Backfill.runSharded(spark, events, Seq("user_id"), Seq("ts", "event_id"),
-      nShards = 4, s"$base/staging", store, state)
+      nShards = 4, s"$base/staging", s"$base/target", state)
     assert(res.skippedResumed == Seq(0, 1), s"resume must skip staged shards: $res")
     assert(res.stagedThisRun == Seq(2, 3), s"resume must stage only the rest: $res")
 
     val expected = Upsert.latestByKey(events, Seq("user_id"), Seq("ts", "event_id"))
       .count()
-    assert(store.read().get.count() == expected)
+    assert(GraftTable.read(spark, s"$base/target").get.count() == expected)
   }
 }

@@ -1,7 +1,9 @@
 package graft
 
-import graft.sources.{BlobListingSource, SnapshotStore}
+import graft.catalog.{GraftConf, GraftMaintenance, GraftManifestIO, GraftTable}
+import graft.sources.BlobListingSource
 import graft.streaming.StreamPipeline
+import org.apache.hadoop.fs.Path
 
 /** Live object-store integration — the one hop ObjectStoreSpec's
   * registered-scheme tests cannot cover. CANCELS (not fails) unless the
@@ -59,12 +61,12 @@ class S3IntegrationSpec extends SparkSpec {
       sourceDir = s"$prefix/src", targetDir = s"$prefix/table",
       checkpointDir = ckpt, primaryKeys = Seq("k"), versionCols = Seq("version"))
     assert(StreamPipeline.runAvailableNow(spark, schema, cfg) >= 1)
-    val store = new SnapshotStore(spark, s"$prefix/table")
-    val rows = store.read().get.select("k", "payload").as[(Int, String)].collect().toMap
+    val rows = GraftTable.read(spark, s"$prefix/table").get.select("k", "payload")
+      .as[(Int, String)].collect().toMap
     assert(rows == Map(1 -> "a", 2 -> "b"))
     // snapshot isolation survives a second commit
-    val v1 = store.currentVersion().get
-    store.commit(Seq((9, "z")).toDF("k", "payload"))
-    assert(store.readVersion(v1).count() == 2)
+    val v1 = new GraftManifestIO(new Path(s"$prefix/table"), GraftConf.hadoop).currentVersion().get
+    GraftMaintenance.overwrite(Seq((9, "z")).toDF("k", "payload"), s"$prefix/table", "overwrite")
+    assert(GraftTable.read(spark, s"$prefix/table", Some(v1)).get.count() == 2)
   }
 }

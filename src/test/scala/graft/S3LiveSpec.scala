@@ -2,9 +2,8 @@ package graft
 
 import java.net.{HttpURLConnection, URL}
 
-import graft.catalog.{GraftManifestIO, GraftConf}
+import graft.catalog.{GraftConf, GraftMaintenance, GraftManifestIO, GraftTable}
 import graft.sources.BlobListingSource
-import graft.sources.SnapshotStore
 import graft.streaming.StreamPipeline
 import org.apache.hadoop.fs.Path
 
@@ -198,12 +197,12 @@ class S3LiveSpec extends SparkSpec {
       sourceDir = s"$prefix/src", targetDir = s"$prefix/table",
       checkpointDir = ckpt, primaryKeys = Seq("k"), versionCols = Seq("version"))
     assert(StreamPipeline.runAvailableNow(spark, schema, cfg) >= 1)
-    val store = new SnapshotStore(spark, s"$prefix/table")
-    val rows = store.read().get.select("k", "payload").as[(Int, String)].collect().toMap
+    val rows = GraftTable.read(spark, s"$prefix/table").get.select("k", "payload")
+      .as[(Int, String)].collect().toMap
     assert(rows == Map(1 -> "a", 2 -> "b"))
-    val v1 = store.currentVersion().get
-    store.commit(Seq((9, "z")).toDF("k", "payload"))
-    assert(store.readVersion(v1).count() == 2)
+    val v1 = new GraftManifestIO(new Path(s"$prefix/table"), GraftConf.hadoop).currentVersion().get
+    GraftMaintenance.overwrite(Seq((9, "z")).toDF("k", "payload"), s"$prefix/table", "overwrite")
+    assert(GraftTable.read(spark, s"$prefix/table", Some(v1)).get.count() == 2)
   }
 
   test("graft-format table on live S3: SQL MERGE, time travel, OCC commits") {

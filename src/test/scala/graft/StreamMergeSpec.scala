@@ -1,8 +1,7 @@
 package graft
 
-import graft.catalog.{GraftCommitStamp, GraftManifestIO}
+import graft.catalog.{GraftCommitStamp, GraftManifestIO, GraftTable}
 import graft.operators.MergeKey
-import graft.sources.SnapshotStore
 import graft.streaming.{ChangeCapture, StreamMerge, StreamPipeline}
 import java.nio.file.Files
 import org.apache.hadoop.conf.Configuration
@@ -110,13 +109,13 @@ class StreamMergeSpec extends SparkSpec {
 
     val dir = s"$warehouse/db/$table"
     val applied = StreamMerge.idempotentMerge(dir, MergeKey.ColumnName, Seq("version"))(batch, 7L)
-    assert(applied)
+    assert(applied.isDefined)
     val vAfter = io(table).currentVersion().get
     assert(stamp(table).contains(7L))
 
     // fast path: the pre-check sees batch 7 stamped and skips
     val replayed = StreamMerge.idempotentMerge(dir, MergeKey.ColumnName, Seq("version"))(batch, 7L)
-    assert(!replayed)
+    assert(replayed.isEmpty)
     assert(io(table).currentVersion().get == vAfter, "replay must not commit a snapshot")
 
     // slow path: a replay that races PAST the pre-check (the crash
@@ -133,7 +132,7 @@ class StreamMergeSpec extends SparkSpec {
     assert(GraftCommitStamp.isReplay(err), s"got: $err")
     assert(io(table).currentVersion().get == vAfter, "guarded replay must not commit")
     // a LATER batch still goes through (the guard is >=, not ==)
-    assert(StreamMerge.idempotentMerge(dir, MergeKey.ColumnName, Seq("version"))(batch, 8L))
+    assert(StreamMerge.idempotentMerge(dir, MergeKey.ColumnName, Seq("version"))(batch, 8L).isDefined)
   }
 
   test("MOR stream target matches the snapshot-store pipeline bit-for-bit") {
@@ -158,7 +157,7 @@ class StreamMergeSpec extends SparkSpec {
       primaryKeys = Seq("k"), versionCols = Seq("version"), maxFilesPerTrigger = Some(1)))
 
     val mor = spark.sql(s"SELECT * FROM $cat.db.$table").collect().map(_.toSeq).sortBy(_.toString)
-    val ss  = new SnapshotStore(spark, storeDir).read().get
+    val ss  = GraftTable.read(spark, storeDir).get
       .select("k", "version", "payload", "arcane_merge_key")
       .collect().map(_.toSeq).sortBy(_.toString)
     assert(mor.toSeq == ss.toSeq)

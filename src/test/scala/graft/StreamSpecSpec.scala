@@ -1,7 +1,7 @@
 package graft
 
+import graft.catalog.{GraftManifestIO, GraftTable}
 import graft.operators.FieldSelection
-import graft.sources.SnapshotStore
 import graft.streaming.{RetryMode, StreamPipeline, StreamSpec}
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
@@ -172,7 +172,7 @@ class StreamSpecSpec extends SparkSpec {
 
     val batches = StreamPipeline.runAvailableNow(spark, schema, cfg)
     assert(batches >= 1)
-    val rows = new SnapshotStore(spark, target).read().get
+    val rows = GraftTable.read(spark, target).get
       .select("k", "payload").as[(Int, String)].collect().toMap
     assert(rows == Map(1 -> "new", 2 -> "keep2"),
       s"spec-driven pipeline must keep the latest blob version per key: $rows")
@@ -215,11 +215,12 @@ class StreamSpecSpec extends SparkSpec {
       s"a one-partition merge batch dedups and writes its delta in one job: $jobsByBatch")
     assert(!new java.io.File(s"$tmp/graft-staging").exists(), "no staged copy may be written")
 
-    val store = new SnapshotStore(spark, target)
-    val delta = store.manifest(store.currentVersion().get).deltas.last
-    val counts = delta.files.map(f => spark.read.parquet(s"$target/$f").count())
+    val head = new GraftManifestIO(new org.apache.hadoop.fs.Path(target),
+      spark.sparkContext.hadoopConfiguration).currentSnapshot().get
+    val counts = head.files.filter(_.seq == head.version)
+      .map(f => spark.read.parquet(s"$target/${f.path}").count())
     assert(counts.size == (n + m - 1) / m && counts.forall(_ <= m) && counts.sum == n,
-      s"the delta must hold ceil($n/$m) files of at most $m rows: $counts")
+      s"the batch must land as ceil($n/$m) files of at most $m rows: $counts")
   }
 
   test("STREAMCONTEXT__SPEC env var boots the pipeline end-to-end") {
@@ -241,7 +242,7 @@ class StreamSpecSpec extends SparkSpec {
     val m = StreamRunner.boot(spark, schema, env, maxCycles = 1,
       sourceDir = Some(src), targetDir = Some(target), checkpointDir = Some(ckpt))
     assert(m.batches >= 1 && m.rowsWritten == 2)
-    assert(new SnapshotStore(spark, target).read().get.count() == 2)
+    assert(GraftTable.read(spark, target).get.count() == 2)
   }
 
   test("STREAMCONTEXT__BACKFILL=true boots into backfill mode per the spec's behavior") {
@@ -264,7 +265,7 @@ class StreamSpecSpec extends SparkSpec {
     val m = StreamRunner.boot(spark, schema, env, sourceDir = Some(src),
       targetDir = Some(target), stagingDir = Some(staging))
     assert(m.batches >= 1, "at least one shard must stage")
-    val rows = new SnapshotStore(spark, target).read().get
+    val rows = GraftTable.read(spark, target).get
       .select("k", "payload").as[(Int, String)].collect().toMap
     assert(rows == Map(1 -> "new", 2 -> "b"),
       s"backfill must recompute latest-per-key from blob versions: $rows")
@@ -276,9 +277,18 @@ class StreamSpecSpec extends SparkSpec {
     val mergeEnv = env.updated(StreamSpec.SpecEnvVar, specText.replace("Overwrite", "Merge"))
     StreamRunner.boot(spark, schema, mergeEnv, sourceDir = Some(src),
       targetDir = Some(target), stagingDir = Some(staging))
-    val merged = new SnapshotStore(spark, target).read().get
+    val merged = GraftTable.read(spark, target).get
       .select("k", "payload").as[(Int, String)].collect().toMap
     assert(merged == Map(1 -> "new", 2 -> "b", 3 -> "c"), s"merge backfill result: $merged")
+
+    // a second Merge backfill is a new commit, not a replay of the first
+    Thread.sleep(1100)
+    Seq((2, "b2")).toDF("k", "payload").coalesce(1).write.mode("append").parquet(src)
+    StreamRunner.boot(spark, schema, mergeEnv, sourceDir = Some(src),
+      targetDir = Some(target), stagingDir = Some(staging))
+    val again = GraftTable.read(spark, target).get
+      .select("k", "payload").as[(Int, String)].collect().toMap
+    assert(again == Map(1 -> "new", 2 -> "b2", 3 -> "c"), s"second merge backfill result: $again")
   }
 
   test("backfill honors backfillStartDate: blobs older than the start never recompute") {
@@ -295,7 +305,7 @@ class StreamSpecSpec extends SparkSpec {
       Map(StreamSpec.SpecEnvVar -> futureSpec, StreamSpec.BackfillEnvVar -> "true"),
       sourceDir = Some(src), targetDir = Some(target))
     assert(m.batches == 0, "no blob at/after the start date may stage")
-    assert(new SnapshotStore(spark, target).read().isEmpty, "no commit may land")
+    assert(GraftTable.read(spark, target).isEmpty, "no commit may land")
   }
 
   test("failures map to the reference's exit codes (stream=2, bootstrap=1)") {

@@ -106,15 +106,15 @@ class StreamUpsertSpec extends SparkSpec {
     val dir = s"$warehouse/db/$table"
     val batch = MergeKey.withMergeKey(
       Seq((1, 1L, "a"), (2, 1L, "b")).toDF("k", "version", "payload"), Seq("k"))
-    assert(StreamMerge.idempotentMerge(dir, MergeKey.ColumnName, Seq("version"))(batch, 3L))
+    assert(StreamMerge.idempotentMerge(dir, MergeKey.ColumnName, Seq("version"))(batch, 3L).isDefined)
     val v = io(table).currentVersion().get
-    assert(!StreamMerge.idempotentMerge(dir, MergeKey.ColumnName, Seq("version"))(batch, 3L))
+    assert(StreamMerge.idempotentMerge(dir, MergeKey.ColumnName, Seq("version"))(batch, 3L).isEmpty)
     assert(io(table).currentVersion().get == v)
-    assert(StreamMerge.idempotentMerge(dir, MergeKey.ColumnName, Seq("version"))(batch, 4L))
+    assert(StreamMerge.idempotentMerge(dir, MergeKey.ColumnName, Seq("version"))(batch, 4L).isDefined)
     // duplicate-key batch: within-batch dedup keeps the latest version
     val dup = MergeKey.withMergeKey(
       Seq((9, 5L, "old"), (9, 6L, "new")).toDF("k", "version", "payload"), Seq("k"))
-    assert(StreamMerge.idempotentMerge(dir, MergeKey.ColumnName, Seq("version"))(dup, 5L))
+    assert(StreamMerge.idempotentMerge(dir, MergeKey.ColumnName, Seq("version"))(dup, 5L).isDefined)
     val out = spark.sql(s"SELECT payload FROM $cat.db.$table WHERE k = 9").collect()
     assert(out.map(_.getString(0)).toSeq == Seq("new"))
   }
@@ -124,10 +124,10 @@ class StreamUpsertSpec extends SparkSpec {
     val dir   = s"$warehouse/db/$table"
     val seed = MergeKey.withMergeKey(
       (0 until 500).map(k => (k, 0L, s"s$k")).toDF("k", "version", "payload"), Seq("k"))
-    assert(StreamMerge.idempotentMerge(dir, MergeKey.ColumnName, Seq("version"))(seed, 0L))
+    assert(StreamMerge.idempotentMerge(dir, MergeKey.ColumnName, Seq("version"))(seed, 0L).isDefined)
     val upd = MergeKey.withMergeKey(
       (0 until 50).map(k => (k, 1L, s"u$k")).toDF("k", "version", "payload"), Seq("k"))
-    assert(StreamMerge.idempotentMerge(dir, MergeKey.ColumnName, Seq("version"))(upd, 1L))
+    assert(StreamMerge.idempotentMerge(dir, MergeKey.ColumnName, Seq("version"))(upd, 1L).isDefined)
 
     // change feed across the upsert: 50 inserts + 50 shadow-deletes
     val changes = GraftChanges.between(spark, dir, 1L, 2L)
@@ -154,10 +154,10 @@ class StreamUpsertSpec extends SparkSpec {
     val dir   = s"$warehouse/db/$table"
     val seed = MergeKey.withMergeKey(
       (0 until 100).map(k => (k, 0L, s"s$k")).toDF("k", "version", "payload"), Seq("k"))
-    assert(StreamMerge.idempotentMerge(dir, MergeKey.ColumnName, Seq("version"))(seed, 0L))
+    assert(StreamMerge.idempotentMerge(dir, MergeKey.ColumnName, Seq("version"))(seed, 0L).isDefined)
     val upd = MergeKey.withMergeKey(
       (0 until 10).map(k => (k, 1L, s"u$k")).toDF("k", "version", "payload"), Seq("k"))
-    assert(StreamMerge.idempotentMerge(dir, MergeKey.ColumnName, Seq("version"))(upd, 1L))
+    assert(StreamMerge.idempotentMerge(dir, MergeKey.ColumnName, Seq("version"))(upd, 1L).isDefined)
     // COW UPDATE reads THROUGH the eq deletes (the rewrite must not
     // resurrect shadowed seed rows) and rewrites matched files
     spark.sql(s"UPDATE $cat.db.$table SET payload = 'X' WHERE k < 5")

@@ -1,12 +1,16 @@
 package graft
 
-import graft.sources.{BlobListingSource, SnapshotStore}
+import graft.catalog.{GraftManifestIO, GraftTable}
+import graft.sources.BlobListingSource
 import graft.streaming.StreamPipeline
 import java.nio.file.Files
 import org.apache.spark.sql.functions.col
 
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
+
+  private def tableIO(dir: String) =
+    new GraftManifestIO(new org.apache.hadoop.fs.Path(dir), spark.sparkContext.hadoopConfiguration)
 
   test("BlobListingSource lists only blobs newer than the watermark") {
     val dir = Files.createTempDirectory("graft_blobs").toString
@@ -41,7 +45,7 @@ class StreamingSpec extends SparkSpec {
       maxFilesPerTrigger = Some(1))
     val batches = StreamPipeline.runAvailableNow(spark, schema, cfg)
     assert(batches >= 4, s"expected >= 4 rate-limited micro-batches, got $batches")
-    assert(new SnapshotStore(spark, target).read().get.count() == 4)
+    assert(GraftTable.read(spark, target).get.count() == 4)
   }
 
   test("StreamPipeline upserts arriving blobs into the target (two cycles)") {
@@ -57,8 +61,7 @@ class StreamingSpec extends SparkSpec {
       sourceDir = src, targetDir = target, checkpointDir = ckpt,
       primaryKeys = Seq("k"), versionCols = Seq("version"))
     StreamPipeline.runAvailableNow(spark, schema, cfg)
-    val store = new SnapshotStore(spark, target)
-    assert(store.read().get.count() == 2)
+    assert(GraftTable.read(spark, target).get.count() == 2)
 
     // cycle 2: update key 2, insert key 3 — only the new blob is read
     Seq((2, 2L, "v2-b"), (3, 1L, "v1-c")).toDF("k", "version", "payload")
@@ -66,12 +69,12 @@ class StreamingSpec extends SparkSpec {
     val m = StreamPipeline.runAvailableNowWithMetrics(spark, schema, cfg)
     assert(m.rowsStaged == 2 && m.rowsWritten == 3,
       s"observed metrics expected staged=2 written=3, got $m")
-    val rows = store.read().get
+    val rows = GraftTable.read(spark, target).get
       .select("k", "payload").as[(Int, String)].collect().toMap
     assert(rows == Map(1 -> "v1-a", 2 -> "v2-b", 3 -> "v1-c"))
     // snapshot history: cycle-1 state is still readable (time travel)
-    val v1 = store.versions().head
-    assert(store.readVersion(v1).count() == 2)
+    val v1 = tableIO(target).versions().head
+    assert(GraftTable.read(spark, target, Some(v1)).get.count() == 2)
   }
 
   test("streaming sessionization closes sessions on gap or watermark timeout") {
@@ -333,8 +336,6 @@ class StreamingSpec extends SparkSpec {
       primaryKeys = Seq("k"), versionCols = Seq("version"),
       detectConflicts = true)
     StreamPipeline.runAvailableNow(spark, schema, cfg)
-    val store = new SnapshotStore(spark, target)
-    val v1 = store.currentVersion().get
 
     // an out-of-band writer (manual backfill) advances the table with a
     // row the stream has never seen — the merge-key column included,
@@ -342,18 +343,54 @@ class StreamingSpec extends SparkSpec {
     val external = Seq((99, 1L, "backfill")).toDF("k", "version", "payload")
       .withColumn(graft.operators.MergeKey.ColumnName,
         graft.operators.MergeKey.keyExpr(Seq(col("k"))))
-    val base = store.read().get
-    store.commitIf(base.unionByName(external), Some(v1))
+    graft.streaming.GraftStreamSink.commit(target, external, Some(graft.operators.MergeKey.ColumnName))
 
     // cycle 2: the stream's base is the EXTERNAL version, so their row
     // survives the merge and no conflict fires
     Seq((2, 1L, "stream-b")).toDF("k", "version", "payload")
       .coalesce(1).write.mode("append").parquet(src)
     StreamPipeline.runAvailableNow(spark, schema, cfg)
-    val payloads = store.read().get.select("k", "payload")
+    val payloads = GraftTable.read(spark, target).get.select("k", "payload")
       .as[(Int, String)].collect().toMap
     assert(payloads == Map(1 -> "stream-a", 2 -> "stream-b", 99 -> "backfill"),
       s"external commit must survive the next stream cycle: $payloads")
+  }
+
+  test("detectConflicts: an out-of-band commit landing MID-batch fails the batch by name") {
+    spark.sparkContext.hadoopConfiguration.set("fs.crashfs.impl", classOf[ManifestCrashFileSystem].getName)
+    val src   = Files.createTempDirectory("graft_occ_mid_src").toString
+    val local = Files.createTempDirectory("graft_occ_mid_tgt").toString + "/t"
+    def land(rows: Seq[(Int, Long, String)]): Unit =
+      rows.toDF("k", "version", "payload").coalesce(1).write.mode("append").parquet(src)
+    land(Seq((1, 1L, "stream-a")))
+    val schema = spark.read.parquet(src).schema
+    val cfg = StreamPipeline.Config(sourceDir = src, targetDir = s"crashfs:$local",
+      checkpointDir = Files.createTempDirectory("graft_occ_mid_ckpt").toString,
+      primaryKeys = Seq("k"), versionCols = Seq("version"), detectConflicts = true)
+    StreamPipeline.runAvailableNow(spark, schema, cfg)
+    val v1Files = tableIO(cfg.targetDir).currentSnapshot().get.files.map(_.path).toSet
+
+    // at the batch's claim, after its data write, an out-of-band writer
+    // commits first
+    val external = Seq((99, 1L, "backfill")).toDF("k", "version", "payload")
+      .withColumn(graft.operators.MergeKey.ColumnName, graft.operators.MergeKey.keyExpr(Seq(col("k"))))
+    ManifestCrashFileSystem.onManifestCreate = () => {
+      ManifestCrashFileSystem.onManifestCreate = () => ()
+      graft.streaming.GraftStreamSink.commit(cfg.targetDir, external, Some(graft.operators.MergeKey.ColumnName))
+    }
+    land(Seq((2, 1L, "stream-b")))
+    val err = try intercept[Exception](StreamPipeline.runAvailableNow(spark, schema, cfg))
+      finally ManifestCrashFileSystem.onManifestCreate = () => ()
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => e.isInstanceOf[graft.catalog.GraftCommitConflict] && e.getMessage.contains("out-of-band")),
+      s"the batch must fail with the conflict: $err")
+    val payloads = GraftTable.read(spark, cfg.targetDir).get.select("k", "payload")
+      .as[(Int, String)].collect().toMap
+    assert(payloads == Map(1 -> "stream-a", 99 -> "backfill"), s"the failed batch must not land: $payloads")
+    val head = tableIO(cfg.targetDir).currentSnapshot().get
+    val onDisk = new java.io.File(s"$local/data").list().filter(_.endsWith(".parquet")).map(n => s"data/$n").toSet
+    assert(onDisk == head.files.map(_.path).toSet && v1Files.subsetOf(onDisk),
+      "the failed batch must drop its files")
   }
 
   test("a crash after the delta's data write and before the manifest flip keeps v; the replay converges") {
@@ -369,26 +406,30 @@ class StreamingSpec extends SparkSpec {
     val cfg = StreamPipeline.Config(sourceDir = src, targetDir = s"crashfs:$local",
       checkpointDir = ckpt, primaryKeys = Seq("k"), versionCols = Seq("version"))
     StreamPipeline.runAvailableNow(spark, schema, cfg)
-    val store  = new SnapshotStore(spark, cfg.targetDir)
-    val before = hash(store.read().get)
+    val io     = tableIO(cfg.targetDir)
+    val v1Files = io.currentSnapshot().get.files.map(_.path).toSet
+    val before = hash(GraftTable.read(spark, cfg.targetDir).get)
 
     land(Seq((2, 2L, "b2"), (3, 1L, "c")))
     ManifestCrashFileSystem.armed = true
-    try intercept[Exception](StreamPipeline.runAvailableNow(spark, schema, cfg))
+    val crash = try intercept[Exception](StreamPipeline.runAvailableNow(spark, schema, cfg))
     finally ManifestCrashFileSystem.armed = false
-    assert(new java.io.File(s"$local/data").listFiles().filter(_.getName.startsWith("v2-"))
-      .exists(_.list().exists(_.endsWith(".parquet"))), "the injected crash must follow the delta's data write")
-    assert(!new java.io.File(s"$local/manifests/v2.manifest").exists())
-    assert(store.currentVersion().contains(1L) && hash(store.read().get) == before,
+    assert(Iterator.iterate[Throwable](crash)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("injected crash before the manifest claim")),
+      s"the injected crash must follow the batch's data write: $crash")
+    assert(!new java.io.File(s"$local/manifests/v2.json").exists())
+    assert(io.currentVersion().contains(1L) && hash(GraftTable.read(spark, cfg.targetDir).get) == before,
       "a crashed commit must leave version 1 visible")
+    assert(new java.io.File(s"$local/data").list().filter(_.endsWith(".parquet"))
+      .map(n => s"data/$n").toSet == v1Files, "the crashed commit must drop its data files")
 
     // restart on the same checkpoint: the failed batch replays and lands
     StreamPipeline.runAvailableNow(spark, schema, cfg)
-    assert(store.currentVersion().contains(2L) && store.manifest(2L).deltas.size == 1)
+    assert(io.currentVersion().contains(2L) && io.readSnapshot(2L).files.size == v1Files.size + 1)
     val clean = cfg.copy(targetDir = Files.createTempDirectory("graft_crash_ref").toString + "/t",
       checkpointDir = Files.createTempDirectory("graft_crash_ref_ckpt").toString)
     StreamPipeline.runAvailableNow(spark, schema, clean)
-    assert(hash(store.read().get) == hash(new SnapshotStore(spark, clean.targetDir).read().get))
+    assert(hash(GraftTable.read(spark, cfg.targetDir).get) == hash(GraftTable.read(spark, clean.targetDir).get))
   }
 
   test("a transient failure of the first delta write under commitRetry lands the batch once") {
@@ -412,18 +453,19 @@ class StreamingSpec extends SparkSpec {
     val m = try StreamPipeline.runAvailableNowWithMetrics(spark, schema, cfg)
       finally ManifestCrashFileSystem.failDataWrites.set(0)
     assert(ManifestCrashFileSystem.dataWritesFailed.getAndSet(0) == 1,
-      "the first delta write must have failed once")
+      "the first batch data write must have failed once")
     assert(m.batches == 1 && m.rowsStaged == 3, s"the retried batch must count its rows once: $m")
-    val store = new SnapshotStore(spark, cfg.targetDir)
-    assert(store.currentVersion().contains(2L) && store.manifest(2L).deltas.size == 1)
-    val v2Dirs = new java.io.File(s"$local/data").listFiles().filter(_.getName.startsWith("v2-"))
-    assert(v2Dirs.length == 1, "the failed attempt must drop its own data dir")
-    assert(spark.read.parquet(v2Dirs.head.toString).count() == 3, "only one attempt's rows may land")
+    val io = tableIO(cfg.targetDir)
+    assert(io.currentVersion().contains(2L))
+    val landed = io.readSnapshot(2L).files.filter(_.seq == 2L)
+    assert(landed.size == 1 && landed.head.rows == 3, s"one attempt's rows land once: $landed")
+    val onDisk = new java.io.File(s"$local/data").list().filter(_.endsWith(".parquet")).map(n => s"data/$n").toSet
+    assert(onDisk == io.readSnapshot(2L).files.map(_.path).toSet, "the failed attempt must leave no file")
 
     val clean = cfg.copy(targetDir = Files.createTempDirectory("graft_retry_ref").toString + "/t",
       checkpointDir = Files.createTempDirectory("graft_retry_ref_ckpt").toString)
     StreamPipeline.runAvailableNow(spark, schema, clean)
-    assert(hash(store.read().get) == hash(new SnapshotStore(spark, clean.targetDir).read().get))
+    assert(hash(GraftTable.read(spark, cfg.targetDir).get) == hash(GraftTable.read(spark, clean.targetDir).get))
   }
 
   test("a StreamPipeline merge batch opens no parquet file under the target's data/") {
@@ -447,9 +489,9 @@ class StreamingSpec extends SparkSpec {
       "a merge batch must not read the target")
     // the shim does see target reads: the cycle's row count, outside the batch
     assert(CountingFileSystem.parquetOpensUnder(s"$local/data/", inBatch = false) > 0)
-    val store = new SnapshotStore(spark, cfg.targetDir)
-    assert(store.manifest(store.currentVersion().get).deltas.size == 1)
-    assert(store.read().get.where(col("k") === 7).select("payload").as[String].collect().toSeq == Seq("new7"))
+    assert(tableIO(cfg.targetDir).currentSnapshot().get.operation == "stream-upsert")
+    assert(GraftTable.read(spark, cfg.targetDir).get.where(col("k") === 7).select("payload").as[String]
+      .collect().toSeq == Seq("new7"))
   }
 
   test("stream bench section: both ingest paths sustain a pinned throughput floor") {
@@ -470,7 +512,7 @@ class StreamingSpec extends SparkSpec {
   *  - `armed`: fails the creation of a snapshot manifest — a crash
   *    between a commit's data write and its manifest claim.
   *  - `failDataWrites = n`: fails the next n parquet file creations under
-  *    a `data/v<N>` dir — a transient failure of a delta's data write.
+  *    a `data/` dir — a transient failure of a batch's data write.
   *  - `crashAt = n`: the n-th create, rename or delete from now on, and
   *    every one after it, fails — a process that dies at that point of a
   *    commit. `ops` counts them (set `crashAt` to `Int.MaxValue` to count
@@ -497,9 +539,9 @@ final class ManifestCrashFileSystem extends org.apache.hadoop.fs.RawLocalFileSys
   private def check(f: Path): Unit = {
     op(f)
     if (f.getName.endsWith(".manifest") || f.getName.matches("v\\d+\\.json")) onManifestCreate()
-    if (armed && f.getName.endsWith(".manifest"))
+    if (armed && (f.getName.endsWith(".manifest") || f.getName.matches("v\\d+\\.json")))
       throw new java.io.IOException(s"injected crash before the manifest claim: $f")
-    if (f.getName.endsWith(".parquet") && f.toString.contains("/data/v") &&
+    if (f.getName.endsWith(".parquet") && f.toString.contains("/data/") &&
         failDataWrites.getAndUpdate(n => math.max(0, n - 1)) > 0) {
       dataWritesFailed.incrementAndGet()
       throw new java.io.IOException(s"injected transient failure of a delta data write: $f")
